@@ -43,7 +43,6 @@ riding the packed-table write — zero dedicated count passes.
 from __future__ import annotations
 
 import argparse
-import json
 import os
 import sys
 
@@ -57,36 +56,12 @@ def prepare_tables(spark, docs, evalset, args):
     :func:`packed_stats` over the WRITTEN table."""
     from pyspark.sql import functions as F
 
-    from latex_ocr_spark.operators.packing import pack_sequences, pack_stats
+    from latex_ocr_spark.operators.packing import pack_sequences
     from latex_ocr_spark.operators.tokenize import filter_max_seq_len, with_tokens
+    from latex_ocr_spark.plans.curate_cli import curate_from_args
 
-    kw = dict(
-        min_tokens=args.min_tokens,
-        max_punct_ratio=args.max_punct_ratio,
-        dedup_threshold=args.dedup_threshold,
-        near_dup_method=args.near_dup_method,
-        ngram=args.ngram,
-        num_hashes=args.num_hashes,
-        band_size=args.band_size,
-        max_bucket_size=args.max_bucket_size,
-        max_df=args.max_df,
-        redact=args.redact,
-        sample_fraction=args.sample_fraction,
-        val_fraction=args.val_fraction,
-        seed=args.seed,
-        assume_small_side_frames=not args.high_dup_rate,
-    )
-    if args.checkpoint_dir:
-        from latex_ocr_spark.plans.resumable import curate_corpus_resumable
-
-        res = curate_corpus_resumable(
-            spark, docs, args.checkpoint_dir, evalset, **kw
-        )
-    else:
-        from latex_ocr_spark.plans.curate import curate_corpus
-
-        # deferred: the packed-table write resolves the funnel counts
-        res = curate_corpus(docs, evalset, collect_funnel=False, **kw)
+    # in-memory runner: the packed-table write resolves the funnel counts
+    res = curate_from_args(spark, docs, evalset, args)
 
     toks = with_tokens(res.documents, text_col="text", out_col="tokens")
     if args.max_seq_len:
@@ -120,43 +95,19 @@ def packed_stats(packed: DataFrame, budget: int) -> DataFrame:
 
 
 def main() -> int:
+    from latex_ocr_spark.plans.curate_cli import (
+        add_curation_args,
+        add_input_args,
+        apply_auto_knobs,
+        read_inputs,
+        write_funnel,
+    )
+
     ap = argparse.ArgumentParser()
-    ap.add_argument("--input")
-    ap.add_argument("--input-format", choices=("jsonl", "parquet", "table"))
-    ap.add_argument("--evalset")
-    ap.add_argument("--evalset-format", choices=("jsonl", "parquet", "table"))
-    ap.add_argument("--string-ids", action="store_true")
-    ap.add_argument("--failfast", action="store_true")
-    ap.add_argument("--synth", type=int,
-                    help="synthesize N documents for a no-data smoke run")
+    add_input_args(ap)
     ap.add_argument("--output", required=True)
-    ap.add_argument("--checkpoint-dir",
-                    help="enable checkpoint-resumable curation stages")
-    # curation knobs (same defaults as curate_job)
-    ap.add_argument("--min-tokens", type=int, default=5)
-    ap.add_argument("--max-punct-ratio", type=float, default=0.3)
-    ap.add_argument("--dedup-threshold", type=float, default=0.5)
-    ap.add_argument("--near-dup-method", choices=("lsh", "jaccard"), default="lsh")
-    ap.add_argument("--ngram", type=int, default=1)
-    ap.add_argument("--max-df", type=int)
-    ap.add_argument("--max-bucket-size", type=int)
-    ap.add_argument("--num-hashes", type=int, default=8)
-    ap.add_argument("--band-size", type=int, default=2)
-    ap.add_argument("--redact", action="store_true")
-    ap.add_argument("--sample-fraction", type=float)
-    ap.add_argument("--val-fraction", type=float, default=0.1)
-    ap.add_argument("--seed", default="split-seed-1")
-    ap.add_argument("--high-dup-rate", action="store_true")
+    add_curation_args(ap)
     # training-prep knobs
-    ap.add_argument("--auto-knobs", action="store_true",
-                    help="pre-flight survey the input and fill every "
-                         "blowup/recall knob left at its default "
-                         "(operators/advisor.py; explicit non-default "
-                         "flags win)")
-    ap.add_argument("--auto-knobs-sample", type=float,
-                    help="survey on this deterministic sample fraction "
-                         "instead of the full input (0.01-0.001 at "
-                         "corpus scale)")
     ap.add_argument("--budget", type=int, default=2048,
                     help="token budget per pack")
     ap.add_argument("--max-seq-len", type=int,
@@ -172,49 +123,11 @@ def main() -> int:
                          "downstream joins)")
     args = ap.parse_args()
 
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
     from latex_ocr_spark.session import get_spark
-    from latex_ocr_spark.sources.documents import read_documents
 
     spark = get_spark("prepare_job")
-
-    def load_docs(source, source_format):
-        return read_documents(
-            spark, source, source_format=source_format,
-            id_type=T.StringType() if args.string_ids else None,
-            mode="FAILFAST" if args.failfast else "PERMISSIVE",
-        )
-
-    if args.synth is not None:
-        if args.synth <= 0:
-            ap.error("--synth must be a positive document count")
-        docs = spark.range(args.synth).select(
-            F.col("id").alias("doc_id"),
-            F.concat(
-                F.lit("sa"), F.col("id").cast("string"),
-                F.lit(" sb"), (F.col("id") * 3).cast("string"),
-                F.lit(" sc"), (F.col("id") * 7).cast("string"),
-                F.lit(" sd"), (F.col("id") * 11).cast("string"),
-                F.lit(" se"), (F.col("id") * 13).cast("string"),
-            ).alias("text"),
-        )
-    elif args.input:
-        docs = load_docs(args.input, args.input_format)
-    else:
-        ap.error("one of --input/--synth is required")
-    evalset = (
-        load_docs(args.evalset, args.evalset_format) if args.evalset else None
-    )
-    if args.auto_knobs:
-        from latex_ocr_spark.operators.advisor import resolve_auto_knobs
-
-        applied = resolve_auto_knobs(
-            docs, args, ap, sample_fraction=args.auto_knobs_sample
-        )
-        print(json.dumps({"auto_knobs": applied}), file=sys.stderr)
-
+    docs, evalset = read_inputs(spark, args, ap)
+    apply_auto_knobs(docs, args, ap)
     packed, res = prepare_tables(spark, docs, evalset, args)
 
     # the run's primary action: write the packed table (partitioned by
@@ -241,19 +154,7 @@ def main() -> int:
             args.bucket_table, key="doc_id", num_buckets=64,
         )
 
-    funnel = {s: {"in": i, "out": o} for s, i, o in res.funnel}
-    if funnel["split"]["out"] == 0 and funnel["quality_gates"]["in"] > 0:
-        print(
-            "WARNING: 0 documents survived the funnel from "
-            f"{funnel['quality_gates']['in']} inputs — check --input-format/"
-            "--string-ids (a mis-typed JSONL schema NULLs every id under "
-            "PERMISSIVE parsing)",
-            file=sys.stderr,
-        )
-    spark.createDataFrame([(json.dumps(funnel),)], "funnel string").coalesce(
-        1
-    ).write.mode("overwrite").text(f"{args.output}/funnel")
-    print(json.dumps(funnel))
+    write_funnel(spark, res, args.output)
     return 0
 
 

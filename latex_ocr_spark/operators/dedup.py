@@ -724,9 +724,15 @@ def duplicate_clusters(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
 
     Isolated documents (no pair) are not in the output — callers union
     them back as their own singletons if needed (cheap anti-join).
+
+    ``max_iter`` counts propagation rounds and must be at least 1: the
+    first round is fused with label initialization and always runs, so
+    a smaller bound raises ``ValueError`` before any job.
     """
     from pyspark.sql import Observation
 
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be >= 1 propagation round, got {max_iter}")
     e = pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
     edges = (
         e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))

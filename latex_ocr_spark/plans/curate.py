@@ -11,21 +11,36 @@ operators:
                               → duplicate_clusters, keep one
                               representative per cluster)
       → decontamination      (dedup.decontaminate vs an eval set,
-                              REUSING the near-dup stage's shingles)
+                              REUSING the near-dup stage's profile)
       → [sampling]           (textstats.deterministic_sample — optional
                               global or per-stratum down-sample)
       → cluster-safe split   (textstats.cluster_safe_split — near-dups
                               can't straddle train/val)
 
-Single-pass design (round 4): the funnel counts ride on ``observe()``
+One stage set, two runners.  Each stage is defined once, as a plain
+function below (``_check_knobs``, ``_gate``, ``_exact_groups``,
+``_near_pairs``, ``_merge_clusters``, ``_decontaminate``,
+``_sample_and_split``, ``_funnel_rows``, ...).  The runners call those
+functions and differ only in what they own:
+
+- :func:`curate_corpus`, the in-memory runner, owns the ``observe()``
+  stage counts, the ``cachepool`` tracking of the narrow reused frames,
+  and the deferred ``resolve_funnel``;
+- :func:`latex_ocr_spark.plans.resumable.curate_corpus_resumable`, the
+  checkpoint runner, owns the parquet stage artifacts, the lineage
+  commit, the single-writer lease, the crash hook and the
+  artifact-derived counts.
+
+Single-pass design (round 4): the funnel counts ride ``observe()``
 metrics instead of per-stage ``count()`` actions, corpus-wide text
 frames are never persisted (only the small pair/cluster/group frames
-and the shingle frame — which genuinely feeds several joins — are
-cachepool-tracked), and the corpus is shingle-exploded exactly ONCE:
-the near-dup stage's shingle frame, survivor-filtered by a zero-shuffle
-broadcast anti-join, is handed to the decontamination stage.  At test
-scale this is invisible; at 100 TB the shingle explode and corpus-wide
-materializations were the funnel's two dominant costs.
+and the one per-document profile — which genuinely feeds several
+joins — are cachepool-tracked), and the corpus is profiled exactly
+ONCE: the near-dup stage's profile (shingle frame on the exact path),
+survivor-filtered by a zero-shuffle broadcast anti-join, is handed to
+the decontamination stage.  At test scale this is invisible; at 100 TB
+the corpus profile and corpus-wide materializations were the funnel's
+two dominant costs.
 
 The funnel (docs in/out per stage) remains the curation run's primary
 observability artifact — a stage that silently drops 90% of a corpus
@@ -112,8 +127,296 @@ class CurationResult:
         write_bucketed(self.documents, table, key=id_col, num_buckets=num_buckets)
 
 
+# ---- the funnel's stages, defined once ------------------------------
+
+
 def _count(name: str):
     return F.count(F.lit(1)).alias(name)
+
+
+def _maybe_broadcast(df: DataFrame, small: bool) -> DataFrame:
+    return F.broadcast(df) if small else df
+
+
+def _check_knobs(
+    near_dup_method: str, max_df: Optional[int], max_bucket_size: Optional[int]
+) -> None:
+    """Each blowup cap belongs to one pair generator: setting it for
+    the other raises rather than silently ignoring a mitigation."""
+    if near_dup_method not in ("lsh", "jaccard"):
+        raise ValueError(
+            f"near_dup_method must be 'lsh' or 'jaccard', got {near_dup_method!r}"
+        )
+    if near_dup_method == "lsh" and max_df is not None:
+        raise ValueError("max_df applies to near_dup_method='jaccard'; "
+                         "use max_bucket_size for the LSH path")
+    if near_dup_method == "jaccard" and max_bucket_size is not None:
+        raise ValueError("max_bucket_size applies to near_dup_method='lsh'; "
+                         "use max_df for the exact path")
+
+
+def _spine(docs: DataFrame, *, redact: bool, id_col: str, text_col: str) -> DataFrame:
+    """The corpus spine (id, text).  Redaction is a row-preserving
+    scrub that must precede any text-derived signal, so hashes,
+    shingles and profiles see what training will see."""
+    cur = docs.select(id_col, text_col)
+    if redact:
+        cur = TS.redact_text(cur, text_col=text_col, out_col=text_col)
+    return cur
+
+
+def _gate(
+    cur: DataFrame, *, min_tokens: int, max_punct_ratio: float, id_col: str,
+    text_col: str,
+) -> DataFrame:
+    """Quality gates — a plain filter over the profile expressions (id
+    untouched at its own type: string-id corpora survive) — plus the
+    NULL-id drop.
+
+    A row without an id cannot be deduplicated, decontaminated or
+    split, so it is dropped HERE, counted, rather than by the
+    exact-dedup join's implicit isNotNull filter.  That implicit filter
+    would be PUSHED DOWN below the observe nodes, silently skewing every
+    upstream funnel count for NULL-id corpora (observed metrics count
+    what flows through the node's post-pushdown position)."""
+    return TS.quality_gate(
+        cur, min_tokens=min_tokens, max_punct_ratio=max_punct_ratio,
+        text_col=text_col,
+    ).filter(F.col(id_col).isNotNull())
+
+
+def _exact_groups(gated: DataFrame, *, id_col: str, text_col: str) -> DataFrame:
+    """Exact-dup groups (text_hash, canonical_id, dup_count): narrow,
+    and read both by the canonical semi-join and by the cluster merge
+    (every >1 group's members get cluster rows)."""
+    return D.exact_duplicates(gated, text_col=text_col, id_col=id_col)
+
+
+def _exact_survivors(gated: DataFrame, groups: DataFrame, id_col: str) -> DataFrame:
+    """Exact dedup: keep the canonical (min id) of each text group."""
+    canonical = groups.select(F.col("canonical_id").alias(id_col))
+    return gated.join(canonical, id_col, "left_semi")
+
+
+def _near_pairs(
+    cur: DataFrame, *, near_dup_method: str, dedup_threshold: float,
+    ngram: int, num_hashes: int, band_size: int,
+    max_bucket_size: Optional[int], max_df: Optional[int], id_col: str,
+    text_col: str, assume_small_side_frames: bool,
+) -> Tuple[DataFrame, DataFrame]:
+    """(verified near-dup pairs, THE corpus frame they came from).
+
+    The corpus frame is built once here, reused by the pair generator
+    AND — survivor-filtered — by :func:`_decontaminate`: one corpus
+    tokenization per funnel run.
+
+    'lsh': ONE cached per-document profile (shingle set + signatures +
+    size), kept row-wise — no explode, no distinct exchange, no
+    signature groupBy.  Per-doc signatures are unaffected by dropping
+    other documents, so the filtered reuse is exact.  One cache layer,
+    not two (arrays + signatures): stacked caches raced their builds
+    inside the cluster loop's first action and re-ran the corpus
+    tokenize + hash family once per layer.
+
+    'jaccard': the exploded (id, shingle) frame the exact inverted
+    index needs."""
+    if near_dup_method == "lsh":
+        profile = cachepool.track(
+            D.minhash_signatures(
+                cur, num_hashes, text_col, id_col, ngram,
+                include_size=True, include_shingles=True,
+            )
+        )
+        pairs = D.lsh_verified_pairs(
+            cur, threshold=dedup_threshold, num_hashes=num_hashes,
+            band_size=band_size, text_col=text_col, id_col=id_col,
+            ngram=ngram, max_bucket_size=max_bucket_size, _arrs=profile,
+            _signatures=profile, assume_small_pairs=assume_small_side_frames,
+        )
+        return pairs, profile
+    shingles = cachepool.track(
+        D.doc_shingles(cur, text_col=text_col, id_col=id_col, ngram=ngram)
+    )
+    pairs = D.jaccard_pairs(
+        cur, threshold=dedup_threshold, text_col=text_col, id_col=id_col,
+        ngram=ngram, max_df=max_df if max_df is not None else 1000,
+        _shingles=shingles,
+    )
+    return pairs, shingles
+
+
+def _merge_clusters(
+    pairs: DataFrame, gated: DataFrame, groups: DataFrame, *, id_col: str,
+    text_col: str,
+) -> Tuple[DataFrame, DataFrame]:
+    """(near-dup clusters, full cluster table).
+
+    ``duplicate_clusters`` runs unconditionally: it is typed from the
+    pairs frame and converges in one (empty) round when there are no
+    near-dups, so the funnel plans identically with and without them.
+
+    The full table is the near-dup components ∪ the exact-dup groups'
+    members (without them, a dropped exact copy re-added later would
+    split-hash by its own id and could straddle its canonical — the
+    leakage the cluster-safe split exists to prevent).  Exact members
+    resolve THROUGH their canonical's near-dup cluster when one exists
+    (A≡B exact, A≈C near → B's cluster is C's cluster id); each id
+    keeps its minimum cluster id."""
+    near = D.duplicate_clusters(pairs)
+    exact_members = (
+        gated.select(F.col(id_col).alias("id"), F.md5(F.col(text_col)).alias("text_hash"))
+        .join(
+            groups.filter(F.col("dup_count") > 1).select("text_hash", "canonical_id"),
+            "text_hash",
+        )
+        .select("id", "canonical_id")
+    )
+    exact_resolved = (
+        exact_members.join(
+            near.select(
+                F.col("id").alias("canonical_id"), F.col("cluster_id").alias("_near_cl")
+            ),
+            "canonical_id",
+            "left",
+        )
+        .select("id", F.coalesce("_near_cl", "canonical_id").alias("cluster_id"))
+    )
+    merged = (
+        near.unionByName(exact_resolved)
+        .groupBy("id")
+        .agg(F.min("cluster_id").alias("cluster_id"))
+    )
+    return near, merged
+
+
+def _near_survivors(
+    cur: DataFrame, clusters: DataFrame, *, id_col: str, small: bool
+) -> Tuple[DataFrame, DataFrame]:
+    """(dropped non-canonical ids, survivors): keep one representative
+    — the canonical (minimum id) — per near-dup cluster."""
+    non_canonical = clusters.filter(F.col("id") != F.col("cluster_id")).select(
+        F.col("id").alias(id_col)
+    )
+    return non_canonical, cur.join(
+        _maybe_broadcast(non_canonical, small), id_col, "left_anti"
+    )
+
+
+def _decontaminate(
+    cur: DataFrame, evalset: DataFrame, non_canonical: DataFrame,
+    corpus_frame: Optional[DataFrame], *, near_dup_method: str,
+    dedup_threshold: float, num_hashes: int, band_size: int, ngram: int,
+    max_bucket_size: Optional[int], id_col: str, text_col: str,
+    assume_small_side_frames: bool,
+) -> Tuple[DataFrame, DataFrame]:
+    """(contamination report, cleaned corpus) vs the eval set.
+
+    ``corpus_frame`` is the near-dup stage's profile (or shingle
+    frame), filtered to survivors by a map-side anti-join against the
+    (small, already-broadcast) dropped-id set: the corpus is never
+    re-tokenized.  ``None`` (the near-dup stage did not run in this
+    process) lets decontaminate build its own.  The recall knobs carry
+    over, so one similarity measure holds end-to-end."""
+    survivors = None
+    if corpus_frame is not None:
+        dropped = _maybe_broadcast(
+            non_canonical.withColumnRenamed(id_col, "id"), assume_small_side_frames
+        )
+        survivors = corpus_frame.join(dropped, "id", "left_anti")
+    lsh = near_dup_method == "lsh"
+    return D.decontaminate(
+        cur, evalset, threshold=dedup_threshold,
+        num_hashes=num_hashes, band_size=band_size,
+        ngram=ngram, text_col=text_col, id_col=id_col,
+        max_bucket_size=max_bucket_size,
+        _corpus_shingles=None if lsh else survivors,
+        _corpus_arrs=survivors if lsh else None,
+        _corpus_signatures=survivors if lsh else None,
+        contaminated_is_small=assume_small_side_frames,
+    )
+
+
+def _sample_and_split(
+    cur: DataFrame, clusters: DataFrame, *, sample_fraction: Optional[float],
+    val_fraction: float, seed: str, id_col: str,
+    assume_small_side_frames: bool,
+    watch: Callable[[str, DataFrame], DataFrame] = lambda _stage, df: df,
+) -> DataFrame:
+    """Optional deterministic (subset-stable) down-sample, then the
+    cluster-safe split: near-dups hash by their cluster canonical, so
+    re-adding a dropped near-dup later can never land it on the other
+    side.  ``watch`` wraps the sampled frame (the in-memory runner's
+    stage count)."""
+    if sample_fraction is not None:
+        cur = watch("sample", TS.deterministic_sample(
+            cur, fraction=sample_fraction, id_col=id_col, seed=seed + ":sample"
+        ))
+    return TS.cluster_safe_split(
+        cur, clusters, val_fraction=val_fraction, id_col=id_col, seed=seed,
+        clusters_are_small=assume_small_side_frames,
+    )
+
+
+def _observed_count(obs: Observation, fallback: Callable[[], int]) -> int:
+    """An observed stage count, with the degenerate-corpus fallback.
+
+    A degenerate pipeline (e.g. every id NULL) can empty a broadcast
+    join side at runtime; AQE then skips the whole probe branch, the
+    CollectMetrics nodes on it never execute, and their observations
+    complete with schema-less empty rows that pyspark's
+    ``Observation.get`` cannot convert (toPyRow asserts).  Read the JVM
+    map directly; when the metric is genuinely absent (node skipped),
+    pay ``fallback()`` — an extra action only on this degenerate path,
+    where the spine is near-empty and cheap, and the funnel MUST still
+    report true stage counts (the zero-survivors warning keys off
+    them)."""
+    try:
+        return int(obs.get["n"])
+    except Exception:
+        try:
+            m = obs._jo.getAsJava()
+            if m.containsKey("n"):
+                return int(m.get("n"))
+        except Exception:
+            pass
+        return int(fallback())
+
+
+def _check_final(n_last: int, n_final: int) -> None:
+    """The split preserves rows, so the last stage count must equal
+    the exact final count.  A mismatch means stale artifacts or
+    observed metrics that double-applied (e.g. a resubmitted stage
+    re-ran a CollectMetrics subtree): surface it rather than report a
+    corrupted funnel."""
+    if n_last != n_final:
+        raise RuntimeError(
+            f"funnel metrics anomaly: last stage count {n_last} != final "
+            f"count {n_final} (stale artifacts? observation metrics "
+            f"double-applied under task/stage re-execution?)"
+        )
+
+
+def _funnel_rows(
+    *, redact: bool, n_in: int, n_q: int, n_exact: int, n_near: int,
+    n_decon: int, n_sampled: Optional[int], n_final: int,
+) -> List[Tuple[str, int, int]]:
+    """[(stage, docs_in, docs_out), …] in execution order.  The
+    decontaminate row is always present (n_decon == n_near without an
+    eval set); the redact and sample rows only when those stages ran."""
+    funnel = [("redact", n_in, n_in)] if redact else []
+    funnel += [
+        ("quality_gates", n_in, n_q),
+        ("exact_dedup", n_q, n_exact),
+        ("near_dup_clusters", n_exact, n_near),
+        ("decontaminate", n_near, n_decon),
+    ]
+    if n_sampled is not None:
+        funnel.append(("sample", n_decon, n_sampled))
+    funnel.append(("split", n_decon if n_sampled is None else n_sampled, n_final))
+    return funnel
+
+
+# ---- the in-memory runner -------------------------------------------
 
 
 def curate_corpus(
@@ -149,7 +452,7 @@ def curate_corpus(
     observation metrics
     ride the consumer's pass, so the funnel costs zero extra passes
     over the corpus (at 100 TB the dedicated count pass roughly doubles
-    funnel cost; jobs/curate_job.py uses the deferred mode).
+    funnel cost; both jobs use the deferred mode).
 
     ``assume_small_side_frames``: True (default) broadcast-hints the
     dropped-near-dup id set and the cluster table into their
@@ -200,247 +503,62 @@ def curate_corpus(
     recall knobs raises them for BOTH near-dup detection and
     decontamination.
     """
-    if near_dup_method not in ("lsh", "jaccard"):
-        raise ValueError(
-            f"near_dup_method must be 'lsh' or 'jaccard', got {near_dup_method!r}"
-        )
-    if near_dup_method == "lsh" and max_df is not None:
-        raise ValueError("max_df applies to near_dup_method='jaccard'; "
-                         "use max_bucket_size for the LSH path")
-    if near_dup_method == "jaccard" and max_bucket_size is not None:
-        raise ValueError("max_bucket_size applies to near_dup_method='lsh'; "
-                         "use max_df for the exact path")
+    _check_knobs(near_dup_method, max_df, max_bucket_size)
+    # stage -> (observation, observed frame); the frame is what the
+    # degenerate-path fallback counts
+    watched: Dict[str, Tuple[Observation, DataFrame]] = {}
 
-    cur = docs.select(id_col, text_col)
-    if redact:
-        # row-preserving scrub BEFORE any text-derived signal, so
-        # hashes/shingles/profiles see what training will see
-        cur = TS.redact_text(cur, text_col=text_col, out_col=text_col)
-    obs_in = Observation()
-    cur = cur.observe(obs_in, _count("n"))
+    def watch(stage: str, df: DataFrame) -> DataFrame:
+        obs = Observation()
+        watched[stage] = (obs, df.observe(obs, _count("n")))
+        return watched[stage][1]
 
-    # 1. quality gates — a plain filter over the profile expressions
-    # (id untouched at its own type: string-id corpora survive; the
-    # old profile-then-semi-join formulation cost an id shuffle AND
-    # nullified string ids through the profile's id cast)
-    obs_q = Observation()
-    cur2 = (
-        TS.quality_gate(
-            cur, min_tokens=min_tokens, max_punct_ratio=max_punct_ratio,
-            text_col=text_col,
-        )
-        # a row without an id cannot be deduplicated, decontaminated or
-        # split — drop it HERE, counted, rather than letting the exact-
-        # dedup join's implicit isNotNull filter swallow it.  (That
-        # implicit filter would also be PUSHED DOWN below the observe
-        # nodes, silently skewing every upstream funnel count for
-        # NULL-id corpora — observed metrics count what flows through
-        # the node's post-pushdown position.)
-        .filter(F.col(id_col).isNotNull())
-        .observe(obs_q, _count("n"))
+    cur = watch("in", _spine(docs, redact=redact, id_col=id_col, text_col=text_col))
+    gated = watch("quality_gates", _gate(
+        cur, min_tokens=min_tokens, max_punct_ratio=max_punct_ratio,
+        id_col=id_col, text_col=text_col,
+    ))
+    # the narrow frames feeding several consumers persist; the corpus
+    # text frames do NOT (recomputing a pruned scan+filter is cheaper
+    # than caching the corpus at scale)
+    groups = cachepool.track(_exact_groups(gated, id_col=id_col, text_col=text_col))
+    cur = watch("exact_dedup", _exact_survivors(gated, groups, id_col))
+    # one similarity measure for the near-dup and decontamination stages
+    sim = dict(near_dup_method=near_dup_method, dedup_threshold=dedup_threshold,
+               ngram=ngram, num_hashes=num_hashes, band_size=band_size,
+               max_bucket_size=max_bucket_size, id_col=id_col, text_col=text_col,
+               assume_small_side_frames=assume_small_side_frames)
+    raw_pairs, corpus_frame = _near_pairs(cur, max_df=max_df, **sim)
+    near, merged = _merge_clusters(
+        cachepool.track(raw_pairs), gated, groups, id_col=id_col, text_col=text_col
     )
+    non_canonical, cur = _near_survivors(
+        cur, near, id_col=id_col, small=assume_small_side_frames
+    )
+    cur = watch("near_dup_clusters", cur)
+    clusters = cachepool.track(merged)
 
-    # 2. exact dedup — keep the canonical (min id) of each text group;
-    # remember every >1-group's membership so exact duplicates get
-    # cluster rows too (without them, a dropped exact copy re-added
-    # later would split-hash by its own id and could straddle its
-    # canonical — the leakage the cluster-safe split exists to prevent).
-    # ``groups`` is narrow (hash, id, count) and feeds two consumers —
-    # it persists; the corpus text frames do NOT (recomputing a pruned
-    # scan+filter is cheaper than caching the corpus at scale).
-    groups = cachepool.track(
-        D.exact_duplicates(cur2, text_col=text_col, id_col=id_col)
-    )
-    canonical = groups.select(F.col("canonical_id").alias(id_col))
-    exact_members = (
-        cur2.select(F.col(id_col).alias("id"), F.md5(F.col(text_col)).alias("text_hash"))
-        .join(
-            groups.filter(F.col("dup_count") > 1).select("text_hash", "canonical_id"),
-            "text_hash",
-        )
-        .select("id", "canonical_id")
-    )
-    obs_e = Observation()
-    cur3 = cur2.join(canonical, id_col, "left_semi").observe(obs_e, _count("n"))
-
-    # 3. near-dup clustering — keep one representative per cluster.
-    # THE shingle frame: built once here, reused by the pair generator
-    # (signatures / candidates / verify) AND — survivor-filtered — by
-    # the decontamination stage.  One corpus tokenization per funnel
-    # run.  The LSH path keeps shingle SETS row-wise (doc_shingle_arrays
-    # — no explode, no distinct exchange, no signature groupBy); the
-    # exact-jaccard path still needs the exploded inverted index.
-    sh3 = None
-    arrs3 = None
-    sig3 = None
-    if near_dup_method == "lsh":
-        # ONE cached per-document profile (shingle set + signatures +
-        # size) for the whole funnel: the near-dup stage and
-        # (survivor-filtered) the decontamination stage both read this
-        # frame — per-doc signatures are unaffected by dropping other
-        # documents, so the filtered reuse is exact.  One cache layer,
-        # not two (arrays + signatures): stacked caches raced their
-        # builds inside the cluster loop's first action and re-ran the
-        # corpus tokenize + hash family once per layer.
-        arrs3 = cachepool.track(
-            D.minhash_signatures(
-                cur3, num_hashes, text_col, id_col, ngram,
-                include_size=True, include_shingles=True,
-            )
-        )
-        sig3 = arrs3
-        raw_pairs = D.lsh_verified_pairs(
-            cur3, threshold=dedup_threshold, num_hashes=num_hashes,
-            band_size=band_size, text_col=text_col, id_col=id_col,
-            ngram=ngram, max_bucket_size=max_bucket_size, _arrs=arrs3,
-            _signatures=sig3, assume_small_pairs=assume_small_side_frames,
-        )
-    else:
-        sh3 = cachepool.track(
-            D.doc_shingles(cur3, text_col=text_col, id_col=id_col, ngram=ngram)
-        )
-        raw_pairs = D.jaccard_pairs(
-            cur3, threshold=dedup_threshold, text_col=text_col, id_col=id_col,
-            ngram=ngram, max_df=max_df if max_df is not None else 1000,
-            _shingles=sh3,
-        )
-    pairs = cachepool.track(raw_pairs)
-    # unconditional: duplicate_clusters is typed from the pairs frame
-    # and converges in one (empty) round when there are no near-dups,
-    # so the funnel plans identically with and without them — and the
-    # old pairs.take(1) probe job is gone
-    near_clusters = D.duplicate_clusters(pairs)
-    non_canonical = near_clusters.filter(
-        F.col("id") != F.col("cluster_id")
-    ).select(F.col("id").alias(id_col))
-    _maybe_bcast = F.broadcast if assume_small_side_frames else (lambda df: df)
-    obs_n = Observation()
-    cur4 = cur3.join(_maybe_bcast(non_canonical), id_col, "left_anti").observe(
-        obs_n, _count("n")
-    )
-
-    # full cluster table = near-dup components ∪ exact-dup groups, the
-    # latter resolved THROUGH their canonical's near-dup cluster when
-    # one exists (A≡B exact, A≈C near → B's cluster is C's cluster id)
-    exact_resolved = (
-        exact_members.join(
-            near_clusters.select(
-                F.col("id").alias("canonical_id"), F.col("cluster_id").alias("_near_cl")
-            ),
-            "canonical_id",
-            "left",
-        )
-        .select(
-            "id", F.coalesce("_near_cl", "canonical_id").alias("cluster_id")
-        )
-    )
-    clusters = cachepool.track(
-        near_clusters.unionByName(exact_resolved)
-        .groupBy("id")
-        .agg(F.min("cluster_id").alias("cluster_id"))
-    )
-
-    # 4. decontamination vs the eval set — on the SAME shingle frame
-    # the near-dup stage used, filtered to survivors by a map-side
-    # anti-join against the (small, already-broadcast) dropped-id set;
-    # the corpus is never re-exploded, and the recall knobs carry over
-    obs_d = None
     report = None
-    cur5 = cur4
-    cur5_decon = cur4  # the decontaminate-stage output frame, pinned
-    # BEFORE optional sampling: the degenerate-path fallback in
-    # _build_funnel counts this frame when obs_d's metric is absent,
-    # and counting the post-sample frame there would report the
-    # sampled count as the decontaminate stage's 'out'
     if evalset is not None:
-        dropped = _maybe_bcast(non_canonical.withColumnRenamed(id_col, "id"))
-        sig4 = sig3.join(dropped, "id", "left_anti") if sig3 is not None else None
-        report, cur5 = D.decontaminate(
-            cur4, evalset, threshold=dedup_threshold,
-            num_hashes=num_hashes, band_size=band_size,
-            ngram=ngram, text_col=text_col, id_col=id_col,
-            max_bucket_size=max_bucket_size,
-            _corpus_shingles=(
-                sh3.join(dropped, "id", "left_anti") if sh3 is not None else None
-            ),
-            _corpus_arrs=(
-                arrs3.join(dropped, "id", "left_anti") if arrs3 is not None else None
-            ),
-            _corpus_signatures=sig4,
-            contaminated_is_small=assume_small_side_frames,
-        )
-        obs_d = Observation()
-        cur5 = cur5.observe(obs_d, _count("n"))
-        cur5_decon = cur5
-
-    # 5b. optional down-sample (deterministic, subset-stable)
-    obs_s = None
-    if sample_fraction is not None:
-        obs_s = Observation()
-        cur5 = TS.deterministic_sample(
-            cur5, fraction=sample_fraction, id_col=id_col, seed=seed + ":sample"
-        ).observe(obs_s, _count("n"))
-
-    # 6. cluster-safe split (near-dups hash by their cluster canonical)
-    out = TS.cluster_safe_split(
-        cur5, clusters, val_fraction=val_fraction, id_col=id_col, seed=seed,
-        clusters_are_small=assume_small_side_frames,
+        report, cur = _decontaminate(cur, evalset, non_canonical, corpus_frame, **sim)
+        cur = watch("decontaminate", cur)
+    out = _sample_and_split(
+        cur, clusters, sample_fraction=sample_fraction,
+        val_fraction=val_fraction, seed=seed, id_col=id_col,
+        assume_small_side_frames=assume_small_side_frames, watch=watch,
     )
 
     def _build_funnel(n_final: Optional[int]) -> List[Tuple[str, int, int]]:
-        def _n(obs: Observation, frame: DataFrame) -> int:
-            try:
-                return int(obs.get["n"])
-            except Exception:
-                # a degenerate pipeline (e.g. every id NULL) can empty
-                # a broadcast join side at runtime; AQE then skips the
-                # whole probe branch, the CollectMetrics nodes on it
-                # never execute, and their observations complete with
-                # schema-less empty rows that pyspark's Observation.get
-                # cannot convert (toPyRow asserts).  Read the JVM map
-                # directly; when the metric is genuinely absent (node
-                # skipped), count the frame itself — an extra action
-                # only on this degenerate path, where the spine is
-                # near-empty and cheap, and the funnel MUST still
-                # report true stage counts (the zero-survivors warning
-                # keys off them).
-                try:
-                    m = obs._jo.getAsJava()
-                    if m.containsKey("n"):
-                        return int(m.get("n"))
-                except Exception:
-                    pass
-                return frame.count()
-
-        n, n2, n3, n4 = (
-            _n(obs_in, cur), _n(obs_q, cur2), _n(obs_e, cur3), _n(obs_n, cur4)
+        n = {s: _observed_count(obs, df.count) for s, (obs, df) in watched.items()}
+        n_decon = n.get("decontaminate", n["near_dup_clusters"])
+        n_last = n.get("sample", n_decon)
+        if n_final is not None:
+            _check_final(n_last, n_final)
+        return _funnel_rows(
+            redact=redact, n_in=n["in"], n_q=n["quality_gates"],
+            n_exact=n["exact_dedup"], n_near=n["near_dup_clusters"],
+            n_decon=n_decon, n_sampled=n.get("sample"), n_final=n_last,
         )
-        funnel: List[Tuple[str, int, int]] = []
-        if redact:
-            funnel.append(("redact", n, n))
-        funnel.append(("quality_gates", n, n2))
-        funnel.append(("exact_dedup", n2, n3))
-        funnel.append(("near_dup_clusters", n3, n4))
-        n5 = _n(obs_d, cur5_decon) if obs_d is not None else n4
-        funnel.append(("decontaminate", n4, n5))
-        if obs_s is not None:
-            n5b = _n(obs_s, cur5)
-            funnel.append(("sample", n5, n5b))
-            n5 = n5b
-        if n_final is not None and n_final != n5:
-            # the split preserves rows, and n_final came from an exact
-            # count in the same action that resolved the last
-            # observation — a mismatch means the observed metrics
-            # double-applied (e.g. a resubmitted stage re-ran a
-            # CollectMetrics subtree); surface it rather than report a
-            # corrupted funnel
-            raise RuntimeError(
-                f"funnel metrics anomaly: last observed stage count {n5} "
-                f"!= exact final count {n_final} (observation metrics "
-                f"double-applied under task/stage re-execution?)"
-            )
-        funnel.append(("split", n5, n_final if n_final is not None else n5))
-        return funnel
 
     if collect_funnel:
         # the funnel's single action: materializes the whole pipeline

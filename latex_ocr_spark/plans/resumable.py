@@ -1,12 +1,17 @@
-"""Checkpoint-resumable curation funnel.
+"""Checkpoint runner for the curation funnel.
 
-Extends the extraction resume idiom (operators/lineage.py — the
+Runs the stage functions of plans/curate.py — the same ones its
+in-memory runner :func:`~latex_ocr_spark.plans.curate.curate_corpus`
+runs — with durable stage boundaries: at 100 TB a funnel that dies
+during decontamination must NOT restart from the corpus scan.  This
+extends the extraction resume idiom (operators/lineage.py — the
 reference's filesystem-as-state pattern, render.py:47-53 /
-arxiv.py:126-130) to the multi-stage curation pipeline: at 100 TB a
-funnel that dies during decontamination must NOT restart from the
-corpus scan.
+arxiv.py:126-130) to the funnel's stages.
 
-Design — persist the *small derived* frames, never the corpus:
+What this runner owns, and the in-memory one does not:
+
+- **The parquet artifact per stage** — the *small derived* frames,
+  never the corpus:
 
     stage      artifact (parquet)                        size class
     ---------  ----------------------------------------  ----------
@@ -16,32 +21,35 @@ Design — persist the *small derived* frames, never the corpus:
     report     contamination report (corpus, eval, j)     ~contaminated docs
     documents  final curated table with split column      the real sink
 
-The corpus-side survivor frames are always RE-DERIVED lazily from the
-immutable input by joining against these artifacts (a pruned scan +
-filter + semi/anti-join — cheaper at scale than writing and re-reading
-corpus text at every boundary, and identical to plans/curate.py's
-no-corpus-persist design).  Each stage commits artifact-then-lineage:
-a crash between the two re-runs that one stage (artifact overwrite is
-idempotent), never duplicates or drops rows — the same crash-window
-contract run_resumable_extract proves in tests/test_lineage_resume.py.
+  The corpus-side survivor frames are always RE-DERIVED lazily from
+  the immutable input by joining against these artifacts (a pruned
+  scan + filter + semi/anti-join — cheaper at scale than writing and
+  re-reading corpus text at every boundary, and the same
+  no-corpus-persist design as the in-memory runner).
+- **The lineage commit.**  Each stage commits artifact-then-lineage: a
+  crash between the two re-runs that one stage (artifact overwrite is
+  idempotent), never duplicates or drops rows — the same crash-window
+  contract run_resumable_extract proves in
+  tests/test_lineage_resume.py.  Resume skips every stage with a
+  committed lineage row whose config fingerprint matches, without
+  entering its stage function; a fingerprint mismatch raises rather
+  than silently mixing artifacts computed under different knobs.
+- **The single-writer lease** (:class:`CheckpointLease`) and the crash
+  hook ``_fail_after_write``.
+- **Artifact-derived funnel counts**, which cost zero corpus passes:
+  the gate counts ride ``observe()`` on the groups stage's write,
+  post-exact survivors equal the groups artifact's row count,
+  near-dup/contamination drops are counted on the small artifacts at
+  commit time, and the final count rides the documents write.  The
+  assembled funnel is pinned equal to the in-memory runner's in
+  tests/test_curate_resume.py.
 
-Resume = skip every stage with a committed lineage row whose config
-fingerprint matches; a fingerprint mismatch raises rather than
-silently mixing artifacts computed under different knobs.
-
-Funnel counts cost zero corpus passes here too: the gate counts ride
-``observe()`` on the groups stage's write, post-exact survivors equal
-the groups artifact's row count, near-dup/contamination drops are
-counted on the small artifacts at commit time, and the final count
-rides the documents write.  The assembled funnel is pinned equal to
-plans/curate.py's in tests/test_curate_resume.py.
-
-Trade-off vs the single-pass funnel: a FRESH resumable run that
-executes pairs + report in one invocation still shares the one corpus
-shingle explode (the in-memory frames are forwarded exactly as
-curate.py does); a RESUMED run re-derives what it needs from the
-artifacts instead.  What resumable mode adds is the stage-boundary
-writes — the price of durability, chosen by passing a checkpoint dir.
+Trade-off vs the in-memory runner: a FRESH run that executes pairs +
+report in one invocation still shares the one corpus profile (the
+near-dup stage's frame is handed to decontamination exactly as in
+memory); a RESUMED run re-derives what it needs from the artifacts
+instead.  What this runner adds is the stage-boundary writes — the
+price of durability, chosen by passing a checkpoint dir.
 """
 
 from __future__ import annotations
@@ -49,16 +57,14 @@ from __future__ import annotations
 import hashlib
 import json
 import time
-from typing import Callable, List, Optional, Set, Tuple
+from typing import Callable, Optional, Set, Tuple
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from latex_ocr_spark import cachepool
 from latex_ocr_spark.lease import DirLease
-from latex_ocr_spark.operators import dedup as D
-from latex_ocr_spark.operators import textstats as TS
+from latex_ocr_spark.plans import curate as C
 from latex_ocr_spark.plans.curate import CurationResult, _count
 
 _LINEAGE_SCHEMA = (
@@ -68,27 +74,6 @@ _LINEAGE_SCHEMA = (
 
 #: stage execution order (report only runs when an eval set is given)
 STAGES = ("groups", "pairs", "clusters", "report", "documents")
-
-
-def _obs_n(obs: Observation, fallback: Callable[[], int]) -> int:
-    """Observation count with the degenerate-corpus fallback
-    plans/curate.py carries: when a runtime-empty broadcast side makes
-    AQE skip the branch holding a CollectMetrics node, the observation
-    completes with a schema-less empty row that pyspark's
-    ``Observation.get`` cannot convert (toPyRow asserts).  Read the JVM
-    map directly; when the metric is genuinely absent, pay the
-    caller's fallback count — only on this near-empty path, where the
-    funnel MUST still report true stage counts."""
-    try:
-        return int(obs.get["n"])
-    except Exception:
-        try:
-            m = obs._jo.getAsJava()
-            if m.containsKey("n"):
-                return int(m.get("n"))
-        except Exception:
-            pass
-        return int(fallback())
 
 
 def _config_hash(knobs: dict) -> str:
@@ -215,17 +200,7 @@ def _curate_resumable_impl(
     BEFORE the lineage commit of the named stages — the test hook for
     the crash window (mirrors run_resumable_extract's fail_on_units).
     """
-    if near_dup_method not in ("lsh", "jaccard"):
-        raise ValueError(
-            f"near_dup_method must be 'lsh' or 'jaccard', got {near_dup_method!r}"
-        )
-    if near_dup_method == "lsh" and max_df is not None:
-        raise ValueError("max_df applies to near_dup_method='jaccard'; "
-                         "use max_bucket_size for the LSH path")
-    if near_dup_method == "jaccard" and max_bucket_size is not None:
-        raise ValueError("max_bucket_size applies to near_dup_method='lsh'; "
-                         "use max_df for the exact path")
-
+    C._check_knobs(near_dup_method, max_df, max_bucket_size)
     cfg = _config_hash(
         dict(
             min_tokens=min_tokens, max_punct_ratio=max_punct_ratio,
@@ -240,272 +215,146 @@ def _curate_resumable_impl(
     ckpt = checkpoint_dir.rstrip("/")
     lineage_path = f"{ckpt}/_lineage"
     done = _read_lineage(spark, lineage_path)
-    for stage, (stage_cfg, _n, _m) in done.items():
+    for stage_name, (stage_cfg, _n, _m) in done.items():
         if stage_cfg != cfg:
             raise RuntimeError(
-                f"checkpoint at {ckpt} holds stage '{stage}' computed under a "
+                f"checkpoint at {ckpt} holds stage '{stage_name}' computed under a "
                 f"different configuration ({stage_cfg[:8]}… vs {cfg[:8]}…) — "
                 "resuming would mix artifacts across configs; use a fresh "
                 "checkpoint dir (or delete this one) to change knobs"
             )
     fail_after = _fail_after_write or set()
-    _maybe_bcast = F.broadcast if assume_small_side_frames else (lambda df: df)
 
-    def _crash_if(stage: str) -> None:
-        if stage in fail_after:
-            raise RuntimeError(
-                f"injected crash after '{stage}' artifact write, before lineage commit"
-            )
-
-    # corpus spine: redaction is row-preserving and must precede any
-    # text-derived signal (hashes/shingles see what training sees)
-    cur = docs.select(id_col, text_col)
-    if redact:
-        cur = TS.redact_text(cur, text_col=text_col, out_col=text_col)
-
-    # ---- stage 1: exact-dup groups --------------------------------
-    groups_path = f"{ckpt}/groups"
-    if "groups" in done:
-        n_in = done["groups"][2]["n_in"]
-        n_q = done["groups"][2]["n_q"]
-        n3 = done["groups"][1]
-        groups = spark.read.parquet(groups_path)
-    else:
-        started = int(time.time())
-        obs_in, obs_q = Observation(), Observation()
-        gated = (
-            TS.quality_gate(
-                cur.observe(obs_in, _count("n")),
-                min_tokens=min_tokens, max_punct_ratio=max_punct_ratio,
-                text_col=text_col,
-            )
-            .filter(F.col(id_col).isNotNull())
-            .observe(obs_q, _count("n"))
-        )
-        g_obs = Observation()
-        D.exact_duplicates(gated, text_col=text_col, id_col=id_col).observe(
-            g_obs, _count("n")
-        ).write.mode("overwrite").parquet(groups_path)
-        _crash_if("groups")
-        n_in = _obs_n(obs_in, lambda: cur.count())
-        n_q = _obs_n(
-            obs_q,
-            lambda: TS.quality_gate(
-                cur, min_tokens=min_tokens, max_punct_ratio=max_punct_ratio,
-                text_col=text_col,
-            ).filter(F.col(id_col).isNotNull()).count(),
-        )
-        n3 = _obs_n(g_obs, lambda: spark.read.parquet(groups_path).count())
-        _commit(spark, lineage_path, "groups", cfg, n3,
-                {"n_in": n_in, "n_q": n_q}, started)
-        groups = spark.read.parquet(groups_path)
-
-    # gated survivors re-derived lazily (pruned scan + filter — never
-    # checkpointed corpus text); exact-dedup survivors via the groups
-    # artifact's canonical semi-join
-    gated = TS.quality_gate(
-        cur, min_tokens=min_tokens, max_punct_ratio=max_punct_ratio,
-        text_col=text_col,
-    ).filter(F.col(id_col).isNotNull())
-    canonical = groups.select(F.col("canonical_id").alias(id_col))
-    cur3 = gated.join(canonical, id_col, "left_semi")
-
-    # ---- stage 2: verified near-dup pairs -------------------------
-    pairs_path = f"{ckpt}/pairs"
-    sh3 = arrs3 = sig3 = None  # in-memory reuse when computed THIS invocation
-    if "pairs" in done:
-        pairs = spark.read.parquet(pairs_path)
-    else:
-        started = int(time.time())
-        if near_dup_method == "lsh":
-            # row-wise shingle sets + signature projection — no explode,
-            # no distinct exchange, no groupBy (see operators/dedup.py).
-            # ONE cached profile frame (shingles + signatures + size):
-            # stacked caches would re-run the corpus tokenize + hash
-            # family once per layer inside a single action
-            arrs3 = cachepool.track(
-                D.minhash_signatures(
-                    cur3, num_hashes, text_col, id_col, ngram,
-                    include_size=True, include_shingles=True,
+    def stage(
+        name: str, write: Callable[[str], Tuple[int, dict]]
+    ) -> Tuple[DataFrame, int, dict]:
+        """(artifact, n_rows, meta) of one stage.  A stage with a
+        committed lineage row is never re-entered; otherwise
+        ``write(path)`` writes its artifact and returns the lineage
+        row's (n_rows, meta), committed after the artifact."""
+        path = f"{ckpt}/{name}"
+        if name not in done:
+            started = int(time.time())
+            n_rows, meta = write(path)
+            if name in fail_after:
+                raise RuntimeError(
+                    f"injected crash after '{name}' artifact write, before lineage commit"
                 )
-            )
-            sig3 = arrs3
-            raw_pairs = D.lsh_verified_pairs(
-                cur3, threshold=dedup_threshold, num_hashes=num_hashes,
-                band_size=band_size, text_col=text_col, id_col=id_col,
-                ngram=ngram, max_bucket_size=max_bucket_size,
-                _arrs=arrs3, _signatures=sig3,
-                assume_small_pairs=assume_small_side_frames,
-            )
-        else:
-            sh3 = cachepool.track(
-                D.doc_shingles(cur3, text_col=text_col, id_col=id_col, ngram=ngram)
-            )
-            raw_pairs = D.jaccard_pairs(
-                cur3, threshold=dedup_threshold, text_col=text_col,
-                id_col=id_col, ngram=ngram,
-                max_df=max_df if max_df is not None else 1000,
-                _shingles=sh3,
-            )
-        p_obs = Observation()
-        raw_pairs.observe(p_obs, _count("n")).write.mode("overwrite").parquet(
-            pairs_path
-        )
-        _crash_if("pairs")
-        n_pairs = _obs_n(p_obs, lambda: spark.read.parquet(pairs_path).count())
-        _commit(spark, lineage_path, "pairs", cfg, n_pairs, {}, started)
-        pairs = spark.read.parquet(pairs_path)
+            _commit(spark, lineage_path, name, cfg, n_rows, meta, started)
+            done[name] = (cfg, n_rows, meta)
+        _cfg, n_rows, meta = done[name]
+        return spark.read.parquet(path), n_rows, meta
 
-    # ---- stage 3: duplicate clusters ------------------------------
-    clusters_path = f"{ckpt}/clusters"
-    if "clusters" in done:
-        n_non_canonical = done["clusters"][2]["n_non_canonical"]
-        clusters = spark.read.parquet(clusters_path)
-    else:
-        started = int(time.time())
-        near_clusters = D.duplicate_clusters(pairs)
+    def artifact_rows(path: str) -> Callable[[], int]:
+        return lambda: spark.read.parquet(path).count()
+
+    spine = C._spine(docs, redact=redact, id_col=id_col, text_col=text_col)
+    gate = dict(min_tokens=min_tokens, max_punct_ratio=max_punct_ratio,
+                id_col=id_col, text_col=text_col)
+    # gated survivors re-derived lazily (pruned scan + filter — never
+    # checkpointed corpus text)
+    gated = C._gate(spine, **gate)
+
+    def write_groups(path: str) -> Tuple[int, dict]:
+        obs_in, obs_q, obs_g = Observation(), Observation(), Observation()
+        observed = C._gate(spine.observe(obs_in, _count("n")), **gate).observe(
+            obs_q, _count("n")
+        )
+        C._exact_groups(observed, id_col=id_col, text_col=text_col).observe(
+            obs_g, _count("n")
+        ).write.mode("overwrite").parquet(path)
+        meta = {"n_in": C._observed_count(obs_in, spine.count),
+                "n_q": C._observed_count(obs_q, gated.count)}
+        return C._observed_count(obs_g, artifact_rows(path)), meta
+
+    groups, n_exact, meta = stage("groups", write_groups)
+    n_in, n_q = meta["n_in"], meta["n_q"]
+    exact_kept = C._exact_survivors(gated, groups, id_col)
+
+    sim = dict(near_dup_method=near_dup_method, dedup_threshold=dedup_threshold,
+               ngram=ngram, num_hashes=num_hashes, band_size=band_size,
+               max_bucket_size=max_bucket_size, id_col=id_col, text_col=text_col,
+               assume_small_side_frames=assume_small_side_frames)
+    corpus_frame = None  # the near-dup stage's profile, when it ran HERE
+
+    def write_pairs(path: str) -> Tuple[int, dict]:
+        nonlocal corpus_frame
+        raw_pairs, corpus_frame = C._near_pairs(exact_kept, max_df=max_df, **sim)
+        obs = Observation()
+        raw_pairs.observe(obs, _count("n")).write.mode("overwrite").parquet(path)
+        return C._observed_count(obs, artifact_rows(path)), {}
+
+    pairs = stage("pairs", write_pairs)[0]
+
+    def write_clusters(path: str) -> Tuple[int, dict]:
+        near, merged = C._merge_clusters(
+            pairs, gated, groups, id_col=id_col, text_col=text_col
+        )
         # near-only non-canonical count: the docs the near-dup stage
         # drops from the spine (cheap — the loop already materialized
         # this frame via localCheckpoint)
-        n_non_canonical = near_clusters.filter(
-            F.col("id") != F.col("cluster_id")
-        ).count()
-        exact_members = (
-            gated.select(
-                F.col(id_col).alias("id"), F.md5(F.col(text_col)).alias("text_hash")
-            )
-            .join(
-                groups.filter(F.col("dup_count") > 1).select(
-                    "text_hash", "canonical_id"
-                ),
-                "text_hash",
-            )
-            .select("id", "canonical_id")
-        )
-        exact_resolved = (
-            exact_members.join(
-                near_clusters.select(
-                    F.col("id").alias("canonical_id"),
-                    F.col("cluster_id").alias("_near_cl"),
-                ),
-                "canonical_id",
-                "left",
-            )
-            .select("id", F.coalesce("_near_cl", "canonical_id").alias("cluster_id"))
-        )
-        near_clusters.unionByName(exact_resolved).groupBy("id").agg(
-            F.min("cluster_id").alias("cluster_id")
-        ).write.mode("overwrite").parquet(clusters_path)
-        _crash_if("clusters")
-        _commit(spark, lineage_path, "clusters", cfg, -1,
-                {"n_non_canonical": n_non_canonical}, started)
-        clusters = spark.read.parquet(clusters_path)
-    n4 = n3 - n_non_canonical
+        n_non_canonical = near.filter(F.col("id") != F.col("cluster_id")).count()
+        merged.write.mode("overwrite").parquet(path)
+        return -1, {"n_non_canonical": n_non_canonical}
 
-    # near-dup survivors: anti-join against the merged artifact's
-    # id != cluster_id rows.  For rows still on the spine (cur3) this
-    # set equals the near-only non-canonical set exactly — exact-dup
-    # members with id != cluster_id left the spine at the canonical
-    # semi-join, and an exact canonical that joined a near cluster it
-    # doesn't name appears in the near component itself
-    non_canonical = clusters.filter(F.col("id") != F.col("cluster_id")).select(
-        F.col("id").alias(id_col)
+    clusters, _n, meta = stage("clusters", write_clusters)
+    n_near = n_exact - meta["n_non_canonical"]
+    # near-dup survivors from the merged artifact's id != cluster_id
+    # rows.  For rows still on the spine this set equals the near-only
+    # non-canonical set exactly — exact-dup members with id !=
+    # cluster_id left the spine at the canonical semi-join, and an
+    # exact canonical that joined a near cluster it doesn't name
+    # appears in the near component itself
+    non_canonical, near_kept = C._near_survivors(
+        exact_kept, clusters, id_col=id_col, small=assume_small_side_frames
     )
-    cur4 = cur3.join(_maybe_bcast(non_canonical), id_col, "left_anti")
 
-    # ---- stage 4: decontamination report --------------------------
-    report_path = f"{ckpt}/report"
-    report = None
-    cur5 = cur4
-    n5 = n4
+    report, n_decon, cleaned = None, n_near, near_kept
     if evalset is not None:
-        if "report" in done:
-            n5 = n4 - done["report"][2]["n_dropped"]
-            report = spark.read.parquet(report_path)
-        else:
-            started = int(time.time())
-            sh4 = arrs4 = sig4 = None
-            if sh3 is not None or arrs3 is not None:
-                # pairs ran this invocation: reuse the one corpus
-                # shingling, survivor-filtered (exact same filter
-                # plans/curate.py applies)
-                dropped = _maybe_bcast(non_canonical.withColumnRenamed(id_col, "id"))
-                if sh3 is not None:
-                    sh4 = sh3.join(dropped, "id", "left_anti")
-                if arrs3 is not None:
-                    arrs4 = arrs3.join(dropped, "id", "left_anti")
-                if sig3 is not None:
-                    sig4 = sig3.join(dropped, "id", "left_anti")
-            fresh_report, _cleaned = D.decontaminate(
-                cur4, evalset, threshold=dedup_threshold,
-                num_hashes=num_hashes, band_size=band_size, ngram=ngram,
-                text_col=text_col, id_col=id_col,
-                max_bucket_size=max_bucket_size,
-                _corpus_shingles=sh4, _corpus_arrs=arrs4,
-                _corpus_signatures=sig4,
-                contaminated_is_small=assume_small_side_frames,
-            )
-            fresh_report.write.mode("overwrite").parquet(report_path)
-            _crash_if("report")
-            report = spark.read.parquet(report_path)
-            # every contaminated id is on the cur4 spine by
-            # construction, so the stage's drop count is a distinct
-            # count over the SMALL artifact — no corpus pass (and one
-            # action: rows + distinct ride the same aggregate)
-            n_rows, n_dropped = report.agg(
+        def write_report(path: str) -> Tuple[int, dict]:
+            C._decontaminate(
+                near_kept, evalset, non_canonical, corpus_frame, **sim
+            )[0].write.mode("overwrite").parquet(path)
+            # every contaminated id is on the spine by construction,
+            # so the stage's drop count is a distinct count over the
+            # SMALL artifact — no corpus pass (and one action: rows +
+            # distinct ride the same aggregate)
+            n_rows, n_dropped = spark.read.parquet(path).agg(
                 F.count(F.lit(1)), F.count_distinct("corpus_id")
             ).first()
-            n5 = n4 - int(n_dropped)
-            _commit(spark, lineage_path, "report", cfg,
-                    int(n_rows), {"n_dropped": int(n_dropped)}, started)
-        contaminated = _maybe_bcast(
-            report.select(F.col("corpus_id").alias(id_col)).distinct()
-        )
-        cur5 = cur4.join(contaminated, id_col, "left_anti")
+            return int(n_rows), {"n_dropped": int(n_dropped)}
 
-    # ---- stage 5: sample, split, final write ----------------------
-    if sample_fraction is not None:
-        cur5 = TS.deterministic_sample(
-            cur5, fraction=sample_fraction, id_col=id_col, seed=seed + ":sample"
+        report, _n, meta = stage("report", write_report)
+        n_decon = n_near - meta["n_dropped"]
+        contaminated = report.select(F.col("corpus_id").alias(id_col)).distinct()
+        cleaned = near_kept.join(
+            C._maybe_broadcast(contaminated, assume_small_side_frames),
+            id_col, "left_anti",
         )
-    out = TS.cluster_safe_split(
-        cur5, clusters, val_fraction=val_fraction, id_col=id_col, seed=seed,
-        clusters_are_small=assume_small_side_frames,
+
+    out = C._sample_and_split(
+        cleaned, clusters, sample_fraction=sample_fraction,
+        val_fraction=val_fraction, seed=seed, id_col=id_col,
+        assume_small_side_frames=assume_small_side_frames,
     )
-    docs_path = f"{ckpt}/documents"
-    if "documents" in done:
-        n_final = done["documents"][1]
-    else:
-        started = int(time.time())
-        f_obs = Observation()
-        out.observe(f_obs, _count("n")).write.mode("overwrite").parquet(docs_path)
-        _crash_if("documents")
-        n_final = _obs_n(f_obs, lambda: spark.read.parquet(docs_path).count())
-        if sample_fraction is None and n_final != n5:
-            raise RuntimeError(
-                f"funnel metrics anomaly: artifact-derived post-"
-                f"decontamination count {n5} != written final count "
-                f"{n_final} (stale artifacts? metrics double-applied?)"
-            )
-        _commit(spark, lineage_path, "documents", cfg, n_final, {}, started)
 
-    funnel: List[Tuple[str, int, int]] = []
-    if redact:
-        funnel.append(("redact", n_in, n_in))
-    funnel.append(("quality_gates", n_in, n_q))
-    funnel.append(("exact_dedup", n_q, n3))
-    funnel.append(("near_dup_clusters", n3, n4))
-    # always present (n5 == n4 without an eval set), matching
-    # plans/curate.py's funnel shape exactly
-    funnel.append(("decontaminate", n4, n5))
-    if sample_fraction is not None:
-        funnel.append(("sample", n5, n_final))
-        n5 = n_final
-    funnel.append(("split", n5, n_final))
+    def write_documents(path: str) -> Tuple[int, dict]:
+        obs = Observation()
+        out.observe(obs, _count("n")).write.mode("overwrite").parquet(path)
+        n_final = C._observed_count(obs, artifact_rows(path))
+        if sample_fraction is None:
+            C._check_final(n_decon, n_final)
+        return n_final, {}
 
+    documents, n_final, _meta = stage("documents", write_documents)
     return CurationResult(
-        documents=spark.read.parquet(docs_path),
-        funnel=funnel,
+        documents=documents,
+        funnel=C._funnel_rows(
+            redact=redact, n_in=n_in, n_q=n_q, n_exact=n_exact, n_near=n_near,
+            n_decon=n_decon,
+            n_sampled=n_final if sample_fraction is not None else None,
+            n_final=n_final,
+        ),
         contamination_report=report,
         clusters=clusters,
     )

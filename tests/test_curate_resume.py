@@ -218,17 +218,25 @@ def test_resumable_survives_degenerate_all_null_id_corpus(spark, tmp_path):
     assert res.documents.count() == 0
 
 
-def test_resumable_matches_curate_on_sf_documents(spark, tmp_path, sf_small):
+@pytest.mark.parametrize("with_evalset", [False, True],
+                         ids=["no_evalset", "planted_evalset"])
+def test_resumable_matches_curate_on_sf_documents(spark, tmp_path, sf_small,
+                                                  with_evalset):
     """Beyond planted fixtures: on the driver-provided sf0.001
     documents table with the LSH default path, resumable == single-pass
-    — funnel and final split table both."""
+    — funnel and final split table both.  With the planted eval set the
+    checkpoint runner also hands the near-dup stage's LSH profile into
+    decontamination."""
+    from latex_ocr_spark.plans.registry import planted_evalset
+
     docs = spark.read.parquet(f"{sf_small}/documents.parquet").select(
         "doc_id", "text"
     )
+    evalset = planted_evalset(docs) if with_evalset else None
     kw = dict(min_tokens=3, near_dup_method="lsh", ngram=3, val_fraction=0.1)
-    baseline = curate_corpus(docs, **kw)
+    baseline = curate_corpus(docs, evalset, **kw)
     cachepool.release()
-    res = curate_corpus_resumable(spark, docs, str(tmp_path / "sf"), **kw)
+    res = curate_corpus_resumable(spark, docs, str(tmp_path / "sf"), evalset, **kw)
     cachepool.release()
     assert res.funnel == baseline.funnel
     assert _table(res.documents) == _table(baseline.documents)
@@ -346,3 +354,45 @@ def test_lease_released_on_crash_allows_resume(spark, tmp_path):
     res = curate_corpus_resumable(spark, docs, ckpt, evalset, **KW)
     assert res.funnel[-1][0] == "split"
     cachepool.release()
+
+
+@pytest.mark.parametrize("runner", ["curate_corpus", "curate_corpus_resumable"])
+@pytest.mark.parametrize("bad, match", [
+    (dict(near_dup_method="bogus"), "near_dup_method"),
+    (dict(near_dup_method="lsh", max_df=10), "max_df applies"),
+    (dict(near_dup_method="jaccard", max_bucket_size=10), "max_bucket_size applies"),
+])
+def test_both_runners_refuse_mismatched_knobs(spark, tmp_path, runner, bad, match):
+    """Knob validation is shared by the two runners: an unknown method
+    or a blowup cap set for the other pair generator raises before any
+    stage runs (and before the checkpoint runner writes anything)."""
+    docs = _fixture(spark)
+    ckpt = tmp_path / "bad"
+    with pytest.raises(ValueError, match=match):
+        if runner == "curate_corpus":
+            curate_corpus(docs, **bad)
+        else:
+            curate_corpus_resumable(spark, docs, str(ckpt), **bad)
+    assert not (ckpt / "_lineage").exists()
+
+
+def test_config_fingerprint_is_pinned(spark, tmp_path):
+    """Existing checkpoints are refused unless the fingerprint of their
+    knobs is reproduced exactly, so renaming, re-typing or dropping a
+    fingerprinted knob must fail here rather than strand every
+    checkpoint with "different configuration" — both the hash function
+    and the knob set the checkpoint runner feeds it are pinned."""
+    from latex_ocr_spark.plans.resumable import _config_hash
+
+    pinned = "d0e701210acf8fc071f22b2874edccba"
+    knobs = dict(KW, num_hashes=8, band_size=2, max_bucket_size=None,
+                 max_df=None, redact=False, sample_fraction=None,
+                 seed="split-seed-1", id_col="doc_id", text_col="text",
+                 has_evalset=True)
+    assert _config_hash(knobs) == pinned
+
+    ckpt = str(tmp_path / "fp")
+    curate_corpus_resumable(spark, _fixture(spark), ckpt, _evalset(spark), **KW)
+    cachepool.release()
+    lineage = spark.read.parquet(f"{ckpt}/_lineage").collect()
+    assert {r.config_hash for r in lineage} == {pinned}

@@ -151,6 +151,23 @@ def test_duplicate_clusters_raises_on_non_convergence(spark):
         duplicate_clusters(pairs, max_iter=3)
 
 
+def test_duplicate_clusters_rejects_max_iter_below_one(spark):
+    """The first propagation round is fused with label initialization
+    and always runs, so a bound below one round cannot be honoured: it
+    is refused up front instead of silently running one round."""
+    import pytest
+
+    from latex_ocr_spark.operators.dedup import duplicate_clusters
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3)], "a_id long, b_id long")
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="max_iter must be >= 1"):
+            duplicate_clusters(pairs, max_iter=bad)
+    # diameter 2 + 1 confirming round
+    got = {r.id: r.cluster_id for r in duplicate_clusters(pairs, max_iter=3).collect()}
+    assert got == {1: 1, 2: 1, 3: 1}
+
+
 def test_decontaminate_drops_contaminated_and_keeps_rest(spark):
     """Cross-corpus decontamination: corpus docs near-duplicating an
     eval doc land in the report and are anti-joined out of the cleaned
