@@ -6,9 +6,11 @@ near-dup family (jaccard, MinHash+LSH, SimHash) is the standard
 training-data stack, built Spark-first:
 
 - hashes are md5 (identical in Spark and DuckDB → oracle-checkable);
-- shingling/explode/groupBy stay JVM-side; no Python in any hot path;
-- MinHash+LSH is the scale path: candidate generation is a band-key
-  equi-join, never an O(n²) cross join.
+- every MinHash signature comes from ONE narrow Arrow kernel
+  (tokenize → shingle set → md5 family, :func:`_profile_kernel`);
+  joins, groupBys and the exact-Jaccard verify stay JVM-side;
+- MinHash+LSH is the scale path: candidates come from one band-key
+  aggregation, never an O(n²) cross join.
 
 Caching policy: frames feeding both sides of a self-join are
 persisted (Spark recomputes a self-join's lineage per side) via
@@ -128,7 +130,6 @@ def doc_shingle_arrays(
     text_col: str = "text",
     id_col: str = "doc_id",
     ngram: int = 1,
-    parallel_hint: bool = True,
 ) -> DataFrame:
     """(id, shingles) — the DISTINCT shingle set per document as one
     array column, computed entirely row-wise: no explode, no distinct
@@ -137,13 +138,10 @@ def doc_shingle_arrays(
     ``size(shingles) > 0`` — the explode path drops such rows
     implicitly, so both representations agree document-for-document.
 
-    This is the scale lever for the whole MinHash/LSH family (guide
-    §2.3/§2.4 shuffle-fewer-bytes / remove-shuffles): signatures, sizes
-    and exact-verify intersections are all per-document functions of
-    this set, so none of them needs the exploded (id, shingle) relation
-    or its corpus-wide exchanges."""
-    if parallel_hint:
-        docs = _with_min_parallelism(docs)
+    The JVM tokenizer behind the exact-Jaccard path, the advisor and
+    the registry oracles; the MinHash family builds the same set inside
+    :func:`minhash_signatures`'s kernel (parity-pinned)."""
+    docs = _with_min_parallelism(docs)
     sh = _bind1(_tokens(text_col), lambda t: F.array_distinct(_shingle_expr(t, ngram)))
     return docs.select(F.col(id_col).alias("id"), sh.alias("shingles"))
 
@@ -153,63 +151,15 @@ def doc_shingles(
     text_col: str = "text",
     id_col: str = "doc_id",
     ngram: int = 1,
-    parallel_hint: bool = True,
 ) -> DataFrame:
     """Distinct (id, shingle) pairs; shingle = n consecutive tokens.
 
     Derived by exploding the per-document distinct set from
     :func:`doc_shingle_arrays`: dedup happens inside the row, so the
     corpus-wide ``distinct()`` exchange the r1-r6 implementation paid is
-    gone — the plan is scan → project → generate with no shuffle.
-    Pass ``parallel_hint=False`` for inputs KNOWN to be small (an
-    eval/benchmark set): fanning a few hundred rows across every core
-    is a wasted exchange, and the guard cannot tell small from
-    under-split without an action."""
-    arrs = doc_shingle_arrays(docs, text_col, id_col, ngram, parallel_hint)
+    gone — the plan is scan → project → generate with no shuffle."""
+    arrs = doc_shingle_arrays(docs, text_col, id_col, ngram)
     return arrs.select("id", F.explode("shingles").alias("shingle"))
-
-
-
-def _jaccard_from_intersections(
-    inter, sh, threshold: float, sh_b=None, sizes=None, sizes_b=None
-):
-    """(a_id, b_id, jaccard) from an intersection-count frame + the
-    shingle frame(s): |A∩B| / (|A| + |B| - |A∩B|), rounded and gated.
-    Shared by the exact self-join path, the LSH-verified path, and the
-    cross-corpus decontamination path (``sh_b`` = the b-side shingle
-    frame when a_id and b_id come from different tables) so the
-    denominator arithmetic can never drift between them.
-
-    ``sizes``/``sizes_b``: precomputed (id, n_shingles) frames.  The
-    LSH paths pass the size column their signature aggregation already
-    produced (one groupBy instead of two over the corpus shingles —
-    each separate aggregation is a full corpus-wide exchange)."""
-    if sizes is None:
-        sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    if sizes_b is None:
-        sizes_b = (
-            sizes
-            if sh_b is None
-            else sh_b.groupBy("id").agg(F.count(F.lit(1)).alias("n_shingles"))
-        )
-    return (
-        inter.join(
-            sizes.withColumnRenamed("id", "a_id").withColumnRenamed("n_shingles", "a_n"),
-            "a_id",
-        )
-        .join(
-            sizes_b.withColumnRenamed("id", "b_id").withColumnRenamed("n_shingles", "b_n"),
-            "b_id",
-        )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common") / (F.col("a_n") + F.col("b_n") - F.col("n_common")), 4
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("a_id", "b_id", "jaccard")
-    )
 
 
 def jaccard_pairs(
@@ -242,8 +192,8 @@ def jaccard_pairs(
     # deriving anything, or the dominant explode+distinct shuffle runs
     # once per consumer (cachepool-owned: released at the next query
     # boundary).  ``_shingles`` lets a composed pipeline (curate_corpus)
-    # hand in an already-tracked shingle frame so the corpus is
-    # exploded once per run, not once per stage.
+    # hand in a shingle frame derived from its tracked corpus profile,
+    # so the corpus is tokenized once per run, not once per stage.
     sh = (
         _shingles
         if _shingles is not None
@@ -257,7 +207,26 @@ def jaccard_pairs(
         .groupBy(F.col("a.id").alias("a_id"), F.col("b.id").alias("b_id"))
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    return _jaccard_from_intersections(inter, sh, threshold)
+    # |A∩B| / (|A| + |B| - |A∩B|), rounded and gated
+    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_shingles"))
+    return (
+        inter.join(
+            sizes.withColumnRenamed("id", "a_id").withColumnRenamed("n_shingles", "a_n"),
+            "a_id",
+        )
+        .join(
+            sizes.withColumnRenamed("id", "b_id").withColumnRenamed("n_shingles", "b_n"),
+            "b_id",
+        )
+        .withColumn(
+            "jaccard",
+            F.round(
+                F.col("n_common") / (F.col("a_n") + F.col("b_n") - F.col("n_common")), 4
+            ),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("a_id", "b_id", "jaccard")
+    )
 
 
 #: per-worker memo for the fused profile kernel: shingle -> its
@@ -277,8 +246,9 @@ def _profile_kernel(
     n-gram shingle set → md5 MinHash family, one Python pass (guide
     §4.2: the JVM higher-order-function chain is interpreted, and the
     8-way md5 family measured ~11× slower per hash than hashlib; the
-    whole kernel is a narrow map — no shuffle, schema identical to the
-    JVM projection it replaces, bit-for-bit).
+    whole kernel is a narrow map — no shuffle, output bit-for-bit equal
+    to the JVM md5 projection it replaced, which tests/test_dedup.py
+    keeps as the parity reference).
 
     Exactness notes (each pinned by tests/test_dedup.py parity):
     - tokens: Java ``\\s+`` is the ASCII class [ \\t\\n\\x0B\\f\\r] —
@@ -304,8 +274,14 @@ def _profile_kernel(
         # resolve the memo through the importable module ON THE WORKER:
         # a closure-captured dict is pickled by value per task and would
         # reset every task; the module global survives for the lifetime
-        # of a reused python worker process (guide §4.5)
-        from latex_ocr_spark.operators.dedup import _PROFILE_MEMO
+        # of a reused python worker process (guide §4.5).  An executor
+        # that cannot import the package (code shipped only as pickled
+        # closures) falls back to a per-task memo: same output, no
+        # cross-task reuse
+        try:
+            from latex_ocr_spark.operators.dedup import _PROFILE_MEMO
+        except ImportError:
+            _PROFILE_MEMO = {}
 
         memo = _PROFILE_MEMO.setdefault(num_hashes, {})
         for rb in batches:
@@ -375,99 +351,59 @@ def minhash_signatures(
     text_col: str = "text",
     id_col: str = "doc_id",
     ngram: int = 1,
-    _shingles: DataFrame | None = None,
     include_size: bool = False,
-    _arrs: DataFrame | None = None,
     include_shingles: bool = False,
+    parallel_hint: bool = True,
 ) -> DataFrame:
-    """(id, sig_0..sig_{k-1}) MinHash signature per document.
+    """(id, sig_0..sig_{k-1}) MinHash signature per document — the ONE
+    place a signature is computed.
 
     Hash family: md5(shingle ‖ '#i') — engine-portable and seedless, so
-    the DuckDB oracle reproduces it bit-for-bit.  Default path is a
-    row-wise projection over :func:`doc_shingle_arrays` (or a caller's
-    ``_arrs`` frame): zero exchanges.  ``_shingles`` (exploded
-    (id, shingle) rows — the streaming survivor index's on-disk format)
-    keeps the aggregated path.
+    the DuckDB oracle reproduces it bit-for-bit.  Tokenize + shingle +
+    the whole md5 family run in one narrow Arrow kernel
+    (:func:`_profile_kernel`): the JVM higher-order-function chain is
+    interpreted, and the 8-hash md5 family measured 134 core-seconds
+    for 50k docs (~6.4 µs/hash) vs hashlib's ~0.6 µs.  Zero exchanges;
+    documents with a NULL text or an empty shingle set are dropped.
 
     ``include_size`` adds an ``n_shingles`` count column: the verify
     stage needs per-doc shingle counts for the Jaccard denominator, and
     computing them in the same pass instead of a second ``groupBy("id")``
     over a shingle frame saves a full corpus-wide exchange.
 
-    ``include_shingles`` (arrays path only) keeps the ``shingles``
-    array column alongside the signatures, making the output the ONE
-    per-document "profile" frame the whole LSH family can share: a
-    single ``cachepool.track`` of it replaces the r7-early pattern of
-    two stacked caches (arrays + signatures), whose builds raced each
-    other inside one action and re-ran the corpus scan + tokenize +
-    hash family once per cache layer (guide §1.2 step 1 / §5 caching).
+    ``include_shingles`` keeps the ``shingles`` array column alongside
+    the signatures, making the output the ONE per-document "profile"
+    frame the whole LSH family can share: a single ``cachepool.track``
+    of it replaces the r7-early pattern of two stacked caches (arrays +
+    signatures), whose builds raced each other inside one action and
+    re-ran the corpus scan + tokenize + hash family once per cache
+    layer (guide §1.2 step 1 / §5 caching).
+
+    ``parallel_hint=False`` skips the amplification fan-out for inputs
+    KNOWN to be small (an eval/benchmark set): fanning a few hundred
+    rows across every core is a wasted exchange, and the guard cannot
+    tell small from under-split without an action.
     """
-    if _shingles is not None:
-        # exploded (id, shingle) input — the durable-index format the
-        # streaming near-dedup persists; aggregate it as before (min is
-        # duplicate-insensitive, so distinctness is not required)
-        aggs = [
-            F.min(F.md5(F.concat(F.col("shingle"), F.lit(f"#{i}")))).alias(f"sig_{i}")
-            for i in range(num_hashes)
-        ]
-        if include_size:
-            aggs.append(F.count(F.lit(1)).alias("n_shingles"))
-        return _shingles.groupBy("id").agg(*aggs)
-    if _arrs is None and docs is not None and num_hashes > 0:
-        # fused Arrow path (r7): when the shingle sets must be built
-        # from text anyway, tokenize + shingle + the whole md5 MinHash
-        # family run in ONE narrow Python kernel — the JVM
-        # higher-order-function chain is interpreted and the 8-hash md5
-        # family measured 134 core-seconds for 50k docs (~6.4 µs/hash)
-        # vs hashlib's ~0.6 µs; bit-identical output and schema
-        # (parity-pinned), zero exchanges either way.  Callers that
-        # already hold an arrays frame (_arrs) keep the JVM projection.
-        from pyspark.sql import types as T
+    from pyspark.sql import types as T
 
-        src = _with_min_parallelism(
-            docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))
-        )
-        fields = [T.StructField("id", src.schema["id"].dataType, True)]
-        if include_shingles:
-            fields.append(
-                T.StructField("shingles", T.ArrayType(T.StringType()), True)
-            )
-        fields += [
-            T.StructField(f"sig_{i}", T.StringType(), True)
-            for i in range(num_hashes)
-        ]
-        if include_size:
-            fields.append(T.StructField("n_shingles", T.LongType(), True))
-        return src.mapInArrow(
-            _profile_kernel(num_hashes, ngram, include_size, include_shingles),
-            schema=T.StructType(fields),
-        )
-    # row-wise path: per-document min over the shingle-set's hash family
-    # — a plain projection, no groupBy exchange (guide §2.4).  min over
-    # the distinct set equals min over the multiset, and n_shingles is
-    # the set size, so both paths agree bit-for-bit (n_shingles cast to
-    # long to keep the aggregated schema, which the streaming index
-    # persists on disk).
-    arrs = (
-        _arrs
-        if _arrs is not None
-        else doc_shingle_arrays(docs, text_col, id_col, ngram)
-    )
-    sh = F.col("shingles")
-
-    def _minhash(i: int):
-        # closure helper, NOT a default-arg lambda: pyspark counts the
-        # lambda's parameters to decide unary vs (element, index) form
-        return F.array_min(
-            F.transform(sh, lambda s: F.md5(F.concat(s, F.lit(f"#{i}"))))
-        ).alias(f"sig_{i}")
-
-    cols = [_minhash(i) for i in range(num_hashes)]
-    if include_size:
-        cols.append(F.size(sh).cast("long").alias("n_shingles"))
+    src = docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))
+    if parallel_hint:
+        src = _with_min_parallelism(src)
+    fields = [T.StructField("id", src.schema["id"].dataType, True)]
     if include_shingles:
-        cols = [sh.alias("shingles")] + cols
-    return arrs.filter(F.size(sh) > 0).select("id", *cols)
+        fields.append(
+            T.StructField("shingles", T.ArrayType(T.StringType()), True)
+        )
+    fields += [
+        T.StructField(f"sig_{i}", T.StringType(), True)
+        for i in range(num_hashes)
+    ]
+    if include_size:
+        fields.append(T.StructField("n_shingles", T.LongType(), True))
+    return src.mapInArrow(
+        _profile_kernel(num_hashes, ngram, include_size, include_shingles),
+        schema=T.StructType(fields),
+    )
 
 
 def _band_keyed(sig: DataFrame, num_hashes: int, band_size: int) -> DataFrame:
@@ -496,10 +432,8 @@ def lsh_candidate_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     ngram: int = 1,
-    _shingles: DataFrame | None = None,
     max_bucket_size: int | None = None,
     _signatures: DataFrame | None = None,
-    _arrs: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash-LSH candidate pairs: documents sharing any band key.
 
@@ -534,9 +468,7 @@ def lsh_candidate_pairs(
     sig = (
         _signatures
         if _signatures is not None
-        else minhash_signatures(
-            docs, num_hashes, text_col, id_col, ngram, _shingles, _arrs=_arrs
-        )
+        else minhash_signatures(docs, num_hashes, text_col, id_col, ngram)
     )
     keyed = _band_keyed(sig, num_hashes, band_size)
     buckets = keyed.groupBy("band_idx", "band_key").agg(
@@ -586,48 +518,35 @@ def lsh_verified_pairs(
     2^(128/band) band-key space.  Recall is that of MinHash-LSH
     (tunable via num_hashes/band_size); precision is exact.
 
-    Plan shape (r7): shingle SETS stay inside their rows
-    (:func:`doc_shingle_arrays`); signatures are a projection; the only
-    corpus-wide exchange is the band-key equi-join of the narrow
+    Plan shape (r7): shingle SETS stay inside their rows; signatures
+    come from the same per-document profile; the only corpus-wide
+    exchange is the band-key aggregation of the narrow
     (id, band_idx, band_key) frame, and the exact verify joins the
     (small) candidate pair list back to the per-document arrays and
     counts ``array_intersect`` — the exploded shingle relation, its
     distinct exchange, the signature groupBy and the two verify-side
     shingle shuffles of r1-r6 are all gone (guide §2.4, §8: shuffle the
     lightweight proxy, keep payloads where they were read).
-    ``_arrs`` = caller-provided (tracked) shingle-array frame, so a
-    composed pipeline tokenizes the corpus once per run; ``_signatures``
-    = caller-provided (tracked) ``minhash_signatures(...,
-    include_size=True)`` frame over those arrays.
+
+    ``_arrs`` = caller-provided (tracked) profile frame —
+    ``minhash_signatures(..., include_size=True, include_shingles=True)``
+    — so a composed pipeline tokenizes the corpus once per run;
+    ``_signatures`` (any frame with ``id`` + ``sig_*``) defaults to it.
+    Without either, ONE tracked profile serves both roles: two stacked
+    caches used to race their builds inside a single action, each
+    re-running the corpus scan + tokenize + md5 family.
     """
-    if _arrs is None and _signatures is None:
-        # ONE cached per-document profile (shingle set + signatures +
-        # size) instead of two stacked caches: inside a single action
-        # each un-materialized cache layer used to re-run the corpus
-        # scan + tokenize + md5 family for its own build (the layers
-        # race; neither sees the other populated), which multiplied
-        # the dominant compute by the number of layers.
-        profile = cachepool.track(
+    arrs = (
+        _arrs
+        if _arrs is not None
+        else cachepool.track(
             minhash_signatures(
                 docs, num_hashes, text_col, id_col, ngram,
                 include_size=True, include_shingles=True,
             )
         )
-        arrs, sig = profile, profile
-    else:
-        arrs = (
-            _arrs
-            if _arrs is not None
-            else cachepool.track(doc_shingle_arrays(docs, text_col, id_col, ngram))
-        )
-        sig = (
-            _signatures
-            if _signatures is not None
-            else minhash_signatures(
-                docs, num_hashes, text_col, id_col, ngram, _arrs=arrs,
-                include_size=True,
-            )
-        )
+    )
+    sig = _signatures if _signatures is not None else arrs
     cand = lsh_candidate_pairs(
         docs, num_hashes, band_size, text_col, id_col, ngram,
         max_bucket_size=max_bucket_size, _signatures=sig,
@@ -1013,8 +932,6 @@ def cross_lsh_candidates(
     ngram: int = 1,
     text_col: str = "text",
     id_col: str = "doc_id",
-    _corpus_shingles: DataFrame | None = None,
-    _eval_shingles: DataFrame | None = None,
     max_bucket_size: int | None = None,
     _corpus_signatures: DataFrame | None = None,
     _eval_signatures: DataFrame | None = None,
@@ -1029,30 +946,24 @@ def cross_lsh_candidates(
     similarity measure unless it opts out.  Work scales with band-key
     collisions between the tables — never |corpus| × |evalset|.  The
     eval side is typically tiny (a benchmark), so its keyed frame
-    broadcasts and the candidate JOIN adds no corpus-side shuffle (the
-    signature aggregation over the corpus shingles still shuffles once,
-    as in every MinHash path).  ``max_bucket_size`` caps degenerate
-    corpus-side buckets exactly as in the self-join path.
+    broadcasts and the candidate JOIN adds no corpus-side shuffle;
+    signatures are row-wise kernel output, so no shuffle precedes it
+    either.  ``max_bucket_size`` caps degenerate corpus-side buckets
+    exactly as in the self-join path.  Signature frames not handed in
+    are built by :func:`minhash_signatures` (the eval side without the
+    amplification fan-out).
     """
-    sh_c = (
-        _corpus_shingles
-        if _corpus_shingles is not None
-        else doc_shingles(corpus, text_col, id_col, ngram)
-    )
-    sh_e = (
-        _eval_shingles
-        if _eval_shingles is not None
-        else doc_shingles(evalset, text_col, id_col, ngram, parallel_hint=False)
-    )
     sig_c = (
         _corpus_signatures
         if _corpus_signatures is not None
-        else minhash_signatures(None, num_hashes, _shingles=sh_c)
+        else minhash_signatures(corpus, num_hashes, text_col, id_col, ngram)
     )
     sig_e = (
         _eval_signatures
         if _eval_signatures is not None
-        else minhash_signatures(None, num_hashes, _shingles=sh_e)
+        else minhash_signatures(
+            evalset, num_hashes, text_col, id_col, ngram, parallel_hint=False
+        )
     )
     keyed_c = _band_keyed(sig_c, num_hashes, band_size)
     keyed_e = _band_keyed(sig_e, num_hashes, band_size)
@@ -1086,7 +997,6 @@ def decontaminate(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_bucket_size: int | None = None,
-    _corpus_shingles: DataFrame | None = None,
     _corpus_signatures: DataFrame | None = None,
     evalset_is_small: bool = True,
     contaminated_is_small: bool = True,
@@ -1105,138 +1015,64 @@ def decontaminate(
     - ``cleaned`` — the corpus with those documents anti-joined out.
 
     Scale shape: the eval set is small (benchmarks are), so its
-    shingle/signature frames broadcast; the corpus side is touched by
-    exactly one scan + one shingle explode, and the quadratic step is
-    bounded by cross-table band collisions.  ``_corpus_shingles`` lets
-    a composed pipeline (curate_corpus) hand in the shingle frame its
+    profile broadcasts; the corpus side is touched by exactly one scan
+    + one profile pass (shingle sets stay row-wise — no explode), and
+    the quadratic step is bounded by cross-table band collisions.
+    ``_corpus_arrs`` lets a composed pipeline (curate_corpus, the
+    streaming survivor index) hand in the (id, shingles) profile its
     near-dup stage already built (survivor-filtered) — the corpus is
-    then never re-exploded here (``_corpus_signatures`` likewise hands
-    in the matching ``include_size=True`` signature frame — per-doc
-    signatures are unaffected by dropping OTHER documents, so a
-    survivor-filtered frame is exact).  ``max_bucket_size`` caps
-    degenerate corpus-side band buckets exactly as in the self-join
-    path.  ``evalset_is_small`` (default True — benchmarks are) skips
-    the eval-side amplification fan-out and broadcast-hints the
-    eval-side probes; pass False when decontaminating against a
-    corpus-sized held-out set so the guard and join planner run
-    normally.
+    then never re-tokenized here; ``_corpus_signatures`` (id, sig_*)
+    defaults to it (per-doc signatures are unaffected by dropping
+    OTHER documents, so a survivor-filtered frame is exact).
+    ``max_bucket_size`` caps degenerate corpus-side band buckets
+    exactly as in the self-join path.  ``evalset_is_small`` (default
+    True — benchmarks are) skips the eval-side amplification fan-out
+    and broadcast-hints the eval-side probes; pass False when
+    decontaminating against a corpus-sized held-out set so the guard
+    and join planner run normally.
     """
-    if _corpus_shingles is not None:
-        # exploded-corpus path: the streaming survivor index persists
-        # (id, shingle) rows on disk and injects them here — keep the
-        # aggregated/join verify for that format
-        sh_c = _corpus_shingles
-        sh_e = cachepool.track(
-            doc_shingles(
-                evalset, text_col, id_col, ngram,
-                parallel_hint=not evalset_is_small,
+    # ONE cached profile (arrays + signatures + size) per side: two
+    # stacked caches would each re-run the scan + hash family for their
+    # own build (see lsh_verified_pairs)
+    arrs_c = (
+        _corpus_arrs
+        if _corpus_arrs is not None
+        else cachepool.track(
+            minhash_signatures(
+                corpus, num_hashes, text_col, id_col, ngram,
+                include_size=True, include_shingles=True,
             )
         )
-        sig_c = (
-            _corpus_signatures
-            if _corpus_signatures is not None
-            else cachepool.track(
-                minhash_signatures(
-                    None, num_hashes, _shingles=sh_c, include_size=True
-                )
-            )
+    )
+    sig_c = _corpus_signatures if _corpus_signatures is not None else arrs_c
+    prof_e = cachepool.track(
+        minhash_signatures(
+            evalset, num_hashes, text_col, id_col, ngram,
+            include_size=True, include_shingles=True,
+            parallel_hint=not evalset_is_small,
         )
-        sig_e = minhash_signatures(
-            None, num_hashes, _shingles=sh_e, include_size=True
+    )
+    cand = cross_lsh_candidates(
+        corpus, evalset, num_hashes, band_size, ngram, text_col, id_col,
+        max_bucket_size=max_bucket_size,
+        _corpus_signatures=sig_c, _eval_signatures=prof_e,
+        eval_is_small=evalset_is_small,
+    )
+    # candidates are bounded by cross-table band collisions — the
+    # same frame the contaminated-id set derives from, so the same
+    # smallness knob gates their broadcast into the first verify
+    # join (the second builds from the eval-side profile)
+    report = cachepool.track(
+        _jaccard_from_arrays(
+            cand, arrs_c, threshold,
+            arrs_b=F.broadcast(prof_e) if evalset_is_small else prof_e,
+            pairs_small=contaminated_is_small,
+        ).select(
+            F.col("a_id").alias("corpus_id"),
+            F.col("b_id").alias("eval_id"),
+            "jaccard",
         )
-        cand = cross_lsh_candidates(
-            corpus, evalset, num_hashes, band_size, ngram, text_col, id_col,
-            _corpus_shingles=sh_c, _eval_shingles=sh_e,
-            max_bucket_size=max_bucket_size,
-            _corpus_signatures=sig_c, _eval_signatures=sig_e,
-            eval_is_small=evalset_is_small,
-        )
-        _eb = F.broadcast if evalset_is_small else (lambda df: df)
-        a = sh_c.select(F.col("id").alias("a_id"), "shingle")
-        b = sh_e.select(F.col("id").alias("b_id"), "shingle")
-        inter = (
-            cand.join(a, "a_id")
-            .join(_eb(b), ["b_id", "shingle"])
-            .groupBy("a_id", "b_id")
-            .agg(F.count(F.lit(1)).alias("n_common"))
-        )
-        report = cachepool.track(
-            _jaccard_from_intersections(
-                inter, sh_c, threshold, sh_b=sh_e,
-                sizes=sig_c.select("id", "n_shingles"),
-                # eval-side sizes are benchmark-small: broadcast, so the
-                # report's denominator join never shuffles the inter frame
-                sizes_b=_eb(sig_e.select("id", "n_shingles")),
-            ).select(
-                F.col("a_id").alias("corpus_id"),
-                F.col("b_id").alias("eval_id"),
-                "jaccard",
-            )
-        )  # consuming report AND cleaned must not re-run the LSH+verify chain
-    else:
-        # arrays path (r7 default): shingle sets stay row-wise, the
-        # exact verify intersects per candidate pair — no exploded
-        # relation, no distinct exchange, no signature groupBy (see
-        # lsh_verified_pairs)
-        if _corpus_arrs is None and _corpus_signatures is None:
-            # ONE cached corpus profile (arrays + signatures + size):
-            # two stacked caches would each re-run the corpus scan +
-            # hash family for their own build (see lsh_verified_pairs)
-            prof_c = cachepool.track(
-                minhash_signatures(
-                    corpus, num_hashes, text_col, id_col, ngram,
-                    include_size=True, include_shingles=True,
-                )
-            )
-            arrs_c, sig_c = prof_c, prof_c
-        else:
-            arrs_c = (
-                _corpus_arrs
-                if _corpus_arrs is not None
-                else cachepool.track(
-                    doc_shingle_arrays(corpus, text_col, id_col, ngram)
-                )
-            )
-            sig_c = (
-                _corpus_signatures
-                if _corpus_signatures is not None
-                else minhash_signatures(
-                    None, num_hashes, _arrs=arrs_c, include_size=True
-                )
-            )
-        # eval side is usually benchmark-small: skip the amplification
-        # fan-out (a wasted exchange on a few hundred rows) unless told
-        # otherwise
-        arrs_e = cachepool.track(
-            doc_shingle_arrays(
-                evalset, text_col, id_col, ngram,
-                parallel_hint=not evalset_is_small,
-            )
-        )
-        sig_e = minhash_signatures(
-            None, num_hashes, _arrs=arrs_e, include_size=True
-        )
-        cand = cross_lsh_candidates(
-            corpus, evalset, num_hashes, band_size, ngram, text_col, id_col,
-            max_bucket_size=max_bucket_size,
-            _corpus_signatures=sig_c, _eval_signatures=sig_e,
-            eval_is_small=evalset_is_small,
-        )
-        # candidates are bounded by cross-table band collisions — the
-        # same frame the contaminated-id set derives from, so the same
-        # smallness knob gates their broadcast into the first verify
-        # join (the second builds from the eval-side arrays)
-        report = cachepool.track(
-            _jaccard_from_arrays(
-                cand, arrs_c, threshold,
-                arrs_b=F.broadcast(arrs_e) if evalset_is_small else arrs_e,
-                pairs_small=contaminated_is_small,
-            ).select(
-                F.col("a_id").alias("corpus_id"),
-                F.col("b_id").alias("eval_id"),
-                "jaccard",
-            )
-        )  # consuming report AND cleaned must not re-run the LSH+verify chain
+    )  # consuming report AND cleaned must not re-run the LSH+verify chain
     contaminated = report.select(F.col("corpus_id").alias(id_col)).distinct()
     # contaminated ids are usually bounded by the (small) eval set's
     # match fan-out — broadcast, so cleaning the corpus is a map-side

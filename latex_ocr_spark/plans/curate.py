@@ -36,7 +36,7 @@ metrics instead of per-stage ``count()`` actions, corpus-wide text
 frames are never persisted (only the small pair/cluster/group frames
 and the one per-document profile — which genuinely feeds several
 joins — are cachepool-tracked), and the corpus is profiled exactly
-ONCE: the near-dup stage's profile (shingle frame on the exact path),
+ONCE: the near-dup stage's profile (for either near-dup method),
 survivor-filtered by a zero-shuffle broadcast anti-join, is handed to
 the decontamination stage.  At test scale this is invisible; at 100 TB
 the corpus profile and corpus-wide materializations were the funnel's
@@ -204,45 +204,44 @@ def _near_pairs(
     max_bucket_size: Optional[int], max_df: Optional[int], id_col: str,
     text_col: str, assume_small_side_frames: bool,
 ) -> Tuple[DataFrame, DataFrame]:
-    """(verified near-dup pairs, THE corpus frame they came from).
+    """(verified near-dup pairs, THE corpus profile they came from).
 
-    The corpus frame is built once here, reused by the pair generator
-    AND — survivor-filtered — by :func:`_decontaminate`: one corpus
-    tokenization per funnel run.
+    The profile is built once here, reused by the pair generator AND —
+    survivor-filtered — by :func:`_decontaminate`: one corpus
+    tokenization per funnel run, whichever method runs.
 
-    'lsh': ONE cached per-document profile (shingle set + signatures +
-    size), kept row-wise — no explode, no distinct exchange, no
-    signature groupBy.  Per-doc signatures are unaffected by dropping
-    other documents, so the filtered reuse is exact.  One cache layer,
-    not two (arrays + signatures): stacked caches raced their builds
-    inside the cluster loop's first action and re-ran the corpus
-    tokenize + hash family once per layer.
+    ONE cached per-document profile (shingle set + signatures + size),
+    kept row-wise — no explode, no distinct exchange, no signature
+    groupBy.  Per-doc signatures are unaffected by dropping other
+    documents, so the filtered reuse is exact.  One cache layer, not
+    two (arrays + signatures): stacked caches raced their builds inside
+    the cluster loop's first action and re-ran the corpus tokenize +
+    hash family once per layer.
 
-    'jaccard': the exploded (id, shingle) frame the exact inverted
-    index needs."""
-    if near_dup_method == "lsh":
-        profile = cachepool.track(
-            D.minhash_signatures(
-                cur, num_hashes, text_col, id_col, ngram,
-                include_size=True, include_shingles=True,
-            )
+    'lsh' verifies band candidates against the profile's arrays;
+    'jaccard' explodes the profile into the (id, shingle) rows the
+    exact inverted index needs (untracked — a projection of the cache,
+    not a second layer over it)."""
+    profile = cachepool.track(
+        D.minhash_signatures(
+            cur, num_hashes, text_col, id_col, ngram,
+            include_size=True, include_shingles=True,
         )
+    )
+    if near_dup_method == "lsh":
         pairs = D.lsh_verified_pairs(
             cur, threshold=dedup_threshold, num_hashes=num_hashes,
             band_size=band_size, text_col=text_col, id_col=id_col,
             ngram=ngram, max_bucket_size=max_bucket_size, _arrs=profile,
             _signatures=profile, assume_small_pairs=assume_small_side_frames,
         )
-        return pairs, profile
-    shingles = cachepool.track(
-        D.doc_shingles(cur, text_col=text_col, id_col=id_col, ngram=ngram)
-    )
-    pairs = D.jaccard_pairs(
-        cur, threshold=dedup_threshold, text_col=text_col, id_col=id_col,
-        ngram=ngram, max_df=max_df if max_df is not None else 1000,
-        _shingles=shingles,
-    )
-    return pairs, shingles
+    else:
+        pairs = D.jaccard_pairs(
+            cur, threshold=dedup_threshold, text_col=text_col, id_col=id_col,
+            ngram=ngram, max_df=max_df if max_df is not None else 1000,
+            _shingles=profile.select("id", F.explode("shingles").alias("shingle")),
+        )
+    return pairs, profile
 
 
 def _merge_clusters(
@@ -304,34 +303,30 @@ def _near_survivors(
 
 def _decontaminate(
     cur: DataFrame, evalset: DataFrame, non_canonical: DataFrame,
-    corpus_frame: Optional[DataFrame], *, near_dup_method: str,
-    dedup_threshold: float, num_hashes: int, band_size: int, ngram: int,
-    max_bucket_size: Optional[int], id_col: str, text_col: str,
-    assume_small_side_frames: bool,
+    profile: Optional[DataFrame], *, dedup_threshold: float, num_hashes: int,
+    band_size: int, ngram: int, max_bucket_size: Optional[int], id_col: str,
+    text_col: str, assume_small_side_frames: bool,
 ) -> Tuple[DataFrame, DataFrame]:
     """(contamination report, cleaned corpus) vs the eval set.
 
-    ``corpus_frame`` is the near-dup stage's profile (or shingle
-    frame), filtered to survivors by a map-side anti-join against the
-    (small, already-broadcast) dropped-id set: the corpus is never
+    ``profile`` is the near-dup stage's corpus profile, filtered to
+    survivors by a map-side anti-join against the (small,
+    already-broadcast) dropped-id set: the corpus is never
     re-tokenized.  ``None`` (the near-dup stage did not run in this
     process) lets decontaminate build its own.  The recall knobs carry
     over, so one similarity measure holds end-to-end."""
     survivors = None
-    if corpus_frame is not None:
+    if profile is not None:
         dropped = _maybe_broadcast(
             non_canonical.withColumnRenamed(id_col, "id"), assume_small_side_frames
         )
-        survivors = corpus_frame.join(dropped, "id", "left_anti")
-    lsh = near_dup_method == "lsh"
+        survivors = profile.join(dropped, "id", "left_anti")
     return D.decontaminate(
         cur, evalset, threshold=dedup_threshold,
         num_hashes=num_hashes, band_size=band_size,
         ngram=ngram, text_col=text_col, id_col=id_col,
         max_bucket_size=max_bucket_size,
-        _corpus_shingles=None if lsh else survivors,
-        _corpus_arrs=survivors if lsh else None,
-        _corpus_signatures=survivors if lsh else None,
+        _corpus_arrs=survivors, _corpus_signatures=survivors,
         contaminated_is_small=assume_small_side_frames,
     )
 
@@ -524,11 +519,13 @@ def curate_corpus(
     groups = cachepool.track(_exact_groups(gated, id_col=id_col, text_col=text_col))
     cur = watch("exact_dedup", _exact_survivors(gated, groups, id_col))
     # one similarity measure for the near-dup and decontamination stages
-    sim = dict(near_dup_method=near_dup_method, dedup_threshold=dedup_threshold,
+    sim = dict(dedup_threshold=dedup_threshold,
                ngram=ngram, num_hashes=num_hashes, band_size=band_size,
                max_bucket_size=max_bucket_size, id_col=id_col, text_col=text_col,
                assume_small_side_frames=assume_small_side_frames)
-    raw_pairs, corpus_frame = _near_pairs(cur, max_df=max_df, **sim)
+    raw_pairs, corpus_frame = _near_pairs(
+        cur, near_dup_method=near_dup_method, max_df=max_df, **sim
+    )
     near, merged = _merge_clusters(
         cachepool.track(raw_pairs), gated, groups, id_col=id_col, text_col=text_col
     )

@@ -271,7 +271,7 @@ def _curate_resumable_impl(
     n_in, n_q = meta["n_in"], meta["n_q"]
     exact_kept = C._exact_survivors(gated, groups, id_col)
 
-    sim = dict(near_dup_method=near_dup_method, dedup_threshold=dedup_threshold,
+    sim = dict(dedup_threshold=dedup_threshold,
                ngram=ngram, num_hashes=num_hashes, band_size=band_size,
                max_bucket_size=max_bucket_size, id_col=id_col, text_col=text_col,
                assume_small_side_frames=assume_small_side_frames)
@@ -279,7 +279,9 @@ def _curate_resumable_impl(
 
     def write_pairs(path: str) -> Tuple[int, dict]:
         nonlocal corpus_frame
-        raw_pairs, corpus_frame = C._near_pairs(exact_kept, max_df=max_df, **sim)
+        raw_pairs, corpus_frame = C._near_pairs(
+            exact_kept, near_dup_method=near_dup_method, max_df=max_df, **sim
+        )
         obs = Observation()
         raw_pairs.observe(obs, _count("n")).write.mode("overwrite").parquet(path)
         return C._observed_count(obs, artifact_rows(path)), {}

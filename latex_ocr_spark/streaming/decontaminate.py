@@ -13,9 +13,9 @@ batch operator applied per micro-batch inside ``foreachBatch``
           → contamination report sink
           → cleaned documents sink
 
-The eval set's shingle/signature frames are small (benchmarks are) and
-broadcast inside every micro-batch join, so each batch costs one scan
-of its own files plus the broadcast probes.
+The eval set's profile (shingle arrays + signatures) is small
+(benchmarks are) and broadcast inside every micro-batch join, so each
+batch costs one scan of its own files plus the broadcast probes.
 
 Delivery semantics: ``availableNow`` + checkpoint give exactly-once
 *file progress* (a fully processed batch is never re-read).  With the

@@ -9,8 +9,8 @@ candidates are discovered by band-key join, not by a pre-known key),
 so the streaming form maintains a durable **survivor index** — the
 incremental-ingest pattern production dedup systems use:
 
-    <index>/shingles/    (id, shingle)         of every survivor
-    <index>/signatures/  (id, s0…, n_shingles) of every survivor
+    <index>/shingles/    (id, shingles array)     one row per survivor
+    <index>/signatures/  (id, sig_0…, n_shingles) one row per survivor
 
 Per micro-batch (inside ``foreachBatch``, single code path with the
 oracle-checked batch operators):
@@ -18,10 +18,11 @@ oracle-checked batch operators):
 1. in-batch near-dedup — ``lsh_verified_pairs`` → ``duplicate_clusters``
    → keep each cluster's canonical (min id);
 2. history check — ``decontaminate`` with the BATCH as the (small,
-   broadcast) eval side and the history index frames injected as the
-   corpus side: the index is scanned, never re-shingled, and the
+   broadcast) eval side and the history index tables injected as the
+   corpus profile: the index is scanned, never re-shingled, and the
    per-batch quadratic work is bounded by cross-table band collisions.
-   Exact shingle-Jaccard verify, identical measure to the batch path;
+   Exact shingle-Jaccard verify over the stored arrays, identical
+   measure (and code path) to the batch pipeline;
 3. survivors append to the output AND to the index — both as
    batch_id-partitioned dynamic overwrites (streaming/sinks.py), so a
    replayed batch replaces its own output/index partitions:
@@ -58,6 +59,11 @@ from latex_ocr_spark.streaming.sinks import (
     assert_idempotent_layout,
     write_batch_idempotent,
 )
+
+#: on-disk layout of the survivor index, part of its ``_meta``
+#: fingerprint: an index written in another layout (e.g. exploded
+#: (id, shingle) rows) is refused as "different knobs", never misread
+_INDEX_LAYOUT = "shingles=id+array,signatures=id+sig+n"
 
 
 def _index_exists(spark: SparkSession, path: str) -> bool:
@@ -228,10 +234,12 @@ def _start_near_dedup_stream_fenced(
     # decision on threshold/band_size.  A restart with different knobs
     # would silently admit every near-dup (2-gram batch shingles never
     # intersect stored 3-gram shingles) — fingerprint and refuse, the
-    # same contract plans/resumable.py applies to its checkpoint.
+    # same contract plans/resumable.py applies to its checkpoint.  The
+    # layout entry makes an index of another on-disk layout refuse the
+    # same way.
     cfg = json.dumps(
         {"threshold": threshold, "num_hashes": num_hashes,
-         "band_size": band_size, "ngram": ngram},
+         "band_size": band_size, "ngram": ngram, "layout": _INDEX_LAYOUT},
         sort_keys=True,
     )
     try:
@@ -322,14 +330,11 @@ def _start_near_dedup_stream_fenced(
             batch_is_small = batch.count() <= broadcast_threshold_rows
             _maybe_bcast = F.broadcast if batch_is_small else (lambda df: df)
 
-            # 1. in-batch near-dedup (cluster canonical survives).  The
-            # shingle-array frame feeds the pair verify, the signature
-            # projection AND (exploded) the index write, so the batch is
-            # tokenized once; the index keeps its exploded (id, shingle)
-            # on-disk format unchanged.
-            # ONE cached per-batch profile (shingles + signatures +
-            # size): two stacked caches would each re-run the batch
-            # tokenize + hash family for their own build (see
+            # 1. in-batch near-dedup (cluster canonical survives).  ONE
+            # cached per-batch profile (shingles + signatures + size)
+            # feeds the pair verify AND both index writes, so the batch
+            # is tokenized once; two stacked caches would each re-run
+            # the batch tokenize + hash family for their own build (see
             # lsh_verified_pairs)
             arrs_b = cachepool.track(
                 D.minhash_signatures(
@@ -337,10 +342,9 @@ def _start_near_dedup_stream_fenced(
                     include_size=True, include_shingles=True,
                 )
             )
-            sh_b = arrs_b.select("id", F.explode("shingles").alias("shingle"))
-            # zero-cost projection over the same cache; ALSO keeps the
-            # on-disk signature-index schema exactly as before (sig_b
-            # is written wholesale below)
+            # zero-cost projections over the same cache: the two
+            # on-disk index tables (sig_b is written wholesale below)
+            sh_b = arrs_b.select("id", "shingles")
             sig_b = arrs_b.drop("shingles")
             pairs = D.lsh_verified_pairs(
                 batch, threshold=threshold, num_hashes=num_hashes,
@@ -356,7 +360,7 @@ def _start_near_dedup_stream_fenced(
             survivors = batch.join(_maybe_bcast(non_canonical), "doc_id", "left_anti")
 
             # 2. all-history check: batch (small) broadcasts as the
-            # eval side; the index frames ARE the corpus side — the
+            # eval side; the index tables ARE the corpus profile — the
             # history is scanned, never re-shingled
             if _index_exists(spark, sig_path):
                 # EXCLUDE this batch's own partitions: a replayed batch
@@ -372,12 +376,12 @@ def _start_near_dedup_stream_fenced(
                 # and stay invisible to the re-read.
                 hist_sh = spark.read.parquet(sh_path).filter(
                     F.col("batch_id") != batch_id
-                )
+                ).drop("batch_id")
                 hist_sig = spark.read.parquet(sig_path).filter(
                     F.col("batch_id") != batch_id
                 ).drop("batch_id")
                 # corpus arg only seeds the (unused, lazy) cleaned
-                # frame once shingles+signatures are injected
+                # frame once arrays+signatures are injected
                 hist_docs = hist_sig.select(F.col("id").alias("doc_id"))
                 surv_small = cachepool.track(survivors)
                 report, _unused_cleaned = D.decontaminate(
@@ -386,8 +390,7 @@ def _start_near_dedup_stream_fenced(
                     threshold=threshold, num_hashes=num_hashes,
                     band_size=band_size, ngram=ngram,
                     max_bucket_size=max_bucket_size,
-                    _corpus_shingles=hist_sh.select("id", "shingle"),
-                    _corpus_signatures=hist_sig,
+                    _corpus_arrs=hist_sh, _corpus_signatures=hist_sig,
                     # the batch IS the eval side here — gate its
                     # broadcast on the per-batch size check
                     evalset_is_small=batch_is_small,
@@ -493,7 +496,7 @@ class _ReleaseOnTerminate(StreamingQueryListener):
 def compact_index(spark: SparkSession, index_dir: str, num_partitions: int = 32) -> dict:
     """Offline maintenance for the survivor index: fold the
     accumulated per-batch partitions into one ``batch_id=-1`` partition
-    per table, dropping any duplicate rows (repeated compaction is
+    per table, keeping one row per id (repeated compaction is
     idempotent).  Thousands of tiny batch partitions make every
     micro-batch's history scan open thousands of files; compaction
     restores O(num_partitions) files without changing the read path —
@@ -580,7 +583,7 @@ def _compact_index_locked(spark, index_dir, num_partitions, _shutil) -> dict:
     real = list_index_batches(index_dir)
     keep_batch = real[-1] if real else None
     out = {}
-    for sub, keys in (("shingles", ["id", "shingle"]), ("signatures", ["id"])):
+    for sub in ("shingles", "signatures"):
         path = os.path.join(index_dir, sub)
         staging = _staging_path(index_dir, sub)
         bak = _bak_path(index_dir, sub)
@@ -590,7 +593,7 @@ def _compact_index_locked(spark, index_dir, num_partitions, _shutil) -> dict:
         compacted = (
             src
             .drop(BATCH_COL)
-            .dropDuplicates(keys)
+            .dropDuplicates(["id"])
             .repartition(num_partitions)
             .withColumn(BATCH_COL, F.lit(-1))
         )

@@ -251,21 +251,21 @@ def test_curated_output_writes_bucketed_for_colocated_joins(spark):
 
 def test_funnel_explodes_corpus_shingles_exactly_once(spark, monkeypatch):
     """The round-4 single-pass guarantee: one funnel run builds corpus
-    shingles ONCE (the near-dup stage's frame, survivor-filtered, is
-    reused by decontamination).  doc_shingles is called exactly twice —
-    once for the corpus, once for the (small) eval set — and the
-    corpus-sized call happens exactly once."""
+    shingles ONCE (the near-dup stage's profile, survivor-filtered, is
+    reused by decontamination).  minhash_signatures is called exactly
+    twice — once for the corpus, once for the (small) eval set — and
+    the corpus-sized call happens exactly once."""
     from latex_ocr_spark.operators import dedup as D
     from latex_ocr_spark.plans import curate as C
 
     calls = []
-    real = D.doc_shingles
+    real = D.minhash_signatures
 
     def counting(docs, *args, **kwargs):
         calls.append(docs)
         return real(docs, *args, **kwargs)
 
-    monkeypatch.setattr(D, "doc_shingles", counting)
+    monkeypatch.setattr(D, "minhash_signatures", counting)
     docs = _fixture(spark)
     evalset = spark.createDataFrame(
         [(-1, "alpha beta gamma delta epsilon zeta eta theta")],
@@ -330,13 +330,11 @@ def test_funnel_forwards_recall_knobs_to_decontamination(spark, monkeypatch):
     )
     assert seen["num_hashes"] == 16 and seen["band_size"] == 4
     assert seen["max_bucket_size"] == 50
-    # the reused frames: the LSH funnel hands its (survivor-filtered)
-    # shingle-ARRAY frame + signature frame to decontamination — r7's
-    # row-wise plan; the exploded-shingle hand-off exists only on the
-    # exact-jaccard path
+    # the reused frames: the funnel hands its (survivor-filtered)
+    # profile to decontamination as both the shingle-ARRAY frame and
+    # the signature frame — r7's row-wise plan, for either method
     assert seen["_corpus_arrs"] is not None
     assert seen["_corpus_signatures"] is not None
-    assert seen["_corpus_shingles"] is None
     cachepool.release()
 
 

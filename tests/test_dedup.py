@@ -357,13 +357,36 @@ def test_star_clusters_keep_self_loop_singletons(spark):
     assert star == prop == {7: 7, 1: 1, 2: 1}
 
 
+def _jvm_minhash_reference(arrs, k, include_size, include_shingles):
+    """The JVM ``transform(md5)`` projection the fused kernel replaced,
+    kept as the parity reference: per-document min over the shingle
+    set's md5(shingle ‖ '#i') family, over a
+    :func:`doc_shingle_arrays` frame (empty sets dropped)."""
+    sh = F.col("shingles")
+
+    def _minhash(i: int):
+        # closure helper, NOT a default-arg lambda: pyspark counts the
+        # lambda's parameters to decide unary vs (element, index) form
+        return F.array_min(
+            F.transform(sh, lambda s: F.md5(F.concat(s, F.lit(f"#{i}"))))
+        ).alias(f"sig_{i}")
+
+    cols = [_minhash(i) for i in range(k)]
+    if include_size:
+        cols.append(F.size(sh).cast("long").alias("n_shingles"))
+    if include_shingles:
+        cols = [sh.alias("shingles")] + cols
+    return arrs.filter(F.size(sh) > 0).select("id", *cols)
+
+
 def test_fused_profile_kernel_parity_with_jvm_path(spark):
     """The r7 fused Arrow profile kernel (tokenize + shingle + md5
     MinHash family in one mapInArrow pass) must be bit-identical to the
     JVM projection path it replaces — including the Java-regex
     whitespace semantics (\\s is the ASCII six, so NBSP/\\x1c must NOT
     split), first-occurrence shingle order, empty/null/short-text
-    drops, and the (id, [shingles,] sig_*, [n_shingles]) schema."""
+    drops, and the (id, [shingles,] sig_*, [n_shingles]) schema — with
+    and without the amplification fan-out (``parallel_hint``)."""
     from latex_ocr_spark.operators.dedup import (
         doc_shingle_arrays,
         minhash_signatures,
@@ -381,17 +404,45 @@ def test_fused_profile_kernel_parity_with_jvm_path(spark):
         ("i", "x \x1c y \x1d z w q"),  # \x1c/\x1d not Java \s
     ]
     docs = spark.createDataFrame(rows, "doc_id string, text string")
-    for ngram, k, size, shingles in [(3, 8, True, True), (1, 4, True, False)]:
+    for ngram, k, size, shingles, hint in [
+        (3, 8, True, True, True), (1, 4, True, False, True),
+        (3, 8, True, True, False),
+    ]:
         fused = minhash_signatures(
             docs, k, "text", "doc_id", ngram,
-            include_size=size, include_shingles=shingles,
+            include_size=size, include_shingles=shingles, parallel_hint=hint,
         )
         arrs = doc_shingle_arrays(docs, "text", "doc_id", ngram)
-        jvm = minhash_signatures(
-            docs, k, "text", "doc_id", ngram, _arrs=arrs,
-            include_size=size, include_shingles=shingles,
-        )
+        jvm = _jvm_minhash_reference(arrs, k, size, shingles)
         assert fused.columns == jvm.columns
         got = {r["id"]: tuple(r) for r in fused.collect()}
         want = {r["id"]: tuple(r) for r in jvm.collect()}
         assert got == want and got  # non-vacuous
+
+
+def test_profile_kernel_falls_back_to_local_memo_without_package(monkeypatch):
+    """An executor that cannot import the package (code shipped only as
+    pickled closures) still runs the profile kernel: the worker-side
+    memo import falls back to a function-local dict, with output
+    identical to the normal run."""
+    import pyarrow as pa
+
+    from latex_ocr_spark.operators import dedup as D
+
+    rb = pa.RecordBatch.from_arrays(
+        [
+            pa.array([1, 2, 3, 4], type=pa.int64()),
+            pa.array(["a b c d e", None, "x y", "a b c  d e f\tg"]),
+        ],
+        names=["id", "__text"],
+    )
+    memo = {}
+    monkeypatch.setattr(D, "_PROFILE_MEMO", memo)
+    want = [b.to_pydict() for b in D._profile_kernel(4, 3, True, True)([rb])]
+    assert memo  # the normal run memoizes module-wide
+    memo.clear()
+    with monkeypatch.context() as m:
+        m.setitem(sys.modules, "latex_ocr_spark.operators.dedup", None)
+        got = [b.to_pydict() for b in D._profile_kernel(4, 3, True, True)([rb])]
+    assert not memo  # the fallback memo is local to the task
+    assert got == want and want[0]["id"] == [1, 4]  # non-vacuous

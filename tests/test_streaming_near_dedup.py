@@ -172,7 +172,12 @@ def test_compact_after_crash_keeps_pending_replay_exact(spark, dirs):
 def test_index_config_fingerprint_refuses_knob_drift(spark, dirs):
     """A survivor index built under one similarity config must refuse a
     restart under another — comparing 2-gram batch shingles against a
-    3-gram index would silently admit every near-dup of history."""
+    3-gram index would silently admit every near-dup of history.  The
+    on-disk layout is part of the config: an index fingerprinted
+    without it (the exploded (id, shingle) layout, 4-key _meta) is
+    refused the same way, even under identical knobs."""
+    import json
+
     _batch1(spark).write.mode("append").parquet(f"{dirs}/in")
     _run(spark, dirs)
     cachepool.release()
@@ -180,6 +185,19 @@ def test_index_config_fingerprint_refuses_knob_drift(spark, dirs):
         start_near_dedup_stream(
             spark, f"{dirs}/in", f"{dirs}/out", f"{dirs}/index",
             f"{dirs}/ckpt", **{**KW, "ngram": 2},
+        )
+    cachepool.release()
+    old_layout = json.dumps(
+        {"threshold": 0.5, "num_hashes": 8, "band_size": 2, "ngram": 1},
+        sort_keys=True,
+    )
+    spark.createDataFrame([(old_layout,)], "cfg string").coalesce(1).write.mode(
+        "overwrite"
+    ).text(f"{dirs}/index/_meta")
+    with pytest.raises(RuntimeError, match="different knobs"):
+        start_near_dedup_stream(
+            spark, f"{dirs}/in", f"{dirs}/out", f"{dirs}/index",
+            f"{dirs}/ckpt", **KW,
         )
     cachepool.release()
 
@@ -203,8 +221,9 @@ def test_index_compaction_preserves_dedup_behavior(spark, dirs):
     cachepool.release()
 
     stats = compact_index(spark, f"{dirs}/index", num_partitions=2)
-    # batch 0 (20 survivors) folded into -1; batch 1 (10 survivors) kept
-    assert stats["signatures"] == 30
+    # batch 0 (20 survivors) folded into -1; batch 1 (10 survivors) kept;
+    # one shingle-array row per survivor, like the signature table
+    assert stats["shingles"] == stats["signatures"] == 30
     parts = glob.glob(f"{dirs}/index/signatures/batch_id=*")
     assert sorted(p.split("=")[-1] for p in parts) == ["-1", "1"]
     # idempotent: compacting again changes nothing
