@@ -26,6 +26,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench.statusstore import StatusReader  # noqa: E402
+
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -42,78 +44,28 @@ def _noop_write(df) -> int:
 
 # ---------------------------------------------------------------------------
 # plan-cost metrics: shuffle bytes + exchange counts per query, read from
-# the SQL status store after each run.  Wall seconds on a shared host are
-# noisy (round 2 burned judge time proving a 3.3× wall delta was
-# environmental); bytes-through-exchanges and exchange counts are
-# machine-independent, so a plan regression is distinguishable from noise.
+# the status stores after each run (perfbench/statusstore.py).  Wall
+# seconds on a shared host are noisy (round 2 burned judge time proving a
+# 3.3× wall delta was environmental); bytes-through-exchanges and exchange
+# counts are machine-independent, so a plan regression is distinguishable
+# from noise.
 # ---------------------------------------------------------------------------
 
-_SIZE_UNITS = {"B": 1, "KiB": 1 << 10, "MiB": 1 << 20, "GiB": 1 << 30, "TiB": 1 << 40}
+
+def _exec_marker(spark):
+    """Status-store position before a timed region."""
+    return StatusReader(spark).marker()
 
 
-def _parse_metric_bytes(v: str) -> int:
-    """SQL-UI metric strings look like 'total (min, med, max …)\\n921.0 B
-    (230.0 B, …)' or plain '921.0 B' — take the leading size of the last
-    line (the total)."""
-    import re
-
-    m = re.match(r"\s*([\d.]+)\s*(B|KiB|MiB|GiB|TiB)", v.strip().splitlines()[-1])
-    return int(float(m.group(1)) * _SIZE_UNITS[m.group(2)]) if m else 0
-
-
-def _exec_marker(spark) -> int:
-    """Largest SQL execution id seen so far (-1 if none)."""
-    st = spark._jsparkSession.sharedState().statusStore()
-    exes = st.executionsList()
-    return exes.apply(exes.size() - 1).executionId() if exes.size() else -1
-
-
-def _plan_cost(spark, marker: int) -> dict:
-    """Aggregate shuffle-bytes-written + exchange node counts over every
-    SQL execution with id > marker (i.e. the query run just timed)."""
-    # the status store is fed by the ASYNC listener bus — drain it
-    # first or a loaded host intermittently undercounts (exactly the
-    # false plan-regression signal this metric exists to eliminate)
-    try:
-        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    except Exception:
-        time.sleep(0.5)  # older/newer signature — bounded fallback
-    st = spark._jsparkSession.sharedState().statusStore()
-    exes = st.executionsList()
-    shuffle_bytes = 0
-    exchanges = 0
-    broadcasts = 0
-    for i in range(exes.size()):
-        e = exes.apply(i)
-        eid = e.executionId()
-        if eid <= marker:
-            continue
-        names = {}  # accumulatorId -> metric name, Exchange nodes only
-        g = st.planGraph(eid)
-        nodes = g.allNodes()
-        for j in range(nodes.size()):
-            node = nodes.apply(j)
-            if node.name() == "Exchange":
-                exchanges += 1
-            elif node.name() == "BroadcastExchange":
-                broadcasts += 1
-            else:
-                continue
-            ms = node.metrics()
-            for k in range(ms.size()):
-                mm = ms.apply(k)
-                if mm.name() == "shuffle bytes written":
-                    names[mm.accumulatorId()] = mm.name()
-        vals = st.executionMetrics(eid)
-        it = vals.iterator()
-        while it.hasNext():
-            kv = it.next()
-            if kv._1() in names:
-                shuffle_bytes += _parse_metric_bytes(kv._2())
+def _plan_cost(spark, marker) -> dict:
+    """Shuffle bytes written and exchange/broadcast node counts of
+    every SQL execution after ``marker`` (i.e. the query run just
+    timed), as the bench JSON's integer ``plan_cost`` record."""
+    c = StatusReader(spark).since(marker)
     return {
-        "shuffle_bytes": shuffle_bytes,
-        "exchanges": exchanges,
-        "broadcasts": broadcasts,
+        "shuffle_bytes": int(c["shuffle_write_bytes"]),
+        "exchanges": c["exchanges"],
+        "broadcasts": c["broadcasts"],
     }
 
 
@@ -390,53 +342,55 @@ def run_cross_sf(spark, sf_dir: str, base_cost: dict) -> dict:
     }
 
 
-def run_curate_funnel(spark, sf_dir: str) -> dict:
-    """The composed product pipeline as a headline bench entry: full
-    curate_corpus (LSH default, the 100 TB path) over the sf documents
-    table with the registry's planted eval set.  Timed as one run — the
-    funnel performs its own internal actions (cluster loop + the single
-    funnel-count action), all captured by the plan-cost marker."""
+def build_curated(spark, sf_dir: str):
+    """The composed benches' curation result: full curate_corpus (LSH
+    default, the 100 TB path) over the sf documents table with the
+    registry's planted eval set.  Deferred funnel: the caller's sink
+    write is the resolving action — benches the production shape
+    (jobs/curate_job.py), one pass."""
     from latex_ocr_spark.plans.curate import curate_corpus
     from latex_ocr_spark.plans.registry import planted_evalset
 
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
         "doc_id", "text"
     )
-    res = curate_corpus(
+    return curate_corpus(
         docs, planted_evalset(docs), min_tokens=3, near_dup_method="lsh",
-        ngram=3, val_fraction=0.1,
-        # deferred funnel: the sink write below is the resolving action
-        # — benches the production shape (jobs/curate_job.py), one pass
-        collect_funnel=False,
+        ngram=3, val_fraction=0.1, collect_funnel=False,
     )
+
+
+def build_packed(res):
+    """The prepare chain's final frame over a :func:`build_curated`
+    result: broadcast-vocab BPE tokenize → grouped per-split pack."""
+    from pyspark.sql import functions as F
+
+    from latex_ocr_spark.operators.packing import pack_sequences
+    from latex_ocr_spark.operators.tokenize import with_tokens
+
+    toks = with_tokens(res.documents, text_col="text", out_col="tokens")
+    toks = toks.withColumn("n_tokens", F.size("tokens"))
+    return pack_sequences(toks, budget=2048, group_col="split")
+
+
+def run_curate_funnel(spark, sf_dir: str) -> dict:
+    """The composed product pipeline as a headline bench entry: the
+    :func:`build_curated` result, timed as one run — the funnel performs
+    its own internal actions (cluster loop + the single funnel-count
+    action), all captured by the plan-cost marker."""
+    res = build_curated(spark, sf_dir)
     _noop_write(res.documents)  # consume the result like a real sink
     return {s: [i, o] for s, i, o in res.resolve_funnel()}
 
 
 def run_prepare_pipeline(spark, sf_dir: str) -> dict:
     """The one-command training-prep chain (jobs/prepare_job.py shape)
-    as a headline bench entry: curate (LSH, deferred funnel) →
-    broadcast-vocab BPE tokenize → grouped per-split pack → sink.
-    The noop sink is the resolving action for the funnel observations,
-    exactly like the job's packed-table write."""
-    from pyspark.sql import functions as F
-
-    from latex_ocr_spark.operators.packing import pack_sequences
-    from latex_ocr_spark.operators.tokenize import with_tokens
-    from latex_ocr_spark.plans.curate import curate_corpus
-    from latex_ocr_spark.plans.registry import planted_evalset
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
-        "doc_id", "text"
-    )
-    res = curate_corpus(
-        docs, planted_evalset(docs), min_tokens=3, near_dup_method="lsh",
-        ngram=3, val_fraction=0.1, collect_funnel=False,
-    )
-    toks = with_tokens(res.documents, text_col="text", out_col="tokens")
-    toks = toks.withColumn("n_tokens", F.size("tokens"))
-    packed = pack_sequences(toks, budget=2048, group_col="split")
-    _noop_write(packed)
+    as a headline bench entry: :func:`build_curated` →
+    :func:`build_packed` → sink.  The noop sink is the resolving action
+    for the funnel observations, exactly like the job's packed-table
+    write."""
+    res = build_curated(spark, sf_dir)
+    _noop_write(build_packed(res))
     return {s: [i, o] for s, i, o in res.resolve_funnel()}
 
 

@@ -58,26 +58,8 @@ def _build_explained(name, spark, sf_dir):
 
         path = f"/tmp/bench_transcripts_{B.BENCH_CONVS}_p64"
         return with_stable_order(extract_spans(spark.read.parquet(path)))
-    from pyspark.sql import functions as F
-
-    from latex_ocr_spark.plans.curate import curate_corpus
-    from latex_ocr_spark.plans.registry import planted_evalset
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
-        "doc_id", "text"
-    )
-    res = curate_corpus(
-        docs, planted_evalset(docs), min_tokens=3, near_dup_method="lsh",
-        ngram=3, val_fraction=0.1, collect_funnel=False,
-    )
-    if name == "curate_funnel":
-        return res.documents
-    from latex_ocr_spark.operators.packing import pack_sequences
-    from latex_ocr_spark.operators.tokenize import with_tokens
-
-    toks = with_tokens(res.documents, text_col="text", out_col="tokens")
-    toks = toks.withColumn("n_tokens", F.size("tokens"))
-    return pack_sequences(toks, budget=2048, group_col="split")
+    res = B.build_curated(spark, sf_dir)
+    return res.documents if name == "curate_funnel" else B.build_packed(res)
 
 
 def main() -> None:

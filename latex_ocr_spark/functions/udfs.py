@@ -1,4 +1,4 @@
-"""Arrow-batched UDF bodies (mapInPandas iterators / pandas UDFs).
+"""Arrow-batched UDF bodies (mapInArrow iterators / pandas UDFs).
 
 Each function here is the vectorization island for one reference
 subsystem (SURVEY.md §1.4): per-row pure-Python kernels looped inside
@@ -6,8 +6,6 @@ an Arrow batch — never row-at-a-time ``F.udf``.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import pandas as pd
 
@@ -18,59 +16,17 @@ FAILED_TURN_SPAN_IDX = -1
 _EXTRACT_COLS = ["conv_id", "turn_idx", "span_idx", "raw_match", "latex_norm"]
 
 
-def extract_spans_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas body: (conv_id, turn_idx, text) → extracted spans.
-
-    Emits one row per (turn, span); a failed turn emits a single
-    sentinel row with span_idx = -1 so failure accounting survives the
-    shuffle without a second pass over the text.
-    """
-    from latex_ocr_spark.textkernel.pipeline import extract_turn_checked
-
-    for pdf in batches:
-        conv_ids, turn_idxs, span_idxs, raws, norms = [], [], [], [], []
-        for conv_id, turn_idx, text in zip(
-            pdf["conv_id"], pdf["turn_idx"], pdf["text"]
-        ):
-            spans, failed = extract_turn_checked(text if text is not None else "")
-            if failed:
-                conv_ids.append(conv_id)
-                turn_idxs.append(turn_idx)
-                span_idxs.append(FAILED_TURN_SPAN_IDX)
-                raws.append("")
-                norms.append("")
-                continue
-            for span in spans:
-                conv_ids.append(conv_id)
-                turn_idxs.append(turn_idx)
-                span_idxs.append(span.span_idx)
-                raws.append(span.raw_match)
-                norms.append(span.latex_norm)
-        yield pd.DataFrame(
-            {
-                "conv_id": pd.Series(conv_ids, dtype="object"),
-                "turn_idx": pd.Series(turn_idxs, dtype="int32"),
-                "span_idx": pd.Series(span_idxs, dtype="int32"),
-                "raw_match": pd.Series(raws, dtype="object"),
-                "latex_norm": pd.Series(norms, dtype="object"),
-            },
-            columns=_EXTRACT_COLS,
-        )
-
-
 def extract_spans_arrow(batches):
     """mapInArrow body: (conv_id, turn_idx, text) → extracted spans.
 
-    Same kernel and output contract as :func:`extract_spans_batches`
-    (one row per (turn, span); failed turn → one span_idx = -1
-    sentinel row), but rows cross the Python boundary as raw Arrow
-    batches: ``to_pylist()`` converts each input column to plain
-    Python in one C call and the output builds straight into Arrow
-    arrays — no pandas Series construction or per-element numpy→Python
-    boxing on either side (guide §4.2: the per-row work is the regex
-    kernel; everything around it should be batch-vectorized).
+    Emits one row per (turn, span); a failed turn emits a single
+    sentinel row with span_idx = -1 so failure accounting survives the
+    shuffle without a second pass over the text.  Rows cross the Python
+    boundary as raw Arrow batches: ``to_pylist()`` converts each input
+    column to plain Python in one C call and the output builds straight
+    into Arrow arrays — no pandas Series construction or per-element
+    numpy→Python boxing on either side (guide §4.2: the per-row work is
+    the regex kernel; everything around it should be batch-vectorized).
     """
     import pyarrow as pa
 

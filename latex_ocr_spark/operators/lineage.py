@@ -24,10 +24,15 @@ from __future__ import annotations
 import time
 from typing import Optional
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 DEFAULT_UNITS = 64
+
+#: read-error conditions that mean "no unit committed yet": the lineage
+#: dir does not exist, or holds only the lease's lock file
+_NO_LINEAGE_YET = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
 
 
 def with_work_key(transcripts: DataFrame, n_units: int = DEFAULT_UNITS) -> DataFrame:
@@ -42,7 +47,12 @@ def completed_units(spark: SparkSession, lineage_path: str) -> DataFrame:
     # HDFS/S3 where the driver's local filesystem says nothing
     try:
         return spark.read.parquet(lineage_path).select("work_key").distinct()
-    except Exception:  # AnalysisException: path does not exist
+    except AnalysisException as e:
+        # any other failure (a corrupt or unreadable file) must not read
+        # as "no runs yet": that would silently re-extract every unit
+        # and append a second lineage row for each
+        if e.getCondition() not in _NO_LINEAGE_YET:
+            raise
         return spark.createDataFrame([], "work_key int")
 
 

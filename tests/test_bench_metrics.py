@@ -6,19 +6,20 @@ import sys
 sys.path.insert(0, "/root/repo")
 sys.path.insert(0, "/root/repo/tests")
 
-from bench import _parse_metric_bytes, _exec_marker, _plan_cost
+from bench import _exec_marker, _plan_cost
+from perfbench.statusstore import parse_metric
 
 
 def test_parse_metric_bytes_formats():
     # the SQL-UI total-with-breakdown form: total on the last line
-    assert _parse_metric_bytes(
+    assert parse_metric(
         "total (min, med, max (stageId: taskId))\n921.0 B (230.0 B, 230.0 B, 231.0 B (stage 0.0: task 0))"
     ) == 921
-    assert _parse_metric_bytes("1.5 KiB") == 1536
-    assert _parse_metric_bytes("2.0 MiB (…)") == 2 * 1024 * 1024
-    assert _parse_metric_bytes("3.25 GiB") == int(3.25 * (1 << 30))
-    assert _parse_metric_bytes("0.0 B") == 0
-    assert _parse_metric_bytes("garbage") == 0
+    assert parse_metric("1.5 KiB") == 1536
+    assert parse_metric("2.0 MiB (…)") == 2 * 1024 * 1024
+    assert parse_metric("3.25 GiB") == int(3.25 * (1 << 30))
+    assert parse_metric("0.0 B") == 0
+    assert parse_metric("garbage") == 0
 
 
 def test_plan_cost_counts_exchanges_and_bytes(spark):
@@ -35,6 +36,21 @@ def test_plan_cost_counts_exchanges_and_bytes(spark):
     ).save()
     cost = _plan_cost(spark, marker)
     assert cost == {"shuffle_bytes": 0, "exchanges": 0, "broadcasts": 0}
+
+
+def test_plan_cost_counts_broadcasts_as_ints(spark):
+    from pyspark.sql import functions as F
+
+    marker = _exec_marker(spark)
+    big = spark.range(0, 50_000).selectExpr("id % 97 AS k", "id")
+    small = spark.range(0, 97).selectExpr("id AS k", "id * 3 AS v")
+    big.join(F.broadcast(small), "k").write.format("noop").mode(
+        "overwrite"
+    ).save()
+    cost = _plan_cost(spark, marker)
+    assert cost["broadcasts"] == 1
+    # the bench JSON contract: every plan_cost value is an int
+    assert all(type(v) is int for v in cost.values()), cost
 
 
 def test_diff_plan_cost_flags_growth_and_respects_allow():

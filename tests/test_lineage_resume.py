@@ -136,3 +136,20 @@ def test_extract_job_is_single_writer(spark, tmp_path):
     assert n == 4
     # released on completion: an immediate rerun is a clean no-op
     assert run_resumable_extract(spark, transcripts, out, lin, n_units=4) == 0
+
+
+def test_unreadable_lineage_raises_instead_of_rerunning(spark, tmp_path):
+    """Only a missing lineage dir (or one holding just the lease's lock
+    file) means "no runs yet"; a corrupt file must fail the run, not
+    silently re-extract every unit and append duplicate lineage rows."""
+    import os
+
+    transcripts = synth_transcripts(spark, 20)
+    out, lin = str(tmp_path / "out"), str(tmp_path / "lineage")
+    os.makedirs(lin)
+    with open(os.path.join(lin, "part-0.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+
+    with pytest.raises(Exception):
+        run_resumable_extract(spark, transcripts, out, lin, n_units=4)
+    assert not os.path.exists(out)
