@@ -229,14 +229,22 @@ def jaccard_pairs(
     )
 
 
-#: per-worker memo for the fused profile kernel: shingle -> its
-#: ``num_hashes`` md5 digests, keyed by the hash-family size.  Corpora
-#: repeat shingles heavily (that is the premise of near-dedup — the
-#: bench corpus measures ~10% unique), so most lookups hit.  Bounded:
-#: cleared when it outgrows the cap, so a pathological vocabulary can
-#: never OOM a long-lived reused worker (guide §4.5).
+#: per-worker memo for the fused profile kernel: shingle -> one
+#: ``bytes`` of its ``num_hashes`` raw 16-byte md5 digests, keyed by the
+#: hash-family size.  Corpora repeat shingles heavily (that is the
+#: premise of near-dedup — the bench corpus measures ~10% unique), so
+#: most lookups hit.  Bounded in entries and in bytes, so a
+#: pathological vocabulary can never OOM a long-lived reused worker
+#: (guide §4.5): it is cleared when it outgrows the entry cap, a
+#: shingle whose UTF-8 key is longer than ``_PROFILE_MEMO_KEY_BYTES`` is
+#: hashed but never stored, and only one hash family stays resident.
+#: An entry measures ~0.3 KB at k=8 on the bench corpus (a 128-byte
+#: digest blob, a ~20-char key, the dict slot) and ~0.5 KB at the key
+#: limit, so a full memo holds at most ~70 MB per worker.  Clearing
+#: instead of evicting is deliberate: the entries are cheap to recompute.
 _PROFILE_MEMO: dict = {}
 _PROFILE_MEMO_CAP = 1 << 17
+_PROFILE_MEMO_KEY_BYTES = 256
 
 
 def _profile_kernel(
@@ -255,20 +263,27 @@ def _profile_kernel(
       replicated literally (Python's ``\\s`` is Unicode-wide and would
       split more);
     - shingle set: first-occurrence order, as ``array_distinct``;
-    - sig_i = min md5(shingle ‖ '#i') as lowercase hex — ASCII min
-      equals Spark's UTF8 binary ordering;
+    - sig_i = min md5(shingle ‖ '#i') as lowercase hex.  The kernel
+      compares raw digests — each shingle's family is one ``bytes`` of
+      ``num_hashes`` 16-byte digests, and slot i is the slice
+      ``[16i, 16i+16)`` — and converts only each document's winners to
+      hex.  For equal-length digests byte order equals lowercase-hex
+      order (hex maps each nibble monotonically onto '0'-'9' < 'a'-'f'),
+      which in turn equals Spark's UTF8 binary ordering of the JVM's
+      ``md5`` strings;
     - md5 state for a shingle is computed once and ``copy()``-extended
       per suffix (md5(s ‖ '#i') exactly, ~2× cheaper than k full
       hashes).
     """
     import re as _re
+    from hashlib import md5 as _md5
+    from operator import itemgetter
 
     import pyarrow as pa
 
     ws = _re.compile(r"[ \t\n\x0b\f\r]+")
-    from hashlib import md5 as _md5
-
     suffixes = [f"#{i}".encode() for i in range(num_hashes)]
+    slots = [itemgetter(slice(16 * i, 16 * i + 16)) for i in range(num_hashes)]
 
     def run(batches):
         # resolve the memo through the importable module ON THE WORKER:
@@ -283,7 +298,11 @@ def _profile_kernel(
         except ImportError:
             _PROFILE_MEMO = {}
 
-        memo = _PROFILE_MEMO.setdefault(num_hashes, {})
+        memo = _PROFILE_MEMO.get(num_hashes)
+        if memo is None:
+            # one family resident: a new num_hashes drops the others
+            _PROFILE_MEMO.clear()
+            memo = _PROFILE_MEMO[num_hashes] = {}
         for rb in batches:
             texts = rb.column("__text").to_pylist()
             keep, shingle_sets, sigs = [], [], [[] for _ in range(num_hashes)]
@@ -303,32 +322,30 @@ def _profile_kernel(
                     )
                 if not sh:
                     continue
-                best = None
+                blobs = []
                 for s in sh:
-                    digs = memo.get(s)
-                    if digs is None:
-                        if len(memo) >= _PROFILE_MEMO_CAP:
-                            memo.clear()
-                        h = _md5(s.encode())
+                    blob = memo.get(s)
+                    if blob is None:
+                        key = s.encode()
+                        h = _md5(key)
                         digs = []
                         for suf in suffixes:
                             hi = h.copy()
                             hi.update(suf)
-                            digs.append(hi.hexdigest())
-                        memo[s] = digs
-                    if best is None:
-                        best = list(digs)
-                    else:
-                        for i in range(num_hashes):
-                            if digs[i] < best[i]:
-                                best[i] = digs[i]
+                            digs.append(hi.digest())
+                        blob = b"".join(digs)
+                        if len(key) <= _PROFILE_MEMO_KEY_BYTES:
+                            if len(memo) >= _PROFILE_MEMO_CAP:
+                                memo.clear()
+                            memo[s] = blob
+                    blobs.append(blob)
                 keep.append(row_i)
                 if include_shingles:
                     shingle_sets.append(sh)
                 if include_size:
                     sizes.append(len(sh))
-                for i in range(num_hashes):
-                    sigs[i].append(best[i])
+                for i, slot in enumerate(slots):
+                    sigs[i].append(slot(min(blobs, key=slot)).hex())
             cols = [rb.column("id").take(pa.array(keep, type=pa.int32()))]
             names = ["id"]
             if include_shingles:

@@ -13,10 +13,12 @@ Spark shape:
   a range repartition there is NO boundary-sampling pass, which would
   execute the upstream pipeline twice), then a per-partition sort by
   (tokens desc, id) — first-fit-decreasing order;
-- packing runs inside ``mapInPandas`` with bin state carried across
+- packing runs inside ``mapInArrow`` with bin state carried across
   the partition's Arrow batches: packs NEVER span partitions, so an
   executor can materialize whole packs locally and the only shuffle in
-  the plan is the one repartition;
+  the plan is the one repartition.  Only the count and group columns
+  are read into Python; every other column (the text and token arrays
+  included) passes through as the same Arrow array;
 - ``pack_id = partition_id * 2^32 + local_pack`` — globally unique
   without any coordination;
 - rows larger than the budget are quarantined (``pack_id`` NULL +
@@ -32,9 +34,8 @@ assignment avoids).
 
 from __future__ import annotations
 
-from typing import Iterator, Optional, Tuple
+from typing import Optional, Tuple
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -146,7 +147,9 @@ def pack_sequences(
         ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
+        import pyarrow as pa
+
         # bin state spans the partition's Arrow batches: packs are
         # partition-scoped, batches are an Arrow transport detail
         pid = None
@@ -159,22 +162,26 @@ def pack_sequences(
         # byte-identical to the ungrouped packer's.
         bins_by_group: dict = {}
         pack_no: dict = {}
-        for pdf in batches:
-            if pid is None and len(pdf):
+        for rb in batches:
+            if pid is None and rb.num_rows:
                 from pyspark import TaskContext
 
                 pid = TaskContext.get().partitionId()
-            groups = pdf[group_col] if group_col is not None else None
+            counts = rb.column(n_tokens_col).to_pylist()
+            groups = (
+                rb.column(group_col).to_pylist()
+                if group_col is not None
+                else [None] * len(counts)
+            )
             pack_ids, offsets, errors = [], [], []
-            for row_i, tok in enumerate(pdf[n_tokens_col]):
-                grp = groups.iloc[row_i] if groups is not None else None
+            for tok, grp in zip(counts, groups):
                 bins = bins_by_group.get(grp)
                 if bins is None:
                     bins = bins_by_group[grp] = _FirstFitBins(budget)
-                if pd.isna(tok):
-                    # NULL upstream count (Arrow delivers NaN): the
-                    # most common corrupt-count shape — quarantine,
-                    # never fail the task
+                if tok is None or tok != tok:
+                    # NULL upstream count (or a NaN double): the most
+                    # common corrupt-count shape — quarantine, never
+                    # fail the task
                     pack_ids.append(None)
                     offsets.append(None)
                     errors.append("null token count")
@@ -199,11 +206,15 @@ def pack_sequences(
                 pack_ids.append((pid << 32) | local)
                 offsets.append(off)
                 errors.append(None)
-            out = pdf.copy()
-            out["pack_id"] = pd.Series(pack_ids, dtype="Int64")
-            out["pack_offset"] = pd.Series(offsets, dtype="Int64")
-            out["pack_error"] = errors
-            yield out
+            yield pa.RecordBatch.from_arrays(
+                rb.columns
+                + [
+                    pa.array(pack_ids, type=pa.int64()),
+                    pa.array(offsets, type=pa.int64()),
+                    pa.array(errors, type=pa.string()),
+                ],
+                names=rb.schema.names + ["pack_id", "pack_offset", "pack_error"],
+            )
 
     # HASH repartition, not repartitionByRange: the range partitioner
     # SAMPLES its child to pick boundaries, which executes the whole
@@ -227,7 +238,7 @@ def pack_sequences(
         F.col(n_tokens_col).desc(), F.col(id_col)
     ]
     ordered = parted.sortWithinPartitions(*sort_cols)
-    return ordered.mapInPandas(run, schema=schema)
+    return ordered.mapInArrow(run, schema=schema)
 
 
 def pack_stats(packed: DataFrame, budget: int) -> DataFrame:

@@ -3,13 +3,16 @@
 The tokenizer state (vocab + merges, ~100 KB) is broadcast once per
 job (M6 'broadcast BPE tokenizer vocab'); executors rebuild the
 tokenizer object lazily from the broadcast payload, never from disk.
+
+Both column operators run inside ``mapInArrow``: every input column
+passes through as the same Arrow array, and only the text (or id)
+column is read into Python.  Encoded ids go straight into one flat
+``array('i')`` per batch, 4 bytes per id, which the Arrow list column
+wraps without a copy.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -18,7 +21,8 @@ from pyspark.sql import types as T
 def _broadcast_tokenizer(df: DataFrame):
     from latex_ocr_spark.textkernel.bpe import DEFAULT_TOKENIZER_PATH
 
-    spec = open(DEFAULT_TOKENIZER_PATH, "rb").read()
+    with open(DEFAULT_TOKENIZER_PATH, "rb") as f:
+        spec = f.read()
     return df.sparkSession.sparkContext.broadcast(spec)
 
 
@@ -39,6 +43,14 @@ def _rebuild(bc):
     return cache[key]
 
 
+def _append_column(rb, name: str, arr):
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_arrays(
+        rb.columns + [arr], names=rb.schema.names + [name]
+    )
+
+
 def with_tokens(
     df: DataFrame, text_col: str = "latex_norm", out_col: str = "tokens"
 ) -> DataFrame:
@@ -49,16 +61,32 @@ def with_tokens(
         df.schema.fields + [T.StructField(out_col, T.ArrayType(T.IntegerType()))]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tk = _rebuild(bc)
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf[out_col] = pdf[text_col].map(
-                lambda s: tk.encode(s) if s is not None else None
-            )
-            yield pdf
+    def run(batches):
+        from array import array
 
-    return df.mapInPandas(run, schema=schema)
+        import pyarrow as pa
+
+        tk = _rebuild(bc)
+        for rb in batches:
+            values, offsets, nulls = array("i"), array("i", [0]), []
+            for s in rb.column(text_col).to_pylist():
+                nulls.append(s is None)
+                if s is not None:
+                    values.extend(tk.encode(s))
+                offsets.append(len(values))
+            # zero-copy: both Arrow buffers wrap the array('i') memory
+            ids = pa.Array.from_buffers(
+                pa.int32(), len(values), [None, pa.py_buffer(values)]
+            )
+            offs = pa.Array.from_buffers(
+                pa.int32(), len(offsets), [None, pa.py_buffer(offsets)]
+            )
+            tokens = pa.ListArray.from_arrays(
+                offs, ids, mask=pa.array(nulls, type=pa.bool_())
+            )
+            yield _append_column(rb, out_col, tokens)
+
+    return df.mapInArrow(run, schema=schema)
 
 
 def with_detokenized(
@@ -71,16 +99,18 @@ def with_detokenized(
         df.schema.fields + [T.StructField(out_col, T.StringType())]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tk = _rebuild(bc)
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf[out_col] = pdf[tokens_col].map(
-                lambda ids: tk.decode(ids) if ids is not None else None
-            )
-            yield pdf
+    def run(batches):
+        import pyarrow as pa
 
-    return df.mapInPandas(run, schema=schema)
+        tk = _rebuild(bc)
+        for rb in batches:
+            decoded = [
+                tk.decode(ids) if ids is not None else None
+                for ids in rb.column(tokens_col).to_pylist()
+            ]
+            yield _append_column(rb, out_col, pa.array(decoded, type=pa.string()))
+
+    return df.mapInArrow(run, schema=schema)
 
 
 def filter_max_seq_len(df: DataFrame, tokens_col: str = "tokens", max_len: int = 512) -> DataFrame:

@@ -65,7 +65,8 @@ class BpeTokenizer:
 
     def __init__(self, path: str = DEFAULT_TOKENIZER_PATH, spec: dict | None = None):
         if spec is None:
-            spec = json.load(open(path))
+            with open(path) as f:
+                spec = json.load(f)
         self.vocab: Dict[str, int] = spec["model"]["vocab"]
         self.inv_vocab: Dict[int, str] = {v: k for k, v in self.vocab.items()}
         merges = spec["model"]["merges"]

@@ -446,3 +446,37 @@ def test_profile_kernel_falls_back_to_local_memo_without_package(monkeypatch):
         got = [b.to_pydict() for b in D._profile_kernel(4, 3, True, True)([rb])]
     assert not memo  # the fallback memo is local to the task
     assert got == want and want[0]["id"] == [1, 4]  # non-vacuous
+
+
+def test_profile_memo_is_bounded_by_key_bytes_and_one_family(monkeypatch):
+    """Worker-resident memo bounds: a shingle whose UTF-8 key is longer
+    than ``_PROFILE_MEMO_KEY_BYTES`` is hashed but never stored, and a
+    new ``num_hashes`` drops the other hash families.  Signatures equal
+    the un-memoized definition (min md5(shingle ‖ '#i') as hex)."""
+    import hashlib
+
+    import pyarrow as pa
+
+    from latex_ocr_spark.operators import dedup as D
+
+    long_tok = "x" * 300
+    text = f"a b c d {long_tok} e f g h"
+    rb = pa.RecordBatch.from_arrays(
+        [pa.array([1], type=pa.int64()), pa.array([text])], names=["id", "__text"]
+    )
+    toks = text.split()
+    shingles = [" ".join(toks[j : j + 3]) for j in range(len(toks) - 2)]
+
+    memo = {}
+    monkeypatch.setattr(D, "_PROFILE_MEMO", memo)
+    for k in (4, 8):
+        got = next(D._profile_kernel(k, 3, True, True)([rb])).to_pydict()
+        want = [
+            min(hashlib.md5(f"{s}#{i}".encode()).hexdigest() for s in shingles)
+            for i in range(k)
+        ]
+        assert [got[f"sig_{i}"][0] for i in range(k)] == want
+        assert got["shingles"] == [shingles] and got["n_shingles"] == [7]
+        assert list(memo) == [k]  # one family resident
+        assert set(memo[k]) == {s for s in shingles if long_tok not in s}
+        assert len(memo[k]) == 4 and all(len(v) == 16 * k for v in memo[k].values())

@@ -260,3 +260,33 @@ def test_grouped_packing_property_fuzz(spark):
                 assert m.pack_offset == pos, trial
                 pos += m.n_tokens
             assert pos <= budget, trial
+
+
+def test_packing_passes_other_columns_through(spark):
+    """Arrow pass-through contract of the packer: a wide text column and
+    a token-array column, NULLs included, come back unchanged; rows with
+    a NULL group pack together as one group of their own."""
+    rows = [
+        (i, 10 + i, "w" * (5_000 + i) if i % 3 else None,
+         None if i % 4 == 1 else [i, None, 7],
+         None if i % 5 == 0 else ("train" if i % 2 else "val"))
+        for i in range(40)
+    ]
+    docs = spark.createDataFrame(
+        rows, "doc_id long, n_tokens long, text string, tokens array<int>, "
+        "split string"
+    )
+    packed = pack_sequences(docs, BUDGET, num_partitions=1, group_col="split")
+    assert packed.columns == docs.columns + ["pack_id", "pack_offset", "pack_error"]
+    want = {r.doc_id: tuple(r) for r in docs.collect()}
+    got = packed.collect()
+    assert {r.doc_id: tuple(r)[:5] for r in got} == want
+    assert all(r.pack_error is None for r in got)
+
+    groups_by_pack = {}
+    for r in got:
+        groups_by_pack.setdefault(r.pack_id, set()).add(r.split)
+    assert all(len(g) == 1 for g in groups_by_pack.values())
+    # the eight NULL-group rows (10+i tokens each) fit one budget
+    null_packs = {r.pack_id for r in got if r.split is None}
+    assert len(null_packs) == 1

@@ -62,3 +62,37 @@ def test_spark_tokenize_roundtrip(spark):
         assert decoded == s
         assert ids[0] == BOS_ID and ids[-1] == EOS_ID
     assert filter_max_seq_len(toked, max_len=3).count() == 1  # only ""
+
+
+def test_spark_tokenize_passes_other_columns_through(spark):
+    """Arrow pass-through contract of the tokenize operators: a NULL
+    text gives NULL tokens (and NULL decoded), ``""`` gives
+    [BOS, EOS], every row equals ``default_tokenizer().encode``, and
+    nested and timestamp columns come back unchanged."""
+    import datetime as dt
+
+    from latex_ocr_spark.operators.tokenize import with_detokenized, with_tokens
+
+    rows = [
+        (0, r"\frac{1}{2}", ["a", None], dt.datetime(2024, 1, 2, 3, 4, 5, 6)),
+        (1, None, None, None),
+        (2, "", [], dt.datetime(1999, 12, 31, 23, 59, 59)),
+        (3, r"x^{2}+y_{i} \alpha", ["b"], dt.datetime(2030, 6, 1)),
+    ]
+    df = spark.createDataFrame(
+        rows, "id long, latex_norm string, tags array<string>, ts timestamp"
+    )
+    out = with_detokenized(with_tokens(df))
+    assert out.columns == ["id", "latex_norm", "tags", "ts", "tokens", "decoded"]
+    want = {r.id: r for r in df.collect()}
+    got = {r.id: r for r in out.collect()}
+    assert set(got) == set(want)
+    tk = default_tokenizer()
+    for i, r in got.items():
+        assert tuple(r)[:4] == tuple(want[i])
+        if r.latex_norm is None:
+            assert r.tokens is None and r.decoded is None
+        else:
+            assert r.tokens == tk.encode(r.latex_norm)
+            assert r.decoded == r.latex_norm
+    assert got[2].tokens == [BOS_ID, EOS_ID]
