@@ -273,11 +273,19 @@ def _profile_kernel(
       ``md5`` strings;
     - md5 state for a shingle is computed once and ``copy()``-extended
       per suffix (md5(s ‖ '#i') exactly, ~2× cheaper than k full
-      hashes).
+      hashes).  The hash is CPython's built-in ``_md5`` module, the
+      same algorithm as ``hashlib.md5`` without OpenSSL's per-call
+      copy/update/digest overhead, which dominates on inputs this
+      short.  An interpreter built without ``_md5`` falls back to
+      ``hashlib.md5``.
     """
     import re as _re
-    from hashlib import md5 as _md5
     from operator import itemgetter
+
+    try:
+        from _md5 import md5 as _md5
+    except ImportError:
+        from hashlib import md5 as _md5
 
     import pyarrow as pa
 
@@ -311,15 +319,9 @@ def _profile_kernel(
                 if text is None:
                     continue
                 toks = [t for t in ws.split(text) if t]
-                if ngram == 1:
-                    sh = list(dict.fromkeys(toks))
-                else:
-                    sh = list(
-                        dict.fromkeys(
-                            " ".join(toks[j : j + ngram])
-                            for j in range(len(toks) - ngram + 1)
-                        )
-                    )
+                if ngram > 1:
+                    toks = map(" ".join, zip(*(toks[i:] for i in range(ngram))))
+                sh = list(dict.fromkeys(toks))
                 if not sh:
                     continue
                 blobs = []
@@ -345,7 +347,7 @@ def _profile_kernel(
                 if include_size:
                     sizes.append(len(sh))
                 for i, slot in enumerate(slots):
-                    sigs[i].append(slot(min(blobs, key=slot)).hex())
+                    sigs[i].append(min(map(slot, blobs)).hex())
             cols = [rb.column("id").take(pa.array(keep, type=pa.int32()))]
             names = ["id"]
             if include_shingles:
@@ -638,38 +640,113 @@ def _jaccard_from_arrays(
     )
 
 
+#: the clustering gate: at or below this many verified pairs,
+#: :func:`duplicate_clusters` labels the components in ONE task.  Sized
+#: by the bytes that task's Python worker holds: a pair adds at most
+#: two parent-map entries (the dict slot and its id objects) plus its
+#: share of the input and output lists — ~0.2 KB per pair for integer
+#: ids (tracemalloc peak: 50 MB for 2^18 pairs of distinct int64 ids),
+#: so the cap keeps the task within the ~70 MB the profile memo may
+#: hold per worker.
+_UNION_FIND_MAX_PAIRS = 1 << 18
+
+
+def _union_find(batches):
+    """mapInArrow body of the one-task clustering: a path-compressed
+    union-find over every (src, dst) edge, the larger root always
+    linked under the smaller, so each root is its component's minimum
+    id.  Emits (id, cluster_id) at the input's own Arrow id type."""
+    import pyarrow as pa
+
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    id_type = None
+    for batch in batches:
+        id_type = batch.schema.field("src").type
+        src, dst = batch.column("src").to_pylist(), batch.column("dst").to_pylist()
+        for a, b in zip(src, dst):
+            parent.setdefault(a, a)
+            parent.setdefault(b, b)
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+    if parent:
+        ids = list(parent)
+        labels = [find(x) for x in ids]
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(ids, type=id_type), pa.array(labels, type=id_type)],
+            names=["id", "cluster_id"],
+        )
+
+
 def duplicate_clusters(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     """(id, cluster_id) connected components over near-dup pairs —
     the step a real dedup pipeline needs after pair generation: pairs
     say "A≈B, B≈C"; keeping one representative per *transitive* group
     requires the component, and the canonical id is its minimum.
 
-    Spark-first iterative min-label propagation:
+    The pairs (a pair with a NULL endpoint names no document and is
+    dropped) are materialized once by ``localCheckpoint``, and an
+    observed count rides that same job.  That count picks the path:
 
-    - edges are symmetrized once and persisted (read every round);
-    - each round joins labels to neighbors, takes the min over
-      (own label, neighbor labels) — one shuffle per round;
-    - convergence is checked with a count of changed labels (the
-      loop-condition action); rounds needed = component diameter.
-      Near-dup components are clique-like (every dup of a doc matches
-      the doc), so diameter is small; ``max_iter`` bounds adversarial
-      chains;
-    - ``localCheckpoint`` severs lineage each round — without it the
-      plan doubles per iteration and the job dies of planning long
-      before it dies of data.
+    - at or below :data:`_UNION_FIND_MAX_PAIRS` (its comment gives the
+      byte reasoning), ``coalesce(1).mapInArrow`` runs a path-compressed
+      union-find (:func:`_union_find`) in one task — the components of
+      a verified pair list are tiny next to the corpus, and the loop
+      below spends one job per round on them.  Any component shape
+      converges, chains included;
+    - above it, Spark-first iterative min-label propagation:
 
-    Isolated documents (no pair) are not in the output — callers union
-    them back as their own singletons if needed (cheap anti-join).
+      - edges are symmetrized once and persisted (read every round);
+      - each round joins labels to neighbors, takes the min over
+        (own label, neighbor labels) — one shuffle per round;
+      - convergence is checked with a count of changed labels (the
+        loop-condition action); rounds needed = component diameter.
+        Near-dup components are clique-like (every dup of a doc
+        matches the doc), so diameter is small; ``max_iter`` bounds
+        adversarial chains, and a component it cannot close raises;
+      - ``localCheckpoint`` severs lineage each round — without it the
+        plan doubles per iteration and the job dies of planning long
+        before it dies of data.
 
-    ``max_iter`` counts propagation rounds and must be at least 1: the
-    first round is fused with label initialization and always runs, so
-    a smaller bound raises ``ValueError`` before any job.
+    Both paths keep the pairs' id type (string ids work) and label by
+    minimum id; a self-loop pair (a, a) is its own singleton.  Isolated
+    documents (no pair) are not in the output — callers union them back
+    as their own singletons if needed (cheap anti-join).
+
+    ``max_iter`` bounds the loop path only.  It counts propagation
+    rounds and must be at least 1 (the first round is fused with label
+    initialization and always runs), so a smaller bound raises
+    ``ValueError`` before any job, on either path.
     """
     from pyspark.sql import Observation
+    from pyspark.sql import types as T
 
     if max_iter < 1:
         raise ValueError(f"max_iter must be >= 1 propagation round, got {max_iter}")
-    e = pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
+    obs_n = Observation()
+    e = (
+        pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
+        .dropna()
+        .observe(obs_n, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint()
+    )
+    if int(obs_n.get["n"] or 0) <= _UNION_FIND_MAX_PAIRS:
+        id_type = e.schema["src"].dataType
+        return e.coalesce(1).mapInArrow(
+            _union_find,
+            schema=T.StructType(
+                [T.StructField("id", id_type), T.StructField("cluster_id", id_type)]
+            ),
+        )
     edges = (
         e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
@@ -750,110 +827,6 @@ def duplicate_clusters(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
             f"shuffle)"
         )
     return labels.select("id", F.col("label").alias("cluster_id"))
-
-
-def duplicate_clusters_star(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
-    """(id, cluster_id) connected components via alternating
-    large-star / small-star contraction (Kiveris et al., "Connected
-    Components in MapReduce and Beyond", SoCC'14) — same output
-    contract as :func:`duplicate_clusters`, different round bound.
-
-    Min-label propagation needs rounds = component DIAMETER: fine for
-    clique-like near-dup clusters (diameter ~2), quadratic wall on an
-    adversarial chain (A≈B≈C≈…, e.g. a document edited repeatedly
-    with each version near-dup'ing only its neighbors).  Star
-    contraction converges in O(log² n) rounds regardless of shape —
-    each round is two groupBy shuffles instead of one join shuffle, so
-    per-round cost is ~2× and the win only shows on high-diameter
-    topologies; pick it when near-dup chains are expected
-    (tests/test_dedup.py pins a 64-chain to ≤ 10 rounds, where
-    propagation would exceed its 25-round cap and raise).
-
-    - large-star: every node points its LARGER neighbors at its
-      minimum neighborhood member (incl. itself);
-    - small-star: every node points its smaller-or-equal neighbors
-      (and itself) at that minimum;
-    - converged when a round leaves the edge set unchanged — the
-      edges then form stars (node → component minimum);
-    - ``localCheckpoint`` severs lineage each round, as in
-      :func:`duplicate_clusters`.
-    """
-    e = pairs.select(F.col("a_id").alias("u"), F.col("b_id").alias("v"))
-    edges = (
-        e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-
-    def _large_star(ed: DataFrame) -> DataFrame:
-        # symmetric input: N(u) = {v : (u,v) ∈ ed}
-        m = ed.groupBy("u").agg(F.min("v").alias("_mn")).select(
-            "u", F.least(F.col("_mn"), F.col("u")).alias("m")
-        )
-        return (
-            ed.join(m, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    def _small_star(ed: DataFrame) -> DataFrame:
-        # orient toward the smaller endpoint: big groups its smalls
-        oriented = ed.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        ).distinct()
-        m = oriented.groupBy("u").agg(F.min("v").alias("m"))
-        joined = oriented.join(m, "u")
-        links = joined.select(F.col("v").alias("u"), F.col("m").alias("v"))
-        selfs = joined.select("u", F.col("m").alias("v")).distinct()
-        return (
-            links.unionByName(selfs)
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    for _round in range(max_iter):
-        after_large = _large_star(edges)
-        # re-symmetrize for the next large-star's neighborhood view
-        new_edges = _small_star(after_large).localCheckpoint()
-        sym = new_edges.unionByName(
-            new_edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        ).distinct().localCheckpoint()
-        # converged iff the (symmetrized) edge set is unchanged
-        delta = (
-            sym.exceptAll(edges).limit(1).count()
-            + edges.exceptAll(sym).limit(1).count()
-        )
-        edges = sym
-        if delta == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"duplicate_clusters_star did not converge in {max_iter} "
-            "alternating rounds — raise max_iter (bound is O(log² n); "
-            "this should never trip on real components)"
-        )
-    # stars: every edge points at the component minimum; roots appear
-    # only on the right side — add their self-rows.  Nodes whose ONLY
-    # pair was a self-loop (a, a) were dropped by the u != v edge
-    # filter up front; propagation emits them as singleton clusters,
-    # so the same-output contract restores them here.
-    stars = edges.filter(F.col("u") > F.col("v"))
-    roots = stars.select(F.col("v").alias("u"), F.col("v")).distinct()
-    self_loops = (
-        pairs.filter(F.col("a_id") == F.col("b_id"))
-        .select(F.col("a_id").alias("u"), F.col("a_id").alias("v"))
-        .distinct()
-    )
-    return (
-        stars.unionByName(roots)
-        .unionByName(self_loops)
-        .groupBy("u")
-        .agg(F.min("v").alias("cluster_id"))
-        .select(F.col("u").alias("id"), "cluster_id")
-    )
 
 
 def simhash64(

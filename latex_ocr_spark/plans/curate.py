@@ -45,8 +45,13 @@ two dominant costs.
 The funnel (docs in/out per stage) remains the curation run's primary
 observability artifact — a stage that silently drops 90% of a corpus
 should be visible in one table, not discovered downstream.  Collecting
-it costs one action over the final frame (the pipeline's only full
-pass besides the cluster loop's internal materializations).
+it costs one action over the final frame.  Before it, the near-dup
+stage's clustering materializes the verified pairs once (one action
+that runs the corpus profile, LSH and verify, and with them the early
+stage counts); below its pair-count gate the labels then come from one
+task of the final action.  The merged
+cluster table (``CurationResult.clusters``) costs its own corpus pass,
+paid only by a caller that reads it.
 """
 
 from __future__ import annotations
@@ -70,7 +75,9 @@ class CurationResult:
     ``funnel``   — [(stage, docs_in, docs_out), …] in execution order;
     ``contamination_report`` — (corpus_id, eval_id, jaccard), empty
     frame when no eval set was given;
-    ``clusters`` — (id, cluster_id) duplicate clusters found.
+    ``clusters`` — (id, cluster_id) duplicate clusters found: the
+    merged near + exact table, built lazily by the in-memory runner (it
+    costs a corpus pass, paid only when read).
     """
 
     documents: DataFrame
@@ -215,7 +222,7 @@ def _near_pairs(
     groupBy.  Per-doc signatures are unaffected by dropping other
     documents, so the filtered reuse is exact.  One cache layer, not
     two (arrays + signatures): stacked caches raced their builds inside
-    the cluster loop's first action and re-ran the corpus tokenize +
+    the clustering's first action and re-ran the corpus tokenize +
     hash family once per layer.
 
     'lsh' verifies band candidates against the profile's arrays;
@@ -260,7 +267,14 @@ def _merge_clusters(
     leakage the cluster-safe split exists to prevent).  Exact members
     resolve THROUGH their canonical's near-dup cluster when one exists
     (A≡B exact, A≈C near → B's cluster is C's cluster id); each id
-    keeps its minimum cluster id."""
+    keeps its minimum cluster id.
+
+    Every near-dup survivor is its own cluster canonical: it has no
+    near row, or ``cluster_id == id``, and its merged id is its own id
+    too.  So the split reads the same key from either table, and the
+    in-memory runner splits by ``near`` and leaves ``merged`` lazy —
+    its corpus pass (scan + gate + md5 + union) is paid only by a
+    caller that reads ``CurationResult.clusters``."""
     near = D.duplicate_clusters(pairs)
     exact_members = (
         gated.select(F.col(id_col).alias("id"), F.md5(F.col(text_col)).alias("text_hash"))
@@ -341,7 +355,13 @@ def _sample_and_split(
     cluster-safe split: near-dups hash by their cluster canonical, so
     re-adding a dropped near-dup later can never land it on the other
     side.  ``watch`` wraps the sampled frame (the in-memory runner's
-    stage count)."""
+    stage count).
+
+    ``clusters`` may be the near-only or the merged table: every
+    survivor is its own canonical in both (see :func:`_merge_clusters`),
+    so ``coalesce(cluster_id, id)`` is the survivor's own id either way.
+    The in-memory runner passes ``near``; the checkpoint runner passes
+    its ``clusters`` artifact, already on disk."""
     if sample_fraction is not None:
         cur = watch("sample", TS.deterministic_sample(
             cur, fraction=sample_fraction, id_col=id_col, seed=seed + ":sample"
@@ -540,7 +560,7 @@ def curate_corpus(
         report, cur = _decontaminate(cur, evalset, non_canonical, corpus_frame, **sim)
         cur = watch("decontaminate", cur)
     out = _sample_and_split(
-        cur, clusters, sample_fraction=sample_fraction,
+        cur, near, sample_fraction=sample_fraction,
         val_fraction=val_fraction, seed=seed, id_col=id_col,
         assume_small_side_frames=assume_small_side_frames, watch=watch,
     )
@@ -560,8 +580,8 @@ def curate_corpus(
     if collect_funnel:
         # the funnel's single action: materializes the whole pipeline
         # once and resolves every pending observation (the early ones
-        # were already captured by the cluster loop's internal
-        # materializations, whose lineage runs through the same
+        # were already captured by the clustering's pair
+        # materialization, whose lineage runs through the same
         # observed spine)
         funnel = _build_funnel(out.count())
         resolver = None

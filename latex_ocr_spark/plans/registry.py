@@ -952,24 +952,15 @@ def _planted_docs(spark, sf):
 )
 def dedup_clusters(spark, sf):
     """Duplicate-cluster assignment: connected components over the
-    capped-Jaccard near-dup pairs via iterative min-label propagation
-    (operators/dedup.duplicate_clusters — one shuffle per round,
-    localCheckpoint-bounded lineage).  The DuckDB oracle computes the
+    capped-Jaccard near-dup pairs (operators/dedup.duplicate_clusters —
+    a one-task union-find below its pair-count gate, iterative
+    min-label propagation above it).  The DuckDB oracle computes the
     same components with a recursive CTE — completely different
     algorithm, same fixpoint, which is exactly what an oracle should
     be.  Pairs come from the planted-copy capped-Jaccard query, so the
     component set is nonempty at every scale."""
     pairs = D.jaccard_pairs(_planted_docs(spark, sf), threshold=0.3, ngram=1, max_df=50)
     return D.duplicate_clusters(pairs)
-
-
-# duplicate_clusters_star (alternating large-star/small-star, Kiveris
-# et al. SoCC'14 — O(log² n) rounds vs propagation's diameter rounds on
-# chain-shaped components) deliberately has NO registry slot: the
-# driver verifies only the first 50 queries (tests/test_registry_window
-# .py).  Its oracle is transitive instead: tests/test_dedup.py pins
-# star ≡ propagation on THIS query's own pair input at sf0.001, and the
-# propagation result above is driver-hash-green vs the recursive CTE.
 
 
 @register(

@@ -293,8 +293,8 @@ def _curate_resumable_impl(
             pairs, gated, groups, id_col=id_col, text_col=text_col
         )
         # near-only non-canonical count: the docs the near-dup stage
-        # drops from the spine (cheap — the loop already materialized
-        # this frame via localCheckpoint)
+        # drops from the spine (cheap — the clustering already
+        # materialized its pairs via localCheckpoint)
         n_non_canonical = near.filter(F.col("id") != F.col("cluster_id")).count()
         merged.write.mode("overwrite").parquet(path)
         return -1, {"n_non_canonical": n_non_canonical}

@@ -111,6 +111,36 @@ def test_curation_split_matches_cluster_safe_semantics(spark):
     cachepool.release()
 
 
+def test_split_by_near_clusters_equals_split_by_merged_table(spark):
+    """The in-memory runner splits by the near-dup clusters, not the
+    merged table: every survivor is its own canonical in both, so the
+    split is row-for-row the one the merged table gives.  A ≡ B exact,
+    A ≈ C near and C < A, so B resolves through A to C's cluster — and
+    the merged table still holds the exact member B."""
+    from latex_ocr_spark.operators.textstats import cluster_safe_split
+
+    a = "ka kb kc kd ke kf kg kh"
+    rows = [(i, f"ua{i} ub{i*3} uc{i*7} ud{i*11} ue{i*13} uf{i*17}")
+            for i in range(20, 40)]
+    rows += [(5, a.replace("kh", "zh")), (10, a), (11, a)]  # C, A, B
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    res = curate_corpus(docs, min_tokens=5, dedup_threshold=0.5,
+                        near_dup_method="jaccard", ngram=1, val_fraction=0.5)
+    got = sorted(tuple(r) for r in res.documents.collect())
+    want = sorted(
+        tuple(r)
+        for r in cluster_safe_split(
+            res.documents.drop("split"), res.clusters, val_fraction=0.5
+        ).collect()
+    )
+    assert got == want
+    assert {r[2] for r in got} == {"train", "val"}  # non-vacuous
+    assert [r[0] for r in got if r[0] < 20] == [5]
+    cl = {r.id: r.cluster_id for r in res.clusters.collect()}
+    assert cl == {5: 5, 10: 5, 11: 5}
+    cachepool.release()
+
+
 def test_curation_optional_redact_and_sample_stages(spark):
     docs = spark.range(200).selectExpr(
         "id AS doc_id",

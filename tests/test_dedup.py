@@ -120,13 +120,16 @@ def test_lsh_bucket_cap_bounds_degenerate_keys(spark):
     assert all(a >= 100 for a, _ in capped)  # monster bucket dropped
 
 
-def test_duplicate_clusters_long_chain_near_max_iter(spark):
+def test_duplicate_clusters_long_chain_near_max_iter(spark, monkeypatch):
     """A path-shaped component (worst case for min-label propagation:
     the min label travels ONE hop per round) sized near the default
     max_iter must still converge — proving the guard triggers on real
     non-convergence, not on realistic diameters.  Cost model: rounds =
     diameter + 1 confirming round, one shuffle each."""
+    from latex_ocr_spark.operators import dedup as D
     from latex_ocr_spark.operators.dedup import duplicate_clusters
+
+    monkeypatch.setattr(D, "_UNION_FIND_MAX_PAIRS", 0)  # the loop path
 
     k = 22  # diameter 21 + 1 confirming round < max_iter=25
     pairs = spark.createDataFrame(
@@ -136,13 +139,16 @@ def test_duplicate_clusters_long_chain_near_max_iter(spark):
     assert got == {i: 1 for i in range(1, k + 1)}
 
 
-def test_duplicate_clusters_raises_on_non_convergence(spark):
+def test_duplicate_clusters_raises_on_non_convergence(spark, monkeypatch):
     """When a component's diameter exceeds max_iter the operator must
     RAISE, never return a silently split component (a partial result
     keeps several 'canonical' copies of one duplicate group)."""
     import pytest
 
+    from latex_ocr_spark.operators import dedup as D
     from latex_ocr_spark.operators.dedup import duplicate_clusters
+
+    monkeypatch.setattr(D, "_UNION_FIND_MAX_PAIRS", 0)  # the loop path
 
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 12)], "a_id long, b_id long"
@@ -151,13 +157,16 @@ def test_duplicate_clusters_raises_on_non_convergence(spark):
         duplicate_clusters(pairs, max_iter=3)
 
 
-def test_duplicate_clusters_rejects_max_iter_below_one(spark):
+def test_duplicate_clusters_rejects_max_iter_below_one(spark, monkeypatch):
     """The first propagation round is fused with label initialization
     and always runs, so a bound below one round cannot be honoured: it
     is refused up front instead of silently running one round."""
     import pytest
 
+    from latex_ocr_spark.operators import dedup as D
     from latex_ocr_spark.operators.dedup import duplicate_clusters
+
+    monkeypatch.setattr(D, "_UNION_FIND_MAX_PAIRS", 0)  # the loop path
 
     pairs = spark.createDataFrame([(1, 2), (2, 3)], "a_id long, b_id long")
     for bad in (0, -1):
@@ -263,98 +272,91 @@ def test_shingle_amplification_guard(spark):
     assert _with_min_parallelism(wide) is wide  # strict no-op
 
 
-def test_star_clusters_match_propagation_on_mixed_topologies(spark):
-    """large-star/small-star contraction must produce the identical
-    (id, cluster_id) table as min-label propagation — two fixpoint
-    algorithms, one answer — on chains, cliques, pairs, and a random
-    pair soup."""
+def _clusters(pairs, **kw):
+    from latex_ocr_spark.operators.dedup import duplicate_clusters
+
+    return sorted(tuple(r) for r in duplicate_clusters(pairs, **kw).collect())
+
+
+def test_union_find_matches_label_loop(spark, sf_small, monkeypatch):
+    """Both sides of the clustering gate give the same (id, cluster_id)
+    table: chains, cliques, a star, a self-loop pair, a random pair
+    soup, string ids (kept at their own type), and the pair input of
+    the ``dedup_clusters`` registry query, whose gated result is
+    checked against its recursive-CTE oracle — so the loop path
+    inherits that oracle."""
     import random
 
-    from latex_ocr_spark.operators.dedup import (
-        duplicate_clusters,
-        duplicate_clusters_star,
-    )
+    from latex_ocr_spark import cachepool
+    from latex_ocr_spark.operators import dedup as D
+    from latex_ocr_spark.plans.registry import _planted_docs
 
     fixed = [
-        (1, 2), (2, 3), (3, 4), (4, 5),
-        (10, 11), (10, 12), (11, 12),
+        (1, 2), (2, 3), (3, 4), (4, 5),       # chain
+        (10, 11), (10, 12), (11, 12),         # clique
+        (32, 30), (32, 31), (33, 32), (34, 32),  # star, hub not the min
+        (7, 7),                               # self-loop pair
         (20, 21),
     ]
     rng = random.Random(7)
     soup = [(rng.randrange(100, 160), rng.randrange(100, 160)) for _ in range(80)]
-    soup = [(a, b) for a, b in soup if a != b]
-    pairs = spark.createDataFrame(fixed + soup, "a_id long, b_id long")
+    long_pairs = spark.createDataFrame(fixed + soup, "a_id long, b_id long")
+    str_pairs = spark.createDataFrame(
+        [(f"d-{a:03d}", f"d-{b:03d}") for a, b in fixed], "a_id string, b_id string"
+    )
+    registry_pairs = D.jaccard_pairs(
+        _planted_docs(spark, sf_small), threshold=0.3, ngram=1, max_df=50
+    )
+    inputs = (long_pairs, str_pairs, registry_pairs)
+    gated = [_clusters(p) for p in inputs]
+    str_schema = D.duplicate_clusters(str_pairs).schema
+    monkeypatch.setattr(D, "_UNION_FIND_MAX_PAIRS", 0)
+    looped = [_clusters(p) for p in inputs]
+    cachepool.release()
+    assert gated == looped and gated[2]
+    got = dict(gated[0])
+    assert got[7] == 7 and got[5] == 1 and got[34] == 30 and got[12] == 10
+    assert dict(gated[1])["d-034"] == "d-030"
+    assert {f.dataType.typeName() for f in str_schema} == {"string"}
 
-    prop = {r.id: r.cluster_id for r in duplicate_clusters(pairs).collect()}
-    star = {r.id: r.cluster_id for r in duplicate_clusters_star(pairs).collect()}
-    assert star == prop
 
-
-def test_star_clusters_bound_rounds_on_adversarial_chain(spark):
-    """THE topology star contraction exists for: a 64-link chain
-    (diameter 63) — min-label propagation would need 64 rounds and
-    raises at its default 25-round cap; star contraction closes it
-    within 10 alternating rounds."""
+def test_union_find_closes_chains_longer_than_max_iter(spark, monkeypatch):
+    """Under the gate any component shape converges: a 64-link chain
+    (diameter 63) closes, while the forced label loop still raises at
+    its default 25-round cap."""
     import pytest
 
-    from latex_ocr_spark.operators.dedup import (
-        duplicate_clusters,
-        duplicate_clusters_star,
-    )
+    from latex_ocr_spark.operators import dedup as D
 
     k = 64
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(1, k)], "a_id long, b_id long"
     )
+    assert _clusters(pairs) == [(i, 1) for i in range(1, k + 1)]
+    monkeypatch.setattr(D, "_UNION_FIND_MAX_PAIRS", 0)
     with pytest.raises(RuntimeError, match="did not converge"):
-        duplicate_clusters(pairs)  # default max_iter=25 < diameter
-
-    got = {
-        r.id: r.cluster_id
-        for r in duplicate_clusters_star(pairs, max_iter=10).collect()
-    }
-    assert got == {i: 1 for i in range(1, k + 1)}
+        D.duplicate_clusters(pairs)
 
 
-def test_star_clusters_match_propagation_on_registry_pairs(spark, sf_small):
-    """Oracle by transitivity: on the SAME pair input the driver's
-    ``dedup_clusters`` query uses (planted-copy capped Jaccard at
-    sf0.001), star contraction must equal min-label propagation — and
-    propagation is driver-hash-green against the recursive-CTE oracle,
-    so star inherits the oracle without spending a slot of the
-    50-query driver window."""
-    from latex_ocr_spark import cachepool
-    from latex_ocr_spark.operators.dedup import (
-        duplicate_clusters,
-        duplicate_clusters_star,
-        jaccard_pairs,
-    )
-    from latex_ocr_spark.plans.registry import _planted_docs
+def test_union_find_clustering_runs_at_most_three_jobs(spark, tmp_path):
+    """Under the gate, clustering a pair table and writing the labels
+    costs at most three Spark jobs, counted from the status store as
+    the benchmark's trace counts them (the label loop spent one job per
+    round, 11 on the benchmark's pairs)."""
+    from latex_ocr_spark.operators.dedup import duplicate_clusters
+    from perfbench.statusstore import StatusReader
 
-    pairs = jaccard_pairs(
-        _planted_docs(spark, sf_small), threshold=0.3, ngram=1, max_df=50
-    )
-    prop = {r.id: r.cluster_id for r in duplicate_clusters(pairs).collect()}
-    star = {r.id: r.cluster_id for r in duplicate_clusters_star(pairs).collect()}
-    assert star == prop and star
-    cachepool.release()
-
-
-def test_star_clusters_keep_self_loop_singletons(spark):
-    """Same-output contract edge case (round-5 review): a pairs frame
-    containing a self-loop (a, a) yields the singleton cluster (a, a)
-    from propagation — star contraction must emit it too."""
-    from latex_ocr_spark.operators.dedup import (
-        duplicate_clusters,
-        duplicate_clusters_star,
-    )
-
-    pairs = spark.createDataFrame(
-        [(7, 7), (1, 2)], "a_id long, b_id long"
-    )
-    prop = {r.id: r.cluster_id for r in duplicate_clusters(pairs).collect()}
-    star = {r.id: r.cluster_id for r in duplicate_clusters_star(pairs).collect()}
-    assert star == prop == {7: 7, 1: 1, 2: 1}
+    path = str(tmp_path / "pairs")
+    spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 6)] + [(100, 101), (100, 102)],
+        "a_id long, b_id long",
+    ).write.parquet(path)
+    reader = StatusReader(spark)
+    mark = reader.marker()
+    duplicate_clusters(spark.read.parquet(path)).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    assert reader.since(mark)["jobs"] <= 3
 
 
 def _jvm_minhash_reference(arrs, k, include_size, include_shingles):
@@ -480,3 +482,38 @@ def test_profile_memo_is_bounded_by_key_bytes_and_one_family(monkeypatch):
         assert list(memo) == [k]  # one family resident
         assert set(memo[k]) == {s for s in shingles if long_tok not in s}
         assert len(memo[k]) == 4 and all(len(v) == 16 * k for v in memo[k].values())
+
+
+def test_profile_kernel_falls_back_to_hashlib_without_builtin_md5(monkeypatch):
+    """An interpreter built without the ``_md5`` module hashes with
+    ``hashlib.md5``: shingles and signatures equal the ``_md5`` path's
+    and the md5 definition (min md5(shingle ‖ '#i') as hex)."""
+    import hashlib
+
+    import pyarrow as pa
+
+    from latex_ocr_spark.operators import dedup as D
+
+    texts = ["a b c d e f", "x y z x y z w", "é café münchen töken four"]
+    rb = pa.RecordBatch.from_arrays(
+        [pa.array([1, 2, 3], type=pa.int64()), pa.array(texts)],
+        names=["id", "__text"],
+    )
+
+    def run():
+        monkeypatch.setattr(D, "_PROFILE_MEMO", {})  # hash every shingle
+        return next(D._profile_kernel(8, 3, True, True)([rb])).to_pydict()
+
+    builtin = run()
+    with monkeypatch.context() as m:
+        m.setitem(sys.modules, "_md5", None)
+        fallback = run()
+    assert fallback == builtin
+    for row, text in enumerate(texts):
+        toks = text.split()
+        sh = list(dict.fromkeys(" ".join(toks[j : j + 3]) for j in range(len(toks) - 2)))
+        assert builtin["shingles"][row] == sh
+        assert [builtin[f"sig_{i}"][row] for i in range(8)] == [
+            min(hashlib.md5(f"{s}#{i}".encode()).hexdigest() for s in sh)
+            for i in range(8)
+        ]
