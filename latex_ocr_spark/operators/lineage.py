@@ -7,11 +7,12 @@ outputs; arxiv.py:126-130 keeps a visited file) into Spark-native form:
 - work is split into ``n_units`` deterministic units
   (``work_key = pmod(hash(conv_id), n_units)`` — whole conversations
   never straddle units, so per-conv ordering is local to one unit);
-- the output table is partitioned by ``work_key`` and written with
-  dynamic partition overwrite → re-running a unit is idempotent;
-- after each unit batch commits, a lineage row (rows/spans/failures/
-  wall time/order-independent checksum) is appended;
-- resume = anti-join of the input's work keys against completed
+- the output table is partitioned by ``work_key`` (one file per unit)
+  and written with dynamic partition overwrite → re-running a unit is
+  idempotent;
+- after each unit batch commits, a lineage row (turns with ≥ 1 span,
+  spans, failed turns, wall time, order-independent checksum) is appended;
+- resume = filter of the input by the collected set of completed
   lineage keys (SURVEY.md §2.1 S8, §2.3 J3) — only missing units run.
 
 Crash safety: output commits before lineage; a crash in between makes
@@ -53,25 +54,25 @@ def completed_units(spark: SparkSession, lineage_path: str) -> DataFrame:
         # and append a second lineage row for each
         if e.getCondition() not in _NO_LINEAGE_YET:
             raise
-        return spark.createDataFrame([], "work_key int")
+        return spark.range(0).select(F.col("id").cast("int").alias("work_key"))
 
 
 def pending_work(
     transcripts: DataFrame, spark: SparkSession, lineage_path: str, n_units: int = DEFAULT_UNITS
 ) -> DataFrame:
     keyed = with_work_key(transcripts, n_units)
-    done = completed_units(spark, lineage_path)
-    return keyed.join(F.broadcast(done), "work_key", "left_anti")
+    done = [r.work_key for r in completed_units(spark, lineage_path).collect()]
+    return keyed.filter(~F.col("work_key").isin(done)) if done else keyed
 
 
-def _unit_checksum():
-    """Order-independent content checksum per unit: XOR of row hashes.
-
-    Survives any partitioning/ordering; two runs of the same unit match
-    iff their row multisets match (xxhash64 collisions aside)."""
-    return F.expr(
-        "bit_xor(xxhash64(concat_ws('', conv_id, turn_idx, span_idx, raw_match, latex_norm)))"
-    )
+def _unit_checksum(rows: str):
+    """Order-independent content checksum per unit: XOR of the hashes of
+    the rows matching the SQL predicate ``rows`` (the others hash to
+    NULL, which ``bit_xor`` skips).  Survives any partitioning/ordering;
+    two runs of the same unit match iff their row multisets match
+    (xxhash64 collisions aside)."""
+    return F.expr(f"bit_xor(CASE WHEN {rows} THEN xxhash64(concat_ws("
+                  "'', conv_id, turn_idx, span_idx, raw_match, latex_norm)) END)")
 
 
 def run_resumable_extract(
@@ -86,6 +87,10 @@ def run_resumable_extract(
     units were (re)processed.  ``fail_on_units`` injects a crash after
     the output commit of the listed units — test hook for the
     crash-between-commits window.
+
+    Only the extraction UDF runs in Python.  The spans are written one
+    file per unit; the lineage rows come from one aggregation over the
+    cached extraction frame, with ``n_turns`` = turns with ≥ 1 span.
 
     Single-writer: holds a lease on the lineage dir for the run — two
     concurrent extract jobs would compute the same pending set, race
@@ -122,6 +127,7 @@ def _run_resumable_extract_locked(
     n_units: int,
     fail_on_units: Optional[set],
 ) -> int:
+    from latex_ocr_spark.functions.udfs import FAILED_TURN_SPAN_IDX
     from latex_ocr_spark.operators.extract import extract_spans_with_failures
 
     pending = pending_work(transcripts, spark, lineage_path, n_units)
@@ -136,38 +142,32 @@ def _run_resumable_extract_locked(
     started = time.time()
     raw_handle = None
     try:
-        spans, failed, raw_handle = extract_spans_with_failures(
+        spans, _, raw_handle = extract_spans_with_failures(
             pending.select("conv_id", "turn_idx", "text"), persist_raw=True
         )
-        spans = with_work_key(spans, n_units)
-        failed = with_work_key(failed, n_units)
 
         # 1. output commit — dynamic overwrite touches only pending units'
-        # directories (completed units' data is never rewritten)
-        spans.write.mode("overwrite").partitionBy("work_key").parquet(output_path)
+        # directories (never rewrites completed ones), one file per unit
+        out = with_work_key(spans, n_units).repartition("work_key")
+        out.write.mode("overwrite").partitionBy("work_key").parquet(output_path)
 
         if fail_on_units and set(unit_rows) & set(fail_on_units):
             raise RuntimeError("injected crash between output and lineage commit")
 
-        # 2. lineage commit (append) — marks the units done
-        metrics = (
-            spans.groupBy("work_key")
-            .agg(
-                F.countDistinct("conv_id", "turn_idx").alias("n_turns"),
-                F.count(F.lit(1)).alias("n_spans"),
-                _unit_checksum().alias("checksum"),
-            )
-            .join(
-                failed.groupBy("work_key").agg(F.count(F.lit(1)).alias("n_failed")),
-                "work_key",
-                "left",
-            )
-            .na.fill({"n_failed": 0})
+        # 2. lineage commit (append) — marks the units done.  Spans are
+        # numbered densely from 0: a turn has span 0 iff it has >= 1 span
+        span_row = f"span_idx != {FAILED_TURN_SPAN_IDX}"
+        metrics = with_work_key(raw_handle, n_units).groupBy("work_key").agg(
+            F.count_if(F.col("span_idx") == 0).alias("n_turns"),
+            F.count_if(F.expr(span_row)).alias("n_spans"),
+            _unit_checksum(span_row).alias("checksum"),
+            F.count_if(F.col("span_idx") == FAILED_TURN_SPAN_IDX).alias("n_failed"),
         )
-        # units whose every turn yielded zero spans still need a lineage row
-        all_pending = pending.select("work_key").distinct()
+        # every pending unit gets a lineage row (zeros when it yielded no rows)
+        units = spark.range(n_units).filter(F.col("id").isin(unit_rows))
         metrics = (
-            all_pending.join(metrics, "work_key", "left")
+            units.select(F.col("id").cast("int").alias("work_key"))
+            .join(metrics, "work_key", "left")
             .na.fill({"n_turns": 0, "n_spans": 0, "n_failed": 0, "checksum": 0})
             .withColumn("started", F.lit(int(started)).cast("long"))
             .withColumn("finished", F.lit(int(time.time())).cast("long"))

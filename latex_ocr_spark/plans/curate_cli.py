@@ -187,7 +187,7 @@ def write_funnel(spark: SparkSession, res: CurationResult, output: str) -> None:
         )
     # write through Spark so object-store outputs (s3://…) work — a
     # driver-local open() would silently strand the funnel on the node
-    spark.createDataFrame([(json.dumps(funnel),)], "funnel string").coalesce(
+    spark.range(1).select(F.lit(json.dumps(funnel)).alias("funnel")).coalesce(
         1
     ).write.mode("overwrite").text(f"{output}/funnel")
     print(json.dumps(funnel))

@@ -132,9 +132,11 @@ def _commit(
     meta: dict,
     started: int,
 ) -> None:
-    spark.createDataFrame(
-        [(stage, cfg, n_rows, json.dumps(meta), started, int(time.time()))],
-        _LINEAGE_SCHEMA,
+    # one JVM row: a createDataFrame would start a Python worker pool
+    values = (stage, cfg, n_rows, json.dumps(meta), started, int(time.time()))
+    fields = (f.split() for f in _LINEAGE_SCHEMA.split(", "))
+    spark.range(1).select(
+        *(F.lit(v).cast(t).alias(c) for v, (c, t) in zip(values, fields))
     ).write.mode("append").parquet(lineage_path)
 
 

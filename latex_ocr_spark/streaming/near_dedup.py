@@ -254,7 +254,7 @@ def _start_near_dedup_stream_fenced(
     except AnalysisException as e:
         if not ("PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e)):
             raise
-        spark.createDataFrame([(cfg,)], "cfg string").coalesce(1).write.mode(
+        spark.range(1).select(F.lit(cfg).alias("cfg")).coalesce(1).write.mode(
             "overwrite"
         ).text(meta_path)
 
