@@ -6,50 +6,58 @@ users can run extraction without the DataFrame API:
     SELECT conv_id, turn_idx, posexplode(extract_math(text))
     FROM transcripts
 
-All functions are Arrow-vectorized pandas UDFs (never row-at-a-time);
-the heavy per-row logic stays in the parity-tested textkernel.
+All functions are Arrow UDFs (never row-at-a-time) whose outputs are
+built from buffers (:mod:`latex_ocr_spark.functions.arrowcols`), so the
+Python workers never import pandas; the heavy per-row logic stays in
+the parity-tested textkernel.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 
-@pandas_udf(T.ArrayType(T.StringType()))
-def _extract_math(texts: pd.Series) -> pd.Series:
+def _span_lists(texts: pa.Array, field: str) -> pa.Array:
+    from latex_ocr_spark.functions.arrowcols import string_lists
     from latex_ocr_spark.textkernel.pipeline import extract_turn
 
-    return texts.map(
-        lambda t: [s.raw_match for s in extract_turn(t)] if t is not None else []
+    return string_lists(
+        [[getattr(s, field) for s in extract_turn(t)] if t is not None else []
+         for t in texts.to_pylist()]
     )
 
 
-@pandas_udf(T.ArrayType(T.StringType()))
-def _extract_math_normalized(texts: pd.Series) -> pd.Series:
-    from latex_ocr_spark.textkernel.pipeline import extract_turn
+def _map_strings(fn, formulas: pa.Array) -> pa.Array:
+    from latex_ocr_spark.functions.arrowcols import strings
 
-    return texts.map(
-        lambda t: [s.latex_norm for s in extract_turn(t)] if t is not None else []
-    )
+    return strings([fn(s) if s is not None else None for s in formulas.to_pylist()])
 
 
-@pandas_udf(T.StringType())
-def _post_process(formulas: pd.Series) -> pd.Series:
+@arrow_udf(T.ArrayType(T.StringType()))
+def _extract_math(texts: pa.Array) -> pa.Array:
+    return _span_lists(texts, "raw_match")
+
+
+@arrow_udf(T.ArrayType(T.StringType()))
+def _extract_math_normalized(texts: pa.Array) -> pa.Array:
+    return _span_lists(texts, "latex_norm")
+
+
+@arrow_udf(T.StringType())
+def _post_process(formulas: pa.Array) -> pa.Array:
     from latex_ocr_spark.textkernel.normalize import post_process
 
-    return formulas.map(lambda s: post_process(s) if s is not None else None)
+    return _map_strings(post_process, formulas)
 
 
-@pandas_udf(T.StringType())
-def _katex_normalize(formulas: pd.Series) -> pd.Series:
+@arrow_udf(T.StringType())
+def _katex_normalize(formulas: pa.Array) -> pa.Array:
     from latex_ocr_spark.textkernel.normalize import normalize_formula_katex
 
-    return formulas.map(
-        lambda s: normalize_formula_katex(s) if s is not None else None
-    )
+    return _map_strings(normalize_formula_katex, formulas)
 
 
 def _make_bpe_encode(spark: SparkSession):
@@ -63,12 +71,11 @@ def _make_bpe_encode(spark: SparkSession):
         spec = fh.read()
     bc = spark.sparkContext.broadcast(spec)
 
-    @pandas_udf(T.ArrayType(T.IntegerType()))
-    def _bpe_encode(formulas: pd.Series) -> pd.Series:
-        from latex_ocr_spark.operators.tokenize import _rebuild
+    @arrow_udf(T.ArrayType(T.IntegerType()))
+    def _bpe_encode(formulas: pa.Array) -> pa.Array:
+        from latex_ocr_spark.operators.tokenize import _encode_column, _rebuild
 
-        tk = _rebuild(bc)
-        return formulas.map(lambda s: tk.encode(s) if s is not None else None)
+        return _encode_column(_rebuild(bc), formulas)
 
     return _bpe_encode
 

@@ -278,8 +278,14 @@ def _profile_kernel(
       copy/update/digest overhead, which dominates on inputs this
       short.  An interpreter built without ``_md5`` falls back to
       ``hashlib.md5``.
+
+    Output: ``id`` is a ``take`` of the input ids at the kept rows; the
+    shingle lists, ``sig_*`` hex strings and ``n_shingles`` are built
+    from buffers (:mod:`latex_ocr_spark.functions.arrowcols`), so the
+    worker never imports pandas.
     """
     import re as _re
+    from array import array
     from operator import itemgetter
 
     try:
@@ -288,6 +294,8 @@ def _profile_kernel(
         from hashlib import md5 as _md5
 
     import pyarrow as pa
+
+    from latex_ocr_spark.functions.arrowcols import ints, string_lists, strings
 
     ws = _re.compile(r"[ \t\n\x0b\f\r]+")
     suffixes = [f"#{i}".encode() for i in range(num_hashes)]
@@ -313,8 +321,8 @@ def _profile_kernel(
             memo = _PROFILE_MEMO[num_hashes] = {}
         for rb in batches:
             texts = rb.column("__text").to_pylist()
-            keep, shingle_sets, sigs = [], [], [[] for _ in range(num_hashes)]
-            sizes = []
+            keep, shingle_sets, sigs = array("i"), [], [[] for _ in range(num_hashes)]
+            sizes = array("q")
             for row_i, text in enumerate(texts):
                 if text is None:
                     continue
@@ -348,16 +356,16 @@ def _profile_kernel(
                     sizes.append(len(sh))
                 for i, slot in enumerate(slots):
                     sigs[i].append(min(map(slot, blobs)).hex())
-            cols = [rb.column("id").take(pa.array(keep, type=pa.int32()))]
+            cols = [rb.column("id").take(ints(keep))]
             names = ["id"]
             if include_shingles:
-                cols.append(pa.array(shingle_sets, type=pa.list_(pa.string())))
+                cols.append(string_lists(shingle_sets))
                 names.append("shingles")
             for i in range(num_hashes):
-                cols.append(pa.array(sigs[i], type=pa.string()))
+                cols.append(strings(sigs[i]))
                 names.append(f"sig_{i}")
             if include_size:
-                cols.append(pa.array(sizes, type=pa.int64()))
+                cols.append(ints(sizes))
                 names.append("n_shingles")
             yield pa.RecordBatch.from_arrays(cols, names=names)
 
@@ -655,10 +663,19 @@ def _union_find(batches):
     """mapInArrow body of the one-task clustering: a path-compressed
     union-find over every (src, dst) edge, the larger root always
     linked under the smaller, so each root is its component's minimum
-    id.  Emits (id, cluster_id) at the input's own Arrow id type."""
+    id.  Emits (id, cluster_id) as a ``take`` of the concatenated input
+    ``src``/``dst`` columns at each id's first occurrence, so the ids
+    keep their exact Arrow type and are never rebuilt from Python."""
+    from array import array
+
     import pyarrow as pa
 
+    from latex_ocr_spark.functions.arrowcols import ints
+
     parent: dict = {}
+    # the input columns in reading order, and each id's first position
+    # in their concatenation (parallel to ``parent``'s insertion order)
+    cols, pos, base = [], array("q"), 0
 
     def find(x):
         root = x
@@ -668,21 +685,28 @@ def _union_find(batches):
             parent[x], x = root, parent[x]
         return root
 
-    id_type = None
     for batch in batches:
-        id_type = batch.schema.field("src").type
-        src, dst = batch.column("src").to_pylist(), batch.column("dst").to_pylist()
-        for a, b in zip(src, dst):
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
+        src = batch.column("src")
+        dst = batch.column("dst").cast(src.type)  # the output's id type
+        cols += [src, dst]
+        n = len(src)
+        for i, (a, b) in enumerate(zip(src.to_pylist(), dst.to_pylist())):
+            if a not in parent:
+                parent[a] = a
+                pos.append(base + i)
+            if b not in parent:
+                parent[b] = b
+                pos.append(base + n + i)
             ra, rb = find(a), find(b)
             if ra != rb:
                 parent[max(ra, rb)] = min(ra, rb)
+        base += 2 * n
     if parent:
-        ids = list(parent)
-        labels = [find(x) for x in ids]
+        ids = pa.concat_arrays(cols)
+        root_pos = {x: p for x, p in zip(parent, pos) if parent[x] == x}
+        labels = array("q", (root_pos[find(x)] for x in parent))
         yield pa.RecordBatch.from_arrays(
-            [pa.array(ids, type=id_type), pa.array(labels, type=id_type)],
+            [ids.take(ints(pos)), ids.take(ints(labels))],
             names=["id", "cluster_id"],
         )
 
@@ -885,6 +909,8 @@ def simhash64(
         import numpy as np
         import pyarrow as pa
 
+        from latex_ocr_spark.functions.arrowcols import ints, numpy_values
+
         for rb in batches:
             if rb.num_rows == 0:
                 continue
@@ -893,9 +919,9 @@ def simhash64(
                 lst = lst.combine_chunks()
             # flatten() honours the array's slice offset; offsets are
             # re-based to the flattened values
-            offsets = np.asarray(lst.offsets)
+            offsets = numpy_values(lst.offsets, np.int32)
             offsets = (offsets - offsets[0]).astype(np.int64)
-            vals = np.asarray(lst.flatten(), dtype=np.int64)
+            vals = numpy_values(lst.flatten(), np.int64)
             # bit matrix: little-endian byte view → one column per bit
             bits = np.unpackbits(
                 vals.view(np.uint8).reshape(-1, 8), axis=1, bitorder="little"
@@ -907,7 +933,7 @@ def simhash64(
                 votes, axis=1, bitorder="little"
             ).view(np.int64).reshape(-1)
             yield pa.RecordBatch.from_arrays(
-                [rb.column("id"), pa.array(sims, type=pa.int64())],
+                [rb.column("id"), ints(sims)],
                 names=["id", "simhash"],
             )
 

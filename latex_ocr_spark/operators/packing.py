@@ -148,7 +148,11 @@ def pack_sequences(
     )
 
     def run(batches):
+        from array import array
+
         import pyarrow as pa
+
+        from latex_ocr_spark.functions.arrowcols import ints, strings
 
         # bin state spans the partition's Arrow batches: packs are
         # partition-scoped, batches are an Arrow transport detail
@@ -173,7 +177,9 @@ def pack_sequences(
                 if group_col is not None
                 else [None] * len(counts)
             )
-            pack_ids, offsets, errors = [], [], []
+            # a quarantined row is null in pack_id/pack_offset (0 held
+            # in the buffer, cleared in ``placed``)
+            pack_ids, offsets, placed, errors = array("q"), array("q"), [], []
             for tok, grp in zip(counts, groups):
                 bins = bins_by_group.get(grp)
                 if bins is None:
@@ -182,22 +188,25 @@ def pack_sequences(
                     # NULL upstream count (or a NaN double): the most
                     # common corrupt-count shape — quarantine, never
                     # fail the task
-                    pack_ids.append(None)
-                    offsets.append(None)
+                    pack_ids.append(0)
+                    offsets.append(0)
+                    placed.append(False)
                     errors.append("null token count")
                     continue
                 tok = int(tok)
                 if tok > budget:
-                    pack_ids.append(None)
-                    offsets.append(None)
+                    pack_ids.append(0)
+                    offsets.append(0)
+                    placed.append(False)
                     errors.append(f"row exceeds budget ({tok} > {budget})")
                     continue
                 if tok < 0:
                     # corrupt upstream count: quarantine, never fail
                     # the task (and never shrink a bin's usage, which
                     # is what the old linear scan silently did)
-                    pack_ids.append(None)
-                    offsets.append(None)
+                    pack_ids.append(0)
+                    offsets.append(0)
+                    placed.append(False)
                     errors.append(f"negative token count ({tok})")
                     continue
                 # first fit (input arrives sorted decreasing)
@@ -205,14 +214,11 @@ def pack_sequences(
                 local = pack_no.setdefault((grp, k), len(pack_no))
                 pack_ids.append((pid << 32) | local)
                 offsets.append(off)
+                placed.append(True)
                 errors.append(None)
             yield pa.RecordBatch.from_arrays(
                 rb.columns
-                + [
-                    pa.array(pack_ids, type=pa.int64()),
-                    pa.array(offsets, type=pa.int64()),
-                    pa.array(errors, type=pa.string()),
-                ],
+                + [ints(pack_ids, placed), ints(offsets, placed), strings(errors)],
                 names=rb.schema.names + ["pack_id", "pack_offset", "pack_error"],
             )
 

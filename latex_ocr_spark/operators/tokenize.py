@@ -8,7 +8,10 @@ Both column operators run inside ``mapInArrow``: every input column
 passes through as the same Arrow array, and only the text (or id)
 column is read into Python.  Encoded ids go straight into one flat
 ``array('i')`` per batch, 4 bytes per id, which the Arrow list column
-wraps without a copy.
+wraps without a copy; its null mask is the text column's own
+``is_null()``.  Decoded strings are built from buffers by
+:mod:`latex_ocr_spark.functions.arrowcols` — no ``pa.array`` on Python
+objects, which would import pandas into the worker.
 """
 
 from __future__ import annotations
@@ -43,6 +46,23 @@ def _rebuild(bc):
     return cache[key]
 
 
+def _encode_column(tk, col):
+    """``list<int32>`` BPE ids of a string column, null where it is null."""
+    from array import array
+
+    import pyarrow as pa
+
+    from latex_ocr_spark.functions.arrowcols import ints
+
+    values, offsets = array("i"), array("i", [0])
+    for s in col.to_pylist():
+        if s is not None:
+            values.extend(tk.encode(s))
+        offsets.append(len(values))
+    # zero-copy: both Arrow buffers wrap the array('i') memory
+    return pa.ListArray.from_arrays(ints(offsets), ints(values), mask=col.is_null())
+
+
 def _append_column(rb, name: str, arr):
     import pyarrow as pa
 
@@ -62,29 +82,9 @@ def with_tokens(
     )
 
     def run(batches):
-        from array import array
-
-        import pyarrow as pa
-
         tk = _rebuild(bc)
         for rb in batches:
-            values, offsets, nulls = array("i"), array("i", [0]), []
-            for s in rb.column(text_col).to_pylist():
-                nulls.append(s is None)
-                if s is not None:
-                    values.extend(tk.encode(s))
-                offsets.append(len(values))
-            # zero-copy: both Arrow buffers wrap the array('i') memory
-            ids = pa.Array.from_buffers(
-                pa.int32(), len(values), [None, pa.py_buffer(values)]
-            )
-            offs = pa.Array.from_buffers(
-                pa.int32(), len(offsets), [None, pa.py_buffer(offsets)]
-            )
-            tokens = pa.ListArray.from_arrays(
-                offs, ids, mask=pa.array(nulls, type=pa.bool_())
-            )
-            yield _append_column(rb, out_col, tokens)
+            yield _append_column(rb, out_col, _encode_column(tk, rb.column(text_col)))
 
     return df.mapInArrow(run, schema=schema)
 
@@ -100,7 +100,7 @@ def with_detokenized(
     )
 
     def run(batches):
-        import pyarrow as pa
+        from latex_ocr_spark.functions.arrowcols import strings
 
         tk = _rebuild(bc)
         for rb in batches:
@@ -108,7 +108,7 @@ def with_detokenized(
                 tk.decode(ids) if ids is not None else None
                 for ids in rb.column(tokens_col).to_pylist()
             ]
-            yield _append_column(rb, out_col, pa.array(decoded, type=pa.string()))
+            yield _append_column(rb, out_col, strings(decoded))
 
     return df.mapInArrow(run, schema=schema)
 
