@@ -11,9 +11,9 @@ from hypothesis import strategies as st
 
 from latex_ocr_spark.datagen.templates import ALL_TEMPLATE_GROUPS, render_template
 from latex_ocr_spark.textkernel import mathfind
-from ref_oracle import ref_extract_latex
+from ref_oracle import HAVE_REFERENCE, needs_reference, ref_extract_latex
 
-REF = ref_extract_latex()
+REF = ref_extract_latex() if HAVE_REFERENCE else None
 
 
 def corpus():
@@ -43,6 +43,7 @@ def corpus():
     return texts
 
 
+@needs_reference
 @pytest.mark.parametrize("wiki", [False, True])
 def test_find_math_matches_reference_on_corpus(wiki):
     for text in corpus():
@@ -51,6 +52,7 @@ def test_find_math_matches_reference_on_corpus(wiki):
         assert ours == theirs, f"mismatch on {text!r} (wiki={wiki})"
 
 
+@needs_reference
 @settings(max_examples=300, deadline=None)
 @given(
     st.text(

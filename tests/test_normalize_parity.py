@@ -16,9 +16,9 @@ from latex_ocr_spark.textkernel.normalize import (
     normalize_formula,
     post_process,
 )
-from ref_oracle import ref_post_process
+from ref_oracle import HAVE_REFERENCE, needs_reference, ref_post_process
 
-REF_PP = ref_post_process()
+REF_PP = ref_post_process() if HAVE_REFERENCE else None
 
 SAMPLES = [
     r"x ^ { 2 } + y _ { i }",
@@ -36,11 +36,13 @@ SAMPLES = [
 ]
 
 
+@needs_reference
 def test_post_process_matches_reference_on_samples():
     for s in SAMPLES:
         assert post_process(s) == REF_PP(s), repr(s)
 
 
+@needs_reference
 def test_post_process_matches_reference_on_extracted_spans():
     for group, templates in ALL_TEMPLATE_GROUPS.items():
         for i in range(len(templates)):
@@ -49,6 +51,7 @@ def test_post_process_matches_reference_on_extracted_spans():
                 assert post_process(m) == REF_PP(m), repr(m)
 
 
+@needs_reference
 @settings(max_examples=300, deadline=None)
 @given(st.text(alphabet="\\{}_^ abxyz01()+-,.*$ \tmathrmoperatorname", max_size=200))
 def test_post_process_fuzz(s):

@@ -20,9 +20,9 @@ from latex_ocr_spark.sources.archives import (
     paper_id_from_path,
     read_tex_payload,
 )
-from ref_oracle import ref_read_tex_files
+from ref_oracle import HAVE_REFERENCE, needs_reference, ref_read_tex_files
 
-REF_READ = ref_read_tex_files()
+REF_READ = ref_read_tex_files() if HAVE_REFERENCE else None
 
 
 def _targz(members: dict) -> bytes:
@@ -41,6 +41,7 @@ def _ref_read(tmp_path, blob: bytes, name="x.tar.gz") -> str:
     return REF_READ(str(p))
 
 
+@needs_reference
 def test_single_member_parity(tmp_path):
     tex = (
         "\\newcommand{\\vv}[1]{\\mathbf{#1}}\n\\begin{document}\n"
@@ -54,6 +55,7 @@ def test_single_member_parity(tmp_path):
     assert ours == _ref_read(tmp_path, blob)
 
 
+@needs_reference
 def test_undecodable_member_skipped(tmp_path):
     blob = _targz(
         {"ok.tex": b"$a+b$\n", "bad.tex": "caf\xe9".encode("latin-1")}
@@ -64,6 +66,7 @@ def test_undecodable_member_skipped(tmp_path):
     assert ours == _ref_read(tmp_path, blob)
 
 
+@needs_reference
 def test_not_a_tar_fallback(tmp_path):
     blob = b"$z^2$ plain tex payload\n"
     n, raw = read_tex_payload(blob)

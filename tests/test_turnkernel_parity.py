@@ -16,11 +16,17 @@ from latex_ocr_spark.datagen.templates import ALL_TEMPLATE_GROUPS, render_templa
 from latex_ocr_spark.datagen.transcripts import gen_transcripts
 from latex_ocr_spark.textkernel.htmlclean import classify_mode
 from latex_ocr_spark.textkernel.pipeline import extract_turn
-from ref_oracle import ref_demacro, ref_extract_latex, ref_post_process
+from ref_oracle import (
+    HAVE_REFERENCE,
+    needs_reference,
+    ref_demacro,
+    ref_extract_latex,
+    ref_post_process,
+)
 
-REF_E = ref_extract_latex()
-REF_D = ref_demacro()
-REF_PP = ref_post_process()
+REF_E = ref_extract_latex() if HAVE_REFERENCE else None
+REF_D = ref_demacro() if HAVE_REFERENCE else None
+REF_PP = ref_post_process() if HAVE_REFERENCE else None
 
 # the reference's script-strip regex, scraping.py:13 (inlined: that
 # module imports `requests` which this container lacks)
@@ -51,6 +57,7 @@ def assert_turn_matches(text: str):
     assert [s.span_idx for s in ours] == list(range(len(ours)))
 
 
+@needs_reference
 def test_templates_parity():
     for group, templates in ALL_TEMPLATE_GROUPS.items():
         for i in range(len(templates)):
@@ -58,6 +65,7 @@ def test_templates_parity():
                 assert_turn_matches(render_template(group, i, salt))
 
 
+@needs_reference
 def test_generated_transcripts_parity():
     for row in gen_transcripts(60):
         assert_turn_matches(row[3])
@@ -69,6 +77,7 @@ def test_generator_yields_spans():
     assert total > 100  # the fixture mix must actually produce spans
 
 
+@needs_reference
 @settings(max_examples=150, deadline=None)
 @given(st.text(alphabet="$\\{}()[]^_ \n<>&;abxyz12=\"newcomd%#", max_size=300))
 def test_fuzz_parity(text):
