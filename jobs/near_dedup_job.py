@@ -71,9 +71,6 @@ def main() -> int:
     ap.add_argument("--max-bytes-per-trigger",
                     help="micro-batch bound by bytes, e.g. '1g' "
                     "(soft cap; combines with --max-files-per-trigger)")
-    ap.add_argument("--broadcast-threshold-rows", type=int, default=500_000,
-                    help="batch-side broadcast hints are dropped (AQE "
-                    "decides) when a micro-batch exceeds this many docs")
     ap.add_argument("--synth", type=int,
                     help="write N synthetic documents into --input first")
     ap.add_argument("--cores", type=int,
@@ -116,13 +113,13 @@ def main() -> int:
         available_now=not args.continuous,
         max_files_per_trigger=args.max_files_per_trigger or None,
         max_bytes_per_trigger=args.max_bytes_per_trigger,
-        broadcast_threshold_rows=args.broadcast_threshold_rows,
     )
     q.awaitTermination()
 
     from pyspark.errors import AnalysisException
 
     from latex_ocr_spark.lease import is_uri_path
+    from latex_ocr_spark.session import is_missing_path
 
     try:
         accepted = read_stream_output(spark, args.output).count()
@@ -130,7 +127,7 @@ def main() -> int:
         # first invocation before any producer wrote input files: the
         # query processed zero batches and never created the output
         # dir — that is accepted == 0, not a crash
-        if not ("PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e)):
+        if not is_missing_path(e):
             raise
         accepted = 0
     print(json.dumps({
@@ -153,6 +150,7 @@ def _resolve_stream_knobs(spark, args, parser) -> dict:
     from pyspark.errors import AnalysisException
 
     from latex_ocr_spark.operators.advisor import survey_and_apply_lsh_knobs
+    from latex_ocr_spark.session import is_missing_path
 
     applied: dict = {}
 
@@ -205,7 +203,7 @@ def _resolve_stream_knobs(spark, args, parser) -> dict:
             ):
                 shutil.rmtree(meta_path)
     except AnalysisException as e:
-        if not ("PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e)):
+        if not is_missing_path(e):
             raise
 
     try:
@@ -213,9 +211,7 @@ def _resolve_stream_knobs(spark, args, parser) -> dict:
     except AnalysisException as e:
         # missing dir AND existing-but-empty dir (cron fired before
         # any producer) are both "no input yet"
-        if any(tag in str(e) for tag in (
-            "PATH_NOT_FOUND", "Path does not exist", "UNABLE_TO_INFER_SCHEMA"
-        )):
+        if is_missing_path(e, "UNABLE_TO_INFER_SCHEMA"):
             return {"_note": "no input yet, parser defaults kept"}
         raise
     rec, applied, maybe = survey_and_apply_lsh_knobs(

@@ -22,7 +22,7 @@ caches that evict later queries' working set (round-2 verdict #3).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from latex_ocr_spark import cachepool
@@ -524,6 +524,40 @@ def lsh_candidate_pairs(
     )
 
 
+#: the broadcast gate: a frame derived from a pair count is
+#: broadcast-hinted only while that count is below this.  Sized by
+#: the widest frame it admits, the verify join's pair + a-side shingle
+#: array intermediate (a_id, b_id, shingles, size).  Its UnsafeRow
+#: bytes, measured over the candidate pairs: 3.1 KB a row on average
+#: and 5.1 KB at most on the ``prepare`` corpus (3-gram shingles, 48 a
+#: document), 1.4 and 2.8 KB at sf0.1.  At ~4 KB a row, 2^15 rows are
+#: a ~128 MB broadcast: an eighth of the 1 GB ``spark.driver.maxResultSize``
+#: its collect must pass, held once built on the driver and on every
+#: executor.  The id frames it gates (dropped ids, cluster rows,
+#: contaminated ids) are ~24 bytes a row; the near-dup stream gates its
+#: batch on the batch's document count, and the widest batch frame (its
+#: profile as decontaminate's eval side) carries the same per-document
+#: shingle array.  A forced broadcast overrides Spark's own size
+#: checks, so above the gate every such hint drops and AQE decides
+#: from runtime sizes.
+_BROADCAST_ROW_LIMIT = 1 << 15
+
+
+def _is_small(n: int) -> bool:
+    """Whether a frame of ``n`` observed rows may be broadcast-hinted."""
+    return n < _BROADCAST_ROW_LIMIT
+
+
+def _materialize(df: DataFrame) -> tuple[DataFrame, int]:
+    """(``df`` materialized by ``localCheckpoint``, its row count): the
+    count is an observed metric of the same job, so the gates read a
+    size the run measured instead of one a caller declared, at the
+    cost of one job over a pair-sized frame."""
+    obs = Observation()
+    out = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
+    return out, int(obs.get["n"] or 0)
+
+
 def lsh_verified_pairs(
     docs: DataFrame,
     threshold: float = 0.5,
@@ -535,7 +569,6 @@ def lsh_verified_pairs(
     max_bucket_size: int | None = None,
     _arrs: DataFrame | None = None,
     _signatures: DataFrame | None = None,
-    assume_small_pairs: bool = True,
 ) -> DataFrame:
     """The production near-dup plan: LSH candidates → exact Jaccard
     re-check on candidates only.
@@ -562,6 +595,9 @@ def lsh_verified_pairs(
     Without either, ONE tracked profile serves both roles: two stacked
     caches used to race their builds inside a single action, each
     re-running the corpus scan + tokenize + md5 family.
+
+    The candidate list is materialized once (:func:`_materialize`, one
+    job) and its count gates both verify joins' broadcast hints.
     """
     arrs = (
         _arrs
@@ -574,24 +610,18 @@ def lsh_verified_pairs(
         )
     )
     sig = _signatures if _signatures is not None else arrs
-    cand = lsh_candidate_pairs(
+    cand, n_cand = _materialize(lsh_candidate_pairs(
         docs, num_hashes, band_size, text_col, id_col, ngram,
         max_bucket_size=max_bucket_size, _signatures=sig,
-    )
-    # the candidate list is collision-bounded (the premise of LSH) and
-    # the same order of magnitude as the pair/cluster frames the
-    # composed pipelines already treat as broadcast-small; hinting it
-    # (and the pair-sized intermediate of the first verify join) keeps
-    # BOTH verify joins' build sides candidate-bounded, so the corpus
-    # shingle arrays are never shuffled OR broadcast — without the
-    # second hint the planner picked the full array frame as the
-    # second join's build side, a corpus-sized broadcast (measured
-    # ~5.8 s build+collect at 50k docs, an OOM at real scale).
-    # ``assume_small_pairs=False`` drops the hints (a forced broadcast
-    # overrides Spark's size checks) and lets AQE decide.
-    return _jaccard_from_arrays(
-        cand, arrs, threshold, pairs_small=assume_small_pairs
-    )
+    ))
+    # under the gate, hinting the candidates (and the pair-sized
+    # intermediate of the first verify join) keeps BOTH verify joins'
+    # build sides candidate-bounded, so the corpus shingle arrays are
+    # never shuffled OR broadcast — without the second hint the planner
+    # picked the full array frame as the second join's build side, a
+    # corpus-sized broadcast (measured ~5.8 s build+collect at 50k
+    # docs, an OOM at real scale)
+    return _jaccard_from_arrays(cand, arrs, threshold, pairs_small=_is_small(n_cand))
 
 
 def _jaccard_from_arrays(
@@ -718,8 +748,8 @@ def duplicate_clusters(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     requires the component, and the canonical id is its minimum.
 
     The pairs (a pair with a NULL endpoint names no document and is
-    dropped) are materialized once by ``localCheckpoint``, and an
-    observed count rides that same job.  That count picks the path:
+    dropped) are materialized once (:func:`_materialize`), and the
+    count observed by that job picks the path (:func:`_components`):
 
     - at or below :data:`_UNION_FIND_MAX_PAIRS` (its comment gives the
       byte reasoning), ``coalesce(1).mapInArrow`` runs a path-compressed
@@ -751,19 +781,20 @@ def duplicate_clusters(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     initialization and always runs), so a smaller bound raises
     ``ValueError`` before any job, on either path.
     """
-    from pyspark.sql import Observation
-    from pyspark.sql import types as T
-
     if max_iter < 1:
         raise ValueError(f"max_iter must be >= 1 propagation round, got {max_iter}")
-    obs_n = Observation()
-    e = (
-        pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
-        .dropna()
-        .observe(obs_n, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
-    )
-    if int(obs_n.get["n"] or 0) <= _UNION_FIND_MAX_PAIRS:
+    return _components(*_materialize(pairs.select("a_id", "b_id").dropna()), max_iter)
+
+
+def _components(pairs: DataFrame, n_pairs: int, max_iter: int = 25) -> DataFrame:
+    """:func:`duplicate_clusters` over a pair frame that is already
+    materialized (a checkpoint or a stage artifact) and holds at most
+    ``n_pairs`` rows, so a composed run that counted its pairs anyway
+    clusters them without a second materialization."""
+    from pyspark.sql import types as T
+
+    e = pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst")).dropna()
+    if n_pairs <= _UNION_FIND_MAX_PAIRS:
         id_type = e.schema["src"].dataType
         return e.coalesce(1).mapInArrow(
             _union_find,
@@ -1015,7 +1046,6 @@ def decontaminate(
     max_bucket_size: int | None = None,
     _corpus_signatures: DataFrame | None = None,
     evalset_is_small: bool = True,
-    contaminated_is_small: bool = True,
     _corpus_arrs: DataFrame | None = None,
 ):
     """Benchmark decontamination: find (and enable dropping of) corpus
@@ -1045,7 +1075,10 @@ def decontaminate(
     True — benchmarks are) skips the eval-side amplification fan-out
     and broadcast-hints the eval-side probes; pass False when
     decontaminating against a corpus-sized held-out set so the guard
-    and join planner run normally.
+    and join planner run normally.  The cross candidates are
+    materialized once (:func:`_materialize`); their count gates the
+    first verify join's hint and the cleaning anti-join's, since every
+    contaminated id is a candidate's corpus side.
     """
     # ONE cached profile (arrays + signatures + size) per side: two
     # stacked caches would each re-run the scan + hash family for their
@@ -1068,21 +1101,20 @@ def decontaminate(
             parallel_hint=not evalset_is_small,
         )
     )
-    cand = cross_lsh_candidates(
+    cand, n_cand = _materialize(cross_lsh_candidates(
         corpus, evalset, num_hashes, band_size, ngram, text_col, id_col,
         max_bucket_size=max_bucket_size,
         _corpus_signatures=sig_c, _eval_signatures=prof_e,
         eval_is_small=evalset_is_small,
-    )
-    # candidates are bounded by cross-table band collisions — the
-    # same frame the contaminated-id set derives from, so the same
-    # smallness knob gates their broadcast into the first verify
-    # join (the second builds from the eval-side profile)
+    ))
+    small = _is_small(n_cand)
+    # the candidates go into the first verify join; the second builds
+    # from the eval-side profile
     report = cachepool.track(
         _jaccard_from_arrays(
             cand, arrs_c, threshold,
             arrs_b=F.broadcast(prof_e) if evalset_is_small else prof_e,
-            pairs_small=contaminated_is_small,
+            pairs_small=small,
         ).select(
             F.col("a_id").alias("corpus_id"),
             F.col("b_id").alias("eval_id"),
@@ -1090,16 +1122,10 @@ def decontaminate(
         )
     )  # consuming report AND cleaned must not re-run the LSH+verify chain
     contaminated = report.select(F.col("corpus_id").alias(id_col)).distinct()
-    # contaminated ids are usually bounded by the (small) eval set's
-    # match fan-out — broadcast, so cleaning the corpus is a map-side
-    # anti-join with zero corpus shuffle.  ``contaminated_is_small=
-    # False`` drops the hint for the case where boilerplate overlaps a
-    # broad eval suite and the matched set grows corpus-proportional
-    # (a forced broadcast overrides Spark's size checks and OOMs); AQE
-    # still broadcasts at runtime when the set turns out small.
+    # under the gate cleaning the corpus is a map-side anti-join with
+    # zero corpus shuffle; above it (boilerplate overlapping a broad
+    # eval suite) AQE decides
     cleaned = corpus.join(
-        F.broadcast(contaminated) if contaminated_is_small else contaminated,
-        id_col,
-        "left_anti",
+        F.broadcast(contaminated) if small else contaminated, id_col, "left_anti"
     )
     return report, cleaned

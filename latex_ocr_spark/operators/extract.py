@@ -143,14 +143,3 @@ def with_stable_order(spans: DataFrame) -> DataFrame:
     """
     w = Window.partitionBy("conv_id").orderBy("turn_idx", "span_idx")
     return spans.withColumn("conv_seq", F.row_number().over(w))
-
-
-def write_extracted(spans: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Writeback: stable-ordered, partitioned for downstream scans."""
-    (
-        with_stable_order(spans)
-        .repartition(F.col("conv_id"))
-        .sortWithinPartitions("conv_id", "turn_idx", "span_idx")
-        .write.mode(mode)
-        .parquet(path)
-    )

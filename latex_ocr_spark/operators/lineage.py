@@ -29,11 +29,9 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-DEFAULT_UNITS = 64
+from latex_ocr_spark.session import is_missing_path
 
-#: read-error conditions that mean "no unit committed yet": the lineage
-#: dir does not exist, or holds only the lease's lock file
-_NO_LINEAGE_YET = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+DEFAULT_UNITS = 64
 
 
 def with_work_key(transcripts: DataFrame, n_units: int = DEFAULT_UNITS) -> DataFrame:
@@ -49,10 +47,11 @@ def completed_units(spark: SparkSession, lineage_path: str) -> DataFrame:
     try:
         return spark.read.parquet(lineage_path).select("work_key").distinct()
     except AnalysisException as e:
-        # any other failure (a corrupt or unreadable file) must not read
-        # as "no runs yet": that would silently re-extract every unit
-        # and append a second lineage row for each
-        if e.getCondition() not in _NO_LINEAGE_YET:
+        # "no runs yet" is a missing dir or one holding only the lease's
+        # lock file; any other failure (a corrupt or unreadable file)
+        # must not read as that: it would silently re-extract every
+        # unit and append a second lineage row for each
+        if not is_missing_path(e, "UNABLE_TO_INFER_SCHEMA"):
             raise
         return spark.range(0).select(F.col("id").cast("int").alias("work_key"))
 

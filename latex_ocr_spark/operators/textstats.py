@@ -87,49 +87,6 @@ def lang_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     return docs.select(F.col(id_col).alias("id"), pred.alias("lang_pred"))
 
 
-def lang_id_pandas(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """The model-shaped drop-in for :func:`lang_id`: same ruleset, but
-    executed inside an Arrow-batched pandas UDF — the exact seam where
-    a fastText/CLD3 classifier plugs in (swap the per-batch function,
-    nothing else moves).  tests/test_textstats.py pins it equal to the
-    expression form."""
-    from typing import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    # id keeps the input column's own type (string ids are a contract)
-    schema = T.StructType(
-        [
-            T.StructField("id", docs.schema[id_col].dataType),
-            T.StructField("lang_pred", T.StringType()),
-        ]
-    )
-    markers = [({"und", "der", "nicht"}, "de"), ({"el", "los", "y"}, "es"),
-               ({"the", "a", "of"}, "en")]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import re
-
-        java_ws = re.compile("[ \t\n\x0b\f\r]+")  # match Spark's \s
-
-        def classify(text):
-            toks = set(t for t in java_ws.split(text or "") if t)
-            for words, lang in markers:
-                if toks & words:
-                    return lang
-            return "unk"
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {"id": pdf[id_col], "lang_pred": pdf[text_col].map(classify)}
-            )
-
-    return docs.select(id_col, text_col).mapInPandas(run, schema=schema)
-
-
 def tf_idf(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:

@@ -33,25 +33,28 @@ functions and differ only in what they own:
 
 Single-pass design (round 4): the funnel counts ride ``observe()``
 metrics instead of per-stage ``count()`` actions, corpus-wide text
-frames are never persisted (only the small pair/cluster/group frames
-and the one per-document profile — which genuinely feeds several
-joins — are cachepool-tracked), and the corpus is profiled exactly
-ONCE: the near-dup stage's profile (for either near-dup method),
-survivor-filtered by a zero-shuffle broadcast anti-join, is handed to
-the decontamination stage.  At test scale this is invisible; at 100 TB
-the corpus profile and corpus-wide materializations were the funnel's
-two dominant costs.
+frames are never persisted (only the small cluster/group frames and
+the one per-document profile — which genuinely feeds several joins —
+are cachepool-tracked; the pair frames are checkpointed by the counts
+that gate them), and the corpus is profiled exactly ONCE: the near-dup
+stage's profile (for either near-dup method), survivor-filtered by an
+anti-join against the dropped ids, is handed to the decontamination
+stage.  At test scale this is invisible; at 100 TB the corpus profile
+and corpus-wide materializations were the funnel's two dominant costs.
 
 The funnel (docs in/out per stage) remains the curation run's primary
 observability artifact — a stage that silently drops 90% of a corpus
 should be visible in one table, not discovered downstream.  Collecting
 it costs one action over the final frame.  Before it, the near-dup
-stage's clustering materializes the verified pairs once (one action
-that runs the corpus profile, LSH and verify, and with them the early
-stage counts); below its pair-count gate the labels then come from one
-task of the final action.  The merged
-cluster table (``CurationResult.clusters``) costs its own corpus pass,
-paid only by a caller that reads it.
+stage materializes the LSH candidates (one action that runs the corpus
+profile and LSH, and with them the early stage counts) and then the
+verified pairs, once each.  The verified-pair count is the funnel's
+one size gate (``dedup._is_small``, ``dedup._UNION_FIND_MAX_PAIRS``):
+it picks the clustering path and whether the dropped-id and cluster
+frames are broadcast-hinted; below the clustering gate the labels then
+come from one task of the final action.  The merged cluster table
+(``CurationResult.clusters``) costs its own corpus pass, paid only by
+a caller that reads it.
 """
 
 from __future__ import annotations
@@ -141,8 +144,10 @@ def _count(name: str):
     return F.count(F.lit(1)).alias(name)
 
 
-def _maybe_broadcast(df: DataFrame, small: bool) -> DataFrame:
-    return F.broadcast(df) if small else df
+def _maybe_broadcast(df: DataFrame, n_rows: int) -> DataFrame:
+    """``df`` broadcast-hinted when ``n_rows``, an observed bound on its
+    row count, passes the dedup size gate."""
+    return F.broadcast(df) if D._is_small(n_rows) else df
 
 
 def _check_knobs(
@@ -209,7 +214,7 @@ def _near_pairs(
     cur: DataFrame, *, near_dup_method: str, dedup_threshold: float,
     ngram: int, num_hashes: int, band_size: int,
     max_bucket_size: Optional[int], max_df: Optional[int], id_col: str,
-    text_col: str, assume_small_side_frames: bool,
+    text_col: str,
 ) -> Tuple[DataFrame, DataFrame]:
     """(verified near-dup pairs, THE corpus profile they came from).
 
@@ -240,7 +245,7 @@ def _near_pairs(
             cur, threshold=dedup_threshold, num_hashes=num_hashes,
             band_size=band_size, text_col=text_col, id_col=id_col,
             ngram=ngram, max_bucket_size=max_bucket_size, _arrs=profile,
-            _signatures=profile, assume_small_pairs=assume_small_side_frames,
+            _signatures=profile,
         )
     else:
         pairs = D.jaccard_pairs(
@@ -252,14 +257,15 @@ def _near_pairs(
 
 
 def _merge_clusters(
-    pairs: DataFrame, gated: DataFrame, groups: DataFrame, *, id_col: str,
-    text_col: str,
+    pairs: DataFrame, n_pairs: int, gated: DataFrame, groups: DataFrame, *,
+    id_col: str, text_col: str,
 ) -> Tuple[DataFrame, DataFrame]:
     """(near-dup clusters, full cluster table).
 
-    ``duplicate_clusters`` runs unconditionally: it is typed from the
-    pairs frame and converges in one (empty) round when there are no
-    near-dups, so the funnel plans identically with and without them.
+    ``pairs`` is already materialized and holds ``n_pairs`` rows; the
+    clustering runs unconditionally on it: it is typed from the pairs
+    frame and yields no rows when there are no near-dups, so the funnel
+    plans identically with and without them.
 
     The full table is the near-dup components ∪ the exact-dup groups'
     members (without them, a dropped exact copy re-added later would
@@ -275,7 +281,7 @@ def _merge_clusters(
     in-memory runner splits by ``near`` and leaves ``merged`` lazy —
     its corpus pass (scan + gate + md5 + union) is paid only by a
     caller that reads ``CurationResult.clusters``."""
-    near = D.duplicate_clusters(pairs)
+    near = D._components(pairs, n_pairs)
     exact_members = (
         gated.select(F.col(id_col).alias("id"), F.md5(F.col(text_col)).alias("text_hash"))
         .join(
@@ -303,37 +309,36 @@ def _merge_clusters(
 
 
 def _near_survivors(
-    cur: DataFrame, clusters: DataFrame, *, id_col: str, small: bool
+    cur: DataFrame, clusters: DataFrame, *, id_col: str, n_rows: int
 ) -> Tuple[DataFrame, DataFrame]:
     """(dropped non-canonical ids, survivors): keep one representative
-    — the canonical (minimum id) — per near-dup cluster."""
+    — the canonical (minimum id) — per near-dup cluster.  ``n_rows``
+    bounds the dropped-id count."""
     non_canonical = clusters.filter(F.col("id") != F.col("cluster_id")).select(
         F.col("id").alias(id_col)
     )
     return non_canonical, cur.join(
-        _maybe_broadcast(non_canonical, small), id_col, "left_anti"
+        _maybe_broadcast(non_canonical, n_rows), id_col, "left_anti"
     )
 
 
 def _decontaminate(
     cur: DataFrame, evalset: DataFrame, non_canonical: DataFrame,
-    profile: Optional[DataFrame], *, dedup_threshold: float, num_hashes: int,
-    band_size: int, ngram: int, max_bucket_size: Optional[int], id_col: str,
-    text_col: str, assume_small_side_frames: bool,
+    profile: Optional[DataFrame], n_dropped: int, *, dedup_threshold: float,
+    num_hashes: int, band_size: int, ngram: int, max_bucket_size: Optional[int],
+    id_col: str, text_col: str,
 ) -> Tuple[DataFrame, DataFrame]:
     """(contamination report, cleaned corpus) vs the eval set.
 
     ``profile`` is the near-dup stage's corpus profile, filtered to
-    survivors by a map-side anti-join against the (small,
-    already-broadcast) dropped-id set: the corpus is never
-    re-tokenized.  ``None`` (the near-dup stage did not run in this
+    survivors by an anti-join against the dropped-id set (at most
+    ``n_dropped`` rows, broadcast under the size gate): the corpus is
+    never re-tokenized.  ``None`` (the near-dup stage did not run in this
     process) lets decontaminate build its own.  The recall knobs carry
     over, so one similarity measure holds end-to-end."""
     survivors = None
     if profile is not None:
-        dropped = _maybe_broadcast(
-            non_canonical.withColumnRenamed(id_col, "id"), assume_small_side_frames
-        )
+        dropped = _maybe_broadcast(non_canonical.withColumnRenamed(id_col, "id"), n_dropped)
         survivors = profile.join(dropped, "id", "left_anti")
     return D.decontaminate(
         cur, evalset, threshold=dedup_threshold,
@@ -341,14 +346,13 @@ def _decontaminate(
         ngram=ngram, text_col=text_col, id_col=id_col,
         max_bucket_size=max_bucket_size,
         _corpus_arrs=survivors, _corpus_signatures=survivors,
-        contaminated_is_small=assume_small_side_frames,
     )
 
 
 def _sample_and_split(
-    cur: DataFrame, clusters: DataFrame, *, sample_fraction: Optional[float],
-    val_fraction: float, seed: str, id_col: str,
-    assume_small_side_frames: bool,
+    cur: DataFrame, clusters: DataFrame, n_clusters: int, *,
+    sample_fraction: Optional[float], val_fraction: float, seed: str,
+    id_col: str,
     watch: Callable[[str, DataFrame], DataFrame] = lambda _stage, df: df,
 ) -> DataFrame:
     """Optional deterministic (subset-stable) down-sample, then the
@@ -361,14 +365,15 @@ def _sample_and_split(
     survivor is its own canonical in both (see :func:`_merge_clusters`),
     so ``coalesce(cluster_id, id)`` is the survivor's own id either way.
     The in-memory runner passes ``near``; the checkpoint runner passes
-    its ``clusters`` artifact, already on disk."""
+    its ``clusters`` artifact, already on disk.  ``n_clusters`` bounds
+    its row count and gates the split join's broadcast hint."""
     if sample_fraction is not None:
         cur = watch("sample", TS.deterministic_sample(
             cur, fraction=sample_fraction, id_col=id_col, seed=seed + ":sample"
         ))
     return TS.cluster_safe_split(
         cur, clusters, val_fraction=val_fraction, id_col=id_col, seed=seed,
-        clusters_are_small=assume_small_side_frames,
+        clusters_are_small=D._is_small(n_clusters),
     )
 
 
@@ -454,7 +459,6 @@ def curate_corpus(
     id_col: str = "doc_id",
     text_col: str = "text",
     collect_funnel: bool = True,
-    assume_small_side_frames: bool = True,
 ) -> CurationResult:
     """Run the full curation funnel; see module docstring.
 
@@ -468,16 +472,6 @@ def curate_corpus(
     ride the consumer's pass, so the funnel costs zero extra passes
     over the corpus (at 100 TB the dedicated count pass roughly doubles
     funnel cost; both jobs use the deferred mode).
-
-    ``assume_small_side_frames``: True (default) broadcast-hints the
-    dropped-near-dup id set and the cluster table into their
-    anti-/split-joins — zero-shuffle probes, correct for benchmark and
-    moderate-dup corpora.  For a high-dup-rate corpus at scale (a web
-    crawl where 20-30% of documents sit in dup groups, making these
-    frames gigabytes) pass False: an explicit broadcast hint OVERRIDES
-    Spark's size checks and would OOM, while AQE still converts the
-    unhinted joins to broadcast at runtime whenever the frames turn
-    out small.
 
     Funnel counts are ``df.observe()`` metrics (accumulator-backed).
     In collected mode the final observed count is cross-checked against
@@ -541,28 +535,29 @@ def curate_corpus(
     # one similarity measure for the near-dup and decontamination stages
     sim = dict(dedup_threshold=dedup_threshold,
                ngram=ngram, num_hashes=num_hashes, band_size=band_size,
-               max_bucket_size=max_bucket_size, id_col=id_col, text_col=text_col,
-               assume_small_side_frames=assume_small_side_frames)
+               max_bucket_size=max_bucket_size, id_col=id_col, text_col=text_col)
     raw_pairs, corpus_frame = _near_pairs(
         cur, near_dup_method=near_dup_method, max_df=max_df, **sim
     )
+    # the verified pairs, materialized once: their count gates the
+    # clustering path and the hints on the id frames derived from them
+    pairs, n_pairs = D._materialize(raw_pairs)
     near, merged = _merge_clusters(
-        cachepool.track(raw_pairs), gated, groups, id_col=id_col, text_col=text_col
+        pairs, n_pairs, gated, groups, id_col=id_col, text_col=text_col
     )
-    non_canonical, cur = _near_survivors(
-        cur, near, id_col=id_col, small=assume_small_side_frames
-    )
+    non_canonical, cur = _near_survivors(cur, near, id_col=id_col, n_rows=n_pairs)
     cur = watch("near_dup_clusters", cur)
     clusters = cachepool.track(merged)
 
     report = None
     if evalset is not None:
-        report, cur = _decontaminate(cur, evalset, non_canonical, corpus_frame, **sim)
+        report, cur = _decontaminate(
+            cur, evalset, non_canonical, corpus_frame, n_pairs, **sim
+        )
         cur = watch("decontaminate", cur)
     out = _sample_and_split(
-        cur, near, sample_fraction=sample_fraction,
-        val_fraction=val_fraction, seed=seed, id_col=id_col,
-        assume_small_side_frames=assume_small_side_frames, watch=watch,
+        cur, near, n_pairs, sample_fraction=sample_fraction,
+        val_fraction=val_fraction, seed=seed, id_col=id_col, watch=watch,
     )
 
     def _build_funnel(n_final: Optional[int]) -> List[Tuple[str, int, int]]:

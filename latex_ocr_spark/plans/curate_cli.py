@@ -62,11 +62,6 @@ def add_curation_args(ap: argparse.ArgumentParser) -> None:
                     help="deterministic down-sample after decontamination")
     ap.add_argument("--val-fraction", type=float, default=0.1)
     ap.add_argument("--seed", default="split-seed-1")
-    ap.add_argument("--high-dup-rate", action="store_true",
-                    help="web-scale high-dup corpora: skip the forced "
-                         "broadcasts of the dropped-id/cluster frames "
-                         "(AQE decides; avoids executor OOM when 20-30%% "
-                         "of docs sit in dup groups)")
     ap.add_argument("--auto-knobs", action="store_true",
                     help="pre-flight survey the input and fill every "
                          "blowup/recall knob left at its default "
@@ -162,7 +157,6 @@ def curate_from_args(
         sample_fraction=args.sample_fraction,
         val_fraction=args.val_fraction,
         seed=args.seed,
-        assume_small_side_frames=not args.high_dup_rate,
     )
     if args.checkpoint_dir:
         return curate_corpus_resumable(

@@ -36,13 +36,18 @@ What this runner owns, and the in-memory one does not:
   than silently mixing artifacts computed under different knobs.
 - **The single-writer lease** (:class:`CheckpointLease`) and the crash
   hook ``_fail_after_write``.
-- **Artifact-derived funnel counts**, which cost zero corpus passes:
+- **Artifact-derived funnel counts and size gates**, which cost zero
+  corpus passes:
   the gate counts ride ``observe()`` on the groups stage's write,
   post-exact survivors equal the groups artifact's row count,
   near-dup/contamination drops are counted on the small artifacts at
   commit time, and the final count rides the documents write.  The
   assembled funnel is pinned equal to the in-memory runner's in
-  tests/test_curate_resume.py.
+  tests/test_curate_resume.py.  The same lineage counts are the size
+  gates (``dedup._is_small``): the ``pairs`` row count picks the
+  clustering path, the ``clusters`` row count gates the dropped-id and
+  split joins' broadcast hints, and the ``report`` row count the
+  cleaning anti-join's.
 
 Trade-off vs the in-memory runner: a FRESH run that executes pairs +
 report in one invocation still shares the one corpus profile (the
@@ -66,6 +71,7 @@ from pyspark.sql import functions as F
 from latex_ocr_spark.lease import DirLease
 from latex_ocr_spark.plans import curate as C
 from latex_ocr_spark.plans.curate import CurationResult, _count
+from latex_ocr_spark.session import is_missing_path
 
 _LINEAGE_SCHEMA = (
     "stage string, config_hash string, n_rows long, meta string, "
@@ -110,7 +116,7 @@ def _read_lineage(spark: SparkSession, lineage_path: str) -> dict:
     try:
         rows = spark.read.parquet(lineage_path).collect()
     except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
+        if is_missing_path(e):
             return {}  # no runs yet
         # any OTHER analysis failure (permissions, corrupt footer)
         # must NOT be read as "fresh checkpoint": that would silently
@@ -191,7 +197,6 @@ def _curate_resumable_impl(
     seed: str = "split-seed-1",
     id_col: str = "doc_id",
     text_col: str = "text",
-    assume_small_side_frames: bool = True,
     _fail_after_write: Optional[Set[str]] = None,
 ) -> CurationResult:
     """Run (or resume) the curation funnel with durable stage
@@ -275,8 +280,7 @@ def _curate_resumable_impl(
 
     sim = dict(dedup_threshold=dedup_threshold,
                ngram=ngram, num_hashes=num_hashes, band_size=band_size,
-               max_bucket_size=max_bucket_size, id_col=id_col, text_col=text_col,
-               assume_small_side_frames=assume_small_side_frames)
+               max_bucket_size=max_bucket_size, id_col=id_col, text_col=text_col)
     corpus_frame = None  # the near-dup stage's profile, when it ran HERE
 
     def write_pairs(path: str) -> Tuple[int, dict]:
@@ -288,20 +292,23 @@ def _curate_resumable_impl(
         raw_pairs.observe(obs, _count("n")).write.mode("overwrite").parquet(path)
         return C._observed_count(obs, artifact_rows(path)), {}
 
-    pairs = stage("pairs", write_pairs)[0]
+    pairs, n_pairs, _meta = stage("pairs", write_pairs)
 
     def write_clusters(path: str) -> Tuple[int, dict]:
+        # the pairs artifact is already materialized: its lineage
+        # count picks the clustering path
         near, merged = C._merge_clusters(
-            pairs, gated, groups, id_col=id_col, text_col=text_col
+            pairs, n_pairs, gated, groups, id_col=id_col, text_col=text_col
         )
         # near-only non-canonical count: the docs the near-dup stage
-        # drops from the spine (cheap — the clustering already
-        # materialized its pairs via localCheckpoint)
+        # drops from the spine
         n_non_canonical = near.filter(F.col("id") != F.col("cluster_id")).count()
-        merged.write.mode("overwrite").parquet(path)
-        return -1, {"n_non_canonical": n_non_canonical}
+        obs = Observation()
+        merged.observe(obs, _count("n")).write.mode("overwrite").parquet(path)
+        n_rows = C._observed_count(obs, artifact_rows(path))
+        return n_rows, {"n_non_canonical": n_non_canonical}
 
-    clusters, _n, meta = stage("clusters", write_clusters)
+    clusters, n_clusters, meta = stage("clusters", write_clusters)
     n_near = n_exact - meta["n_non_canonical"]
     # near-dup survivors from the merged artifact's id != cluster_id
     # rows.  For rows still on the spine this set equals the near-only
@@ -310,14 +317,14 @@ def _curate_resumable_impl(
     # exact canonical that joined a near cluster it doesn't name
     # appears in the near component itself
     non_canonical, near_kept = C._near_survivors(
-        exact_kept, clusters, id_col=id_col, small=assume_small_side_frames
+        exact_kept, clusters, id_col=id_col, n_rows=n_clusters
     )
 
     report, n_decon, cleaned = None, n_near, near_kept
     if evalset is not None:
         def write_report(path: str) -> Tuple[int, dict]:
             C._decontaminate(
-                near_kept, evalset, non_canonical, corpus_frame, **sim
+                near_kept, evalset, non_canonical, corpus_frame, n_clusters, **sim
             )[0].write.mode("overwrite").parquet(path)
             # every contaminated id is on the spine by construction,
             # so the stage's drop count is a distinct count over the
@@ -328,18 +335,16 @@ def _curate_resumable_impl(
             ).first()
             return int(n_rows), {"n_dropped": int(n_dropped)}
 
-        report, _n, meta = stage("report", write_report)
+        report, n_report, meta = stage("report", write_report)
         n_decon = n_near - meta["n_dropped"]
         contaminated = report.select(F.col("corpus_id").alias(id_col)).distinct()
         cleaned = near_kept.join(
-            C._maybe_broadcast(contaminated, assume_small_side_frames),
-            id_col, "left_anti",
+            C._maybe_broadcast(contaminated, n_report), id_col, "left_anti"
         )
 
     out = C._sample_and_split(
-        cleaned, clusters, sample_fraction=sample_fraction,
+        cleaned, clusters, n_clusters, sample_fraction=sample_fraction,
         val_fraction=val_fraction, seed=seed, id_col=id_col,
-        assume_small_side_frames=assume_small_side_frames,
     )
 
     def write_documents(path: str) -> Tuple[int, dict]:

@@ -10,6 +10,7 @@ from __future__ import annotations
 import os
 import zipfile
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -84,3 +85,12 @@ def get_spark(
     except Exception:  # pragma: no cover — an already-added file
         pass
     return spark
+
+
+def is_missing_path(e: AnalysisException, *also: str) -> bool:
+    """Whether the ``AnalysisException`` ``e`` of a read means only that
+    its path does not exist yet (``PATH_NOT_FOUND``, or one of the
+    error conditions ``also``).  Any other failure — a corrupt file, a
+    permission error — must stay an error, never read as "no state
+    yet"."""
+    return e.getCondition() in ("PATH_NOT_FOUND", *also)

@@ -20,11 +20,6 @@ from pyspark.sql import types as T
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-TESTDATA_TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
-
 TRANSCRIPTS_SCHEMA = T.StructType(
     [
         T.StructField("conv_id", T.StringType(), False),
@@ -112,11 +107,6 @@ def read_transcripts(spark: SparkSession, source: str) -> DataFrame:
             f"missing/mistyped columns: {missing} (have: {have})"
         )
     return df.select(*want)  # prune extra columns, fix column order
-
-
-def register_testdata_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    for name in TESTDATA_TABLES:
-        load_table(spark, name, sf_dir).createOrReplaceTempView(name)
 
 
 def synth_transcripts(

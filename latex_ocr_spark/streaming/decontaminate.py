@@ -18,16 +18,12 @@ The eval set's profile (shingle arrays + signatures) is small
 batch costs one scan of its own files plus the broadcast probes.
 
 Delivery semantics: ``availableNow`` + checkpoint give exactly-once
-*file progress* (a fully processed batch is never re-read).  With the
-default ``idempotent=True`` the OUTPUT is exactly-once too: both sinks
-are batch_id-partitioned dynamic overwrites (streaming/sinks.py), so a
-batch replayed after a failure between or after its writes REPLACES
-its own partitions instead of appending duplicates; read the results
-back through ``sinks.read_stream_output`` (drops the transport
-column).  ``idempotent=False`` keeps the legacy plain-append layout —
-at-least-once: a replayed batch appends its rows again, and readers
-must dedup on the natural keys (``report`` on (corpus_id, eval_id);
-``cleaned`` on doc_id) via ``sinks.dedup_on_read``.
+*file progress* (a fully processed batch is never re-read), and the
+OUTPUT is exactly-once too: both sinks are batch_id-partitioned
+dynamic overwrites (streaming/sinks.py), so a batch replayed after a
+failure between or after its writes REPLACES its own partitions
+instead of appending duplicates; read the results back through
+``sinks.read_stream_output`` (drops the transport column).
 """
 
 from __future__ import annotations
@@ -57,7 +53,6 @@ def start_decontamination_stream(
     threshold: float = 0.5,
     ngram: int = 3,
     available_now: bool = True,
-    idempotent: bool = True,
     _fail_batches: Optional[Set[int]] = None,
 ):
     """Continuously decontaminate documents as files land.
@@ -68,16 +63,14 @@ def start_decontamination_stream(
 
     ``_fail_batches`` injects a crash AFTER the named batches' sink
     writes but before the checkpoint commit — the test hook for the
-    replayed-batch window (the failure mode ``idempotent`` exists
-    for).
+    replayed-batch window the idempotent sinks exist for.
     """
     from latex_ocr_spark import cachepool
     from latex_ocr_spark.operators.dedup import decontaminate
     from latex_ocr_spark.streaming.sinks import assert_idempotent_layout
 
-    if idempotent:
-        assert_idempotent_layout(spark, report_dir)
-        assert_idempotent_layout(spark, clean_dir)
+    assert_idempotent_layout(spark, report_dir)
+    assert_idempotent_layout(spark, clean_dir)
 
     stream = (
         spark.readStream.schema(DOCS_STREAM_SCHEMA).format("parquet").load(input_dir)
@@ -91,12 +84,8 @@ def start_decontamination_stream(
             report, cleaned = decontaminate(
                 batch_df, evalset, threshold=threshold, ngram=ngram
             )
-            if idempotent:
-                write_batch_idempotent(report, batch_id, report_dir)
-                write_batch_idempotent(cleaned, batch_id, clean_dir)
-            else:
-                report.write.mode("append").parquet(report_dir)
-                cleaned.write.mode("append").parquet(clean_dir)
+            write_batch_idempotent(report, batch_id, report_dir)
+            write_batch_idempotent(cleaned, batch_id, clean_dir)
             if _fail_batches and batch_id in _fail_batches:
                 raise RuntimeError(
                     f"injected crash after batch {batch_id} writes, "

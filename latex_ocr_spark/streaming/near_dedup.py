@@ -53,6 +53,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.listener import StreamingQueryListener
 
 from latex_ocr_spark import lease as lease_mod
+from latex_ocr_spark.session import is_missing_path
 from latex_ocr_spark.streaming.decontaminate import DOCS_STREAM_SCHEMA
 from latex_ocr_spark.streaming.sinks import (
     BATCH_COL,
@@ -71,7 +72,7 @@ def _index_exists(spark: SparkSession, path: str) -> bool:
         spark.read.parquet(path)
         return True
     except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
+        if is_missing_path(e):
             return False
         # a transient/real read failure (permissions, corrupt footer)
         # must FAIL the batch, not silently skip the all-history check
@@ -146,7 +147,6 @@ def start_near_dedup_stream(
     _fail_batches: Optional[set] = None,
     max_files_per_trigger: Optional[int] = 64,
     max_bytes_per_trigger: Optional[str] = None,
-    broadcast_threshold_rows: int = 500_000,
 ):
     """Continuously keep only documents that near-duplicate neither a
     previously accepted document nor an earlier doc of their own batch.
@@ -162,13 +162,14 @@ def start_near_dedup_stream(
     to restore the unbounded reader.  ``availableNow`` still drains the
     whole backlog — as a sequence of bounded batches.
 
-    ``broadcast_threshold_rows``: the batch-side frames (in-batch
-    non-canonicals, duplicate-of-history ids, survivor ids, and the
-    batch as decontaminate's eval side) are broadcast-hinted only while
-    the batch holds at most this many documents; an oversized batch
+    The batch-side frames (in-batch non-canonicals, duplicate-of-history
+    ids, survivor ids, and the batch as decontaminate's eval side) are
+    broadcast-hinted only while the batch's counted documents pass the
+    dedup size gate (``dedup._is_small``); an oversized batch
     (misconfigured trigger bound, one giant input file) drops the hints
     and lets AQE decide — a forced broadcast overrides Spark's size
-    checks and OOMs the executors.
+    checks and OOMs the executors.  The pair-derived frames inside the
+    batch follow their own observed counts the same way.
 
     ``_fail_batches`` injects a crash after the named batches' writes,
     before the checkpoint commit — the replay window the idempotent
@@ -194,7 +195,6 @@ def start_near_dedup_stream(
             threshold, num_hashes, band_size, ngram, max_bucket_size,
             available_now, _fail_batches, stream_lease,
             max_files_per_trigger, max_bytes_per_trigger,
-            broadcast_threshold_rows,
         )
     except BaseException:
         if stream_lease is not None:
@@ -218,7 +218,6 @@ def _start_near_dedup_stream_fenced(
     stream_lease,
     max_files_per_trigger: Optional[int] = 64,
     max_bytes_per_trigger: Optional[str] = None,
-    broadcast_threshold_rows: int = 500_000,
 ):
     import json
 
@@ -252,7 +251,7 @@ def _start_near_dedup_stream_fenced(
                 "dir (or rebuild) to change knobs"
             )
     except AnalysisException as e:
-        if not ("PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e)):
+        if not is_missing_path(e):
             raise
         spark.range(1).select(F.lit(cfg).alias("cfg")).coalesce(1).write.mode(
             "overwrite"
@@ -327,7 +326,7 @@ def _start_near_dedup_stream_fenced(
             # batch-side frames stay broadcast-hinted; an oversized
             # batch drops the hints (AQE still broadcasts at runtime
             # when a frame turns out small)
-            batch_is_small = batch.count() <= broadcast_threshold_rows
+            batch_is_small = D._is_small(batch.count())
             _maybe_bcast = F.broadcast if batch_is_small else (lambda df: df)
 
             # 1. in-batch near-dedup (cluster canonical survives).  ONE
@@ -394,7 +393,6 @@ def _start_near_dedup_stream_fenced(
                     # the batch IS the eval side here — gate its
                     # broadcast on the per-batch size check
                     evalset_is_small=batch_is_small,
-                    contaminated_is_small=batch_is_small,
                 )
                 dup_of_history = report.select(
                     F.col("eval_id").alias("doc_id")

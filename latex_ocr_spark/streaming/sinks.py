@@ -12,21 +12,15 @@ own partitions instead of appending next to them — the same
 idempotent-unit commit the extraction resume path uses
 (operators/lineage.py: dynamic overwrite by work_key).  Replays become
 invisible; no dedup-on-read required.
-
-For sinks that must stay plain appends (an external table whose layout
-a consumer owns), :func:`dedup_on_read` is the documented read-side
-escape hatch: both of this repo's streaming outputs carry natural keys
-(report on (corpus_id, eval_id); cleaned/spans on their row identity),
-so a keyed ``dropDuplicates`` removes replay copies.
 """
 
 from __future__ import annotations
 
-from typing import Sequence
-
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from latex_ocr_spark.session import is_missing_path
 
 BATCH_COL = "batch_id"
 
@@ -36,13 +30,12 @@ def assert_idempotent_layout(spark: SparkSession, path: str) -> None:
     plain-append sink directory: root-level part files next to
     ``batch_id=N/`` partition dirs make the next read fail partition
     discovery ("conflicting directory structures").  Streams call this
-    once at start — a legacy deployment keeps working by passing
-    ``idempotent=False``, or migrates by moving the old files under a
-    ``batch_id=-1/`` directory."""
+    once at start; a legacy deployment migrates by moving the old files
+    under a ``batch_id=-1/`` directory."""
     try:
         cols = spark.read.parquet(path).columns
     except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
+        if is_missing_path(e):
             return  # fresh sink — fine
         raise
     if BATCH_COL not in cols:
@@ -50,8 +43,7 @@ def assert_idempotent_layout(spark: SparkSession, path: str) -> None:
             f"output at {path} holds a plain-append (pre-idempotent) "
             f"layout without a {BATCH_COL} partition column; writing "
             "batch_id-partitioned data next to it would break partition "
-            "discovery on read.  Pass idempotent=False to keep the "
-            f"legacy layout, or move the existing files under "
+            "discovery on read.  Move the existing files under "
             f"{path}/{BATCH_COL}=-1/ to migrate"
         )
 
@@ -76,11 +68,3 @@ def write_batch_idempotent(df: DataFrame, batch_id: int, path: str) -> None:
 def read_stream_output(spark: SparkSession, path: str) -> DataFrame:
     """Read an idempotent sink back without its transport column."""
     return spark.read.parquet(path).drop(BATCH_COL)
-
-
-def dedup_on_read(
-    spark: SparkSession, path: str, key_cols: Sequence[str]
-) -> DataFrame:
-    """Exactly-once view over a plain-append (at-least-once) sink:
-    one row per natural key, replay copies dropped."""
-    return spark.read.parquet(path).dropDuplicates(list(key_cols))

@@ -4,7 +4,7 @@ The reference has no streaming (SURVEY.md §2.10); its closest idiom is
 the incremental render-resume loop (render.py:160-167).  Extraction is
 stateless per turn, so the streaming form needs no custom state store:
 ``readStream`` over the transcripts directory → the same
-``extract_spans`` transformation inside ``foreachBatch`` → append sink,
+``extract_spans`` transformation inside ``foreachBatch`` → idempotent sink,
 with ``availableNow`` for catch-up runs and the checkpoint directory
 carrying exactly-once file-source progress.  Stable ordering is a
 writeback concern (W1 window) applied by readers, since a stream can
@@ -38,17 +38,14 @@ def start_extraction_stream(
     output_dir: str,
     checkpoint_dir: str,
     available_now: bool = True,
-    idempotent: bool = True,
 ):
     """Continuously extract spans from transcript files as they land.
 
     foreachBatch keeps the exact batch operator (single code path for
-    batch + streaming).  ``idempotent=True`` (default) writes each
-    micro-batch as a batch_id-partitioned dynamic overwrite
-    (streaming/sinks.py) so a replayed batch replaces its own output —
-    exactly-once results; read back via ``sinks.read_stream_output``.
-    ``idempotent=False`` keeps the plain append layout (at-least-once
-    under batch replay; dedup on read by row identity).
+    batch + streaming).  Each micro-batch is written as a
+    batch_id-partitioned dynamic overwrite (streaming/sinks.py) so a
+    replayed batch replaces its own output — exactly-once results; read
+    back via ``sinks.read_stream_output``.
     """
     from latex_ocr_spark.operators.extract import extract_spans
     from latex_ocr_spark.streaming.sinks import (
@@ -56,17 +53,13 @@ def start_extraction_stream(
         write_batch_idempotent,
     )
 
-    if idempotent:
-        assert_idempotent_layout(spark, output_dir)
+    assert_idempotent_layout(spark, output_dir)
 
     stream = read_transcript_stream(spark, input_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spans = extract_spans(batch_df.select("conv_id", "turn_idx", "text"))
-        if idempotent:
-            write_batch_idempotent(spans, batch_id, output_dir)
-        else:
-            spans.write.mode("append").parquet(output_dir)
+        write_batch_idempotent(spans, batch_id, output_dir)
 
     writer = (
         stream.writeStream.foreachBatch(process)

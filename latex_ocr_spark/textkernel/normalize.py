@@ -108,15 +108,6 @@ def collapse_operatorname(s: str, spaced: bool = True) -> str:
     return pat.sub(lambda _m: str(names.pop(0)), s)
 
 
-#: corpus symbol gate (postprocess.py:12-16): a formula must contain at
-#: least one structural math character to stay in the corpus
-MATH_SYMBOL_CHARS = ("\\", "_", "^", "(", ")", "{", "}")
-
-
-def has_math_symbols(s: str) -> bool:
-    return any(c in s for c in MATH_SYMBOL_CHARS)
-
-
 def normalize_formula(s: str) -> Optional[str]:
     """Corpus-prep rewrite of one formula line; None when the formula is
     too short to keep (≤ MIN_FORMULA_TOKENS whitespace tokens)."""

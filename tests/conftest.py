@@ -25,3 +25,25 @@ def sf_small():
 @pytest.fixture(scope="session")
 def sf_mid():
     return "/root/testdata/sf0.01"
+
+
+@pytest.fixture
+def hinted_broadcasts(spark):
+    """``count(run) -> (run(), n)``: ``n`` is the number of
+    BroadcastExchange nodes in the SQL executions ``run`` starts, read
+    from the status store.  Spark's size-based broadcast is off for the
+    test, so every broadcast counted comes from an explicit hint."""
+    from perfbench.statusstore import StatusReader
+
+    reader = StatusReader(spark)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+
+    def count(run):
+        mark = reader.marker()
+        out = run()
+        return out, reader.since(mark)["broadcasts"]
+
+    yield count
+    spark.conf.set(key, prev)

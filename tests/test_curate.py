@@ -449,10 +449,12 @@ def test_lsh_funnel_computes_signatures_exactly_once(spark, monkeypatch):
     cachepool.release()
 
 
-def test_funnel_without_broadcast_hints_is_equivalent(spark):
-    """assume_small_side_frames=False (the web-scale high-dup-rate
-    setting: no forced broadcasts, AQE decides) must produce identical
+def test_funnel_without_broadcast_hints_is_equivalent(spark, monkeypatch):
+    """Over the broadcast gate (the web-scale high-dup-rate case: no
+    forced broadcasts, AQE decides) the funnel must produce identical
     documents, funnel, and clusters — only join strategy may differ."""
+    from latex_ocr_spark.operators import dedup as D
+
     docs = _fixture(spark)
     evalset = spark.createDataFrame(
         [(-1, "alpha beta gamma delta epsilon zeta eta theta")],
@@ -464,7 +466,8 @@ def test_funnel_without_broadcast_hints_is_equivalent(spark):
     a_docs = sorted(map(tuple, a.documents.collect()))
     a_cl = sorted(map(tuple, a.clusters.collect()))
     cachepool.release()
-    b = curate_corpus(docs, evalset, assume_small_side_frames=False, **kw)
+    monkeypatch.setattr(D, "_BROADCAST_ROW_LIMIT", 0)
+    b = curate_corpus(docs, evalset, **kw)
     assert b.funnel == a.funnel
     assert sorted(map(tuple, b.documents.collect())) == a_docs
     assert sorted(map(tuple, b.clusters.collect())) == a_cl
@@ -519,3 +522,24 @@ def test_deferred_resolve_with_verify_cross_checks_final_count(spark):
     res.documents.write.format("noop").mode("overwrite").save()
     assert res.resolve_funnel(verify=True) == free
     cachepool.release()
+
+
+def test_lsh_funnel_runs_within_its_job_budget(spark, tmp_path):
+    """The in-memory LSH funnel plus a noop write of its documents runs
+    at most 18 Spark jobs on this fixture, counted from the status store
+    as the benchmark's trace counts them: 17 before its pair counts
+    gated the broadcasts, and one more allowed for the candidate count.
+    A new plan-probe job on the funnel's path shows up here."""
+    from perfbench.statusstore import StatusReader
+
+    path = str(tmp_path / "docs")
+    _fixture(spark).write.parquet(path)
+    reader = StatusReader(spark)
+    mark = reader.marker()
+    res = curate_corpus(spark.read.parquet(path), near_dup_method="lsh", ngram=1,
+                        min_tokens=5, val_fraction=0.3, collect_funnel=False)
+    res.documents.write.format("noop").mode("overwrite").save()
+    funnel = dict((s, o) for s, _i, o in res.resolve_funnel())
+    cachepool.release()
+    assert funnel["split"] == 22
+    assert reader.since(mark)["jobs"] <= 18

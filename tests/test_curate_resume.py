@@ -90,7 +90,7 @@ def test_kill_and_resume_is_byte_identical(spark, tmp_path, crash_stage,
     # completed stage would have to re-enter
     from latex_ocr_spark.operators import dedup as D
     calls = []
-    for name in ("exact_duplicates", "jaccard_pairs", "duplicate_clusters",
+    for name in ("exact_duplicates", "jaccard_pairs", "_components",
                  "decontaminate"):
         real = getattr(D, name)
 
@@ -108,7 +108,7 @@ def test_kill_and_resume_is_byte_identical(spark, tmp_path, crash_stage,
     # the crashed stage re-runs; everything committed before it never
     # does (the lineage row is the commit point)
     stage_op = {"groups": "exact_duplicates", "pairs": "jaccard_pairs",
-                "clusters": "duplicate_clusters", "report": "decontaminate"}
+                "clusters": "_components", "report": "decontaminate"}
     done_before = []
     for s in ("groups", "pairs", "clusters", "report"):
         if s == crash_stage:
@@ -128,7 +128,7 @@ def test_completed_run_is_a_cheap_no_op_and_rereads_artifacts(spark, tmp_path,
     cachepool.release()
 
     from latex_ocr_spark.operators import dedup as D
-    for name in ("exact_duplicates", "jaccard_pairs", "duplicate_clusters"):
+    for name in ("exact_duplicates", "jaccard_pairs", "_components"):
         monkeypatch.setattr(
             D, name,
             lambda *a, __n=name, **kw: (_ for _ in ()).throw(
@@ -396,3 +396,48 @@ def test_config_fingerprint_is_pinned(spark, tmp_path):
     cachepool.release()
     lineage = spark.read.parquet(f"{ckpt}/_lineage").collect()
     assert {r.config_hash for r in lineage} == {pinned}
+
+
+def test_unreadable_lineage_raises_instead_of_rerunning(spark, tmp_path):
+    """Only a missing lineage dir means "no stage committed yet"; a
+    corrupt lineage file must fail the run, not silently re-run the
+    funnel from the scan past the config-mismatch refusal."""
+    ckpt = tmp_path / "garbage"
+    (ckpt / "_lineage").mkdir(parents=True)
+    (ckpt / "_lineage" / "part-0.parquet").write_bytes(b"not a parquet file")
+
+    with pytest.raises(Exception):
+        curate_corpus_resumable(spark, _fixture(spark), str(ckpt), **KW)
+    cachepool.release()
+    assert not (ckpt / "groups").exists()
+
+
+@pytest.mark.parametrize("runner", ["in_memory", "checkpoint"])
+def test_funnel_over_the_size_gates_matches_and_broadcasts_nothing(
+    spark, tmp_path, monkeypatch, hinted_broadcasts, runner
+):
+    """Over both dedup size gates (patched to 0) neither runner
+    broadcast-hints a frame derived from pairs, and the documents,
+    funnel and clusters equal the hinted run's."""
+    from latex_ocr_spark.operators import dedup as D
+
+    docs = _fixture(spark)
+    kw = dict(KW, near_dup_method="lsh")
+
+    def run(tag):
+        if runner == "in_memory":
+            res = curate_corpus(docs, **kw)
+        else:
+            res = curate_corpus_resumable(spark, docs, str(tmp_path / tag), **kw)
+        out = (res.funnel, _table(res.documents),
+               sorted(map(tuple, res.clusters.collect())))
+        cachepool.release()
+        return out
+
+    hinted, n_hinted = hinted_broadcasts(lambda: run("hinted"))
+    monkeypatch.setattr(D, "_BROADCAST_ROW_LIMIT", 0)
+    monkeypatch.setattr(D, "_UNION_FIND_MAX_PAIRS", 0)
+    unhinted, n_unhinted = hinted_broadcasts(lambda: run("unhinted"))
+    assert dict((s, o) for s, _i, o in hinted[0])["near_dup_clusters"] == 22
+    assert unhinted == hinted
+    assert n_hinted > 0 and n_unhinted == 0, (n_hinted, n_unhinted)

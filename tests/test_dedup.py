@@ -517,3 +517,43 @@ def test_profile_kernel_falls_back_to_hashlib_without_builtin_md5(monkeypatch):
             min(hashlib.md5(f"{s}#{i}".encode()).hexdigest() for s in sh)
             for i in range(8)
         ]
+
+
+def _near_dup_corpus(spark):
+    """30 distinct documents, three near-dup pairs and a copy of doc 0."""
+    rows = [(i, " ".join(f"w{i}_{j}" for j in range(12))) for i in range(30)]
+    for a, b in ((1, 101), (2, 102), (3, 103)):
+        rows.append((b, rows[a][1].replace(f"w{a}_5", "zz5", 1)))
+    rows.append((100, rows[0][1]))
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def test_pair_count_gate_drops_every_pair_derived_broadcast(
+    spark, monkeypatch, hinted_broadcasts
+):
+    """Under the size gate the verify joins and the cleaning anti-join
+    are broadcast-hinted; over it (the gate patched to 0) no broadcast
+    is left, and the verified pairs, the contamination report and the
+    cleaned corpus are unchanged."""
+    from latex_ocr_spark import cachepool
+    from latex_ocr_spark.operators import dedup as D
+
+    docs = _near_dup_corpus(spark)
+    evalset = docs.filter(F.col("doc_id") < 3).select(
+        (-F.col("doc_id") - 1).alias("doc_id"), "text"
+    )
+
+    def run():
+        pairs = sorted(map(tuple, D.lsh_verified_pairs(docs).collect()))
+        report, cleaned = D.decontaminate(docs, evalset, evalset_is_small=False)
+        out = (pairs, sorted(map(tuple, report.collect())),
+               sorted(r.doc_id for r in cleaned.collect()))
+        cachepool.release()
+        return out
+
+    hinted, n_hinted = hinted_broadcasts(run)
+    monkeypatch.setattr(D, "_BROADCAST_ROW_LIMIT", 0)
+    unhinted, n_unhinted = hinted_broadcasts(run)
+    assert hinted[0] and hinted[1]  # the planted pairs are found
+    assert unhinted == hinted
+    assert n_hinted >= 3 and n_unhinted == 0, (n_hinted, n_unhinted)

@@ -72,6 +72,19 @@ def test_oracle_pair(spark, name):
     assert _rowset(srows, scols) == _rowset(drows, dcols), f"{name}: values differ"
 
 
+@pytest.mark.parametrize(
+    "name", ["dedup_lsh_jaccard", "dedup_decontaminate", "dedup_clusters"]
+)
+def test_dedup_oracles_hold_over_the_size_gates(spark, name, monkeypatch):
+    """Over both dedup size gates (patched to 0: no pair-derived
+    broadcast hint, the label-loop clustering) the oracles still hold."""
+    from latex_ocr_spark.operators import dedup as D
+
+    monkeypatch.setattr(D, "_BROADCAST_ROW_LIMIT", 0)
+    monkeypatch.setattr(D, "_UNION_FIND_MAX_PAIRS", 0)
+    test_oracle_pair(spark, name)
+
+
 def test_no_rows_only_queries_remain():
     """Round 3 gave every registered query a hard oracle; a future
     oracle-less registration must be a conscious, red-test decision."""

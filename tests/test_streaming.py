@@ -61,8 +61,8 @@ def test_idempotent_sink_refuses_legacy_append_layout(spark, tmp_path):
     """A pre-idempotent deployment has root-level part files in its
     output dir; writing batch_id=N/ partitions next to them would break
     partition discovery on the NEXT read — the stream must refuse at
-    start with a migration hint instead (idempotent=False keeps the
-    legacy behavior)."""
+    start with a migration hint instead (move the old files under
+    batch_id=-1)."""
     import pytest
 
     from latex_ocr_spark.streaming.sinks import assert_idempotent_layout
@@ -73,7 +73,7 @@ def test_idempotent_sink_refuses_legacy_append_layout(spark, tmp_path):
         "0 AS span_idx", "'x' AS raw_match", "'x' AS latex_norm"
     ).write.mode("overwrite").parquet(legacy)
 
-    with pytest.raises(RuntimeError, match="plain-append"):
+    with pytest.raises(RuntimeError, match="plain-append.*batch_id=-1/ to migrate"):
         assert_idempotent_layout(spark, legacy)
     # fresh and already-partitioned sinks pass
     assert_idempotent_layout(spark, str(tmp_path / "fresh"))

@@ -74,18 +74,13 @@ def test_streaming_decontamination_matches_batch_and_resumes(spark, dirs):
 def test_replayed_batch_never_duplicates_idempotent_output(spark, dirs):
     """The at-least-once fix: a batch that crashes AFTER its sink
     writes (before the checkpoint commit) is replayed on restart.
-    With the default idempotent batch_id-partitioned dynamic
-    overwrite, the replay REPLACES the batch's own output — zero
-    duplicate rows; the legacy append path demonstrably duplicates
-    and needs dedup_on_read."""
+    With the idempotent batch_id-partitioned dynamic overwrite, the
+    replay REPLACES the batch's own output — zero duplicate rows."""
     from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    from latex_ocr_spark.streaming.sinks import dedup_on_read
 
     evalset = _evalset(spark)
     docs = _docs(spark, 0, 30)
 
-    # --- idempotent (default) ---
     inp, rep, cln, ckpt = (f"{dirs}/i_in", f"{dirs}/i_rep",
                            f"{dirs}/i_cln", f"{dirs}/i_ckpt")
     docs.write.mode("append").parquet(inp)
@@ -102,24 +97,3 @@ def test_replayed_batch_never_duplicates_idempotent_output(spark, dirs):
     cleaned = [r.doc_id for r in read_stream_output(spark, cln).collect()]
     assert len(cleaned) == 27 and len(set(cleaned)) == 27  # 0,10,20 dropped
     assert read_stream_output(spark, rep).count() == 3
-
-    # --- legacy append path: same crash duplicates; dedup_on_read
-    # restores the exactly-once view (the documented contract) ---
-    inp2, rep2, cln2, ckpt2 = (f"{dirs}/a_in", f"{dirs}/a_rep",
-                               f"{dirs}/a_cln", f"{dirs}/a_ckpt")
-    docs.write.mode("append").parquet(inp2)
-    q = start_decontamination_stream(
-        spark, inp2, evalset, rep2, cln2, ckpt2,
-        idempotent=False, _fail_batches={0},
-    )
-    with pytest.raises(StreamingQueryException, match="injected crash"):
-        q.awaitTermination(120)
-    q = start_decontamination_stream(
-        spark, inp2, evalset, rep2, cln2, ckpt2, idempotent=False
-    )
-    q.awaitTermination(120)
-    raw = [r.doc_id for r in spark.read.parquet(cln2).collect()]
-    assert len(raw) == 54 and len(set(raw)) == 27  # every row twice
-    deduped = dedup_on_read(spark, cln2, ["doc_id"])
-    assert deduped.count() == 27
-    assert dedup_on_read(spark, rep2, ["corpus_id", "eval_id"]).count() == 3

@@ -97,6 +97,32 @@ def test_in_batch_and_cross_batch_near_dups_dropped(spark, dirs):
     assert idx_ids == expect
 
 
+def test_stream_over_the_size_gates_broadcasts_nothing(
+    spark, dirs, monkeypatch, hinted_broadcasts
+):
+    """Over both dedup size gates (patched to 0) no micro-batch
+    broadcast-hints a batch- or pair-derived frame — the in-batch
+    verify, the history check and the index writes included — and the
+    survivors are those of the hinted stream."""
+    from latex_ocr_spark.operators import dedup as D
+
+    monkeypatch.setattr(D, "_BROADCAST_ROW_LIMIT", 0)
+    monkeypatch.setattr(D, "_UNION_FIND_MAX_PAIRS", 0)
+
+    def run(batch):
+        batch.write.mode("append").parquet(f"{dirs}/in")
+        _run(spark, dirs)
+        got = sorted(r.doc_id for r in read_stream_output(spark, f"{dirs}/out").collect())
+        cachepool.release()
+        return got
+
+    got1, n1 = hinted_broadcasts(lambda: run(_batch1(spark)))
+    got2, n2 = hinted_broadcasts(lambda: run(_batch2(spark)))
+    assert got1 == sorted(range(20))
+    assert got2 == sorted(list(range(20)) + [200 + i for i in range(10)])
+    assert n1 == 0 and n2 == 0, (n1, n2)
+
+
 def test_replayed_batch_keeps_survivors_exactly_once(spark, dirs):
     """THE replay hazard for an index-building stream: a replayed batch
     must neither duplicate its output nor see its own partial index
@@ -870,8 +896,8 @@ def test_catchup_backlog_is_bounded_into_multiple_batches(spark, dirs):
     """The r7 scale fix (r6 verdict #1): an availableNow catch-up over a
     many-file backlog must drain as a SEQUENCE of bounded micro-batches
     (maxFilesPerTrigger), not one giant broadcast batch — and with the
-    batch-side broadcast hints force-dropped (broadcast_threshold_rows=0,
-    the oversized-batch guard path) the accepted set is identical."""
+    batch-side broadcast hints force-dropped (the broadcast gate patched
+    to 0, the oversized-batch guard path) the accepted set is identical."""
     import os
 
     b1 = _batch1(spark)
@@ -889,15 +915,18 @@ def test_catchup_backlog_is_bounded_into_multiple_batches(spark, dirs):
     assert len(parts) >= 3, parts
     cachepool.release()
 
-    # guard path: hints dropped for every batch (threshold 0) — results
+    # guard path: hints dropped for every batch (gate 0) — results
     # identical, so the oversized-batch degrade is behavior-preserving
+    from latex_ocr_spark.operators import dedup as D
+
     b1.repartition(6).write.mode("append").parquet(f"{dirs}2/in")
-    q = start_near_dedup_stream(
-        spark, f"{dirs}2/in", f"{dirs}2/out", f"{dirs}2/index",
-        f"{dirs}2/ckpt", max_files_per_trigger=2,
-        broadcast_threshold_rows=0, **KW,
-    )
-    q.awaitTermination(180)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(D, "_BROADCAST_ROW_LIMIT", 0)
+        q = start_near_dedup_stream(
+            spark, f"{dirs}2/in", f"{dirs}2/out", f"{dirs}2/index",
+            f"{dirs}2/ckpt", max_files_per_trigger=2, **KW,
+        )
+        q.awaitTermination(180)
     got2 = sorted(
         r.doc_id for r in read_stream_output(spark, f"{dirs}2/out").collect()
     )

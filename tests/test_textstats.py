@@ -1,8 +1,6 @@
 """Pins for the text-analysis operators whose registry slots were
 consolidated in round 3: the merged queries must stay equal, column by
-column, to the standalone operators they absorbed, and the pandas-UDF
-language-ID seam must stay equal to the expression form that carries
-the driver oracle."""
+column, to the standalone operators they absorbed."""
 
 import sys
 
@@ -14,17 +12,6 @@ from latex_ocr_spark.operators import textstats as TS
 
 def _docs(spark, sf_small):
     return spark.read.parquet(f"{sf_small}/documents.parquet")
-
-
-def test_lang_id_pandas_matches_expression(spark, sf_small):
-    """The Arrow-batched UDF seam (where a fastText/CLD3 model plugs
-    in) must agree row-for-row with the expression form — the form
-    that carries the driver oracle (text_langid)."""
-    docs = _docs(spark, sf_small)
-    expr = {r["id"]: r["lang_pred"] for r in TS.lang_id(docs).collect()}
-    udf = {r["id"]: r["lang_pred"] for r in TS.lang_id_pandas(docs).collect()}
-    assert expr == udf
-    assert len(expr) == docs.count()
 
 
 def test_text_profile_matches_standalone_operators(spark, sf_small):
@@ -210,7 +197,7 @@ def test_quality_gate_matches_text_profile_thresholds(spark, sf_small):
     )
     assert {r["doc_id"] for r in TS.quality_gate(sdocs, 3, 0.3).collect()} == {"doc-a"}
     assert {r["id"] for r in TS.text_profile(sdocs).collect()} == {"doc-a", "doc-b"}
-    assert {r["id"] for r in TS.lang_id_pandas(sdocs).collect()} == {"doc-a", "doc-b"}
+    assert {r["id"] for r in TS.lang_id(sdocs).collect()} == {"doc-a", "doc-b"}
 
 
 def test_tf_idf_builds_lazily_and_counts_empty_docs_in_n(spark):
