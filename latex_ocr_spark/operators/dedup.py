@@ -380,7 +380,6 @@ def minhash_signatures(
     ngram: int = 1,
     include_size: bool = False,
     include_shingles: bool = False,
-    parallel_hint: bool = True,
 ) -> DataFrame:
     """(id, sig_0..sig_{k-1}) MinHash signature per document — the ONE
     place a signature is computed.
@@ -405,17 +404,17 @@ def minhash_signatures(
     signatures), whose builds raced each other inside one action and
     re-ran the corpus scan + tokenize + hash family once per cache
     layer (guide §1.2 step 1 / §5 caching).
-
-    ``parallel_hint=False`` skips the amplification fan-out for inputs
-    KNOWN to be small (an eval/benchmark set): fanning a few hundred
-    rows across every core is a wasted exchange, and the guard cannot
-    tell small from under-split without an action.
     """
+    src = docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))
+    return _profile(
+        _with_min_parallelism(src), num_hashes, ngram, include_size, include_shingles
+    )
+
+
+def _profile(src, num_hashes, ngram, include_size, include_shingles) -> DataFrame:
+    """The profile kernel over an (id, __text) frame, as it is split."""
     from pyspark.sql import types as T
 
-    src = docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))
-    if parallel_hint:
-        src = _with_min_parallelism(src)
     fields = [T.StructField("id", src.schema["id"].dataType, True)]
     if include_shingles:
         fields.append(
@@ -504,10 +503,9 @@ def lsh_candidate_pairs(
     # singleton buckets (the overwhelming majority) yield no pairs;
     # with a cap, oversized buckets drop exactly as the hot-key
     # anti-join did (every pair of a dropped bucket disappears)
-    max_ids = max_bucket_size if max_bucket_size is not None else None
     buckets = buckets.filter(
         (F.size("_ids") >= 2)
-        & ((F.size("_ids") <= max_ids) if max_ids is not None else F.lit(True))
+        & ((F.size("_ids") <= max_bucket_size) if max_bucket_size is not None else F.lit(True))
     )
     # (a, b) with a < b from the sorted list: element i pairs with
     # every later element — identical pair set to the old
@@ -534,12 +532,12 @@ def lsh_candidate_pairs(
 #: a ~128 MB broadcast: an eighth of the 1 GB ``spark.driver.maxResultSize``
 #: its collect must pass, held once built on the driver and on every
 #: executor.  The id frames it gates (dropped ids, cluster rows,
-#: contaminated ids) are ~24 bytes a row; the near-dup stream gates its
-#: batch on the batch's document count, and the widest batch frame (its
-#: profile as decontaminate's eval side) carries the same per-document
-#: shingle array.  A forced broadcast overrides Spark's own size
-#: checks, so above the gate every such hint drops and AQE decides
-#: from runtime sizes.
+#: contaminated ids) are ~24 bytes a row.  The eval side of
+#: decontamination is gated on its profile's row count (the eval set's,
+#: or the near-dup stream's batch count), and that profile carries the
+#: same per-document shingle array.  A forced broadcast overrides
+#: Spark's own size checks, so above the gate every such hint drops and
+#: AQE decides from runtime sizes.
 _BROADCAST_ROW_LIMIT = 1 << 15
 
 
@@ -645,8 +643,8 @@ def _jaccard_from_arrays(
     "every explicit broadcast is an OOM liability" class (guide §3.1),
     and measured seconds of build+collect at bench scale.  ``arrs_b``
     = b-side array frame when a_id and b_id come from different tables
-    (may carry its own broadcast hint — e.g. a benchmark-small eval
-    set — in which case the second join builds from it instead)."""
+    (may carry its own broadcast hint — the eval profile under the
+    size gate — in which case the second join builds from it instead)."""
     _h = F.broadcast if pairs_small else (lambda df: df)
     a = arrs_a.select(
         F.col("id").alias("a_id"),
@@ -664,8 +662,8 @@ def _jaccard_from_arrays(
         # must stay the probe — hint the pair-sized intermediate
         second = b.join(_h(first), "b_id")
     else:
-        # cross-table: the b side is the caller's (typically tiny,
-        # already-hinted) eval frame — keep it the build side
+        # cross-table: the b side is the caller's eval frame, hinted
+        # by the caller's own gate — leave the choice to it
         second = first.join(b, "b_id")
     n_common = F.size(F.array_intersect("_a_sh", "_b_sh"))
     return (
@@ -971,59 +969,39 @@ def simhash64(
     return hashed.mapInArrow(_vote, schema=out_schema)
 
 
-def cross_lsh_candidates(
-    corpus: DataFrame,
-    evalset: DataFrame,
-    num_hashes: int = 8,
-    band_size: int = 2,
-    ngram: int = 1,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_bucket_size: int | None = None,
-    _corpus_signatures: DataFrame | None = None,
-    _eval_signatures: DataFrame | None = None,
-    eval_is_small: bool = True,
-) -> DataFrame:
-    """(corpus_id, eval_id) candidate pairs ACROSS two corpora: corpus
-    documents sharing any LSH band key with an eval document.
+def _eval_profile(evalset, num_hashes, ngram, text_col, id_col) -> tuple[DataFrame, int]:
+    """(the eval set's profile — arrays, signatures, sizes — materialized,
+    its row count) in one job: the eval side's one build, without the
+    amplification fan-out (its probe would be a job of its own)."""
+    return _materialize(_profile(
+        evalset.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text")),
+        num_hashes, ngram, include_size=True, include_shingles=True,
+    ))
 
-    The cross-table sibling of :func:`lsh_candidate_pairs` — same band
-    family (``_band_keyed``) and the same ``ngram`` default, so a
-    pipeline that dedups in-corpus and then decontaminates applies ONE
-    similarity measure unless it opts out.  Work scales with band-key
-    collisions between the tables — never |corpus| × |evalset|.  The
-    eval side is typically tiny (a benchmark), so its keyed frame
-    broadcasts and the candidate JOIN adds no corpus-side shuffle;
-    signatures are row-wise kernel output, so no shuffle precedes it
-    either.  ``max_bucket_size`` caps degenerate corpus-side buckets
-    exactly as in the self-join path.  Signature frames not handed in
-    are built by :func:`minhash_signatures` (the eval side without the
-    amplification fan-out).
-    """
-    sig_c = (
-        _corpus_signatures
-        if _corpus_signatures is not None
-        else minhash_signatures(corpus, num_hashes, text_col, id_col, ngram)
-    )
-    sig_e = (
-        _eval_signatures
-        if _eval_signatures is not None
-        else minhash_signatures(
-            evalset, num_hashes, text_col, id_col, ngram, parallel_hint=False
-        )
-    )
+
+def _cross_report(
+    arrs_c: DataFrame, sig_c: DataFrame, prof_e: DataFrame, n_eval: int,
+    threshold: float, num_hashes: int, band_size: int, max_bucket_size: int | None,
+) -> tuple[DataFrame, int]:
+    """(report, candidate count): (corpus_id, eval_id, jaccard) for
+    every pair of a corpus profile (``arrs_c`` arrays, ``sig_c``
+    signatures) and an eval profile of ``n_eval`` observed rows whose
+    exact shingle Jaccard clears ``threshold``.
+
+    Candidates share an LSH band key (:func:`_band_keyed`, the
+    self-join path's family), so work scales with cross-table band
+    collisions, never |corpus| × |evalset|; ``max_bucket_size`` caps
+    degenerate corpus-side buckets.  Under the size gate ``n_eval``
+    broadcasts the eval side (keyed frame and profile), so the corpus
+    frames join map-side with zero shuffle; the materialized candidate
+    count gates the first verify join and the cleaning anti-join."""
+    eval_hint = F.broadcast if _is_small(n_eval) else (lambda df: df)
     keyed_c = _band_keyed(sig_c, num_hashes, band_size)
-    keyed_e = _band_keyed(sig_e, num_hashes, band_size)
     if max_bucket_size is not None:
         keyed_c = _drop_hot_keys(keyed_c, ["band_idx", "band_key"], max_bucket_size)
-    c, e = keyed_c.alias("c"), keyed_e.alias("e")
-    # eval side is usually the small side: broadcast it so the
-    # corpus-side keyed frame joins map-side with zero shuffle; an
-    # oversized eval side (``eval_is_small=False``) drops the hint and
-    # lets the planner/AQE decide
-    if eval_is_small:
-        e = F.broadcast(e)
-    return (
+    c = keyed_c.alias("c")
+    e = eval_hint(_band_keyed(prof_e, num_hashes, band_size).alias("e"))
+    cand, n_cand = _materialize(
         c.join(
             e,
             (F.col("c.band_idx") == F.col("e.band_idx"))
@@ -1032,6 +1010,54 @@ def cross_lsh_candidates(
         .select(F.col("c.id").alias("a_id"), F.col("e.id").alias("b_id"))
         .distinct()
     )
+    # the candidates go into the first verify join; the second builds
+    # from the eval-side profile
+    report = cachepool.track(
+        _jaccard_from_arrays(
+            cand, arrs_c, threshold, arrs_b=eval_hint(prof_e),
+            pairs_small=_is_small(n_cand),
+        ).select(
+            F.col("a_id").alias("corpus_id"),
+            F.col("b_id").alias("eval_id"),
+            "jaccard",
+        )
+    )  # consuming report AND cleaned must not re-run the LSH+verify chain
+    return report, n_cand
+
+
+def _decontaminate_against(
+    corpus, prof_e, n_eval, threshold, num_hashes, band_size, ngram, text_col,
+    id_col, max_bucket_size, corpus_arrs=None, corpus_signatures=None,
+):
+    """:func:`decontaminate` against an :func:`_eval_profile` of
+    ``n_eval`` rows: a caller checking many corpora profiles it once."""
+    # ONE cached profile (arrays + signatures + size) for the corpus:
+    # two stacked caches would each re-run the scan + hash family for
+    # their own build (see lsh_verified_pairs)
+    arrs_c = (
+        corpus_arrs
+        if corpus_arrs is not None
+        else cachepool.track(
+            minhash_signatures(
+                corpus, num_hashes, text_col, id_col, ngram,
+                include_size=True, include_shingles=True,
+            )
+        )
+    )
+    sig_c = corpus_signatures if corpus_signatures is not None else arrs_c
+    report, n_cand = _cross_report(
+        arrs_c, sig_c, prof_e, n_eval, threshold, num_hashes, band_size,
+        max_bucket_size,
+    )
+    contaminated = report.select(F.col("corpus_id").alias(id_col)).distinct()
+    # under the gate cleaning the corpus is a map-side anti-join with
+    # zero corpus shuffle; above it (boilerplate overlapping a broad
+    # eval suite) AQE decides
+    cleaned = corpus.join(
+        F.broadcast(contaminated) if _is_small(n_cand) else contaminated,
+        id_col, "left_anti",
+    )
+    return report, cleaned
 
 
 def decontaminate(
@@ -1045,7 +1071,6 @@ def decontaminate(
     id_col: str = "doc_id",
     max_bucket_size: int | None = None,
     _corpus_signatures: DataFrame | None = None,
-    evalset_is_small: bool = True,
     _corpus_arrs: DataFrame | None = None,
 ):
     """Benchmark decontamination: find (and enable dropping of) corpus
@@ -1057,75 +1082,25 @@ def decontaminate(
     - ``report`` — (corpus_id, eval_id, jaccard) for every corpus doc
       whose exact n-gram Jaccard against an eval doc clears
       ``threshold`` (LSH candidates → exact verify, same plan shape as
-      :func:`lsh_verified_pairs` but cross-table);
+      :func:`lsh_verified_pairs` but cross-table, :func:`_cross_report`);
     - ``cleaned`` — the corpus with those documents anti-joined out.
 
-    Scale shape: the eval set is small (benchmarks are), so its
-    profile broadcasts; the corpus side is touched by exactly one scan
-    + one profile pass (shingle sets stay row-wise — no explode), and
-    the quadratic step is bounded by cross-table band collisions.
-    ``_corpus_arrs`` lets a composed pipeline (curate_corpus, the
-    streaming survivor index) hand in the (id, shingles) profile its
-    near-dup stage already built (survivor-filtered) — the corpus is
-    then never re-tokenized here; ``_corpus_signatures`` (id, sig_*)
-    defaults to it (per-doc signatures are unaffected by dropping
-    OTHER documents, so a survivor-filtered frame is exact).
-    ``max_bucket_size`` caps degenerate corpus-side band buckets
-    exactly as in the self-join path.  ``evalset_is_small`` (default
-    True — benchmarks are) skips the eval-side amplification fan-out
-    and broadcast-hints the eval-side probes; pass False when
-    decontaminating against a corpus-sized held-out set so the guard
-    and join planner run normally.  The cross candidates are
-    materialized once (:func:`_materialize`); their count gates the
-    first verify join's hint and the cleaning anti-join's, since every
-    contaminated id is a candidate's corpus side.
+    Scale shape: the eval set is profiled, materialized and counted in
+    one job (:func:`_eval_profile`), and that count decides whether its
+    side broadcasts; the corpus side is touched by exactly one scan +
+    one profile pass (shingle sets stay row-wise — no explode), and the
+    quadratic step is bounded by cross-table band collisions.
+    ``_corpus_arrs`` lets a composed pipeline (curate_corpus) hand in
+    the (id, shingles) profile its near-dup stage already built
+    (survivor-filtered) — the corpus is then never re-tokenized here;
+    ``_corpus_signatures`` (id, sig_*) defaults to it (per-doc
+    signatures are unaffected by dropping OTHER documents, so a
+    survivor-filtered frame is exact).  ``max_bucket_size`` caps
+    degenerate corpus-side band buckets exactly as in the self-join
+    path.
     """
-    # ONE cached profile (arrays + signatures + size) per side: two
-    # stacked caches would each re-run the scan + hash family for their
-    # own build (see lsh_verified_pairs)
-    arrs_c = (
-        _corpus_arrs
-        if _corpus_arrs is not None
-        else cachepool.track(
-            minhash_signatures(
-                corpus, num_hashes, text_col, id_col, ngram,
-                include_size=True, include_shingles=True,
-            )
-        )
+    return _decontaminate_against(
+        corpus, *_eval_profile(evalset, num_hashes, ngram, text_col, id_col),
+        threshold, num_hashes, band_size, ngram, text_col, id_col,
+        max_bucket_size, _corpus_arrs, _corpus_signatures,
     )
-    sig_c = _corpus_signatures if _corpus_signatures is not None else arrs_c
-    prof_e = cachepool.track(
-        minhash_signatures(
-            evalset, num_hashes, text_col, id_col, ngram,
-            include_size=True, include_shingles=True,
-            parallel_hint=not evalset_is_small,
-        )
-    )
-    cand, n_cand = _materialize(cross_lsh_candidates(
-        corpus, evalset, num_hashes, band_size, ngram, text_col, id_col,
-        max_bucket_size=max_bucket_size,
-        _corpus_signatures=sig_c, _eval_signatures=prof_e,
-        eval_is_small=evalset_is_small,
-    ))
-    small = _is_small(n_cand)
-    # the candidates go into the first verify join; the second builds
-    # from the eval-side profile
-    report = cachepool.track(
-        _jaccard_from_arrays(
-            cand, arrs_c, threshold,
-            arrs_b=F.broadcast(prof_e) if evalset_is_small else prof_e,
-            pairs_small=small,
-        ).select(
-            F.col("a_id").alias("corpus_id"),
-            F.col("b_id").alias("eval_id"),
-            "jaccard",
-        )
-    )  # consuming report AND cleaned must not re-run the LSH+verify chain
-    contaminated = report.select(F.col("corpus_id").alias(id_col)).distinct()
-    # under the gate cleaning the corpus is a map-side anti-join with
-    # zero corpus shuffle; above it (boilerplate overlapping a broad
-    # eval suite) AQE decides
-    cleaned = corpus.join(
-        F.broadcast(contaminated) if small else contaminated, id_col, "left_anti"
-    )
-    return report, cleaned

@@ -13,9 +13,10 @@ batch operator applied per micro-batch inside ``foreachBatch``
           → contamination report sink
           → cleaned documents sink
 
-The eval set's profile (shingle arrays + signatures) is small
-(benchmarks are) and broadcast inside every micro-batch join, so each
-batch costs one scan of its own files plus the broadcast probes.
+The eval set is profiled, materialized and counted once per query,
+before it starts; its count gates the eval side's broadcast (the dedup
+size gate), and each batch costs one scan and one profile pass of its
+own files plus the joins.
 
 Delivery semantics: ``availableNow`` + checkpoint give exactly-once
 *file progress* (a fully processed batch is never re-read), and the
@@ -57,20 +58,24 @@ def start_decontamination_stream(
 ):
     """Continuously decontaminate documents as files land.
 
-    ``evalset`` is a static (doc_id, text) frame; each micro-batch is
-    checked independently against it and split into a contamination
-    report (corpus_id, eval_id, jaccard) and a cleaned stream.
+    ``evalset`` is a static (doc_id, text) frame, profiled once here;
+    each micro-batch is checked independently against it and split
+    into a contamination report (corpus_id, eval_id, jaccard) and a
+    cleaned stream.
 
     ``_fail_batches`` injects a crash AFTER the named batches' sink
     writes but before the checkpoint commit — the test hook for the
     replayed-batch window the idempotent sinks exist for.
     """
     from latex_ocr_spark import cachepool
-    from latex_ocr_spark.operators.dedup import decontaminate
+    from latex_ocr_spark.operators import dedup as D
     from latex_ocr_spark.streaming.sinks import assert_idempotent_layout
 
     assert_idempotent_layout(spark, report_dir)
     assert_idempotent_layout(spark, clean_dir)
+    # decontaminate's default similarity measure
+    num_hashes, band_size = 8, 2
+    prof_e, n_eval = D._eval_profile(evalset, num_hashes, ngram, "text", "doc_id")
 
     stream = (
         spark.readStream.schema(DOCS_STREAM_SCHEMA).format("parquet").load(input_dir)
@@ -81,8 +86,9 @@ def start_decontamination_stream(
         # thread, and a global sweep here would unpersist frames a
         # concurrently running batch query or second stream still needs
         with cachepool.scoped():
-            report, cleaned = decontaminate(
-                batch_df, evalset, threshold=threshold, ngram=ngram
+            report, cleaned = D._decontaminate_against(
+                batch_df, prof_e, n_eval, threshold, num_hashes, band_size,
+                ngram, text_col="text", id_col="doc_id", max_bucket_size=None,
             )
             write_batch_idempotent(report, batch_id, report_dir)
             write_batch_idempotent(cleaned, batch_id, clean_dir)

@@ -15,14 +15,16 @@ incremental-ingest pattern production dedup systems use:
 Per micro-batch (inside ``foreachBatch``, single code path with the
 oracle-checked batch operators):
 
-1. in-batch near-dedup — ``lsh_verified_pairs`` → ``duplicate_clusters``
-   → keep each cluster's canonical (min id);
-2. history check — ``decontaminate`` with the BATCH as the (small,
-   broadcast) eval side and the history index tables injected as the
-   corpus profile: the index is scanned, never re-shingled, and the
-   per-batch quadratic work is bounded by cross-table band collisions.
-   Exact shingle-Jaccard verify over the stored arrays, identical
-   measure (and code path) to the batch pipeline;
+1. in-batch near-dedup — the curation funnel's stages
+   (``plans/curate.py``): ``_near_pairs`` (the batch's one profile)
+   → ``dedup._materialize`` → ``dedup._components`` →
+   ``_near_survivors`` keeps each cluster's canonical (min id);
+2. history check — decontamination's core (``dedup._cross_report``)
+   with that profile as the eval side and the history index tables as
+   the corpus profile, then an anti-join of the matches from the
+   survivors: nothing is profiled twice, and the per-batch quadratic
+   work is bounded by cross-table band collisions.  Exact shingle-Jaccard verify over the stored
+   arrays, identical measure (and code path) to the batch pipeline;
 3. survivors append to the output AND to the index — both as
    batch_id-partitioned dynamic overwrites (streaming/sinks.py), so a
    replayed batch replaces its own output/index partitions:
@@ -37,9 +39,10 @@ chain-distant members, because each doc is compared against
 *survivors* only — the standard incremental-dedup semantics.
 
 Scale notes: index reads are pruned columnar scans growing linearly
-with accepted data; the band join broadcasts only the batch side.  At
-very large history, compact the index offline (bucket by id) without
-changing this code path — the frames are injected by path.
+with accepted data; the band join broadcasts only the batch side, and
+only under the size gate.  At very large history, compact the index
+offline (bucket by id) without changing this code path — the frames
+are injected by path.
 """
 
 from __future__ import annotations
@@ -156,20 +159,21 @@ def start_near_dedup_stream(
     a bound, an ``availableNow`` catch-up over a large backlog — the
     documented cron shape, or simply the first run over an existing
     corpus — puts EVERY pending file into ONE micro-batch, which is
-    then shingle-amplified and broadcast as the history check's eval
-    side: at corpus scale that one batch is an OOM.  The default (64
-    files/trigger) keeps catch-up incremental; pass ``None`` for both
-    to restore the unbounded reader.  ``availableNow`` still drains the
+    then shingle-amplified and, over the size gate, joined against the
+    whole history by shuffle.  The default (64 files/trigger) keeps
+    catch-up incremental; pass ``None`` for both to restore the
+    unbounded reader.  ``availableNow`` still drains the
     whole backlog — as a sequence of bounded batches.
 
-    The batch-side frames (in-batch non-canonicals, duplicate-of-history
-    ids, survivor ids, and the batch as decontaminate's eval side) are
+    The batch-side frames (duplicate-of-history ids, survivor ids, and
+    the batch profile as the history check's eval side) are
     broadcast-hinted only while the batch's counted documents pass the
     dedup size gate (``dedup._is_small``); an oversized batch
     (misconfigured trigger bound, one giant input file) drops the hints
     and lets AQE decide — a forced broadcast overrides Spark's size
     checks and OOMs the executors.  The pair-derived frames inside the
-    batch follow their own observed counts the same way.
+    batch (the in-batch non-canonicals among them) follow the observed
+    pair count the same way.
 
     ``_fail_batches`` injects a crash after the named batches' writes,
     before the checkpoint commit — the replay window the idempotent
@@ -223,6 +227,7 @@ def _start_near_dedup_stream_fenced(
 
     from latex_ocr_spark import cachepool
     from latex_ocr_spark.operators import dedup as D
+    from latex_ocr_spark.plans import curate as C
 
     sh_path = os.path.join(index_dir, "shingles")
     sig_path = os.path.join(index_dir, "signatures")
@@ -322,45 +327,34 @@ def _start_near_dedup_stream_fenced(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         with cachepool.scoped():
             batch = cachepool.track(batch_df.select("doc_id", "text"))
-            # one cheap count per micro-batch decides whether the
-            # batch-side frames stay broadcast-hinted; an oversized
-            # batch drops the hints (AQE still broadcasts at runtime
-            # when a frame turns out small)
-            batch_is_small = D._is_small(batch.count())
-            _maybe_bcast = F.broadcast if batch_is_small else (lambda df: df)
+            # one cheap count per micro-batch bounds every batch-derived
+            # frame; an oversized batch drops their hints (AQE still
+            # broadcasts at runtime when a frame turns out small)
+            n_batch = batch.count()
+            _maybe_bcast = F.broadcast if D._is_small(n_batch) else (lambda df: df)
 
-            # 1. in-batch near-dedup (cluster canonical survives).  ONE
-            # cached per-batch profile (shingles + signatures + size)
-            # feeds the pair verify AND both index writes, so the batch
-            # is tokenized once; two stacked caches would each re-run
-            # the batch tokenize + hash family for their own build (see
-            # lsh_verified_pairs)
-            arrs_b = cachepool.track(
-                D.minhash_signatures(
-                    batch, num_hashes, ngram=ngram,
-                    include_size=True, include_shingles=True,
-                )
+            # 1. in-batch near-dedup by the funnel's stages (cluster
+            # canonical survives): ONE cached batch profile feeds the
+            # pair verify, the history check and both index writes
+            raw_pairs, profile = C._near_pairs(
+                batch, near_dup_method="lsh", dedup_threshold=threshold,
+                ngram=ngram, num_hashes=num_hashes, band_size=band_size,
+                max_bucket_size=max_bucket_size, max_df=None,
+                id_col="doc_id", text_col="text",
             )
-            # zero-cost projections over the same cache: the two
-            # on-disk index tables (sig_b is written wholesale below)
-            sh_b = arrs_b.select("id", "shingles")
-            sig_b = arrs_b.drop("shingles")
-            pairs = D.lsh_verified_pairs(
-                batch, threshold=threshold, num_hashes=num_hashes,
-                band_size=band_size, ngram=ngram,
-                max_bucket_size=max_bucket_size,
-                _arrs=arrs_b, _signatures=sig_b,
+            pairs, n_pairs = D._materialize(raw_pairs)
+            _dropped, survivors = C._near_survivors(
+                batch, D._components(pairs, n_pairs), id_col="doc_id",
+                n_rows=n_pairs,
             )
-            non_canonical = (
-                D.duplicate_clusters(pairs)
-                .filter(F.col("id") != F.col("cluster_id"))
-                .select(F.col("id").alias("doc_id"))
-            )
-            survivors = batch.join(_maybe_bcast(non_canonical), "doc_id", "left_anti")
 
-            # 2. all-history check: batch (small) broadcasts as the
-            # eval side; the index tables ARE the corpus profile — the
-            # history is scanned, never re-shingled
+            # 2. all-history check: the cached batch profile is the eval
+            # side, whole — whether a document matches history does not
+            # depend on the other batch documents, so the anti-join
+            # below keeps exactly the survivors it would keep with only
+            # the survivors' rows, and filtering them first would cost a
+            # join (two broadcast jobs) per batch; the index tables ARE
+            # the corpus profile — never re-shingled
             if _index_exists(spark, sig_path):
                 # EXCLUDE this batch's own partitions: a replayed batch
                 # must not see its previous (partial) attempt's index
@@ -379,25 +373,14 @@ def _start_near_dedup_stream_fenced(
                 hist_sig = spark.read.parquet(sig_path).filter(
                     F.col("batch_id") != batch_id
                 ).drop("batch_id")
-                # corpus arg only seeds the (unused, lazy) cleaned
-                # frame once arrays+signatures are injected
-                hist_docs = hist_sig.select(F.col("id").alias("doc_id"))
-                surv_small = cachepool.track(survivors)
-                report, _unused_cleaned = D.decontaminate(
-                    hist_docs.withColumn("text", F.lit(None).cast("string")),
-                    surv_small,
-                    threshold=threshold, num_hashes=num_hashes,
-                    band_size=band_size, ngram=ngram,
-                    max_bucket_size=max_bucket_size,
-                    _corpus_arrs=hist_sh, _corpus_signatures=hist_sig,
-                    # the batch IS the eval side here — gate its
-                    # broadcast on the per-batch size check
-                    evalset_is_small=batch_is_small,
+                report, _n_cand = D._cross_report(
+                    hist_sh, hist_sig, profile, n_batch, threshold,
+                    num_hashes, band_size, max_bucket_size,
                 )
                 dup_of_history = report.select(
                     F.col("eval_id").alias("doc_id")
                 ).distinct()
-                survivors = surv_small.join(
+                survivors = survivors.join(
                     _maybe_bcast(dup_of_history), "doc_id", "left_anti"
                 )
 
@@ -408,11 +391,13 @@ def _start_near_dedup_stream_fenced(
             # by batch_id so a replay REPLACES its own partitions
             write_batch_idempotent(survivors, batch_id, output_dir)
             write_batch_idempotent(
-                sh_b.join(_maybe_bcast(surv_ids), "id", "left_semi"),
+                profile.select("id", "shingles").join(
+                    _maybe_bcast(surv_ids), "id", "left_semi"
+                ),
                 batch_id, sh_path,
             )
             write_batch_idempotent(
-                sig_b.join(_maybe_bcast(surv_ids), "id", "left_semi"),
+                profile.drop("shingles").join(_maybe_bcast(surv_ids), "id", "left_semi"),
                 batch_id, sig_path,
             )
             if _fail_batches and batch_id in _fail_batches:

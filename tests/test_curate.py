@@ -282,20 +282,21 @@ def test_curated_output_writes_bucketed_for_colocated_joins(spark):
 def test_funnel_explodes_corpus_shingles_exactly_once(spark, monkeypatch):
     """The round-4 single-pass guarantee: one funnel run builds corpus
     shingles ONCE (the near-dup stage's profile, survivor-filtered, is
-    reused by decontamination).  minhash_signatures is called exactly
-    twice — once for the corpus, once for the (small) eval set — and
-    the corpus-sized call happens exactly once."""
+    reused by decontamination).  The profile kernel (``dedup._profile``,
+    behind ``minhash_signatures`` and the eval-side ``_eval_profile``)
+    is built exactly twice — once for the corpus, once for the (small)
+    eval set — and the corpus-sized build happens exactly once."""
     from latex_ocr_spark.operators import dedup as D
     from latex_ocr_spark.plans import curate as C
 
     calls = []
-    real = D.minhash_signatures
+    real = D._profile
 
     def counting(docs, *args, **kwargs):
         calls.append(docs)
         return real(docs, *args, **kwargs)
 
-    monkeypatch.setattr(D, "minhash_signatures", counting)
+    monkeypatch.setattr(D, "_profile", counting)
     docs = _fixture(spark)
     evalset = spark.createDataFrame(
         [(-1, "alpha beta gamma delta epsilon zeta eta theta")],
@@ -423,18 +424,18 @@ def test_funnel_deferred_mode_rides_the_callers_action(spark):
 def test_lsh_funnel_computes_signatures_exactly_once(spark, monkeypatch):
     """The LSH funnel pays the corpus signature groupBy ONCE: the
     near-dup stage's (tracked) signature frame, survivor-filtered, is
-    reused by decontamination — exactly two minhash_signatures calls
-    per run (corpus + the small eval side)."""
+    reused by decontamination — exactly two profile-kernel builds
+    (``dedup._profile``) per run (corpus + the small eval side)."""
     from latex_ocr_spark.operators import dedup as D
 
     calls = []
-    real = D.minhash_signatures
+    real = D._profile
 
     def counting(docs, *args, **kwargs):
-        calls.append((docs, kwargs.get("_shingles")))
+        calls.append(docs)
         return real(docs, *args, **kwargs)
 
-    monkeypatch.setattr(D, "minhash_signatures", counting)
+    monkeypatch.setattr(D, "_profile", counting)
     rows = [(i, " ".join(f"mk{i}_{j}" for j in range(16))) for i in range(10)]
     rows.append((300, rows[1][1].replace("mk1_3", "zz3", 1)))
     docs = spark.createDataFrame(rows, "doc_id long, text string")

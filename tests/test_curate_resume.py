@@ -417,20 +417,24 @@ def test_funnel_over_the_size_gates_matches_and_broadcasts_nothing(
     spark, tmp_path, monkeypatch, hinted_broadcasts, runner
 ):
     """Over both dedup size gates (patched to 0) neither runner
-    broadcast-hints a frame derived from pairs, and the documents,
-    funnel and clusters equal the hinted run's."""
+    broadcast-hints a frame derived from pairs or from the eval set,
+    and the documents, funnel, clusters and contamination report equal
+    the hinted run's."""
     from latex_ocr_spark.operators import dedup as D
 
-    docs = _fixture(spark)
+    docs, evalset = _fixture(spark), _evalset(spark)
     kw = dict(KW, near_dup_method="lsh")
 
     def run(tag):
         if runner == "in_memory":
-            res = curate_corpus(docs, **kw)
+            res = curate_corpus(docs, evalset, **kw)
         else:
-            res = curate_corpus_resumable(spark, docs, str(tmp_path / tag), **kw)
+            res = curate_corpus_resumable(
+                spark, docs, str(tmp_path / tag), evalset, **kw
+            )
         out = (res.funnel, _table(res.documents),
-               sorted(map(tuple, res.clusters.collect())))
+               sorted(map(tuple, res.clusters.collect())),
+               sorted(map(tuple, res.contamination_report.collect())))
         cachepool.release()
         return out
 
@@ -438,6 +442,8 @@ def test_funnel_over_the_size_gates_matches_and_broadcasts_nothing(
     monkeypatch.setattr(D, "_BROADCAST_ROW_LIMIT", 0)
     monkeypatch.setattr(D, "_UNION_FIND_MAX_PAIRS", 0)
     unhinted, n_unhinted = hinted_broadcasts(lambda: run("unhinted"))
-    assert dict((s, o) for s, _i, o in hinted[0])["near_dup_clusters"] == 22
+    counts = dict((s, o) for s, _i, o in hinted[0])
+    assert counts["near_dup_clusters"] == 22 and counts["decontaminate"] == 21
+    assert hinted[3] == [(400, -1, 1.0)]
     assert unhinted == hinted
     assert n_hinted > 0 and n_unhinted == 0, (n_hinted, n_unhinted)

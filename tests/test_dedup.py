@@ -207,11 +207,13 @@ def test_decontaminate_drops_contaminated_and_keeps_rest(spark):
     cachepool.release()
 
 
-def test_cross_candidates_broadcast_eval_side(spark):
-    """Scale shape: the eval side must broadcast — the corpus-side
-    keyed frame joins map-side, no shuffle on the corpus for the
-    candidate step."""
-    from latex_ocr_spark.operators.dedup import cross_lsh_candidates
+def test_cross_candidates_broadcast_eval_side(spark, monkeypatch):
+    """Scale shape: under the size gate the eval side must broadcast —
+    the corpus-side keyed frame joins map-side, no shuffle on the
+    corpus for the candidate step.  Read from the candidate frame
+    decontamination materializes."""
+    from latex_ocr_spark import cachepool
+    from latex_ocr_spark.operators import dedup as D
 
     corpus = spark.range(200).selectExpr(
         "id AS doc_id",
@@ -223,11 +225,20 @@ def test_cross_candidates_broadcast_eval_side(spark):
         "concat('tok', id % 37, ' tok', (id+1) % 37, ' tok', (id+2) % 37, "
         "' tok', (id+3) % 37) AS text",
     )
-    cand = cross_lsh_candidates(corpus, evalset, ngram=3)
+    seen, real = [], D._materialize
+
+    def capturing(df):
+        seen.append(df)
+        return real(df)
+
+    monkeypatch.setattr(D, "_materialize", capturing)
+    D.decontaminate(corpus, evalset, ngram=3)
+    (cand,) = [df for df in seen if df.columns == ["a_id", "b_id"]]
     plan = cand._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     got = {(r.a_id, r.b_id) for r in cand.collect()}
     assert (0, -1) in got and (1, -2) in got  # the planted copies collide
+    cachepool.release()
 
 
 def test_decontaminate_is_idempotent(spark):
@@ -388,8 +399,10 @@ def test_fused_profile_kernel_parity_with_jvm_path(spark):
     whitespace semantics (\\s is the ASCII six, so NBSP/\\x1c must NOT
     split), first-occurrence shingle order, empty/null/short-text
     drops, and the (id, [shingles,] sig_*, [n_shingles]) schema — with
-    and without the amplification fan-out (``parallel_hint``)."""
+    the amplification fan-out (``minhash_signatures``) and without it
+    (the eval-side builder ``_eval_profile``, which also counts)."""
     from latex_ocr_spark.operators.dedup import (
+        _eval_profile,
         doc_shingle_arrays,
         minhash_signatures,
     )
@@ -406,14 +419,18 @@ def test_fused_profile_kernel_parity_with_jvm_path(spark):
         ("i", "x \x1c y \x1d z w q"),  # \x1c/\x1d not Java \s
     ]
     docs = spark.createDataFrame(rows, "doc_id string, text string")
-    for ngram, k, size, shingles, hint in [
+    for ngram, k, size, shingles, fan_out in [
         (3, 8, True, True, True), (1, 4, True, False, True),
         (3, 8, True, True, False),
     ]:
-        fused = minhash_signatures(
-            docs, k, "text", "doc_id", ngram,
-            include_size=size, include_shingles=shingles, parallel_hint=hint,
-        )
+        if fan_out:
+            fused = minhash_signatures(
+                docs, k, "text", "doc_id", ngram,
+                include_size=size, include_shingles=shingles,
+            )
+        else:
+            fused, n = _eval_profile(docs, k, ngram, "text", "doc_id")
+            assert n == fused.count() > 0
         arrs = doc_shingle_arrays(docs, "text", "doc_id", ngram)
         jvm = _jvm_minhash_reference(arrs, k, size, shingles)
         assert fused.columns == jvm.columns
@@ -531,10 +548,10 @@ def _near_dup_corpus(spark):
 def test_pair_count_gate_drops_every_pair_derived_broadcast(
     spark, monkeypatch, hinted_broadcasts
 ):
-    """Under the size gate the verify joins and the cleaning anti-join
-    are broadcast-hinted; over it (the gate patched to 0) no broadcast
-    is left, and the verified pairs, the contamination report and the
-    cleaned corpus are unchanged."""
+    """Under the size gate the verify joins, decontamination's eval
+    side and the cleaning anti-join are broadcast-hinted; over it (the
+    gate patched to 0) no broadcast is left, and the verified pairs,
+    the contamination report and the cleaned corpus are unchanged."""
     from latex_ocr_spark import cachepool
     from latex_ocr_spark.operators import dedup as D
 
@@ -545,7 +562,7 @@ def test_pair_count_gate_drops_every_pair_derived_broadcast(
 
     def run():
         pairs = sorted(map(tuple, D.lsh_verified_pairs(docs).collect()))
-        report, cleaned = D.decontaminate(docs, evalset, evalset_is_small=False)
+        report, cleaned = D.decontaminate(docs, evalset)
         out = (pairs, sorted(map(tuple, report.collect())),
                sorted(r.doc_id for r in cleaned.collect()))
         cachepool.release()

@@ -97,3 +97,74 @@ def test_replayed_batch_never_duplicates_idempotent_output(spark, dirs):
     cleaned = [r.doc_id for r in read_stream_output(spark, cln).collect()]
     assert len(cleaned) == 27 and len(set(cleaned)) == 27  # 0,10,20 dropped
     assert read_stream_output(spark, rep).count() == 3
+
+
+def _one_query_over_two_batches(spark, dirs, evalset):
+    """Run one decontamination query over two micro-batches (files
+    landing between them); returns the report and cleaned rows and the
+    number of batches written."""
+    import os
+
+    inp, rep, cln, ckpt = (f"{dirs}/in", f"{dirs}/rep", f"{dirs}/cln",
+                           f"{dirs}/ckpt")
+    _docs(spark, 0, 30).write.mode("append").parquet(inp)
+    q = start_decontamination_stream(
+        spark, inp, evalset, rep, cln, ckpt, available_now=False
+    )
+    try:
+        q.processAllAvailable()
+        _docs(spark, 30, 50).write.mode("append").parquet(inp)
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    n_batches = sum(d.startswith("batch_id=") for d in os.listdir(cln))
+    return (
+        sorted(map(tuple, read_stream_output(spark, rep).collect())),
+        sorted(r.doc_id for r in read_stream_output(spark, cln).collect()),
+    ), n_batches
+
+
+def test_eval_set_is_profiled_once_per_query(spark, dirs, monkeypatch):
+    """The static eval set is profiled once when the query starts, not
+    once per micro-batch: over two batches the profile kernel is built
+    three times (the eval set, then each batch's documents)."""
+    from latex_ocr_spark import cachepool
+    from latex_ocr_spark.operators import dedup as D
+
+    built, real = [], D._profile_kernel
+
+    def counting(*a, **kw):
+        built.append(a)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(D, "_profile_kernel", counting)
+    (report, cleaned), n_batches = _one_query_over_two_batches(
+        spark, dirs, _evalset(spark)
+    )
+    assert n_batches == 2
+    assert len(built) == n_batches + 1, built
+    assert [r[0] for r in report] == [0, 10, 20, 30, 40]
+    assert len(cleaned) == 45
+    cachepool.release()
+
+
+def test_stream_over_the_size_gate_broadcasts_nothing(
+    spark, dirs, monkeypatch, hinted_broadcasts
+):
+    """Over the size gate (patched to 0) no micro-batch broadcast-hints
+    the eval side, the candidates or the contaminated ids, and the
+    report and cleaned rows equal the hinted query's."""
+    from latex_ocr_spark import cachepool
+    from latex_ocr_spark.operators import dedup as D
+
+    def run(tag):
+        out = _one_query_over_two_batches(spark, f"{dirs}/{tag}", _evalset(spark))
+        cachepool.release()
+        return out
+
+    hinted, n_hinted = hinted_broadcasts(lambda: run("hinted"))
+    monkeypatch.setattr(D, "_BROADCAST_ROW_LIMIT", 0)
+    unhinted, n_unhinted = hinted_broadcasts(lambda: run("unhinted"))
+    assert len(hinted[0][0]) == 5 and hinted[1] == 2
+    assert unhinted == hinted
+    assert n_hinted > 0 and n_unhinted == 0, (n_hinted, n_unhinted)

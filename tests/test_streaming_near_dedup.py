@@ -123,6 +123,51 @@ def test_stream_over_the_size_gates_broadcasts_nothing(
     assert n1 == 0 and n2 == 0, (n1, n2)
 
 
+def test_batch_with_history_is_profiled_once(spark, dirs, monkeypatch):
+    """A micro-batch that runs the history check profiles the batch
+    once: that one profile is the check's eval side.  The survivors and
+    the batch's index rows are unchanged — exactly the batch operator's
+    profile of the survivors."""
+    from latex_ocr_spark.operators import dedup as D
+
+    _batch1(spark).write.mode("append").parquet(f"{dirs}/in")
+    _run(spark, dirs)
+    cachepool.release()
+
+    calls, real = [], D.minhash_signatures
+
+    def counting(*a, **kw):
+        calls.append(kw)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(D, "minhash_signatures", counting)
+    b2 = _batch2(spark)
+    b2.write.mode("append").parquet(f"{dirs}/in")
+    _run(spark, dirs)
+    assert len(calls) == 1, calls
+    monkeypatch.undo()
+
+    new_ids = [200 + i for i in range(10)]
+    got = sorted(r.doc_id for r in read_stream_output(spark, f"{dirs}/out").collect())
+    assert got == sorted(list(range(20)) + new_ids)
+    last = F.col("batch_id") == spark.read.parquet(f"{dirs}/index/signatures").agg(
+        F.max("batch_id")
+    ).first()[0]
+    want = D.minhash_signatures(
+        b2.filter(F.col("doc_id").isin(new_ids)), KW["num_hashes"],
+        ngram=KW["ngram"], include_size=True, include_shingles=True,
+    ).collect()
+    sig = spark.read.parquet(f"{dirs}/index/signatures").filter(last).drop("batch_id")
+    sh = spark.read.parquet(f"{dirs}/index/shingles").filter(last).drop("batch_id")
+    assert sorted(map(tuple, sig.collect())) == sorted(
+        tuple(r[c] for c in sig.columns) for r in want
+    )
+    assert sorted((r.id, tuple(r.shingles)) for r in sh.collect()) == sorted(
+        (r.id, tuple(r.shingles)) for r in want
+    )
+    cachepool.release()
+
+
 def test_replayed_batch_keeps_survivors_exactly_once(spark, dirs):
     """THE replay hazard for an index-building stream: a replayed batch
     must neither duplicate its output nor see its own partial index
