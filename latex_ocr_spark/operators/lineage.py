@@ -26,7 +26,7 @@ import time
 from typing import Optional
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from latex_ocr_spark.session import is_missing_path
@@ -45,23 +45,31 @@ def completed_units(spark: SparkSession, lineage_path: str) -> DataFrame:
     # probe via Spark, not os.path — the lineage table may live on
     # HDFS/S3 where the driver's local filesystem says nothing
     try:
-        return spark.read.parquet(lineage_path).select("work_key").distinct()
+        # declared, not inferred: a dir holding only the lease's lock
+        # file reads as empty, with no schema-inference job that fails
+        return spark.read.schema("work_key int").parquet(lineage_path).distinct()
     except AnalysisException as e:
-        # "no runs yet" is a missing dir or one holding only the lease's
-        # lock file; any other failure (a corrupt or unreadable file)
-        # must not read as that: it would silently re-extract every
-        # unit and append a second lineage row for each
-        if not is_missing_path(e, "UNABLE_TO_INFER_SCHEMA"):
+        # "no runs yet" is a missing dir; any other failure (a corrupt
+        # or unreadable file) must not read as that: it would silently
+        # re-extract every unit and append a second lineage row for each
+        if not is_missing_path(e):
             raise
         return spark.range(0).select(F.col("id").cast("int").alias("work_key"))
+
+
+def _done_keys(spark: SparkSession, lineage_path: str) -> list:
+    return [r.work_key for r in completed_units(spark, lineage_path).collect()]
+
+
+def _without(transcripts: DataFrame, done: list, n_units: int) -> DataFrame:
+    keyed = with_work_key(transcripts, n_units)
+    return keyed.filter(~F.col("work_key").isin(done)) if done else keyed
 
 
 def pending_work(
     transcripts: DataFrame, spark: SparkSession, lineage_path: str, n_units: int = DEFAULT_UNITS
 ) -> DataFrame:
-    keyed = with_work_key(transcripts, n_units)
-    done = [r.work_key for r in completed_units(spark, lineage_path).collect()]
-    return keyed.filter(~F.col("work_key").isin(done)) if done else keyed
+    return _without(transcripts, _done_keys(spark, lineage_path), n_units)
 
 
 def _unit_checksum(rows: str):
@@ -87,6 +95,8 @@ def run_resumable_extract(
     the output commit of the listed units — test hook for the
     crash-between-commits window.
 
+    The pending units are an observation on the extraction's own scan
+    (read after the output write), so no job probes the input first.
     Only the extraction UDF runs in Python.  The spans are written one
     file per unit; the lineage rows come from one aggregation over the
     cached extraction frame, with ``n_turns`` = turns with ≥ 1 span.
@@ -129,10 +139,15 @@ def _run_resumable_extract_locked(
     from latex_ocr_spark.functions.udfs import FAILED_TURN_SPAN_IDX
     from latex_ocr_spark.operators.extract import extract_spans_with_failures
 
-    pending = pending_work(transcripts, spark, lineage_path, n_units)
-    unit_rows = [r.work_key for r in pending.select("work_key").distinct().collect()]
-    if not unit_rows:
+    done = _done_keys(spark, lineage_path)
+    if set(range(n_units)) <= set(done):
         return 0
+    # the pending units are observed on the extraction's own scan, before
+    # the candidate filter: a unit whose turns all lack math still counts
+    seen = Observation()
+    pending = _without(transcripts, done, n_units).observe(
+        seen, F.collect_set("work_key").alias("units")
+    )
 
     prev_overwrite_mode = spark.conf.get(
         "spark.sql.sources.partitionOverwriteMode", "STATIC"
@@ -149,6 +164,9 @@ def _run_resumable_extract_locked(
         # directories (never rewrites completed ones), one file per unit
         out = with_work_key(spans, n_units).repartition("work_key")
         out.write.mode("overwrite").partitionBy("work_key").parquet(output_path)
+        unit_rows = seen.get["units"]
+        if not unit_rows:  # every input unit is done already
+            return 0
 
         if fail_on_units and set(unit_rows) & set(fail_on_units):
             raise RuntimeError("injected crash between output and lineage commit")

@@ -35,6 +35,16 @@ DEFAULT_TOKENIZER_PATH = os.path.join(
 
 PAD_ID, BOS_ID, EOS_ID = 0, 1, 2
 
+#: the per-tokenizer pretoken memo holds at most this many entries, and
+#: only pretokens of at most ``_PRETOKEN_KEY_BYTES`` UTF-8 bytes: an
+#: entry is then at most ~0.75 KB (key, id tuple, dict slot), so a full
+#: memo stays under ~50 MB in a long-lived worker however long the
+#: inputs' whitespace or punctuation runs are.  Corpus pretokens are
+#: words, numbers and short symbol runs (at most 9 bytes on the
+#: benchmark corpus), so the byte limit costs no hits there.
+_PRETOKEN_CACHE_CAP = 65536
+_PRETOKEN_KEY_BYTES = 64
+
 # GPT-2 pre-tokenizer pattern; \p{L}→[^\W\d_], \p{N}→\d under re.UNICODE
 _PRETOK = re.compile(
     r"'s|'t|'re|'ve|'m|'ll|'d"
@@ -104,7 +114,8 @@ class BpeTokenizer:
         hit = self._pretoken_cache.get(chunk)
         if hit is not None:
             return hit
-        units = tuple(self._b2u[b] for b in chunk.encode("utf-8"))
+        raw = chunk.encode("utf-8")
+        units = tuple(self._b2u[b] for b in raw)
         pieces = self._merge_word(units)
         # unknown pieces fall back to single-byte tokens; bytes missing
         # from the vocab are skipped (this vocab covers all LaTeX bytes)
@@ -115,7 +126,7 @@ class BpeTokenizer:
             else:
                 out.extend(self.vocab[c] for c in p if c in self.vocab)
         ids = tuple(out)
-        if len(self._pretoken_cache) < 65536:
+        if len(raw) <= _PRETOKEN_KEY_BYTES and len(self._pretoken_cache) < _PRETOKEN_CACHE_CAP:
             self._pretoken_cache[chunk] = ids
         return ids
 

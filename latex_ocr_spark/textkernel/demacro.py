@@ -51,6 +51,7 @@ _RE_TEX_DEF = re.compile(
 )
 _RE_TEX_LET = re.compile(r"\\let[\sĊ]*(\\[a-zA-Z]+)\s*=?[\sĊ]*(\\?\w+)*")
 
+_RE_BRACE = re.compile("[{}]")
 _RE_COMMENT = re.compile(r"(?<!\\)%.*\n")
 _RE_BLANKLINES = re.compile("\n+")
 
@@ -59,18 +60,23 @@ Cmd = Tuple[str, str, str, str]  # (name, '[n]' or '', '[default]' or '', body)
 
 def _mask_nested(s: str) -> str:
     """Replace braces nested below the top level with sentinels."""
-    depth = 0
-    chars = list(s)
-    for i, c in enumerate(chars):
-        if c == "{":
-            if depth > 0:
-                chars[i] = _OPEN
+    out, last, depth = [], 0, 0
+    for m in _RE_BRACE.finditer(s):
+        i = m.start()
+        if s[i] == "{":
             depth += 1
-        elif c == "}":
+            nested = depth > 1
+        else:
             depth -= 1
-            if depth > 0:
-                chars[i] = _CLOSE
-    return "".join(chars)
+            nested = depth > 0
+        if nested:
+            out.append(s[last:i])
+            out.append(_OPEN if s[i] == "{" else _CLOSE)
+            last = i + 1
+    if not out:
+        return s
+    out.append(s[last:])
+    return "".join(out)
 
 
 def _unmask(s: str) -> str:

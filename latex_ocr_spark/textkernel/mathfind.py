@@ -65,6 +65,13 @@ RE_EDGE_SPACING = re.compile(
     r"|^\\;|\\;$|^\\enspace|\\enspace$|^\\quad|\\quad$|^\\qquad|\\qquad$"
     r"|^\\hspace{[a-zA-Z0-9]+}|\\hspace{[a-zA-Z0-9]+}$|^\\hfill|\\hfill$"
 )
+#: every alternative of RE_EDGE_SPACING is anchored at one end, and
+#: without a newline ``$`` is only the string's end: a match needs a
+#: candidate that starts with one of these macros or ``\hspace{``, or
+#: ends with one of them or with ``}`` after a ``\hspace{``
+_EDGE_MACROS = ("\\,", "~", "\\ ", "\\thinspace", "\\!", "\\:", "\\;",
+                "\\enspace", "\\quad", "\\qquad", "\\hfill")
+_EDGE_HEADS = _EDGE_MACROS + ("\\hspace{",)
 
 
 def strip_labels(s: str) -> str:
@@ -112,10 +119,14 @@ def scrub_match(candidate: str, min_chars: int = MIN_MATCH_CHARS) -> Optional[st
     candidate = (
         candidate.replace("\n", "").replace(r"\notag", "").replace(r"\nonumber", "")
     )
-    # every edge-spacing alternative contains '\' or '~' — a substring
-    # miss exactly implies a regex miss, and plain candidates (a_1+b)
-    # skip the engine entirely
-    if "\\" in candidate or "~" in candidate:
+    # the newlines are gone, so the anchored pattern can match only a
+    # candidate with an edge-spacing head or tail: a miss on both
+    # exactly implies a regex miss, and most candidates skip the engine
+    if (
+        candidate.startswith(_EDGE_HEADS)
+        or candidate.endswith(_EDGE_MACROS)
+        or (candidate.endswith("}") and "\\hspace{" in candidate)
+    ):
         candidate = RE_EDGE_SPACING.sub("", candidate)
     if len(candidate) < min_chars:
         return None

@@ -1,8 +1,11 @@
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+# the checkout this file belongs to, wherever it lives: a test run from
+# another copy must not import that copy's package
+_TESTS = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.dirname(_TESTS))
+sys.path.insert(0, _TESTS)
 
 import pytest
 

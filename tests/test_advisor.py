@@ -2,12 +2,8 @@
 are exact on a planted corpus, the sampled survey is subset-stable,
 and the recommendations move in the documented directions."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
-
 from latex_ocr_spark.operators.advisor import suggest_knobs, survey_corpus
+from latex_ocr_spark.paths import REPO_ROOT
 
 
 def _corpus(spark, n=200, dup_every=10, hot_token=True):
@@ -94,7 +90,7 @@ def test_auto_knobs_cli_end_to_end(tmp_path):
 
     out = str(tmp_path / "out")
     r = subprocess.run(
-        [_sys.executable, "/root/repo/jobs/curate_job.py",
+        [_sys.executable, f"{REPO_ROOT}/jobs/curate_job.py",
          "--synth", "40", "--output", out,
          "--near-dup-method", "jaccard", "--auto-knobs",
          # explicit non-default: must survive the advisor untouched

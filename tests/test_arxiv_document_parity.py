@@ -3,10 +3,6 @@
 through the full kernel vs the reference chain."""
 
 import random
-import sys
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
 
 from latex_ocr_spark.textkernel.demacro import expand_macros
 from latex_ocr_spark.textkernel.mathfind import find_math

@@ -1,11 +1,6 @@
 """The bench plan-cost collector is the cross-round regression signal —
 its parsing must be right or a plan regression hides behind a zero."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
-
 from bench import _exec_marker, _plan_cost
 from perfbench.statusstore import parse_metric
 
@@ -104,7 +99,8 @@ def test_round_note_headlines_match_committed_artifacts():
     import os
     import re
 
-    repo = "/root/repo"
+    from latex_ocr_spark.paths import REPO_ROOT as repo
+
     with open(os.path.join(repo, "BENCH", "BASELINE.md")) as f:
         md = f.read()
     sections = re.split(r"^## ", md, flags=re.M)

@@ -1,11 +1,7 @@
 """M7 trainer: train on the extracted-span corpus, round-trip with the
 trained tokenizer, confirm compression beats the byte baseline."""
 
-import sys
 import tempfile
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
 
 from latex_ocr_spark.datagen.transcripts import gen_transcripts
 from latex_ocr_spark.textkernel.bpe import BpeTokenizer

@@ -2,11 +2,6 @@
 time, so the join plans with NO runtime exchange — the storage-layout
 lever for repeated large-×-large joins at 100 TB."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
-
 from pyspark.sql import functions as F
 
 from latex_ocr_spark.sources.bucketed import colocated_join, write_bucketed

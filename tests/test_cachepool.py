@@ -5,11 +5,6 @@ the next query boundary, so a many-query session — the driver harness,
 bench.py — holds at most one query's caches instead of accumulating
 all of them."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
-
 import __spark_entry__ as entrymod
 
 from latex_ocr_spark import cachepool

@@ -3,11 +3,6 @@ recursive_search (scraping.py:24-66): math-gated tree pruning,
 visited-set anti-join, depth-round accounting, nonexistent targets
 still marked visited."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
-
 from latex_ocr_spark.operators.crawl import frontier_search, page_links
 
 

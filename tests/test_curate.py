@@ -2,11 +2,6 @@
 fixture, funnel counts exact, end state clean (no exact dups, no
 near-dup pairs split-straddling, no contamination)."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
-
 from pyspark.sql import functions as F
 
 from latex_ocr_spark import cachepool

@@ -9,11 +9,6 @@
 - resuming under different knobs must refuse (config fingerprint).
 """
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
-
 import pytest
 from pyspark.sql import functions as F
 

@@ -5,9 +5,6 @@ plan shape of the rewritten simhash."""
 
 import sys
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
-
 from pyspark.sql import functions as F
 
 from latex_ocr_spark.operators.dedup import _tokens, simhash64

@@ -4,10 +4,6 @@ golden cases from the reference's own unit suite
 """
 
 import re
-import sys
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
 
 import pytest
 from hypothesis import given, settings

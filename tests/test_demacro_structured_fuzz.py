@@ -4,10 +4,6 @@ stresses the arg-substitution, masking, and multi-round sweeps far
 harder than alphabet-soup fuzz."""
 
 import random
-import sys
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
 
 from latex_ocr_spark.textkernel.demacro import expand_macros
 from ref_oracle import HAVE_REFERENCE, needs_reference, ref_demacro

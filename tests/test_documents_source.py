@@ -6,15 +6,12 @@ import gzip
 import json
 import os
 import shutil
-import sys
 import tempfile
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
 
 import pytest
 from pyspark.sql import types as T
 
+from latex_ocr_spark.paths import REPO_ROOT
 from latex_ocr_spark.sources.documents import (
     is_jsonl_path,
     read_documents,
@@ -125,7 +122,7 @@ def test_curate_job_accepts_jsonl_input(spark, tmpdir):
             ) + "\n")
     out = os.path.join(tmpdir, "out")
     r = subprocess.run(
-        [_sys.executable, "/root/repo/jobs/curate_job.py",
+        [_sys.executable, f"{REPO_ROOT}/jobs/curate_job.py",
          "--input", p, "--output", out, "--min-tokens", "3"],
         capture_output=True, text=True, timeout=280,
     )
@@ -179,7 +176,7 @@ def test_curate_job_mixed_formats_and_string_ids(spark, tmpdir):
 
     out = os.path.join(tmpdir, "out")
     r = subprocess.run(
-        [_sys.executable, "/root/repo/jobs/curate_job.py",
+        [_sys.executable, f"{REPO_ROOT}/jobs/curate_job.py",
          "--input", shard_dir, "--input-format", "jsonl", "--string-ids",
          "--evalset", ev, "--output", out, "--min-tokens", "3"],
         capture_output=True, text=True, timeout=280,
@@ -193,7 +190,7 @@ def test_curate_job_mixed_formats_and_string_ids(spark, tmpdir):
     # without --string-ids the same corpus silently empties — the job
     # now says so loudly on stderr
     r2 = subprocess.run(
-        [_sys.executable, "/root/repo/jobs/curate_job.py",
+        [_sys.executable, f"{REPO_ROOT}/jobs/curate_job.py",
          "--input", shard_dir, "--input-format", "jsonl",
          "--output", os.path.join(tmpdir, "out2"), "--min-tokens", "3"],
         capture_output=True, text=True, timeout=280,

@@ -4,11 +4,7 @@ reason — it must not throw (a throw inside an executor task fails the
 whole job; these kernels' contract is row-level quarantine)."""
 
 import io
-import sys
 import tarfile
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
 
 from hypothesis import given, settings
 from hypothesis import strategies as st

@@ -16,11 +16,7 @@ kernel over it.  Here they skip with an explicit reason.
 """
 
 import shutil
-import sys
 import tempfile
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
 
 import pytest
 

@@ -2,11 +2,6 @@
 window form, and the plan-shape guarantee (no single-partition
 exchange) that is the whole point of the operator."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 

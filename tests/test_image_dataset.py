@@ -4,11 +4,7 @@ Im2LatexDataset semantics end-to-end."""
 
 import os
 import shutil
-import sys
 import tempfile
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
 
 import numpy as np
 import pytest

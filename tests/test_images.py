@@ -1,11 +1,6 @@
 """Image-path operators: PNG codec, IHDR probe, pad()/bbox semantics,
 dimension filter, bucket assignment (SURVEY.md §2.7, FIXTURES.md §3)."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
-
 import numpy as np
 import pandas as pd
 import pytest

@@ -2,11 +2,6 @@
 extract → tokenize → bucket/salt repartition → batched decode →
 score must satisfy the BLEU=1.0 / exact-match invariant."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
-
 import pandas as pd
 from pyspark.sql import functions as F
 

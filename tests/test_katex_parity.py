@@ -11,10 +11,6 @@ import os
 import random
 import shutil
 import subprocess
-import sys
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
 
 import pytest
 

@@ -9,11 +9,10 @@ import subprocess
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+from latex_ocr_spark.paths import REPO_ROOT
 
 _WORKER = r"""
 import json, os, sys, time
-sys.path.insert(0, "/root/repo")
 from latex_ocr_spark.lease import DirLease
 
 d, log_path, n_rounds = sys.argv[1], sys.argv[2], int(sys.argv[3])
@@ -47,7 +46,7 @@ def test_lease_mutual_exclusion_under_process_contention():
     procs = [
         subprocess.Popen(
             [sys.executable, "-c", _WORKER, d, log_path, str(n_rounds)],
-            stdout=subprocess.PIPE, text=True,
+            stdout=subprocess.PIPE, text=True, cwd=REPO_ROOT,
         )
         for _ in range(n_procs)
     ]
@@ -85,14 +84,13 @@ def test_lease_survives_sigkilled_holder_mid_section():
     d = tempfile.mkdtemp(prefix="lease_kill_")
     holder = subprocess.Popen(
         [sys.executable, "-c", f"""
-import sys, time
-sys.path.insert(0, "/root/repo")
+import time
 from latex_ocr_spark.lease import DirLease
 DirLease({d!r}, role="victim").acquire()
 print("HELD", flush=True)
 time.sleep(60)
 """],
-        stdout=subprocess.PIPE, text=True,
+        stdout=subprocess.PIPE, text=True, cwd=REPO_ROOT,
     )
     assert holder.stdout.readline().strip() == "HELD"
     assert probe(d)[0] == "held"

@@ -3,11 +3,7 @@ final table equals a clean one-shot run and only missing units
 re-executed (SURVEY.md §5 item 4)."""
 
 import shutil
-import sys
 import tempfile
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
 
 import pytest
 from pyspark.sql import functions as F

@@ -1,10 +1,5 @@
 """Kernel == reference parity for math-region location + scrubbing."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
-
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st

@@ -1,11 +1,6 @@
 """Multimodal plumbing: typed media schema, batched feature extraction
 with quarantined codec gaps, and the frame-sampling plan arithmetic."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
-
 import numpy as np
 
 from latex_ocr_spark.operators.images import encode_png_gray

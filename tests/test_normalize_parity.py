@@ -1,10 +1,5 @@
 """post_process / normalization parity with the reference."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
-
 from hypothesis import given, settings
 from hypothesis import strategies as st
 

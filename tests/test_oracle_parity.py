@@ -5,10 +5,6 @@ order-insensitive multiset of stringified rows."""
 
 import math
 import os
-import sys
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
 
 import duckdb
 import pytest

@@ -2,11 +2,6 @@
 exceeded, offsets contiguous per pack, determinism, FFD efficiency,
 oversize quarantine."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
-
 import pytest
 from pyspark.sql import functions as F
 

@@ -2,11 +2,6 @@
 unicode, control chars, megabyte turns, pathological regex inputs —
 must neither crash nor diverge from the pure kernel."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
-
 import pandas as pd
 
 from latex_ocr_spark.operators.extract import extract_spans

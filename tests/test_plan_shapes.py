@@ -5,11 +5,6 @@ These are the properties that decide whether a plan survives 100×
 scale — asserted here so a regression shows up as a red test, not as
 a slow cluster."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
-
 from latex_ocr_spark.plans.registry import QUERIES
 
 

@@ -9,10 +9,9 @@ import os
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
-
 from pyspark.sql import functions as F
+
+from latex_ocr_spark.paths import REPO_ROOT
 
 
 def _corpus_jsonl(path, n=40):
@@ -27,7 +26,7 @@ def _corpus_jsonl(path, n=40):
 
 def _run(args, timeout=300):
     return subprocess.run(
-        [sys.executable, "/root/repo/jobs/prepare_job.py"] + args,
+        [sys.executable, f"{REPO_ROOT}/jobs/prepare_job.py"] + args,
         capture_output=True, text=True, timeout=timeout,
     )
 

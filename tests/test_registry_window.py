@@ -5,10 +5,7 @@ verification window and the highest-value signals at the front, so a
 regression here is a red test instead of a silently unverified
 flagship."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+from latex_ocr_spark.paths import REPO_ROOT
 
 DRIVER_WINDOW = 50
 
@@ -49,7 +46,7 @@ def test_survey_tally_matches_registry():
 
     from latex_ocr_spark.plans.registry import QUERIES
 
-    with open("/root/repo/SURVEY.md") as f:
+    with open(f"{REPO_ROOT}/SURVEY.md") as f:
         text = f.read()
     m = re.search(r"<!-- registry-count:(\d+) -->", text)
     assert m, "SURVEY.md must carry a '<!-- registry-count:N -->' marker in §9"

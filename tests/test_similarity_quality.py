@@ -2,11 +2,6 @@
 meaningful fraction of the exact brute-force neighbors, and both paths
 must be deterministic across runs/partitionings."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
-
 from pyspark.sql import functions as F
 
 from latex_ocr_spark.operators.similarity import cosine_topk, lsh_cosine_topk

@@ -5,11 +5,6 @@ conversation across many partitions while keeping batches
 bucket-uniform — the reference's size-bucket batching doubling as skew
 handling (SURVEY §4)."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
-
 import pandas as pd
 from pyspark.sql import functions as F
 

@@ -1,10 +1,5 @@
 """SQL-surface parity: spark.sql extraction == the DataFrame pipeline."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
-
 from latex_ocr_spark.functions.sqlapi import register_sql_functions
 from latex_ocr_spark.operators.extract import extract_spans
 from latex_ocr_spark.sources.tables import synth_transcripts

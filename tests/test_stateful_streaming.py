@@ -2,11 +2,7 @@
 the state store across separate availableNow catch-up runs."""
 
 import shutil
-import sys
 import tempfile
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
 
 import pytest
 from pyspark.sql import functions as F

@@ -3,11 +3,7 @@ files, with checkpointed incremental catch-up: the ingestion-time guard
 reuses the oracle-checked batch operator per micro-batch."""
 
 import shutil
-import sys
 import tempfile
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
 
 import pytest
 from pyspark.sql import functions as F

@@ -3,15 +3,11 @@ watermark eviction, and cross-micro-batch suppression through the
 checkpointed state store."""
 
 import shutil
-import sys
 import tempfile
 from datetime import datetime, timedelta
 
 import pandas as pd
 import pytest
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
 
 from latex_ocr_spark.sources.tables import TRANSCRIPTS_SCHEMA
 from latex_ocr_spark.streaming.dedup import dedup_stream

@@ -5,13 +5,9 @@ unbounded stream-stream joins without them)."""
 
 import datetime as dt
 import shutil
-import sys
 import tempfile
 
 import pytest
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
 
 from latex_ocr_spark.streaming.joins import interval_join
 

@@ -5,16 +5,13 @@ earlier survivor, replays are exactly-once, and with monotonic ids +
 clique-shaped clusters the survivor set equals the batch pipeline's."""
 
 import shutil
-import sys
 import tempfile
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
 
 import pytest
 from pyspark.sql import functions as F
 
 from latex_ocr_spark import cachepool
+from latex_ocr_spark.paths import REPO_ROOT
 from latex_ocr_spark.streaming.near_dedup import start_near_dedup_stream
 from latex_ocr_spark.streaming.sinks import read_stream_output
 
@@ -528,7 +525,7 @@ def test_index_maintenance_cli(spark, dirs):
 
     def job(*argv):
         r = subprocess.run(
-            [_sys.executable, "/root/repo/jobs/index_maintenance_job.py",
+            [_sys.executable, f"{REPO_ROOT}/jobs/index_maintenance_job.py",
              "--index", f"{dirs}/index", "--cores", "4", *argv],
             capture_output=True, text=True, timeout=280,
         )
@@ -725,7 +722,7 @@ def test_near_dedup_stream_job_cli(spark, dirs):
 
     def job(*argv):
         r = subprocess.run(
-            [_sys.executable, "/root/repo/jobs/near_dedup_job.py",
+            [_sys.executable, f"{REPO_ROOT}/jobs/near_dedup_job.py",
              "--input", f"{dirs}/in", "--output", f"{dirs}/out",
              "--index", f"{dirs}/index", "--checkpoint", f"{dirs}/ckpt",
              "--cores", "4", "--ngram", "1", *argv],
@@ -771,7 +768,7 @@ def test_stream_job_first_run_with_empty_input_reports_zero(spark, dirs):
 
     def job(*argv):
         r = subprocess.run(
-            [_sys.executable, "/root/repo/jobs/near_dedup_job.py",
+            [_sys.executable, f"{REPO_ROOT}/jobs/near_dedup_job.py",
              "--input", f"{dirs}/in", "--output", f"{dirs}/out",
              "--index", f"{dirs}/index", "--checkpoint", f"{dirs}/ckpt",
              "--cores", "4", "--ngram", "1", *argv],

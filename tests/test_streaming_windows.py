@@ -5,11 +5,7 @@ batch aggregation."""
 
 import datetime as dt
 import shutil
-import sys
 import tempfile
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
 
 import pandas as pd
 import pytest

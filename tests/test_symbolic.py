@@ -2,11 +2,6 @@
 operatorname* pre-normalization, symbol-vs-builtin hygiene, and the
 quarantine boundary for out-of-subset input."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
-
 import pytest
 
 from latex_ocr_spark.operators.symbolic import convert_checked, with_sympy

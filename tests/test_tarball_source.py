@@ -9,11 +9,7 @@ member skip, which are order-free by construction."""
 
 import io
 import os
-import sys
 import tarfile
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
 
 from latex_ocr_spark.sources.archives import (
     paper_from_blob,

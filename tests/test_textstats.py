@@ -2,11 +2,6 @@
 consolidated in round 3: the merged queries must stay equal, column by
 column, to the standalone operators they absorbed."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
-
 from latex_ocr_spark.operators import textstats as TS
 
 

@@ -1,11 +1,6 @@
 """BPE tokenizer: round-trip contract over every extracted span
 (FIXTURES.md §5) plus Spark column operators."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
-
 from latex_ocr_spark.datagen.transcripts import gen_transcripts
 from latex_ocr_spark.textkernel.bpe import BOS_ID, EOS_ID, default_tokenizer
 from latex_ocr_spark.textkernel.pipeline import extract_turn
@@ -96,3 +91,21 @@ def test_spark_tokenize_passes_other_columns_through(spark):
             assert r.tokens == tk.encode(r.latex_norm)
             assert r.decoded == r.latex_norm
     assert got[2].tokens == [BOS_ID, EOS_ID]
+
+
+def test_pretoken_memo_skips_long_pretokens(monkeypatch):
+    """A 1 MB pretoken encodes as it does when memoized, and is not
+    kept: the memo is bounded in bytes, not only in entries."""
+    from latex_ocr_spark.textkernel import bpe
+
+    big = "~" * (1 << 20)  # one pretoken: a symbol run
+    tok = bpe.BpeTokenizer()
+    ids = tok.encode(big, add_specials=False)
+    assert big not in tok._pretoken_cache and len(ids) == len(big)
+    assert tok.encode("~~", add_specials=False) == ids[:2]
+    assert "~~" in tok._pretoken_cache
+
+    monkeypatch.setattr(bpe, "_PRETOKEN_KEY_BYTES", len(big))
+    unbounded = bpe.BpeTokenizer()
+    assert unbounded.encode(big, add_specials=False) == ids
+    assert big in unbounded._pretoken_cache

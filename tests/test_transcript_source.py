@@ -3,11 +3,6 @@ a catalog table identifier (the surface an Iceberg table plugs into via
 Spark's DataSourceV2 catalog API — exercised here with the built-in
 catalog, since the Iceberg runtime jar is not in this container)."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
-
 import pytest
 from pyspark.sql import functions as F
 

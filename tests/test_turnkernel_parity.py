@@ -4,10 +4,6 @@ over every generator template and a fuzz sweep."""
 
 import html
 import re
-import sys
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
