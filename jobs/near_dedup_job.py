@@ -46,6 +46,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
+    from latex_ocr_spark.streaming import MAX_FILES_PER_TRIGGER
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True, help="document arrival dir "
                     "(parquet files, schema doc_id/text)")
@@ -63,7 +65,8 @@ def main() -> int:
     ap.add_argument("--continuous", action="store_true",
                     help="keep the query running instead of "
                     "process-available-and-exit")
-    ap.add_argument("--max-files-per-trigger", type=int, default=64,
+    ap.add_argument("--max-files-per-trigger", type=int,
+                    default=MAX_FILES_PER_TRIGGER,
                     help="micro-batch bound: files per trigger (0 = "
                     "unbounded; availableNow catch-up over a backlog "
                     "then runs as ONE giant batch — see "

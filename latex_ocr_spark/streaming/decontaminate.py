@@ -16,7 +16,10 @@ batch operator applied per micro-batch inside ``foreachBatch``
 The eval set is profiled, materialized and counted once per query,
 before it starts; its count gates the eval side's broadcast (the dedup
 size gate), and each batch costs one scan and one profile pass of its
-own files plus the joins.
+own files plus the joins.  Each micro-batch reads at most
+``streaming.MAX_FILES_PER_TRIGGER`` files, the near-dedup stream's
+default bound, so an ``availableNow`` catch-up over a backlog drains as
+a sequence of bounded batches.
 
 Delivery semantics: ``availableNow`` + checkpoint give exactly-once
 *file progress* (a fully processed batch is never re-read), and the
@@ -67,7 +70,7 @@ def start_decontamination_stream(
     writes but before the checkpoint commit — the test hook for the
     replayed-batch window the idempotent sinks exist for.
     """
-    from latex_ocr_spark import cachepool
+    from latex_ocr_spark import cachepool, streaming
     from latex_ocr_spark.operators import dedup as D
     from latex_ocr_spark.streaming.sinks import assert_idempotent_layout
 
@@ -78,7 +81,9 @@ def start_decontamination_stream(
     prof_e, n_eval = D._eval_profile(evalset, num_hashes, ngram, "text", "doc_id")
 
     stream = (
-        spark.readStream.schema(DOCS_STREAM_SCHEMA).format("parquet").load(input_dir)
+        spark.readStream.schema(DOCS_STREAM_SCHEMA).format("parquet")
+        .option("maxFilesPerTrigger", streaming.MAX_FILES_PER_TRIGGER)
+        .load(input_dir)
     )
 
     def process(batch_df: DataFrame, batch_id: int) -> None:

@@ -57,6 +57,7 @@ from pyspark.sql.streaming.listener import StreamingQueryListener
 
 from latex_ocr_spark import lease as lease_mod
 from latex_ocr_spark.session import is_missing_path
+from latex_ocr_spark.streaming import MAX_FILES_PER_TRIGGER
 from latex_ocr_spark.streaming.decontaminate import DOCS_STREAM_SCHEMA
 from latex_ocr_spark.streaming.sinks import (
     BATCH_COL,
@@ -148,7 +149,7 @@ def start_near_dedup_stream(
     max_bucket_size: Optional[int] = None,
     available_now: bool = True,
     _fail_batches: Optional[set] = None,
-    max_files_per_trigger: Optional[int] = 64,
+    max_files_per_trigger: Optional[int] = MAX_FILES_PER_TRIGGER,
     max_bytes_per_trigger: Optional[str] = None,
 ):
     """Continuously keep only documents that near-duplicate neither a
@@ -160,10 +161,11 @@ def start_near_dedup_stream(
     documented cron shape, or simply the first run over an existing
     corpus — puts EVERY pending file into ONE micro-batch, which is
     then shingle-amplified and, over the size gate, joined against the
-    whole history by shuffle.  The default (64 files/trigger) keeps
-    catch-up incremental; pass ``None`` for both to restore the
-    unbounded reader.  ``availableNow`` still drains the
-    whole backlog — as a sequence of bounded batches.
+    whole history by shuffle.  The default
+    (``streaming.MAX_FILES_PER_TRIGGER``, 64 files/trigger, shared with
+    the decontamination stream) keeps catch-up incremental; pass
+    ``None`` for both to restore the unbounded reader.  ``availableNow``
+    still drains the whole backlog — as a sequence of bounded batches.
 
     The batch-side frames (duplicate-of-history ids, survivor ids, and
     the batch profile as the history check's eval side) are
@@ -220,7 +222,7 @@ def _start_near_dedup_stream_fenced(
     available_now: bool,
     _fail_batches: Optional[set],
     stream_lease,
-    max_files_per_trigger: Optional[int] = 64,
+    max_files_per_trigger: Optional[int] = MAX_FILES_PER_TRIGGER,
     max_bytes_per_trigger: Optional[str] = None,
 ):
     import json

@@ -30,8 +30,15 @@ MODE_HTML = "html"
 
 
 def strip_html_noise(text: str) -> str:
-    """Remove script blocks and resolve HTML entities."""
-    return html.unescape(RE_SCRIPT_BLOCKS.sub("", text))
+    """Remove script blocks and resolve HTML entities.
+
+    Both alternatives of the block pattern's opening tag end in
+    ``script>``, so a text without that substring has no block and the
+    substitution is skipped.
+    """
+    if "script>" in text:
+        text = RE_SCRIPT_BLOCKS.sub("", text)
+    return html.unescape(text)
 
 
 def looks_like_html(text: str) -> bool:

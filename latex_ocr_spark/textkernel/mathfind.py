@@ -115,7 +115,8 @@ def scrub_match(candidate: str, min_chars: int = MIN_MATCH_CHARS) -> Optional[st
     """Clean one candidate; return None when it must be dropped."""
     if "tikz" in candidate:  # tikz pictures are not supported
         return None
-    candidate = strip_labels(candidate)
+    if "\\" in candidate:  # every label marker starts with a backslash
+        candidate = strip_labels(candidate)
     candidate = (
         candidate.replace("\n", "").replace(r"\notag", "").replace(r"\nonumber", "")
     )

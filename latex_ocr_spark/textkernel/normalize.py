@@ -18,13 +18,11 @@ distinct here:
   v0 invariant — see SURVEY.md §7 "What's hard".
 
 The reference states ``post_process`` as three ``re.sub`` passes run
-until nothing changes.  Here each pass is an exact scan of the string's
-whitespace positions instead (``_squeeze_nn``/``_nl``/``_ln``): a match
-of any of the three patterns starts one character before a whitespace
-character, so the scans look only there, keep the regex scan's
-non-overlapping left-to-right order and its Unicode character classes,
-and never expand a ``\1\2`` template per match.  The rounds, their
-order and the stopping rules are unchanged.  Every caller (the
+until nothing changes.  Each pass only deletes whitespace, and what it
+may delete in one maximal whitespace run depends only on that run and
+the two characters around it, so here the result is computed run by
+run, as the string the rounds leave of it (see :func:`post_process`).  The few runs whose outcome depends on the order
+of the deletions take the reference's passes.  Every caller (the
 extraction kernel, the ``latex_post_process`` SQL function, the eval
 metrics) uses this one function.
 """
@@ -54,78 +52,60 @@ def _nonletter(c: str) -> bool:
     return c in _ASCII_NONLETTERS or (c >= "\x80" and (c.isdecimal() or not c.isalnum()))
 
 
-def _whitespace(s: str) -> list:
-    return [m.start() for m in _RE_ANY_WS.finditer(s)]
+_LETTER = "[a-zA-Z]"
+_NOLETTER = "[\\W_^\\d]"
+_RE_NN = re.compile(r"(?!\\ )(%s)\s+?(%s)" % (_NOLETTER, _NOLETTER))
+_RE_NL = re.compile(r"(?!\\ )(%s)\s+?(%s)" % (_NOLETTER, _LETTER))
+_RE_LN = re.compile(r"(%s)\s+?(%s)" % (_LETTER, _NOLETTER))
+_RE_WS_RUN = re.compile(r"\s+")
 
 
-# Each squeeze is one left-to-right ``re.sub`` pass of one deletion
-# rule.  ``ws`` holds the whitespace positions of ``s``; a squeeze
-# returns the new string with the whitespace positions of that string
-# (``s`` and ``ws`` themselves when nothing was deleted).  ``resume`` is
-# where the regex scan goes on after a match: a match may start there
-# or later, never inside the previous one.
+def _kind(c: str) -> str:
+    """``"L"`` for ``[a-zA-Z]``, ``"N"`` for ``[\\W_^\\d]``, ``"X"`` for
+    a character in neither class (``é``, ``²``) or no character."""
+    if c in _LETTERS:
+        return "L"
+    return "N" if c and _nonletter(c) else "X"
 
 
-def _squeeze_nn(s: str, ws: list):
-    """``(?!\\\\ )([\\W_^\\d])\\s+?([\\W_^\\d])`` → ``\\1\\2``."""
-    out, kept, last, resume, n = [], [], 0, 0, len(s)
-    for p in ws:
-        if p > resume and p + 1 < n:
-            a = s[p - 1]
-            if _nonletter(a) and _nonletter(s[p + 1]) and not (a == "\\" and s[p] == " "):
-                out.append(s[last:p])
-                last, resume = p + 1, p + 2
-                continue
-        kept.append(p - len(out))
-    if not out:
-        return s, ws
-    out.append(s[last:])
-    return "".join(out), kept
+class _OrderDependent(Exception):
+    """A whitespace run whose outcome depends on the order of deletions."""
 
 
-def _squeeze_nl(s: str, ws: list):
-    """``(?!\\\\ )([\\W_^\\d])\\s+?([a-zA-Z])`` → ``\\1\\2``."""
-    out, kept, last, resume, n, gone = [], [], 0, 0, len(s), 0
-    k, m = 0, len(ws)
-    while k < m:
-        p = ws[k]
-        if p > resume:
-            a = s[p - 1]
-            if _nonletter(a) and not (a == "\\" and s[p] == " "):
-                e = k + 1  # ws[k:e] is the whitespace run that starts at p
-                while e < m and ws[e] == ws[e - 1] + 1:
-                    e += 1
-                j = ws[e - 1] + 1
-                if j < n and s[j] in _LETTERS:
-                    out.append(s[last:p])
-                    last, resume = j, j + 1
-                    gone += j - p
-                else:
-                    # a start inside the run meets the same s[j]: none matches
-                    kept.extend(q - gone for q in ws[k:e])
-                k = e
-                continue
-        kept.append(p - gone)
-        k += 1
-    if not out:
-        return s, ws
-    out.append(s[last:])
-    return "".join(out), kept
+def _run_kept(m: "re.Match") -> str:
+    """What the deletions leave of the whitespace run ``m``."""
+    s, (i, j), run = m.string, m.span(), m[0]
+    before, b = s[i - 1] if i else "", _kind(s[j] if j < len(s) else "")
+    if before != "\\":
+        a = _kind(before)
+    elif run.strip(" "):
+        raise _OrderDependent
+    else:
+        a = "X"  # the guard blocks every deletion that starts at the backslash
+    if a == "N":
+        return "" if b != "X" else run[-1]
+    if a == "L":
+        if b == "L":
+            return run[0]
+        return "" if b == "N" else run[-1]
+    if b != "X" or len(run) == 1:
+        return run[0]
+    return run[0] + run[-1]
 
 
-def _squeeze_ln(s: str, ws: list):
-    """``([a-zA-Z])\\s+?([\\W_^\\d])`` → ``\\1\\2``."""
-    out, kept, last, resume, n = [], [], 0, 0, len(s)
-    for p in ws:
-        if p > resume and p + 1 < n and s[p - 1] in _LETTERS and _nonletter(s[p + 1]):
-            out.append(s[last:p])
-            last, resume = p + 1, p + 2
-            continue
-        kept.append(p - len(out))
-    if not out:
-        return s, ws
-    out.append(s[last:])
-    return "".join(out), kept
+def _rounds(s: str) -> str:
+    """The deletions as the reference runs them: NN, NL and LN as
+    ``re.sub`` passes, round after round, until a round changes nothing
+    or leaves no whitespace."""
+    while True:
+        squeezed = _RE_NN.sub(r"\1\2", s)
+        squeezed = _RE_NL.sub(r"\1\2", squeezed)
+        squeezed = _RE_LN.sub(r"\1\2", squeezed)
+        if squeezed == s:
+            return s
+        if not _RE_ANY_WS.search(squeezed):
+            return squeezed
+        s = squeezed
 
 
 def post_process(s: str) -> str:
@@ -139,47 +119,61 @@ def post_process(s: str) -> str:
     - NL ``(?!\\\\ )([\\W_^\\d])\\s+?([a-zA-Z])`` → ``\\1\\2``,
     - LN ``([a-zA-Z])\\s+?([\\W_^\\d])`` → ``\\1\\2``,
 
-    each one ``re.sub`` pass over the previous one's output.  The passes
-    are not run as regexes: each squeeze visits only the whitespace
-    positions ``p`` of its input, since every match starts at ``p - 1``
-    for the first whitespace ``p`` it spans.  Lazy ``\\s+?`` then fixes
-    what a match holds.  Whitespace is itself in ``[\\W_^\\d]``, so in NN
-    and LN the second group already matches after one whitespace
-    character: a match is ``s[p-1:p+2]``, deletes ``s[p]`` and the scan
-    resumes at ``p + 2``.  In NL the second group needs a letter, which
-    is never whitespace, so a match spans the whole whitespace run from
-    ``p`` and deletes it if the character after the run is an ASCII
-    letter; the scan resumes after that letter.  A start that fails
-    moves the scan on by one, as ``re`` does.  The guard ``(?!\\\\ )``
-    fails exactly when ``s[p-1]`` is a backslash and ``s[p]`` a space.
+    each one ``re.sub`` pass over the previous one's output.  Call the
+    classes L (``[a-zA-Z]``), N (``[\\W_^\\d]``, which holds every
+    whitespace character) and X (neither, as ``é`` or ``²``, or no
+    character at an end of the string).  Lazy ``\\s+?`` fixes what a
+    match deletes: NN and LN one whitespace character followed by an N,
+    NL all of a whitespace run that a letter ends.  So a deletion lies
+    in one maximal whitespace run, its groups are characters of that
+    run or the two around it, ``a`` before and ``b`` after, and those two
+    are never deleted: what can go in a run depends on the run, ``a``
+    and ``b`` alone.  The rounds stop only where no deletion matches.
+    In a run the last character can go only if ``b`` is L or N; the
+    first only if ``a`` is N and the character after it is L or N, or
+    ``a`` is L and the character after it is N; any other character
+    always can.  What the rounds leave of a run is therefore:
+
+    ==========  ==============  ==============  ===================
+    ``a``       ``b`` N         ``b`` L         ``b`` X
+    ==========  ==============  ==============  ===================
+    N           nothing         nothing         the last character
+    L           nothing         the first       the last character
+    X           the first       the first       the first and last
+    ==========  ==============  ==============  ===================
+
+    Each entry but one is the only string the deletions can end in.
+    Between two letters any one character of the run could be the one
+    left; the rounds keep the first, because NN cannot delete it and
+    the first NL pass, starting at it, deletes the rest of the run.  A
+    backslash ``a`` before a run of spaces counts as X: the guard
+    ``(?!\\\\ )`` blocks every deletion that starts at it.  Before a run
+    that is not all spaces the outcome depends on the order of the
+    deletions (deleting the run's first character can bring a space
+    next to the backslash and switch the guard on), and for a string
+    holding such a run :func:`_rounds` runs the reference's passes.
 
     The classes are the ones ``re`` uses for ``str`` patterns (see
-    :func:`_nonletter`): ``é`` and ``²`` are word characters that are
-    neither letters nor in ``[\\W_^\\d]``, ``٣`` is a decimal digit and so
-    a non-letter, and ``\\xa0`` and ``\\x1c`` are whitespace.  The tests
-    check these predicates on every code point and the whole function
-    against the regex implementation it replaces.
+    :func:`_nonletter`).  The tests check the class predicates on every
+    code point and the whole function against the regex implementation
+    it replaced.
 
     Fast path: with no whitespace anywhere, neither phase can change
     the string (the group pattern needs a literal space, the deletions
-    need ``\\s``), which makes re-normalization of already-normalized
-    text (the eval path) nearly free.
+    need ``\\s``).  One ``_RE_ANY_WS.search`` finds that out and returns
+    the string as it is: about half the spans of a transcript corpus,
+    and re-normalization of already-normalized text (the eval path),
+    take only that search.  The group collapse runs only on a string
+    holding a backslash and `` {``, which every group match contains.
     """
-    ws = _whitespace(s)
-    if not ws:
+    if not _RE_ANY_WS.search(s):
         return s
     if "\\" in s and " {" in s:  # the group pattern needs both
         s = _RE_TEXT_GROUP.sub(lambda m: m[0].replace(" ", ""), s)
-        ws = _whitespace(s)
-    while True:
-        squeezed, ws = _squeeze_nn(s, ws)
-        squeezed, ws = _squeeze_nl(squeezed, ws)
-        squeezed, ws = _squeeze_ln(squeezed, ws)
-        if len(squeezed) == len(s):  # every squeeze only deletes
-            return s
-        if not ws:
-            return squeezed  # whitespace-free is already a fixpoint
-        s = squeezed
+    try:
+        return _RE_WS_RUN.sub(_run_kept, s)
+    except _OrderDependent:
+        return _rounds(s)
 
 
 # ---------------------------------------------------------------------------

@@ -1,5 +1,6 @@
-r"""The text kernel as of commit 03ce79b, before its whitespace-scan,
-edge-spacing and brace-masking rewrites, kept verbatim as a
+r"""The text kernel as of commit 03ce79b, before the rewrites of
+``post_process``, ``scrub_match``, the brace masking, the macro
+expansion rounds and the substring gates, kept verbatim as a
 differential oracle.
 
 This is the engine's own earlier program, not the pix2tex reference:
@@ -7,17 +8,19 @@ agreement with it shows that a rewrite left behaviour unchanged, not
 that the engine matches the reference (``ref_oracle.py`` and the
 ``@needs_reference`` tests do that where the checkout exists).
 
-Only the functions the rewrites touch, and their callers up to
-``extract_turn_checked``, are copied; every other stage is the
-package's.  Do not edit the copies: their point is that they are the
-old code.
+Every function a rewrite touched, and their callers up to
+``extract_turn_checked``, are copied; the package supplies only the
+compiled patterns, constants and the stages no rewrite has touched.  Do
+not edit the copies: their point is that they are the old code.
 """
 
 from __future__ import annotations
 
+import html
 import re
 import time
-from typing import Iterable, List, Optional, Set
+from collections import Counter
+from typing import Iterable, List, Optional, Set, Tuple
 
 from latex_ocr_spark.textkernel.demacro import (
     _CLOSE,
@@ -25,26 +28,33 @@ from latex_ocr_spark.textkernel.demacro import (
     _OPEN,
     _RE_BLANKLINES,
     _RE_COMMENT,
+    _RE_NEWCOMMAND,
+    _RE_NEWCOMMAND_UNESCAPED,
+    _RE_TEX_DEF,
+    _RE_TEX_LET,
     MATCH_BAILOUT,
     MAX_ROUNDS,
     TIME_BUDGET_S,
+    Cmd,
     MacroExpansionError,
-    _collect_definitions,
-    _substitute_round,
+    _def_replacement,
     _unmask,
-    rewrite_primitive_defs,
 )
 from latex_ocr_spark.textkernel.htmlclean import (
     MODE_LATEX,
     MODE_WIKI,
+    RE_SCRIPT_BLOCKS,
     classify_mode,
-    strip_html_noise,
 )
 from latex_ocr_spark.textkernel.mathfind import (
     MIN_MATCH_CHARS,
+    RE_ALIGN,
+    RE_DISPLAYSTYLE,
+    RE_DOLLAR,
     RE_EDGE_SPACING,
-    locate_math,
-    strip_labels,
+    RE_EQUATION,
+    RE_INLINE,
+    RE_LABELS,
 )
 from latex_ocr_spark.textkernel.pipeline import TurnSpan
 
@@ -92,6 +102,43 @@ def post_process(s: str) -> str:
 # --- textkernel/mathfind.py --------------------------------------------------
 
 
+def strip_labels(s: str) -> str:
+    """Drop cross-referencing macros from a candidate region."""
+    for marker, pat in RE_LABELS:
+        if marker in s:
+            s = pat.sub("", s)
+    return s
+
+
+def locate_math(text: str, wiki: bool = False) -> List[str]:
+    """Raw candidate regions, in the reference's pattern order.
+
+    ``wiki`` switches to the ``\\displaystyle``-anchored pattern used on
+    wikipedia page source; otherwise the dollar/equation/align families
+    apply.  The ``\\( .. \\)`` / ``\\[ .. \\]`` family applies in both
+    modes.
+    """
+    found: List[str] = []
+    # substring pre-gates: each pattern requires a fixed marker byte
+    # sequence, so skipping the regex engine when it is absent is exact
+    if "\\(" in text or "\\[" in text:
+        for groups in RE_INLINE.findall(text):
+            found.append(groups[1] if groups[1] != "" else groups[-1])
+    if wiki:
+        plan = [(RE_DISPLAYSTYLE, 0)] if "\\displaystyle" in text else []
+    else:
+        plan = []
+        if "$" in text:
+            plan.append((RE_DOLLAR, 1))
+        if "\\begin" in text:
+            plan.append((RE_EQUATION, 1))
+            plan.append((RE_ALIGN, 0))
+    for pattern, group in plan:
+        for groups in pattern.findall(text):
+            found.append(groups[group])
+    return found
+
+
 def scrub_match(candidate: str, min_chars: int = MIN_MATCH_CHARS) -> Optional[str]:
     """Clean one candidate; return None when it must be dropped."""
     if "tikz" in candidate:  # tikz pictures are not supported
@@ -134,6 +181,55 @@ def find_math(text: str, wiki: bool = False) -> Set[str]:
 
 
 # --- textkernel/demacro.py ---------------------------------------------------
+
+
+def rewrite_primitive_defs(text: str) -> str:
+    r"""Turn ``\def`` and ``\let`` into ``\newcommand`` where possible."""
+    text = _RE_TEX_DEF.sub(_def_replacement, text)
+    return _RE_TEX_LET.sub(r"\\newcommand*{\1}{\2}\n", text)
+
+
+def _collect_definitions(masked: str) -> Tuple[str, List[Cmd]]:
+    """Pull every usable definition out; blank the definition sites."""
+    cmds: List[Cmd] = _RE_NEWCOMMAND.findall(masked)
+    masked = _RE_NEWCOMMAND_UNESCAPED.sub(_NL, masked)
+    cmds.sort(key=lambda c: len(c[0]))
+    tally = Counter(c[0] for c in cmds)
+    # multiply-defined names are ambiguous → drop all of them; a body
+    # that still contains \newcommand means the head regex misfired.
+    usable = [c for c in cmds if tally[c[0]] == 1 and "\\newcommand" not in c[-1]]
+    return masked, usable
+
+
+def _substitute_round(masked: str, cmds: List[Cmd]) -> Tuple[str, int]:
+    """One sweep: expand each command's call sites once. Returns hits."""
+    hits = 0
+    for name, argspec, default, body in cmds:
+        nargs = int(argspec[1]) if argspec != "" else 0
+        has_default = default != ""
+        if nargs == 0:
+            site = r"\\%s([\W_^\dĊ])" % name
+            hits += len(re.findall(site, masked))
+            if hits > 0:
+                masked = re.sub(site, r"%s\1" % body.replace("\\", r"\\"), masked)
+        else:
+            site = (
+                r"(\\%s(?:\[(.+?)\])?" % name
+                + r"{(.+?)}" * (nargs - (1 if has_default else 0))
+                + r")"
+            )
+            found = re.findall(site, masked)
+            hits += len(found)
+            for groups in found:
+                expansion = body
+                if groups[1] == "":
+                    groups = (groups[0], default[1:-1], *groups[2:])
+                for j in range(1, nargs + 1):
+                    expansion = expansion.replace(
+                        "#%i" % j, groups[j + int(not has_default)]
+                    )
+                masked = masked.replace(groups[0], expansion)
+    return masked, hits
 
 
 def _mask_nested(s: str) -> str:
@@ -202,6 +298,14 @@ def expand_macros(text: str) -> str:
     ):
         return strip_labels(text)
     return expand_document(rewrite_primitive_defs(text))
+
+
+# --- textkernel/htmlclean.py -------------------------------------------------
+
+
+def strip_html_noise(text: str) -> str:
+    """Remove script blocks and resolve HTML entities."""
+    return html.unescape(RE_SCRIPT_BLOCKS.sub("", text))
 
 
 # --- textkernel/pipeline.py ---------------------------------------------------

@@ -2,6 +2,7 @@
 files, with checkpointed incremental catch-up: the ingestion-time guard
 reuses the oracle-checked batch operator per micro-batch."""
 
+import os
 import shutil
 import tempfile
 
@@ -95,21 +96,28 @@ def test_replayed_batch_never_duplicates_idempotent_output(spark, dirs):
     assert read_stream_output(spark, rep).count() == 3
 
 
+def _land(df, inp, staging):
+    """Write ``df`` as one parquet file under ``staging``, then rename
+    that file into ``inp``: a running trigger sees all of it or none."""
+    df.coalesce(1).write.mode("overwrite").parquet(staging)
+    (part,) = [f for f in os.listdir(staging) if f.startswith("part-")]
+    os.makedirs(inp, exist_ok=True)
+    os.rename(os.path.join(staging, part), os.path.join(inp, part))
+
+
 def _one_query_over_two_batches(spark, dirs, evalset):
     """Run one decontamination query over two micro-batches (files
     landing between them); returns the report and cleaned rows and the
     number of batches written."""
-    import os
-
     inp, rep, cln, ckpt = (f"{dirs}/in", f"{dirs}/rep", f"{dirs}/cln",
                            f"{dirs}/ckpt")
-    _docs(spark, 0, 30).write.mode("append").parquet(inp)
+    _land(_docs(spark, 0, 30), inp, f"{dirs}/staging")
     q = start_decontamination_stream(
         spark, inp, evalset, rep, cln, ckpt, available_now=False
     )
     try:
         q.processAllAvailable()
-        _docs(spark, 30, 50).write.mode("append").parquet(inp)
+        _land(_docs(spark, 30, 50), inp, f"{dirs}/staging")
         q.processAllAvailable()
     finally:
         q.stop()
@@ -164,3 +172,35 @@ def test_stream_over_the_size_gate_broadcasts_nothing(
     assert len(hinted[0][0]) == 5 and hinted[1] == 2
     assert unhinted == hinted
     assert n_hinted > 0 and n_unhinted == 0, (n_hinted, n_unhinted)
+
+
+def test_backlog_drains_in_batches_of_the_shared_file_bound(spark, dirs, monkeypatch):
+    """The decontamination stream reads at most
+    ``streaming.MAX_FILES_PER_TRIGGER`` files per micro-batch: with the
+    bound patched to 1, three landed files drain in three batches in one
+    ``availableNow`` run, and the report and cleaned rows equal those of
+    the run that takes all three in one batch."""
+    from latex_ocr_spark import cachepool, streaming
+
+    def run(tag):
+        d = f"{dirs}/{tag}"
+        for lo in (0, 20, 40):
+            _land(_docs(spark, lo, lo + 20), f"{d}/in", f"{d}/staging")
+        q = start_decontamination_stream(
+            spark, f"{d}/in", _evalset(spark), f"{d}/rep", f"{d}/cln", f"{d}/ckpt"
+        )
+        q.awaitTermination(120)
+        cachepool.release()
+        n_batches = sum(b.startswith("batch_id=") for b in os.listdir(f"{d}/cln"))
+        return (
+            sorted(map(tuple, read_stream_output(spark, f"{d}/rep").collect())),
+            sorted(r.doc_id for r in read_stream_output(spark, f"{d}/cln").collect()),
+        ), n_batches
+
+    whole, n_whole = run("whole")
+    monkeypatch.setattr(streaming, "MAX_FILES_PER_TRIGGER", 1)
+    bounded, n_bounded = run("bounded")
+    assert (n_whole, n_bounded) == (1, 3)
+    assert [r[0] for r in whole[0]] == [0, 10, 20, 30, 40, 50]
+    assert len(whole[1]) == 54
+    assert bounded == whole

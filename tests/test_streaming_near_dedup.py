@@ -977,3 +977,32 @@ def test_catchup_backlog_is_bounded_into_multiple_batches(spark, dirs):
 
     _sh.rmtree(f"{dirs}2", ignore_errors=True)
     cachepool.release()
+
+
+def test_two_batch_drain_runs_within_its_job_budget(spark, dirs):
+    """One ``availableNow`` drain of two landed files, one file per
+    micro-batch, runs at most 18 Spark jobs in the first batch and 32 in
+    the second, which checks its documents against the first batch's
+    survivors, counted by listing the status store's jobs per batch as
+    the benchmark's trace counts them.  A new probe or count job in the
+    micro-batch shows up here."""
+    import re
+
+    from perfbench.statusstore import StatusReader
+
+    for batch in (_batch1(spark), _batch2(spark)):
+        batch.coalesce(1).write.mode("append").parquet(f"{dirs}/in")
+    reader = StatusReader(spark)
+    mark = reader.marker()
+    _run(spark, dirs, max_files_per_trigger=1)
+    per_batch = {}
+    for job in reader.jobs_since(mark):
+        desc = job.description()
+        found = re.search(r"batch = (\d+)", desc.get() if desc.isDefined() else "")
+        if found:
+            per_batch[int(found[1])] = per_batch.get(int(found[1]), 0) + 1
+    got = sorted(r.doc_id for r in read_stream_output(spark, f"{dirs}/out").collect())
+    cachepool.release()
+    assert got == sorted(list(range(20)) + [200 + i for i in range(10)])
+    assert sorted(per_batch) == [0, 1], per_batch
+    assert per_batch[0] <= 18 and per_batch[1] <= 32, per_batch
