@@ -119,20 +119,15 @@ def main() -> int:
     )
     q.awaitTermination()
 
-    from pyspark.errors import AnalysisException
-
     from latex_ocr_spark.lease import is_uri_path
-    from latex_ocr_spark.session import is_missing_path
+    from latex_ocr_spark.session import has_data
 
-    try:
-        accepted = read_stream_output(spark, args.output).count()
-    except AnalysisException as e:
-        # first invocation before any producer wrote input files: the
-        # query processed zero batches and never created the output
-        # dir — that is accepted == 0, not a crash
-        if not is_missing_path(e):
-            raise
-        accepted = 0
+    # first invocation before any producer wrote input files: the query
+    # processed zero batches and wrote no output — accepted == 0
+    accepted = (
+        read_stream_output(spark, args.output).count()
+        if has_data(spark, args.output) else 0
+    )
     print(json.dumps({
         "auto_knobs": applied,
         "accepted": accepted,
@@ -150,10 +145,8 @@ def _resolve_stream_knobs(spark, args, parser) -> dict:
     the shared advisor core (`survey_and_apply_lsh_knobs` — same
     defaulted-only / coupled-pair / empty-survey-degrade policy as the
     batch jobs, one implementation)."""
-    from pyspark.errors import AnalysisException
-
     from latex_ocr_spark.operators.advisor import survey_and_apply_lsh_knobs
-    from latex_ocr_spark.session import is_missing_path
+    from latex_ocr_spark.session import has_data
 
     applied: dict = {}
 
@@ -166,7 +159,7 @@ def _resolve_stream_knobs(spark, args, parser) -> dict:
     from latex_ocr_spark.streaming.near_dedup import list_index_batches
 
     meta_path = os.path.join(args.index, "_meta")
-    try:
+    if has_data(spark, meta_path):
         recorded = json.loads(spark.read.text(meta_path).first()[0])
         # a fingerprint with NO indexed data behind it (e.g. a cron
         # first-firing before any producer wrote input) has pinned
@@ -205,18 +198,12 @@ def _resolve_stream_knobs(spark, args, parser) -> dict:
                 and os.path.exists(meta_path)
             ):
                 shutil.rmtree(meta_path)
-    except AnalysisException as e:
-        if not is_missing_path(e):
-            raise
 
-    try:
-        docs = spark.read.parquet(args.input).select("doc_id", "text")
-    except AnalysisException as e:
-        # missing dir AND existing-but-empty dir (cron fired before
-        # any producer) are both "no input yet"
-        if is_missing_path(e, "UNABLE_TO_INFER_SCHEMA"):
-            return {"_note": "no input yet, parser defaults kept"}
-        raise
+    # a path without a visible file (cron fired before any producer)
+    # is "no input yet"
+    if not has_data(spark, args.input):
+        return {"_note": "no input yet, parser defaults kept"}
+    docs = spark.read.parquet(args.input).select("doc_id", "text")
     rec, applied, maybe = survey_and_apply_lsh_knobs(
         docs, args, parser, threshold_attr="threshold",
         sample_fraction=args.auto_knobs_sample,

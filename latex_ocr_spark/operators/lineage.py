@@ -25,11 +25,10 @@ from __future__ import annotations
 import time
 from typing import Optional
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from latex_ocr_spark.session import is_missing_path
+from latex_ocr_spark.session import has_data
 
 DEFAULT_UNITS = 64
 
@@ -42,19 +41,16 @@ def with_work_key(transcripts: DataFrame, n_units: int = DEFAULT_UNITS) -> DataF
 
 def completed_units(spark: SparkSession, lineage_path: str) -> DataFrame:
     """Work keys with a committed lineage row (empty DF when no runs yet)."""
-    # probe via Spark, not os.path — the lineage table may live on
-    # HDFS/S3 where the driver's local filesystem says nothing
-    try:
-        # declared, not inferred: a dir holding only the lease's lock
-        # file reads as empty, with no schema-inference job that fails
-        return spark.read.schema("work_key int").parquet(lineage_path).distinct()
-    except AnalysisException as e:
-        # "no runs yet" is a missing dir; any other failure (a corrupt
-        # or unreadable file) must not read as that: it would silently
-        # re-extract every unit and append a second lineage row for each
-        if not is_missing_path(e):
-            raise
-        return spark.range(0).select(F.col("id").cast("int").alias("work_key"))
+    # "no runs yet" is a path without a visible file (missing, or only
+    # the lease's lock): an empty relation the optimizer folds into a
+    # local scan, so collecting it runs no job.  A lineage file that
+    # fails to read still raises rather than silently re-extracting
+    # every unit and appending a second lineage row for each.  Declared,
+    # not inferred: no schema-inference job
+    if not has_data(spark, lineage_path):
+        empty = spark.range(0).select(F.col("id").cast("int").alias("work_key"))
+        return empty.where(F.lit(False))
+    return spark.read.schema("work_key int").parquet(lineage_path).distinct()
 
 
 def _done_keys(spark: SparkSession, lineage_path: str) -> list:
@@ -149,10 +145,6 @@ def _run_resumable_extract_locked(
         seen, F.collect_set("work_key").alias("units")
     )
 
-    prev_overwrite_mode = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "STATIC"
-    )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     started = time.time()
     raw_handle = None
     try:
@@ -161,9 +153,16 @@ def _run_resumable_extract_locked(
         )
 
         # 1. output commit — dynamic overwrite touches only pending units'
-        # directories (never rewrites completed ones), one file per unit
+        # directories (never rewrites completed ones), one file per unit.
+        # A per-write option, as in streaming/sinks.py: flipping the
+        # session conf would race any other query committing meanwhile
         out = with_work_key(spans, n_units).repartition("work_key")
-        out.write.mode("overwrite").partitionBy("work_key").parquet(output_path)
+        (
+            out.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("work_key")
+            .parquet(output_path)
+        )
         unit_rows = seen.get["units"]
         if not unit_rows:  # every input unit is done already
             return 0
@@ -192,13 +191,9 @@ def _run_resumable_extract_locked(
         )
         metrics.write.mode("append").parquet(lineage_path)
     finally:
-        # any failure path must not leak the dynamic overwrite mode
-        # session-wide nor leave the raw extraction frame cached
+        # any failure path must not leave the raw extraction frame cached
         if raw_handle is not None:
             raw_handle.unpersist()
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", prev_overwrite_mode
-        )
     return len(unit_rows)
 
 

@@ -84,7 +84,6 @@ def cosine_dup_pairs(
     vec_col: str = "embedding",
     num_planes: int = 0,
     hash_fn: str = "xxhash64",
-    assume_small: bool = False,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (a < b, cosine ≥ threshold).
 
@@ -94,51 +93,41 @@ def cosine_dup_pairs(
     checkable baseline at test scale.  ``hash_fn='md5'`` makes the
     bucketed path itself oracle-checkable (``dedup_embedding_lsh``).
 
-    ``assume_small``: broadcast-hint the b-side when the input is KNOWN
-    to be bounded (a test-scale baseline, a re-rank within buckets).
-    Without the hint Spark's post-filter size ESTIMATES decide, and on a
-    larger table they tip the exact path's non-equi join from a
-    broadcast nested loop into a CartesianProduct whose task count is
-    |a-parts|×|b-parts| — measured 4,097 tasks / tens of seconds of pure
-    scheduling for 205 vectors at sf1.0.  Leave False for unbounded
-    inputs (a forced broadcast overrides the size checks).
+    The b-side is broadcast-hinted while the projected vector frame's
+    observed row count passes the dedup size gate (``dedup._is_small``,
+    one job that materializes and counts it).  Without the hint Spark's
+    post-filter size ESTIMATES decide, and on a larger table they tip
+    the exact path's non-equi join from a broadcast nested loop into a
+    CartesianProduct whose task count is |a-parts|×|b-parts| — measured
+    4,097 tasks / tens of seconds of pure scheduling for 205 vectors at
+    sf1.0.  Over the gate the hint is dropped: a forced broadcast
+    overrides the size checks.
     """
+    from latex_ocr_spark.operators import dedup as D
+
     # per-vector norm computed once in the projection, not per pair —
     # the pair join multiplies rows, and each _norm is an interpreted
-    # 64-element fold (bit-identical arithmetic, 3× less per-pair work)
-    v = embeddings.select(
-        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
-    ).withColumn("_n", _norm(F.col("v")))
-    _maybe_small = F.broadcast if assume_small else (lambda df: df)
+    # 64-element fold (bit-identical arithmetic, 3× less per-pair work).
+    # The LSH bucket is a pure function of the vector, so it rides the
+    # same projection (the r7-early shape attached it back via TWO
+    # id-equi-joins against a separate hyperplane_buckets frame, an
+    # exchange or broadcast build per side carrying nothing the row
+    # didn't already have)
+    cols = [F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")]
     if num_planes:
-        # the bucket is a pure function of the vector, so compute it in
-        # the same projection as v and the norm — the r7-early shape
-        # attached it back via TWO id-equi-joins against a separate
-        # hyperplane_buckets frame, an exchange (or broadcast build)
-        # per side that carried no information the row didn't already
-        # have (guide §2.4 remove shuffles outright; identical rows —
-        # ids are unique, so join-on-id ≡ compute-in-place)
-        vb = embeddings.select(
-            F.col(id_col).alias("id"),
-            _as_double(F.col(vec_col)).alias("v"),
-            _bucket_col(F.col(vec_col), num_planes, hash_fn).alias("bucket"),
-        ).withColumn("_n", _norm(F.col("v")))
-        a_side = vb.select(
-            F.col("id").alias("a_id"), F.col("v").alias("av"),
-            F.col("_n").alias("_an"), "bucket",
-        )
-        b_side = vb.select(
-            F.col("id").alias("b_id"), F.col("v").alias("bv"),
-            F.col("_n").alias("_bn"), "bucket",
-        )
-        pairs = a_side.join(_maybe_small(b_side), ["bucket"]).filter(F.col("a_id") < F.col("b_id"))
+        cols.append(_bucket_col(F.col(vec_col), num_planes, hash_fn).alias("bucket"))
+    v, n = D._materialize(embeddings.select(*cols).withColumn("_n", _norm(F.col("v"))))
+    _maybe_small = F.broadcast if D._is_small(n) else (lambda df: df)
+    keys = ["bucket"] if num_planes else []
+    a_side = v.select(
+        F.col("id").alias("a_id"), F.col("v").alias("av"), F.col("_n").alias("_an"), *keys
+    )
+    b_side = v.select(
+        F.col("id").alias("b_id"), F.col("v").alias("bv"), F.col("_n").alias("_bn"), *keys
+    )
+    if num_planes:
+        pairs = a_side.join(_maybe_small(b_side), keys).filter(F.col("a_id") < F.col("b_id"))
     else:
-        a_side = v.select(
-            F.col("id").alias("a_id"), F.col("v").alias("av"), F.col("_n").alias("_an")
-        )
-        b_side = v.select(
-            F.col("id").alias("b_id"), F.col("v").alias("bv"), F.col("_n").alias("_bn")
-        )
         pairs = a_side.join(_maybe_small(b_side), F.col("a_id") < F.col("b_id"))
     scored = pairs.withColumn(
         "cosine",

@@ -1217,17 +1217,15 @@ def dedup_embedding(spark, sf):
     base = emb.unionByName(planted).repartition(
         spark.sparkContext.defaultParallelism
     )
-    # assume_small: base is ≤205 vectors BY CONSTRUCTION at every sf
-    # (vec_id < 200 plus 5 planted), so the b-side broadcast hint is
-    # always safe — without it, sf1.0's post-filter size estimates tip
-    # the non-equi join into a 4,097-task CartesianProduct (pure
-    # scheduling overhead, measured ~20 s for 205 rows)
-    exact = S.cosine_dup_pairs(base, threshold=0.5, assume_small=True).select(
+    # base is ≤205 vectors at every sf (vec_id < 200 plus 5 planted), so
+    # cosine_dup_pairs' observed-count gate keeps its b-side broadcast —
+    # without it, sf1.0's post-filter size estimates tip the non-equi
+    # join into a 4,097-task CartesianProduct (pure scheduling overhead,
+    # measured ~20 s for 205 rows)
+    exact = S.cosine_dup_pairs(base, threshold=0.5).select(
         F.lit("exact").alias("method"), "a_id", "b_id", "cosine"
     )
-    lsh = S.cosine_dup_pairs(
-        base, threshold=0.5, num_planes=4, hash_fn="md5", assume_small=True
-    ).select(
+    lsh = S.cosine_dup_pairs(base, threshold=0.5, num_planes=4, hash_fn="md5").select(
         F.lit("lsh").alias("method"), "a_id", "b_id", "cosine"
     )
     return exact.unionByName(lsh)

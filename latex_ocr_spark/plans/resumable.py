@@ -64,14 +64,13 @@ import json
 import time
 from typing import Callable, Optional, Set, Tuple
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from latex_ocr_spark.lease import DirLease
 from latex_ocr_spark.plans import curate as C
 from latex_ocr_spark.plans.curate import CurationResult, _count
-from latex_ocr_spark.session import is_missing_path
+from latex_ocr_spark.session import has_data
 
 _LINEAGE_SCHEMA = (
     "stage string, config_hash string, n_rows long, meta string, "
@@ -113,16 +112,13 @@ def _read_lineage(spark: SparkSession, lineage_path: str) -> dict:
     """{stage: (config_hash, n_rows, meta_dict)} for committed stages,
     latest commit per stage winning (a re-run after a config change
     overwrites artifacts and appends fresh lineage)."""
-    try:
-        rows = spark.read.parquet(lineage_path).collect()
-    except AnalysisException as e:
-        if is_missing_path(e):
-            return {}  # no runs yet
-        # any OTHER analysis failure (permissions, corrupt footer)
-        # must NOT be read as "fresh checkpoint": that would silently
-        # discard resume state and re-run a 100 TB funnel from the
-        # scan — and bypass the config-mismatch refusal
-        raise
+    if not has_data(spark, lineage_path):
+        return {}  # no runs yet
+    # a lineage that holds data but fails to read (permissions, corrupt
+    # footer) raises: reading it as "fresh checkpoint" would silently
+    # discard resume state and re-run a 100 TB funnel from the scan —
+    # and bypass the config-mismatch refusal
+    rows = spark.read.parquet(lineage_path).collect()
     out = {}
     for r in sorted(rows, key=lambda r: (r["finished"], r["started"])):
         out[r["stage"]] = (r["config_hash"], r["n_rows"], json.loads(r["meta"]))

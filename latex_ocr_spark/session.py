@@ -10,7 +10,6 @@ from __future__ import annotations
 import os
 import zipfile
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -87,10 +86,27 @@ def get_spark(
     return spark
 
 
-def is_missing_path(e: AnalysisException, *also: str) -> bool:
-    """Whether the ``AnalysisException`` ``e`` of a read means only that
-    its path does not exist yet (``PATH_NOT_FOUND``, or one of the
-    error conditions ``also``).  Any other failure — a corrupt file, a
-    permission error — must stay an error, never read as "no state
-    yet"."""
-    return e.getCondition() in ("PATH_NOT_FOUND", *also)
+def has_data(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` holds at least one visible file: the one probe
+    for durable state ("is there a lineage / sink / index / input
+    here yet?").  Asked of the Hadoop ``FileSystem`` of the path, so
+    ``file://``, ``s3a://`` and HDFS paths answer the same way, and
+    without a Spark read, so a fresh path costs no failed analysis and
+    no job.  A name starting with ``_`` or ``.`` is hidden below
+    ``path``, as in Spark's file index: a directory holding only a
+    lock, ``_SUCCESS``, checksums or an aborted ``_temporary`` write
+    has no data.  Filesystem errors (permission, I/O) raise; a visible
+    file that is corrupt is left for the caller's read to reject."""
+    root = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    if not fs.exists(root):
+        return False
+    stack = [root]
+    while stack:
+        for status in fs.listStatus(stack.pop()):
+            if status.getPath().getName().startswith(("_", ".")):
+                continue
+            if status.isFile():
+                return True
+            stack.append(status.getPath())
+    return False

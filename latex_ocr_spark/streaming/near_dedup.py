@@ -50,13 +50,12 @@ from __future__ import annotations
 import os
 from typing import Optional
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.listener import StreamingQueryListener
 
 from latex_ocr_spark import lease as lease_mod
-from latex_ocr_spark.session import is_missing_path
+from latex_ocr_spark.session import has_data
 from latex_ocr_spark.streaming import MAX_FILES_PER_TRIGGER
 from latex_ocr_spark.streaming.decontaminate import DOCS_STREAM_SCHEMA
 from latex_ocr_spark.streaming.sinks import (
@@ -69,20 +68,6 @@ from latex_ocr_spark.streaming.sinks import (
 #: fingerprint: an index written in another layout (e.g. exploded
 #: (id, shingle) rows) is refused as "different knobs", never misread
 _INDEX_LAYOUT = "shingles=id+array,signatures=id+sig+n"
-
-
-def _index_exists(spark: SparkSession, path: str) -> bool:
-    try:
-        spark.read.parquet(path)
-        return True
-    except AnalysisException as e:
-        if is_missing_path(e):
-            return False
-        # a transient/real read failure (permissions, corrupt footer)
-        # must FAIL the batch, not silently skip the all-history check
-        # — skipping would admit near-dups of every prior survivor
-        # into BOTH the output and the index, permanently
-        raise
 
 
 #: compaction's rename-aside name for a table's pre-swap copy
@@ -248,7 +233,7 @@ def _start_near_dedup_stream_fenced(
          "band_size": band_size, "ngram": ngram, "layout": _INDEX_LAYOUT},
         sort_keys=True,
     )
-    try:
+    if has_data(spark, meta_path):
         existing = spark.read.text(meta_path).first()[0]
         if existing != cfg:
             raise RuntimeError(
@@ -257,9 +242,7 @@ def _start_near_dedup_stream_fenced(
                 "checks across the two are meaningless; use a fresh index "
                 "dir (or rebuild) to change knobs"
             )
-    except AnalysisException as e:
-        if not is_missing_path(e):
-            raise
+    else:
         spark.range(1).select(F.lit(cfg).alias("cfg")).coalesce(1).write.mode(
             "overwrite"
         ).text(meta_path)
@@ -285,10 +268,12 @@ def _start_near_dedup_stream_fenced(
             )
 
     # a half-index means an interrupted compaction (or manual damage):
-    # shingles and signatures are written together by every batch, so
-    # exactly one existing is NEVER "no history yet" — treating it so
-    # would skip the all-history check and permanently admit near-dups
-    # of every prior survivor.  Fail loudly and point at the repair.
+    # shingles and signatures are written together by every batch, from
+    # the same survivors, so exactly one holding data is NEVER "no
+    # history yet" — treating it so would skip the all-history check
+    # and permanently admit near-dups of every prior survivor.  Fail
+    # loudly and point at the repair.  Both without data (missing, or
+    # left empty by batches with nothing to index) is a fresh index.
     residue = [
         p
         for sub in ("shingles", "signatures")
@@ -303,14 +288,14 @@ def _start_near_dedup_stream_fenced(
             "(or compact_index, which recovers first) before streaming"
         )
     have = {
-        sub: _index_exists(spark, os.path.join(index_dir, sub))
-        for sub in ("shingles", "signatures")
+        "shingles": has_data(spark, sh_path),
+        "signatures": has_data(spark, sig_path),
     }
     if have["shingles"] != have["signatures"]:
         present = [s for s, h in have.items() if h][0]
         raise RuntimeError(
             f"survivor index at {index_dir} is half-present (only "
-            f"'{present}' exists) — refusing to treat it as empty; "
+            f"'{present}' holds data) — refusing to treat it as empty; "
             "restore the missing table or start a fresh index dir"
         )
 
@@ -357,7 +342,11 @@ def _start_near_dedup_stream_fenced(
             # the survivors' rows, and filtering them first would cost a
             # join (two broadcast jobs) per batch; the index tables ARE
             # the corpus profile — never re-shingled
-            if _index_exists(spark, sig_path):
+            # a history that holds data but fails to read (permissions,
+            # corrupt footer) fails the batch: skipping the check would
+            # admit near-dups of every prior survivor into BOTH the
+            # output and the index, permanently
+            if has_data(spark, sig_path):
                 # EXCLUDE this batch's own partitions: a replayed batch
                 # must not see its previous (partial) attempt's index
                 # rows, or it would flag every one of its docs as a
@@ -572,6 +561,9 @@ def _compact_index_locked(spark, index_dir, num_partitions, _shutil) -> dict:
         path = os.path.join(index_dir, sub)
         staging = _staging_path(index_dir, sub)
         bak = _bak_path(index_dir, sub)
+        if not has_data(spark, path):
+            out[sub] = 0  # nothing indexed yet: nothing to fold
+            continue
         src = spark.read.parquet(path)
         if keep_batch is not None:
             src = src.filter(F.col(BATCH_COL) != keep_batch)
@@ -700,9 +692,9 @@ def _prune_index_locked(spark, index_dir, min_batch_id, keep_last_n, _shutil):
     )
     if batches and not kept and not has_compacted:
         raise RuntimeError(
-            f"pruning every batch ({pruned}) would leave an EMPTY index "
-            "that the stream cannot distinguish from corruption — keep at "
-            "least one batch, or delete the index dir for a fresh start"
+            f"pruning every batch ({pruned}) would leave an EMPTY index, "
+            "which the stream reads as a fresh one — keep at least one "
+            "batch, or delete the index dir for a fresh start"
         )
     # signatures first (see docstring), then shingles
     for sub in ("signatures", "shingles"):

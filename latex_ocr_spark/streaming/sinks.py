@@ -16,11 +16,10 @@ invisible; no dedup-on-read required.
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from latex_ocr_spark.session import is_missing_path
+from latex_ocr_spark.session import has_data
 
 BATCH_COL = "batch_id"
 
@@ -31,14 +30,13 @@ def assert_idempotent_layout(spark: SparkSession, path: str) -> None:
     ``batch_id=N/`` partition dirs make the next read fail partition
     discovery ("conflicting directory structures").  Streams call this
     once at start; a legacy deployment migrates by moving the old files
-    under a ``batch_id=-1/`` directory."""
-    try:
-        cols = spark.read.parquet(path).columns
-    except AnalysisException as e:
-        if is_missing_path(e):
-            return  # fresh sink — fine
-        raise
-    if BATCH_COL not in cols:
+    under a ``batch_id=-1/`` directory.  A sink without a visible file
+    is fresh: a batch with no rows commits no file, so a query whose
+    batches all came out empty must not keep the next start from
+    running."""
+    if not has_data(spark, path):
+        return  # fresh sink, or one whose batches all came out empty
+    if BATCH_COL not in spark.read.parquet(path).columns:
         raise RuntimeError(
             f"output at {path} holds a plain-append (pre-idempotent) "
             f"layout without a {BATCH_COL} partition column; writing "

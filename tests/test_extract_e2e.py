@@ -95,3 +95,25 @@ def test_resumable_extract_full_pass_job_budget(spark, tmp_path):
                               str(tmp_path / "out"), str(tmp_path / "lin"), n_units=8)
     assert n == 8
     assert reader.since(mark)["jobs"] <= 7
+
+
+def test_resumable_extract_leaves_the_overwrite_mode_conf_alone(spark, tmp_path, monkeypatch):
+    """The output commit's dynamic partition overwrite is a per-write
+    option: flipping the session-wide conf and restoring it would race
+    any other query committing in the same session meanwhile."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from latex_ocr_spark.operators.lineage import run_resumable_extract
+
+    touched = []
+    set_conf = RuntimeConfig.set
+
+    def record(self, key, value):
+        touched.append(key)
+        return set_conf(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", record)
+    assert run_resumable_extract(spark, synth_transcripts(spark, 20),
+                                 str(tmp_path / "out"), str(tmp_path / "lin"),
+                                 n_units=4) == 4
+    assert "spark.sql.sources.partitionOverwriteMode" not in touched

@@ -73,3 +73,22 @@ def test_idempotent_sink_refuses_legacy_append_layout(spark, tmp_path):
         assert_idempotent_layout(spark, legacy)
     # fresh and already-partitioned sinks pass
     assert_idempotent_layout(spark, str(tmp_path / "fresh"))
+
+
+def test_stream_restarts_after_a_batch_without_math(spark, dirs):
+    """A batch whose turns hold no math commits no output file; the
+    next start must read that sink as fresh, not fail on it."""
+    inp, out, ckpt = f"{dirs}/in", f"{dirs}/out", f"{dirs}/ckpt"
+    all_t = synth_transcripts(spark, 20)
+    plain = all_t.filter(F.col("conv_id") < "conv-000010").withColumn(
+        "text", F.lit("no math in this turn")
+    )
+    rest = all_t.filter(F.col("conv_id") >= "conv-000010")
+
+    plain.write.mode("append").parquet(inp)
+    start_extraction_stream(spark, inp, out, ckpt).awaitTermination(120)
+    rest.write.mode("append").parquet(inp)
+    start_extraction_stream(spark, inp, out, ckpt).awaitTermination(120)
+    assert _spans_set(read_stream_output(spark, out)) == _spans_set(
+        extract_spans(rest.select("conv_id", "turn_idx", "text"))
+    )

@@ -204,3 +204,34 @@ def test_backlog_drains_in_batches_of_the_shared_file_bound(spark, dirs, monkeyp
     assert [r[0] for r in whole[0]] == [0, 10, 20, 30, 40, 50]
     assert len(whole[1]) == 54
     assert bounded == whole
+
+
+def test_stream_restarts_after_a_query_with_no_contaminated_document(spark, dirs):
+    """A query whose only batch flags no document commits no report
+    file; the next query must start over the empty report sink, and
+    both queries together must equal ``decontaminate`` over both
+    chunks."""
+    from latex_ocr_spark import cachepool
+
+    inp, rep, cln, ckpt = f"{dirs}/in", f"{dirs}/rep", f"{dirs}/cln", f"{dirs}/ckpt"
+    evalset = _evalset(spark)
+    first, second = _docs(spark, 1, 10), _docs(spark, 10, 30)  # 1..9: clean
+
+    first.write.mode("append").parquet(inp)
+    start_decontamination_stream(spark, inp, evalset, rep, cln, ckpt).awaitTermination(120)
+    cachepool.release()
+    second.write.mode("append").parquet(inp)
+    start_decontamination_stream(spark, inp, evalset, rep, cln, ckpt).awaitTermination(120)
+    cachepool.release()
+
+    b_report, b_clean = decontaminate(
+        first.unionByName(second), evalset, threshold=0.5, ngram=3
+    )
+    assert sorted(map(tuple, read_stream_output(spark, rep).collect())) == sorted(
+        map(tuple, b_report.collect())
+    )
+    assert sorted(r.doc_id for r in read_stream_output(spark, cln).collect()) == sorted(
+        r.doc_id for r in b_clean.collect()
+    )
+    assert b_report.count() == 2  # docs 10 and 20
+    cachepool.release()

@@ -981,11 +981,12 @@ def test_catchup_backlog_is_bounded_into_multiple_batches(spark, dirs):
 
 def test_two_batch_drain_runs_within_its_job_budget(spark, dirs):
     """One ``availableNow`` drain of two landed files, one file per
-    micro-batch, runs at most 18 Spark jobs in the first batch and 32 in
+    micro-batch, runs at most 18 Spark jobs in the first batch and 31 in
     the second, which checks its documents against the first batch's
     survivors, counted by listing the status store's jobs per batch as
-    the benchmark's trace counts them.  A new probe or count job in the
-    micro-batch shows up here."""
+    the benchmark's trace counts them (32 while the history's existence
+    was probed by a schema-inferring read).  A new probe or count job in
+    the micro-batch shows up here."""
     import re
 
     from perfbench.statusstore import StatusReader
@@ -1005,4 +1006,27 @@ def test_two_batch_drain_runs_within_its_job_budget(spark, dirs):
     cachepool.release()
     assert got == sorted(list(range(20)) + [200 + i for i in range(10)])
     assert sorted(per_batch) == [0, 1], per_batch
-    assert per_batch[0] <= 18 and per_batch[1] <= 32, per_batch
+    assert per_batch[0] <= 18 and per_batch[1] <= 31, per_batch
+
+
+def test_stream_restarts_after_a_batch_with_nothing_to_index(spark, dirs):
+    """A first batch of only NULL, empty and blank texts is accepted but
+    leaves both index tables without a file.  The next start must read
+    that as a fresh index (not a half-present or unreadable one), and
+    compaction must fold it to nothing."""
+    from latex_ocr_spark.streaming.near_dedup import compact_index
+
+    spark.createDataFrame(
+        [(500, None), (501, ""), (502, "   ")], "doc_id long, text string"
+    ).write.mode("append").parquet(f"{dirs}/in")
+    _run(spark, dirs)
+    cachepool.release()
+    assert compact_index(spark, f"{dirs}/index", num_partitions=2) == {
+        "shingles": 0, "signatures": 0,
+    }
+
+    _batch1(spark).write.mode("append").parquet(f"{dirs}/in")
+    _run(spark, dirs)
+    got = sorted(r.doc_id for r in read_stream_output(spark, f"{dirs}/out").collect())
+    cachepool.release()
+    assert got == list(range(20)) + [500, 501, 502]
