@@ -71,9 +71,6 @@ def main() -> int:
                     "unbounded; availableNow catch-up over a backlog "
                     "then runs as ONE giant batch — see "
                     "start_near_dedup_stream)")
-    ap.add_argument("--max-bytes-per-trigger",
-                    help="micro-batch bound by bytes, e.g. '1g' "
-                    "(soft cap; combines with --max-files-per-trigger)")
     ap.add_argument("--synth", type=int,
                     help="write N synthetic documents into --input first")
     ap.add_argument("--cores", type=int,
@@ -115,7 +112,6 @@ def main() -> int:
         max_bucket_size=args.max_bucket_size,
         available_now=not args.continuous,
         max_files_per_trigger=args.max_files_per_trigger or None,
-        max_bytes_per_trigger=args.max_bytes_per_trigger,
     )
     q.awaitTermination()
 

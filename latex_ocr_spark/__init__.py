@@ -7,7 +7,7 @@ DataFrame engine over multi-turn transcript tables:
 - ``textkernel``  — pure-Python kernels (regex math location, macro
   expansion, LaTeX normalization); no Spark imports, reused both as the
   inner loops of vectorized Arrow UDFs and as golden-test subjects.
-- ``functions``   — Spark Column expressions + pandas UDF wrappers.
+- ``functions``   — Spark Column expressions, Arrow UDFs and ``map_rows``.
 - ``operators``   — DataFrame-level operators (extraction, bucketing,
   dedup, similarity, eval metrics, lineage/resume).
 - ``sources``     — readers for the test tables + transcript synthesis.

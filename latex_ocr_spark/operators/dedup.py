@@ -546,6 +546,12 @@ def _is_small(n: int) -> bool:
     return n < _BROADCAST_ROW_LIMIT
 
 
+def _maybe_broadcast(df: DataFrame, n_rows: int) -> DataFrame:
+    """``df`` broadcast-hinted when ``n_rows``, an observed bound on its
+    row count, passes the size gate."""
+    return F.broadcast(df) if _is_small(n_rows) else df
+
+
 def _materialize(df: DataFrame) -> tuple[DataFrame, int]:
     """(``df`` materialized by ``localCheckpoint``, its row count): the
     count is an observed metric of the same job, so the gates read a
@@ -619,25 +625,26 @@ def lsh_verified_pairs(
     # picked the full array frame as the second join's build side, a
     # corpus-sized broadcast (measured ~5.8 s build+collect at 50k
     # docs, an OOM at real scale)
-    return _jaccard_from_arrays(cand, arrs, threshold, pairs_small=_is_small(n_cand))
+    return _jaccard_from_arrays(cand, arrs, threshold, n_pairs=n_cand)
 
 
 def _jaccard_from_arrays(
     cand: DataFrame,
     arrs_a: DataFrame,
     threshold: float,
+    n_pairs: int,
     arrs_b=None,
-    pairs_small: bool = False,
 ) -> DataFrame:
     """(a_id, b_id, jaccard) for candidate pairs, by joining the (small)
     pair list to per-document shingle arrays and intersecting in-row:
     |A∩B| via ``array_intersect`` over the distinct sets — bit-identical
     to the exploded-join count, with zero corpus-side shuffle.
 
-    ``pairs_small`` broadcast-hints the candidate-derived side of BOTH
-    joins (the pair list into the first, the pair+a-side-arrays result
-    into the second), so the array frame streams through each join as
-    the probe side.  Without the second hint the planner — going off
+    ``n_pairs``, the observed candidate count, broadcast-hints under the
+    size gate the candidate-derived side of BOTH joins (the pair list
+    into the first, the pair+a-side-arrays result into the second), so
+    the array frame streams through each join as the probe side.
+    Without the second hint the planner — going off
     size estimates — picked the FULL corpus array frame as the second
     join's build side: a corpus-sized broadcast, the exact
     "every explicit broadcast is an OOM liability" class (guide §3.1),
@@ -645,7 +652,6 @@ def _jaccard_from_arrays(
     = b-side array frame when a_id and b_id come from different tables
     (may carry its own broadcast hint — the eval profile under the
     size gate — in which case the second join builds from it instead)."""
-    _h = F.broadcast if pairs_small else (lambda df: df)
     a = arrs_a.select(
         F.col("id").alias("a_id"),
         F.col("shingles").alias("_a_sh"),
@@ -656,11 +662,11 @@ def _jaccard_from_arrays(
         F.col("shingles").alias("_b_sh"),
         F.size("shingles").alias("_b_n"),
     )
-    first = a.join(_h(cand), "a_id")
+    first = a.join(_maybe_broadcast(cand, n_pairs), "a_id")
     if arrs_b is None:
         # self-join: the big side (b = the same corpus array frame)
         # must stay the probe — hint the pair-sized intermediate
-        second = b.join(_h(first), "b_id")
+        second = b.join(_maybe_broadcast(first, n_pairs), "b_id")
     else:
         # cross-table: the b side is the caller's eval frame, hinted
         # by the caller's own gate — leave the choice to it
@@ -995,12 +1001,11 @@ def _cross_report(
     broadcasts the eval side (keyed frame and profile), so the corpus
     frames join map-side with zero shuffle; the materialized candidate
     count gates the first verify join and the cleaning anti-join."""
-    eval_hint = F.broadcast if _is_small(n_eval) else (lambda df: df)
     keyed_c = _band_keyed(sig_c, num_hashes, band_size)
     if max_bucket_size is not None:
         keyed_c = _drop_hot_keys(keyed_c, ["band_idx", "band_key"], max_bucket_size)
     c = keyed_c.alias("c")
-    e = eval_hint(_band_keyed(prof_e, num_hashes, band_size).alias("e"))
+    e = _maybe_broadcast(_band_keyed(prof_e, num_hashes, band_size).alias("e"), n_eval)
     cand, n_cand = _materialize(
         c.join(
             e,
@@ -1014,8 +1019,8 @@ def _cross_report(
     # from the eval-side profile
     report = cachepool.track(
         _jaccard_from_arrays(
-            cand, arrs_c, threshold, arrs_b=eval_hint(prof_e),
-            pairs_small=_is_small(n_cand),
+            cand, arrs_c, threshold, arrs_b=_maybe_broadcast(prof_e, n_eval),
+            n_pairs=n_cand,
         ).select(
             F.col("a_id").alias("corpus_id"),
             F.col("b_id").alias("eval_id"),
@@ -1027,7 +1032,7 @@ def _cross_report(
 
 def _decontaminate_against(
     corpus, prof_e, n_eval, threshold, num_hashes, band_size, ngram, text_col,
-    id_col, max_bucket_size, corpus_arrs=None, corpus_signatures=None,
+    id_col, max_bucket_size, corpus_arrs=None,
 ):
     """:func:`decontaminate` against an :func:`_eval_profile` of
     ``n_eval`` rows: a caller checking many corpora profiles it once."""
@@ -1044,19 +1049,15 @@ def _decontaminate_against(
             )
         )
     )
-    sig_c = corpus_signatures if corpus_signatures is not None else arrs_c
     report, n_cand = _cross_report(
-        arrs_c, sig_c, prof_e, n_eval, threshold, num_hashes, band_size,
+        arrs_c, arrs_c, prof_e, n_eval, threshold, num_hashes, band_size,
         max_bucket_size,
     )
     contaminated = report.select(F.col("corpus_id").alias(id_col)).distinct()
     # under the gate cleaning the corpus is a map-side anti-join with
     # zero corpus shuffle; above it (boilerplate overlapping a broad
     # eval suite) AQE decides
-    cleaned = corpus.join(
-        F.broadcast(contaminated) if _is_small(n_cand) else contaminated,
-        id_col, "left_anti",
-    )
+    cleaned = corpus.join(_maybe_broadcast(contaminated, n_cand), id_col, "left_anti")
     return report, cleaned
 
 
@@ -1070,7 +1071,6 @@ def decontaminate(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_bucket_size: int | None = None,
-    _corpus_signatures: DataFrame | None = None,
     _corpus_arrs: DataFrame | None = None,
 ):
     """Benchmark decontamination: find (and enable dropping of) corpus
@@ -1091,16 +1091,15 @@ def decontaminate(
     one profile pass (shingle sets stay row-wise — no explode), and the
     quadratic step is bounded by cross-table band collisions.
     ``_corpus_arrs`` lets a composed pipeline (curate_corpus) hand in
-    the (id, shingles) profile its near-dup stage already built
-    (survivor-filtered) — the corpus is then never re-tokenized here;
-    ``_corpus_signatures`` (id, sig_*) defaults to it (per-doc
-    signatures are unaffected by dropping OTHER documents, so a
-    survivor-filtered frame is exact).  ``max_bucket_size`` caps
+    the profile (shingles and signatures) its near-dup stage already
+    built, survivor-filtered — the corpus is then never re-tokenized
+    here (per-doc profiles are unaffected by dropping OTHER documents,
+    so a survivor-filtered frame is exact).  ``max_bucket_size`` caps
     degenerate corpus-side band buckets exactly as in the self-join
     path.
     """
     return _decontaminate_against(
         corpus, *_eval_profile(evalset, num_hashes, ngram, text_col, id_col),
         threshold, num_hashes, band_size, ngram, text_col, id_col,
-        max_bucket_size, _corpus_arrs, _corpus_signatures,
+        max_bucket_size, _corpus_arrs,
     )

@@ -15,12 +15,13 @@ from __future__ import annotations
 
 import math
 from collections import Counter
-from typing import Iterator, List
+from typing import List
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from latex_ocr_spark.functions.arrowcols import map_rows
 
 
 def sentence_bleu(pred_tokens: List[str], truth_tokens: List[str], max_n: int = 4) -> float:
@@ -140,48 +141,28 @@ def score_pairs(
     from latex_ocr_spark.operators.tokenize import _broadcast_tokenizer, _rebuild
 
     bc = _broadcast_tokenizer(pairs)
-    schema = T.StructType(list(pairs.schema.fields) + _PAIR_SCHEMA_EXTRA)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_row():
         from latex_ocr_spark.textkernel.normalize import post_process
 
         tk = _rebuild(bc)
-        for pdf in batches:
-            pdf = pdf.copy()
-            bleus, eds, accs, exact = [], [], [], []
-            overlaps, totals, plens, tlens = [], [], [], []
-            for pred, truth in zip(pdf[pred_col], pdf[truth_col]):
-                p = post_process(pred or "")
-                t = post_process(truth or "")
-                # BLEU over BPE token sequences, as the reference's
-                # detokenize→bleu_score chain does (eval.py:55-57)
-                pt = tk.detok_tokens(pred or "")
-                tt = tk.detok_tokens(truth or "")
-                bleus.append(sentence_bleu(pt, tt))
-                ov, tot, pl, tl = bleu_counts(pt, tt)
-                overlaps.append(ov)
-                totals.append(tot)
-                plens.append(pl)
-                tlens.append(tl)
-                eds.append(edit_distance(p, t) / max(len(t), 1))
-                accs.append(
-                    token_accuracy(
-                        tk.encode(p, add_specials=False),
-                        tk.encode(t, add_specials=False),
-                    )
-                )
-                exact.append(int(p == t))
-            pdf["bleu"] = bleus
-            pdf["edit_dist_norm"] = eds
-            pdf["token_acc"] = accs
-            pdf["exact_match"] = exact
-            pdf["bleu_overlap"] = overlaps
-            pdf["bleu_total"] = totals
-            pdf["pred_len"] = plens
-            pdf["truth_len"] = tlens
-            yield pdf
 
-    return pairs.mapInPandas(run, schema=schema)
+        def row(pred, truth):
+            p = post_process(pred or "")
+            t = post_process(truth or "")
+            # BLEU over BPE token sequences, as the reference's
+            # detokenize→bleu_score chain does (eval.py:55-57)
+            pt = tk.detok_tokens(pred or "")
+            tt = tk.detok_tokens(truth or "")
+            acc = token_accuracy(
+                tk.encode(p, add_specials=False), tk.encode(t, add_specials=False)
+            )
+            ed = edit_distance(p, t) / max(len(t), 1)
+            yield (sentence_bleu(pt, tt), ed, acc, int(p == t), *bleu_counts(pt, tt))
+
+        return row
+
+    return map_rows(pairs, make_row, [pred_col, truth_col], _PAIR_SCHEMA_EXTRA)
 
 
 def metric_rollup(scored: DataFrame) -> DataFrame:

@@ -50,33 +50,38 @@ def shape_uniform_repartition(
     df: DataFrame,
     num_partitions: Optional[int] = None,
     salt_buckets: Optional[int] = None,
+    bucket: Optional[str] = None,
 ) -> DataFrame:
-    """Salted repartition on (hash(conv_id) % salt, length bucket).
+    """Salted repartition on (hash(conv_id, turn_idx) % salt, bucket).
 
-    The salt splits whale conversations across partitions; the
-    log₂-length bucket makes rows inside one Arrow batch cost-uniform
-    for the Python kernel (long macro-heavy turns cluster together
-    instead of straggling a mixed partition).
+    The salt splits whale conversations across partitions; the bucket
+    makes rows inside one Arrow batch cost-uniform for the Python
+    kernel (long macro-heavy turns cluster together instead of
+    straggling a mixed partition).  ``bucket`` names a kept column of
+    ``df`` (inference's token bucket); by default it is the log₂ text
+    length, dropped after the sort.
     """
     # guard: pmod(hash, lit(None)) is NULL for every row, silently
     # collapsing the salt — default rather than forward a None
     salt_buckets = salt_buckets or DEFAULT_SALT_BUCKETS
-    bucketed = df.withColumn(
-        "_len_bucket", F.ceil(F.log2(F.length("text") + F.lit(2))).cast("int")
-    ).withColumn(
-        # (conv_id, turn_idx) salt: conv_id alone would pin whale
-        # conversations to single partitions
-        "_salt",
-        F.pmod(F.hash("conv_id", "turn_idx"), F.lit(salt_buckets)),
+    dropped = ["_salt"]
+    if bucket is None:
+        bucket = "_len_bucket"
+        dropped.append(bucket)
+        df = df.withColumn(
+            bucket, F.ceil(F.log2(F.length("text") + F.lit(2))).cast("int")
+        )
+    # (conv_id, turn_idx) salt: conv_id alone would pin whale
+    # conversations to single partitions
+    salted = df.withColumn(
+        "_salt", F.pmod(F.hash("conv_id", "turn_idx"), F.lit(salt_buckets))
     )
-    parts = [F.col("_salt"), F.col("_len_bucket")]
+    parts = [F.col("_salt"), F.col(bucket)]
     if num_partitions:
-        repartitioned = bucketed.repartition(num_partitions, *parts)
+        repartitioned = salted.repartition(num_partitions, *parts)
     else:
-        repartitioned = bucketed.repartition(*parts)
-    return repartitioned.sortWithinPartitions("_len_bucket").drop(
-        "_len_bucket", "_salt"
-    )
+        repartitioned = salted.repartition(*parts)
+    return repartitioned.sortWithinPartitions(bucket).drop(*dropped)
 
 
 def extract_spans(

@@ -18,13 +18,14 @@ from __future__ import annotations
 
 import struct
 import zlib
-from typing import Iterator, Optional, Tuple
+from typing import Optional, Tuple
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from latex_ocr_spark.functions.arrowcols import map_rows
 
 _PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 
@@ -271,21 +272,12 @@ PROBED_SCHEMA_EXTRA = [
 
 def with_probed_size(images: DataFrame, png_col: str = "png") -> DataFrame:
     """S3 size probe: width/height from IHDR bytes, no decode."""
-    schema = T.StructType(list(images.schema.fields) + PROBED_SCHEMA_EXTRA)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            sizes = [probe_png_size(b) for b in pdf[png_col]]
-            pdf["width"] = pd.Series(
-                [s[0] if s else None for s in sizes], dtype="Int32"
-            )
-            pdf["height"] = pd.Series(
-                [s[1] if s else None for s in sizes], dtype="Int32"
-            )
-            yield pdf
-
-    return images.mapInPandas(run, schema=schema)
+    return map_rows(
+        images,
+        lambda: lambda png: [probe_png_size(png) or (None, None)],
+        [png_col],
+        PROBED_SCHEMA_EXTRA,
+    )
 
 
 def filter_dimensions(
@@ -329,22 +321,13 @@ def preprocess_images(images: DataFrame, png_col: str = "png") -> DataFrame:
     PNG and its final dims.  Runs per Arrow batch; rows whose decode is
     unsupported are passed through with nulls (quarantine downstream).
     """
-    schema = T.StructType(
-        list(images.schema.fields)
-        + [
+    return map_rows(
+        images,
+        lambda: lambda png: [_preprocess_checked(png)],
+        [png_col],
+        [
             T.StructField("proc_png", T.BinaryType()),
             T.StructField("proc_w", T.IntegerType()),
             T.StructField("proc_h", T.IntegerType()),
-        ]
+        ],
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            rows = [_preprocess_checked(b) for b in pdf[png_col]]
-            pdf["proc_png"] = [r[0] for r in rows]
-            pdf["proc_w"] = pd.Series([r[1] for r in rows], dtype="Int32")
-            pdf["proc_h"] = pd.Series([r[2] for r in rows], dtype="Int32")
-            yield pdf
-
-    return images.mapInPandas(run, schema=schema)

@@ -10,7 +10,7 @@ exact interface a real model drops into:
   Arrow batch is shape-uniform (the reference's size-bucket batching,
   dataset.py:70-79 — this is where shape uniformity buys vectorized
   tensor work, unlike the regex stage);
-- inside ``mapInPandas`` each batch is padded to a dense (B, L) int
+- inside ``mapInArrow`` each batch is padded to a dense (B, L) int
   matrix (PAD=0, dataset.py:31-33/prepare_data:148-150), "decoded"
   greedily, and detokenized with the broadcast vocab;
 - the stand-in decoder is the identity over token ids — the strongest
@@ -23,18 +23,15 @@ forward pass; nothing about the plan, batching, or schema changes.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from latex_ocr_spark.operators.tokenize import _broadcast_tokenizer, _rebuild
+from latex_ocr_spark.operators.extract import shape_uniform_repartition
+from latex_ocr_spark.operators.tokenize import _append_column, _broadcast_tokenizer, _rebuild
 
 PAD_ID = 0
-DEFAULT_SALT = 64
 
 
 def with_token_bucket(df: DataFrame, tokens_col: str = "tokens", width: int = 16) -> DataFrame:
@@ -49,14 +46,14 @@ def infer_spans(
     spans_with_tokens: DataFrame,
     tokens_col: str = "tokens",
     num_partitions: int | None = None,
-    salt_buckets: int = DEFAULT_SALT,
+    salt_buckets: int | None = None,
     decoder=None,
 ) -> DataFrame:
     """Append ``pred_latex`` via the batched decode.
 
     ``decoder``: the real-model seam — a picklable callable
     ``(B, L) int64 ndarray -> (B, L) int64 ndarray`` shipped to
-    executors inside the mapInPandas closure (a module global would
+    executors inside the mapInArrow closure (a module global would
     NOT survive the python-worker boundary).  A torch-backed decoder
     closes over its (small) state dict; None runs the deterministic
     stand-in (and raises NotImplementedError if torch is importable
@@ -64,43 +61,33 @@ def infer_spans(
     tests/test_inference_eval.py: a numpy fake proves the plumbing
     everywhere, and the torch-conditional test exercises a real tiny
     module wherever torch exists."""
-    df = with_token_bucket(spans_with_tokens, tokens_col)
-    # salt on (conv_id, turn_idx): hashing conv_id alone would pin a
-    # whale conversation to one partition — the turn component spreads
-    # hot conversations while same-bucket rows still co-batch
-    df = df.withColumn(
-        "_salt", F.pmod(F.hash("conv_id", "turn_idx"), F.lit(salt_buckets))
+    df = shape_uniform_repartition(
+        with_token_bucket(spans_with_tokens, tokens_col),
+        num_partitions=num_partitions,
+        salt_buckets=salt_buckets,
+        bucket="bucket",
     )
-    parts = [F.col("_salt"), F.col("bucket")]
-    df = (
-        df.repartition(num_partitions, *parts) if num_partitions else df.repartition(*parts)
-    )
-    df = df.sortWithinPartitions("bucket").drop("_salt")
-
     bc = _broadcast_tokenizer(df)
     schema = T.StructType(
         list(df.schema.fields) + [T.StructField("pred_latex", T.StringType())]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tk = _rebuild(bc)
-        for pdf in batches:
-            pdf = pdf.copy()
-            ids_list = [list(x) if x is not None else [] for x in pdf[tokens_col]]
-            if ids_list:
-                # dense (B, L) pad — cheap because the batch is
-                # bucket-uniform, so L ≈ every row's length
-                L = max((len(x) for x in ids_list), default=1) or 1
-                batch = np.full((len(ids_list), L), PAD_ID, dtype=np.int64)
-                for i, ids in enumerate(ids_list):
-                    batch[i, : len(ids)] = ids
-                decoded = _decode_batch(batch, decoder)
-                pdf["pred_latex"] = [tk.decode(row) for row in decoded]
-            else:
-                pdf["pred_latex"] = []
-            yield pdf
+    def run(batches):
+        from latex_ocr_spark.functions.arrowcols import strings
 
-    return df.mapInPandas(run, schema=schema)
+        tk = _rebuild(bc)
+        for rb in batches:
+            ids_list = [x or [] for x in rb.column(tokens_col).to_pylist()]
+            # dense (B, L) pad — cheap because the batch is bucket-uniform,
+            # so L ≈ every row's length
+            L = max((len(x) for x in ids_list), default=1) or 1
+            batch = np.full((len(ids_list), L), PAD_ID, dtype=np.int64)
+            for i, ids in enumerate(ids_list):
+                batch[i, : len(ids)] = ids
+            decoded = _decode_batch(batch, decoder) if ids_list else batch
+            yield _append_column(rb, "pred_latex", strings([tk.decode(r) for r in decoded]))
+
+    return df.mapInArrow(run, schema=schema)
 
 
 EOS_ID = 2

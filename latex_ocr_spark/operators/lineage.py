@@ -133,6 +133,7 @@ def _run_resumable_extract_locked(
     fail_on_units: Optional[set],
 ) -> int:
     from latex_ocr_spark.functions.udfs import FAILED_TURN_SPAN_IDX
+    from latex_ocr_spark.operators.dedup import _maybe_broadcast
     from latex_ocr_spark.operators.extract import extract_spans_with_failures
 
     done = _done_keys(spark, lineage_path)
@@ -179,11 +180,14 @@ def _run_resumable_extract_locked(
             _unit_checksum(span_row).alias("checksum"),
             F.count_if(F.col("span_idx") == FAILED_TURN_SPAN_IDX).alias("n_failed"),
         )
-        # every pending unit gets a lineage row (zeros when it yielded no rows)
+        # every pending unit gets a lineage row (zeros when it yielded
+        # no rows); ``metrics`` holds at most one row per pending unit,
+        # so under the size gate the join broadcasts it instead of
+        # shuffling both sides
         units = spark.range(n_units).filter(F.col("id").isin(unit_rows))
         metrics = (
             units.select(F.col("id").cast("int").alias("work_key"))
-            .join(metrics, "work_key", "left")
+            .join(_maybe_broadcast(metrics, len(unit_rows)), "work_key", "left")
             .na.fill({"n_turns": 0, "n_spans": 0, "n_failed": 0, "checksum": 0})
             .withColumn("started", F.lit(int(started)).cast("long"))
             .withColumn("finished", F.lit(int(time.time())).cast("long"))

@@ -18,12 +18,11 @@ verifiable without any codec.
 
 from __future__ import annotations
 
-from typing import Iterator, List
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from latex_ocr_spark.functions.arrowcols import map_rows
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -99,28 +98,13 @@ def extract_media_features(media: DataFrame, feature_dim: int = 8) -> DataFrame:
     stand-in with the exact shape a CNN/fbank extractor would emit.
     Undecodable rows carry ``decode_error`` instead of failing the
     task (quarantine downstream, render-retry semantics)."""
-    schema = T.StructType(list(media.schema.fields) + _FEATURE_FIELDS)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            n_bytes: List[int] = []
-            feats: List = []
-            errs: List = []
-            for kind, mime, payload in zip(pdf["kind"], pdf["mime"], pdf["payload"]):
-                blob = bytes(payload) if payload is not None else b""
-                n_bytes.append(len(blob))
-                feat, err = _featurize_checked(
-                    lambda k=kind, m=mime, b=blob: _decode_stub(k, m, b), feature_dim
-                )
-                feats.append(feat)
-                errs.append(err)
-            pdf["n_bytes"] = pd.Series(n_bytes, dtype="int64")
-            pdf["feature"] = feats
-            pdf["decode_error"] = errs
-            yield pdf
+    def row(kind, mime, payload):
+        blob = payload if payload is not None else b""
+        feat, err = _featurize_checked(lambda: _decode_stub(kind, mime, blob), feature_dim)
+        yield len(blob), feat, err
 
-    return media.mapInPandas(run, schema=schema)
+    return map_rows(media, lambda: row, ["kind", "mime", "payload"], _FEATURE_FIELDS)
 
 
 def fetch_frames(media: DataFrame, plan: DataFrame, feature_dim: int = 8) -> DataFrame:
@@ -145,41 +129,20 @@ def fetch_frames(media: DataFrame, plan: DataFrame, feature_dim: int = 8) -> Dat
     joined = media.select("media_id", "kind", "mime", "payload").join(
         plan, "media_id"
     )
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("frame_idx", T.LongType()),
-            T.StructField("ts_ms", T.LongType()),
-            T.StructField("feature", T.ArrayType(T.DoubleType())),
-            T.StructField("decode_error", T.StringType()),
-        ]
+
+    def row(kind, mime, payload, frame_idx):
+        blob = payload if payload is not None else b""
+        yield _featurize_checked(
+            lambda: _decode_frame_stub(kind, mime, blob, frame_idx), feature_dim
+        )
+
+    return map_rows(
+        joined,
+        lambda: row,
+        ["kind", "mime", "payload", "frame_idx"],
+        _FEATURE_FIELDS[1:],
+        keep=[T.StructField(c, T.LongType()) for c in ("media_id", "frame_idx", "ts_ms")],
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats, errs = [], []
-            for kind, mime, payload, idx in zip(
-                pdf["kind"], pdf["mime"], pdf["payload"], pdf["frame_idx"]
-            ):
-                feat, err = _featurize_checked(
-                    lambda k=kind, m=mime, p=payload, i=idx: _decode_frame_stub(
-                        k, m, bytes(p) if p is not None else b"", int(i)
-                    ),
-                    feature_dim,
-                )
-                feats.append(feat)
-                errs.append(err)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].astype("int64"),
-                    "frame_idx": pdf["frame_idx"].astype("int64"),
-                    "ts_ms": pdf["ts_ms"].astype("int64"),
-                    "feature": feats,
-                    "decode_error": errs,
-                }
-            )
-
-    return joined.mapInPandas(run, schema=schema)
 
 
 def _decode_frame_stub(kind: str, mime: str, payload: bytes, frame_idx: int):

@@ -117,7 +117,6 @@ def cosine_dup_pairs(
     if num_planes:
         cols.append(_bucket_col(F.col(vec_col), num_planes, hash_fn).alias("bucket"))
     v, n = D._materialize(embeddings.select(*cols).withColumn("_n", _norm(F.col("v"))))
-    _maybe_small = F.broadcast if D._is_small(n) else (lambda df: df)
     keys = ["bucket"] if num_planes else []
     a_side = v.select(
         F.col("id").alias("a_id"), F.col("v").alias("av"), F.col("_n").alias("_an"), *keys
@@ -125,10 +124,11 @@ def cosine_dup_pairs(
     b_side = v.select(
         F.col("id").alias("b_id"), F.col("v").alias("bv"), F.col("_n").alias("_bn"), *keys
     )
+    b_side = D._maybe_broadcast(b_side, n)
     if num_planes:
-        pairs = a_side.join(_maybe_small(b_side), keys).filter(F.col("a_id") < F.col("b_id"))
+        pairs = a_side.join(b_side, keys).filter(F.col("a_id") < F.col("b_id"))
     else:
-        pairs = a_side.join(_maybe_small(b_side), F.col("a_id") < F.col("b_id"))
+        pairs = a_side.join(b_side, F.col("a_id") < F.col("b_id"))
     scored = pairs.withColumn(
         "cosine",
         F.round(

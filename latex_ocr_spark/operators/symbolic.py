@@ -22,12 +22,12 @@ All per-row work runs in one Arrow-batched stage.
 from __future__ import annotations
 
 import re
-from typing import Iterator, Optional, Tuple
+from typing import Optional, Tuple
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from latex_ocr_spark.functions.arrowcols import map_rows
 
 #: gui.py:28 — exact reference pre-normalization
 _RE_OPNAME = re.compile(r"operatorname\*{(\w+)}")
@@ -182,20 +182,12 @@ def with_sympy(
     df: DataFrame, latex_col: str = "latex_norm", use_full_parser: bool = True
 ) -> DataFrame:
     """Append ``sympy_str``/``convert_error`` columns."""
-    schema = T.StructType(
-        list(df.schema.fields)
-        + [
+    return map_rows(
+        df,
+        lambda: lambda s: [convert_checked(s, use_full_parser=use_full_parser)],
+        [latex_col],
+        [
             T.StructField("sympy_str", T.StringType()),
             T.StructField("convert_error", T.StringType()),
-        ]
+        ],
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            out = [convert_checked(s, use_full_parser=use_full_parser) for s in pdf[latex_col]]
-            pdf["sympy_str"] = [o[0] for o in out]
-            pdf["convert_error"] = [o[1] for o in out]
-            yield pdf
-
-    return df.mapInPandas(run, schema=schema)

@@ -74,7 +74,8 @@ def lang_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
 
     Placeholder ruleset (en/de/es markers, 'und'/'y' words); the value
     is the *operator shape* — a pure-expression classifier any fastText
-    style model can replace via a pandas UDF without plan changes.
+    style model can replace behind ``arrowcols.map_rows`` without other
+    plan changes.
     """
     toks = _tokens(text_col)
     has = lambda w: F.array_contains(toks, w)

@@ -9,9 +9,10 @@ passes through as the same Arrow array, and only the text (or id)
 column is read into Python.  Encoded ids go straight into one flat
 ``array('i')`` per batch, 4 bytes per id, which the Arrow list column
 wraps without a copy; its null mask is the text column's own
-``is_null()``.  Decoded strings are built from buffers by
-:mod:`latex_ocr_spark.functions.arrowcols` — no ``pa.array`` on Python
-objects, which would import pandas into the worker.
+``is_null()``.  Decoding runs behind
+:func:`latex_ocr_spark.functions.arrowcols.map_rows`, which builds the
+strings from buffers — no ``pa.array`` on Python objects, which would
+load pandas into the worker.
 """
 
 from __future__ import annotations
@@ -94,23 +95,15 @@ def with_detokenized(
 ) -> DataFrame:
     """Append the decoded string for an id-array column (token2str
     semantics, utils/utils.py:94-98)."""
+    from latex_ocr_spark.functions.arrowcols import map_rows
+
     bc = _broadcast_tokenizer(df)
-    schema = T.StructType(
-        df.schema.fields + [T.StructField(out_col, T.StringType())]
-    )
 
-    def run(batches):
-        from latex_ocr_spark.functions.arrowcols import strings
-
+    def make_row():
         tk = _rebuild(bc)
-        for rb in batches:
-            decoded = [
-                tk.decode(ids) if ids is not None else None
-                for ids in rb.column(tokens_col).to_pylist()
-            ]
-            yield _append_column(rb, out_col, strings(decoded))
+        return lambda ids: [(tk.decode(ids) if ids is not None else None,)]
 
-    return df.mapInArrow(run, schema=schema)
+    return map_rows(df, make_row, [tokens_col], [T.StructField(out_col, T.StringType())])
 
 
 def filter_max_seq_len(df: DataFrame, tokens_col: str = "tokens", max_len: int = 512) -> DataFrame:

@@ -144,12 +144,6 @@ def _count(name: str):
     return F.count(F.lit(1)).alias(name)
 
 
-def _maybe_broadcast(df: DataFrame, n_rows: int) -> DataFrame:
-    """``df`` broadcast-hinted when ``n_rows``, an observed bound on its
-    row count, passes the dedup size gate."""
-    return F.broadcast(df) if D._is_small(n_rows) else df
-
-
 def _check_knobs(
     near_dup_method: str, max_df: Optional[int], max_bucket_size: Optional[int]
 ) -> None:
@@ -245,7 +239,6 @@ def _near_pairs(
             cur, threshold=dedup_threshold, num_hashes=num_hashes,
             band_size=band_size, text_col=text_col, id_col=id_col,
             ngram=ngram, max_bucket_size=max_bucket_size, _arrs=profile,
-            _signatures=profile,
         )
     else:
         pairs = D.jaccard_pairs(
@@ -318,7 +311,7 @@ def _near_survivors(
         F.col("id").alias(id_col)
     )
     return non_canonical, cur.join(
-        _maybe_broadcast(non_canonical, n_rows), id_col, "left_anti"
+        D._maybe_broadcast(non_canonical, n_rows), id_col, "left_anti"
     )
 
 
@@ -338,14 +331,16 @@ def _decontaminate(
     over, so one similarity measure holds end-to-end."""
     survivors = None
     if profile is not None:
-        dropped = _maybe_broadcast(non_canonical.withColumnRenamed(id_col, "id"), n_dropped)
+        dropped = D._maybe_broadcast(
+            non_canonical.withColumnRenamed(id_col, "id"), n_dropped
+        )
         survivors = profile.join(dropped, "id", "left_anti")
     return D.decontaminate(
         cur, evalset, threshold=dedup_threshold,
         num_hashes=num_hashes, band_size=band_size,
         ngram=ngram, text_col=text_col, id_col=id_col,
         max_bucket_size=max_bucket_size,
-        _corpus_arrs=survivors, _corpus_signatures=survivors,
+        _corpus_arrs=survivors,
     )
 
 

@@ -23,13 +23,17 @@ from __future__ import annotations
 
 from typing import Callable, Dict, Optional
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from latex_ocr_spark.functions.arrowcols import map_rows
 from latex_ocr_spark.operators import dedup as D
 from latex_ocr_spark.operators import similarity as S
 from latex_ocr_spark.operators import textstats as TS
 from latex_ocr_spark.operators.extract import extract_spans, with_stable_order
+from latex_ocr_spark.operators.images import encode_png_gray, render_latex_png
 from latex_ocr_spark.paths import GOLDEN_DIR
 from latex_ocr_spark.sources.tables import load_table, synth_transcripts
 from latex_ocr_spark.textkernel.mathfind import RE_DOLLAR, RE_EQUATION
@@ -1587,6 +1591,89 @@ def tok_bpe_ids(spark, sf):
 # ---------------------------------------------------------------------------
 
 _IMG_SIZES = [(32, 32), (64, 32), (128, 64), (320, 96), (672, 192), (2000, 1200), (16, 16)]
+_DOC_ID = T.StructField("doc_id", T.LongType())
+_PNG = T.StructField("png", T.BinaryType())
+
+
+def _block_pngs(ids: DataFrame, n_sizes: int, frac: int) -> DataFrame:
+    """(doc_id, png): per ``doc_id`` of ``ids``, a PNG of a white
+    ``_IMG_SIZES[doc_id % n_sizes]`` (w, h) canvas whose top-left
+    1/``frac`` block is black."""
+
+    def row(did):
+        w, h = _IMG_SIZES[did % n_sizes]
+        arr = np.full((h, w), 255, dtype=np.uint8)
+        arr[: max(h // frac, 1), : max(w // frac, 1)] = 0
+        return [(encode_png_gray(arr),)]
+
+    return map_rows(ids, lambda: row, ["doc_id"], [_PNG], keep=[_DOC_ID])
+
+
+def _rendered_pngs(formulas: DataFrame) -> DataFrame:
+    """(doc_id, png): each ``formula`` rasterized (the xelatex seam)."""
+    return map_rows(
+        formulas, lambda: lambda f: [(render_latex_png(f),)], ["formula"], [_PNG],
+        keep=[_DOC_ID],
+    )
+
+
+def _media_frame(ids: DataFrame) -> DataFrame:
+    """``MEDIA_SCHEMA`` rows keyed by ``id``: by ``id % 3`` a flat 32×32
+    PNG image, an audio stub or a video stub.  Only the PNG payload is
+    built in Python."""
+    from latex_ocr_spark.operators.multimodal import MEDIA_SCHEMA
+
+    k = F.col("id") % 3
+
+    def by_kind(image, audio, video):
+        return F.when(k == 0, image).when(k == 1, audio).otherwise(video)
+
+    meta = F.struct(
+        by_kind(32, None, 640).cast("int").alias("width"),
+        by_kind(32, None, 360).cast("int").alias("height"),
+        by_kind(None, 3000, 8000).cast("long").alias("duration_ms"),
+        by_kind(None, 16000, None).cast("int").alias("sample_rate"),
+        by_kind(None, None, 200).cast("int").alias("n_frames"),
+    )
+    media = ids.select(
+        F.col("id").alias("media_id"),
+        by_kind("image", "audio", "video").alias("kind"),
+        by_kind("image/png", "audio/wav", "video/mp4").alias("mime"),
+        meta.alias("meta"),
+    )
+
+    def payload(did):
+        if did % 3:
+            return [(b"RIFF" if did % 3 == 1 else b"ftyp",)]
+        return [(encode_png_gray(np.full((32, 32), (did * 37) % 256, dtype=np.uint8)),)]
+
+    return map_rows(
+        media,
+        lambda: payload,
+        ["media_id"],
+        [MEDIA_SCHEMA["payload"]],
+        keep=[MEDIA_SCHEMA[c] for c in ("media_id", "kind", "mime", "meta")],
+    ).select(*MEDIA_SCHEMA.names)
+
+
+def _katex_formulas(raw_matches: DataFrame) -> DataFrame:
+    """(formula): the distinct KaTeX-normalized ``raw_match`` values,
+    those that fail normalization dropped.  Not the deterministic
+    ``latex_katex_normalize`` projection: the optimizer drops the
+    caller's distinct under it and copies it into the null filter, so
+    it ran twice on every span instead of once per distinct match."""
+
+    def make_row():
+        from latex_ocr_spark.textkernel.normalize import normalize_formula_katex
+
+        def row(raw):
+            formula = normalize_formula_katex(raw)
+            return [] if formula is None else [(formula,)]
+
+        return row
+
+    formula = T.StructField("formula", T.StringType())
+    return map_rows(raw_matches, make_row, ["raw_match"], [formula], keep=[]).distinct()
 
 
 @register(
@@ -1611,35 +1698,13 @@ def img_probe_bucket(spark, sf):
     """S3+F1+bucket chain on real PNG bytes: synthesize a PNG per doc
     (size keyed by doc_id), probe width/height from IHDR, apply the
     reference dimension filter, count per ÷32 bucket."""
-    from typing import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
     from latex_ocr_spark.operators.images import (
         filter_dimensions,
         with_bucket,
         with_probed_size,
     )
 
-    def gen(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import numpy as np
-
-        from latex_ocr_spark.operators.images import encode_png_gray
-
-        for pdf in batches:
-            pngs = []
-            for did in pdf["doc_id"]:
-                w, h = _IMG_SIZES[int(did) % 7]
-                arr = np.full((h, w), 255, dtype=np.uint8)
-                arr[: max(h // 4, 1), : max(w // 4, 1)] = 0
-                pngs.append(encode_png_gray(arr))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "png": pngs})
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("png", T.BinaryType())]
-    )
-    images = _docs(spark, sf).select("doc_id").mapInPandas(gen, schema=schema)
+    images = _block_pngs(_docs(spark, sf).select("doc_id"), 7, 4)
     kept = filter_dimensions(with_probed_size(images))
     return (
         with_bucket(kept)
@@ -1670,37 +1735,13 @@ def img_render_probe(spark, sf):
     never sees a pixel: the renderer's geometry is a pure function of
     the formula string, so expected dimensions are plain arithmetic
     over the same constructed text."""
-    from typing import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
     from latex_ocr_spark.operators.images import with_bucket, with_probed_size
 
     formula = F.concat(
         F.lit("x_{"), _id(), F.lit("}+\\frac{1}{"),
         (F.col("doc_id") % 7).cast("string"), F.lit("}"),
     )
-
-    def gen(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        from latex_ocr_spark.operators.images import render_latex_png
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "png": [render_latex_png(s) for s in pdf["formula"]],
-                }
-            )
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("png", T.BinaryType())]
-    )
-    rendered = (
-        _docs(spark, sf)
-        .select("doc_id", formula.alias("formula"))
-        .mapInPandas(gen, schema=schema)
-    )
+    rendered = _rendered_pngs(_docs(spark, sf).select("doc_id", formula.alias("formula")))
     return with_bucket(with_probed_size(rendered)).select(
         "doc_id",
         F.col("width").cast("int").alias("w"),
@@ -1718,31 +1759,10 @@ def img_preprocess(spark, sf):
     """I1 pad chain over synthetic PNGs (decode → ÷32 pad → re-probe).
     Input is ``spark.range(200)`` (scale-independent); oracle = golden
     parquet regenerated Spark-free (tools/make_goldens.py)."""
-    from typing import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
     from latex_ocr_spark.operators.images import preprocess_images
 
-    def gen(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import numpy as np
-
-        from latex_ocr_spark.operators.images import encode_png_gray
-
-        for pdf in batches:
-            pngs = []
-            for did in pdf["id"]:
-                w, h = _IMG_SIZES[int(did) % 5]  # in-range sizes only
-                arr = np.full((h, w), 255, dtype=np.uint8)
-                arr[: max(h // 3, 1), : max(w // 3, 1)] = 0
-                pngs.append(encode_png_gray(arr))
-            yield pd.DataFrame({"doc_id": pdf["id"], "png": pngs})
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("png", T.BinaryType())]
-    )
-    images = spark.range(200).repartition(8).mapInPandas(gen, schema=schema)
+    ids = spark.range(200).repartition(8).select(F.col("id").alias("doc_id"))
+    images = _block_pngs(ids, 5, 3)  # in-range sizes only
     return preprocess_images(images).select("doc_id", "proc_w", "proc_h")
 
 
@@ -1868,34 +1888,9 @@ def media_features(spark, sf):
     projected through ``to_json`` so the driver can hash it (r1 `err`
     row).  Oracle = golden parquet regenerated Spark-free in
     tools/make_goldens.py from the same codec/histogram kernel."""
-    from typing import Iterator
+    from latex_ocr_spark.operators.multimodal import extract_media_features
 
-    import pandas as pd
-
-    from latex_ocr_spark.operators.multimodal import MEDIA_SCHEMA, extract_media_features
-
-    def gen(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import numpy as np
-
-        from latex_ocr_spark.operators.images import encode_png_gray
-
-        for pdf in batches:
-            rows = []
-            for did in pdf["id"]:
-                did = int(did)
-                if did % 3 == 0:
-                    arr = np.full((32, 32), (did * 37) % 256, dtype=np.uint8)
-                    rows.append((did, "image", "image/png", bytearray(encode_png_gray(arr)),
-                                 (32, 32, None, None, None)))
-                elif did % 3 == 1:
-                    rows.append((did, "audio", "audio/wav", bytearray(b"RIFF"),
-                                 (None, None, 3000, 16000, None)))
-                else:
-                    rows.append((did, "video", "video/mp4", bytearray(b"ftyp"),
-                                 (640, 360, 8000, None, 200)))
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "mime", "payload", "meta"])
-
-    media = spark.range(120).repartition(8).mapInPandas(gen, schema=MEDIA_SCHEMA)
+    media = _media_frame(spark.range(120).repartition(8))
     return extract_media_features(media).select(
         "media_id", "kind", "n_bytes",
         F.to_json("feature").alias("feature_json"),
@@ -2031,11 +2026,6 @@ def corpus_build(spark, sf):
     extract per-turn spans → global dedup → KaTeX-style normalization
     (T10→T11→F9→T12, parity-tested vs the vendored JS) → sorted corpus
     with line ids (W2+W6 semantics)."""
-    from typing import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
     spans = extract_spans(
         synth_transcripts(spark, 150, parallelism=8).select(
             "conv_id", "turn_idx", "text"
@@ -2049,16 +2039,7 @@ def corpus_build(spark, sf):
         .distinct()
     )
 
-    def norm(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        from latex_ocr_spark.textkernel.normalize import normalize_formula_katex
-
-        for pdf in batches:
-            out = pdf["raw_match"].map(normalize_formula_katex)
-            keep = out.notna()
-            yield pd.DataFrame({"formula": out[keep]})
-
-    schema = T.StructType([T.StructField("formula", T.StringType())])
-    corpus = distinct.mapInPandas(norm, schema=schema).distinct()
+    corpus = _katex_formulas(distinct)
     from latex_ocr_spark.operators.ids import with_global_ids
 
     return with_global_ids(corpus, ["formula"], id_col="eq_id").select(

@@ -68,6 +68,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from latex_ocr_spark.lease import DirLease
+from latex_ocr_spark.operators import dedup as D
 from latex_ocr_spark.plans import curate as C
 from latex_ocr_spark.plans.curate import CurationResult, _count
 from latex_ocr_spark.session import has_data
@@ -335,7 +336,7 @@ def _curate_resumable_impl(
         n_decon = n_near - meta["n_dropped"]
         contaminated = report.select(F.col("corpus_id").alias(id_col)).distinct()
         cleaned = near_kept.join(
-            C._maybe_broadcast(contaminated, n_report), id_col, "left_anti"
+            D._maybe_broadcast(contaminated, n_report), id_col, "left_anti"
         )
 
     out = C._sample_and_split(

@@ -30,11 +30,12 @@ from __future__ import annotations
 import io
 import os
 import tarfile
-from typing import Iterator, Optional, Tuple
+from typing import Optional, Tuple
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from latex_ocr_spark.functions.arrowcols import map_rows
 
 PAPER_SCHEMA = T.StructType(
     [
@@ -151,16 +152,7 @@ def read_tex_archives(spark: SparkSession, path: str) -> DataFrame:
         .select("path", "content")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                paper_from_blob(p, bytes(b))
-                for p, b in zip(pdf["path"], pdf["content"])
-            ]
-            out = pd.DataFrame(
-                rows, columns=["paper_id", "n_tex_files", "tex", "demacro_error"]
-            )
-            out["n_tex_files"] = out["n_tex_files"].astype("int32")
-            yield out
-
-    return raw.mapInPandas(run, schema=PAPER_SCHEMA)
+    return map_rows(
+        raw, lambda: lambda p, b: [paper_from_blob(p, bytes(b))], ["path", "content"],
+        PAPER_SCHEMA.fields, keep=[],
+    )

@@ -12,11 +12,12 @@ materialization ever happens.
 from __future__ import annotations
 
 import os
-from typing import Iterator, Optional
+from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from latex_ocr_spark.functions.arrowcols import map_rows
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -115,20 +116,13 @@ def synth_transcripts(
     """Distributed deterministic transcript table with ``n_convs``
     conversations (seed-stable; see FIXTURES.md §1)."""
 
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_row():
         # import inside the task so executors resolve the module themselves
         from latex_ocr_spark.datagen.transcripts import conv_length, make_turn
 
-        cols = [f.name for f in TRANSCRIPTS_SCHEMA.fields]
-        for pdf in batches:
-            rows = [
-                make_turn(int(conv), turn)
-                for conv in pdf["id"]
-                for turn in range(conv_length(int(conv)))
-            ]
-            yield pd.DataFrame(rows, columns=cols)
+        return lambda conv: [make_turn(conv, turn) for turn in range(conv_length(conv))]
 
     convs = spark.range(n_convs)
     if parallelism:
         convs = convs.repartition(parallelism)
-    return convs.mapInPandas(_gen, schema=TRANSCRIPTS_SCHEMA)
+    return map_rows(convs, make_row, ["id"], TRANSCRIPTS_SCHEMA.fields, keep=[])

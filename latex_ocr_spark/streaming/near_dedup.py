@@ -135,21 +135,19 @@ def start_near_dedup_stream(
     available_now: bool = True,
     _fail_batches: Optional[set] = None,
     max_files_per_trigger: Optional[int] = MAX_FILES_PER_TRIGGER,
-    max_bytes_per_trigger: Optional[str] = None,
 ):
     """Continuously keep only documents that near-duplicate neither a
     previously accepted document nor an earlier doc of their own batch.
 
-    ``max_files_per_trigger`` / ``max_bytes_per_trigger`` bound each
-    micro-batch (mirroring streaming/stream.py's reader knob).  Without
+    ``max_files_per_trigger`` bounds each micro-batch.  Without
     a bound, an ``availableNow`` catch-up over a large backlog — the
     documented cron shape, or simply the first run over an existing
     corpus — puts EVERY pending file into ONE micro-batch, which is
     then shingle-amplified and, over the size gate, joined against the
     whole history by shuffle.  The default
     (``streaming.MAX_FILES_PER_TRIGGER``, 64 files/trigger, shared with
-    the decontamination stream) keeps catch-up incremental; pass
-    ``None`` for both to restore the unbounded reader.  ``availableNow``
+    the decontamination and extraction streams) keeps catch-up
+    incremental; pass ``None`` to restore the unbounded reader.  ``availableNow``
     still drains the whole backlog — as a sequence of bounded batches.
 
     The batch-side frames (duplicate-of-history ids, survivor ids, and
@@ -184,8 +182,7 @@ def start_near_dedup_stream(
         return _start_near_dedup_stream_fenced(
             spark, input_dir, output_dir, index_dir, checkpoint_dir,
             threshold, num_hashes, band_size, ngram, max_bucket_size,
-            available_now, _fail_batches, stream_lease,
-            max_files_per_trigger, max_bytes_per_trigger,
+            available_now, _fail_batches, stream_lease, max_files_per_trigger,
         )
     except BaseException:
         if stream_lease is not None:
@@ -207,8 +204,7 @@ def _start_near_dedup_stream_fenced(
     available_now: bool,
     _fail_batches: Optional[set],
     stream_lease,
-    max_files_per_trigger: Optional[int] = MAX_FILES_PER_TRIGGER,
-    max_bytes_per_trigger: Optional[str] = None,
+    max_files_per_trigger: Optional[int],
 ):
     import json
 
@@ -303,12 +299,10 @@ def _start_near_dedup_stream_fenced(
 
     reader = spark.readStream.schema(DOCS_STREAM_SCHEMA).format("parquet")
     # bound the micro-batch (see start_near_dedup_stream docstring):
-    # availableNow honors these as per-batch limits, so a cold-start
+    # availableNow honors it as a per-batch limit, so a cold-start
     # backlog drains as many bounded batches instead of one giant one
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    if max_bytes_per_trigger:
-        reader = reader.option("maxBytesPerTrigger", max_bytes_per_trigger)
     stream = reader.load(input_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
@@ -318,7 +312,6 @@ def _start_near_dedup_stream_fenced(
             # frame; an oversized batch drops their hints (AQE still
             # broadcasts at runtime when a frame turns out small)
             n_batch = batch.count()
-            _maybe_bcast = F.broadcast if D._is_small(n_batch) else (lambda df: df)
 
             # 1. in-batch near-dedup by the funnel's stages (cluster
             # canonical survives): ONE cached batch profile feeds the
@@ -372,7 +365,7 @@ def _start_near_dedup_stream_fenced(
                     F.col("eval_id").alias("doc_id")
                 ).distinct()
                 survivors = survivors.join(
-                    _maybe_bcast(dup_of_history), "doc_id", "left_anti"
+                    D._maybe_broadcast(dup_of_history, n_batch), "doc_id", "left_anti"
                 )
 
             survivors = cachepool.track(survivors)
@@ -383,12 +376,14 @@ def _start_near_dedup_stream_fenced(
             write_batch_idempotent(survivors, batch_id, output_dir)
             write_batch_idempotent(
                 profile.select("id", "shingles").join(
-                    _maybe_bcast(surv_ids), "id", "left_semi"
+                    D._maybe_broadcast(surv_ids, n_batch), "id", "left_semi"
                 ),
                 batch_id, sh_path,
             )
             write_batch_idempotent(
-                profile.drop("shingles").join(_maybe_bcast(surv_ids), "id", "left_semi"),
+                profile.drop("shingles").join(
+                    D._maybe_broadcast(surv_ids, n_batch), "id", "left_semi"
+                ),
                 batch_id, sig_path,
             )
             if _fail_batches and batch_id in _fail_batches:

@@ -13,23 +13,24 @@ only append.
 
 from __future__ import annotations
 
-from typing import Optional
-
 from pyspark.sql import DataFrame, SparkSession
 
 from latex_ocr_spark.sources.tables import TRANSCRIPTS_SCHEMA
 
 
-def read_transcript_stream(
-    spark: SparkSession, input_dir: str, max_files_per_trigger: Optional[int] = None
-) -> DataFrame:
-    reader = (
+def read_transcript_stream(spark: SparkSession, input_dir: str) -> DataFrame:
+    """The transcripts landing in ``input_dir``, at most
+    ``streaming.MAX_FILES_PER_TRIGGER`` files per micro-batch (read when
+    the stream is defined), so an ``availableNow`` catch-up over a
+    backlog drains as a sequence of bounded batches."""
+    from latex_ocr_spark import streaming
+
+    return (
         spark.readStream.schema(TRANSCRIPTS_SCHEMA)
         .format("parquet")
+        .option("maxFilesPerTrigger", streaming.MAX_FILES_PER_TRIGGER)
+        .load(input_dir)
     )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.load(input_dir)
 
 
 def start_extraction_stream(

@@ -6,12 +6,26 @@ identical array, down to UTF-8 byte offsets and validity bits.
 """
 
 from array import array
+from datetime import datetime, timezone
+from zoneinfo import ZoneInfo
 
 import numpy as np
 import pyarrow as pa
 import pytest
 
-from latex_ocr_spark.functions.arrowcols import ints, numpy_values, string_lists, strings
+from pyspark.sql import types as T
+
+from latex_ocr_spark.functions.arrowcols import (
+    binaries,
+    ints,
+    lists,
+    map_rows,
+    numbers,
+    numpy_values,
+    string_lists,
+    strings,
+    timestamps,
+)
 from latex_ocr_spark.functions.udfs import FAILED_TURN_SPAN_IDX, extract_spans_arrow
 
 STRING_CASES = [
@@ -96,3 +110,136 @@ def test_extract_spans_arrow_casts_pass_through_columns():
         ("c3", 9, FAILED_TURN_SPAN_IDX),
     ]
     assert [r["raw_match"] for r in rows] == ["x^2", "é", ""]
+
+
+@pytest.mark.parametrize(
+    "values",
+    [[], [b"\x00\xff", b"", b"png"], [None, b"a", None], [b""] * 3 + [None] + [b"xy"] * 9],
+)
+def test_binaries_match_pa_array(values):
+    _check(binaries(values), values, pa.binary())
+
+
+@pytest.mark.parametrize(
+    "code,typ", [("i", pa.int32()), ("q", pa.int64()), ("d", pa.float64())]
+)
+@pytest.mark.parametrize("values", [[], [0, 1, -5, 2**31 - 1], [None, None], [3, None, -1] * 5])
+def test_numbers_match_pa_array(code, typ, values):
+    if code == "d":
+        values = [None if v is None else v / 3 for v in values]
+    _check(numbers(values, code), values, typ)
+
+
+@pytest.mark.parametrize(
+    "values,child,typ",
+    [
+        ([[1, 2], [], None, [2**40]], lambda v: numbers(v, "q"), pa.int64()),
+        ([None, None], lambda v: numbers(v, "q"), pa.int64()),
+        ([[0.5, 1 / 3], None, [], [2.0] * 9], lambda v: numbers(v, "d"), pa.float64()),
+        ([["a", None], None, []], strings, pa.string()),
+        ([], strings, pa.string()),
+    ],
+)
+def test_lists_match_pa_array(values, child, typ):
+    _check(lists(values, child), values, pa.list_(typ))
+
+
+NAIVE = [
+    datetime(2024, 12, 20, 0, 0),
+    datetime(1969, 12, 31, 23, 59, 59, 999999),  # before the epoch
+    datetime(2015, 11, 1, 1, 30),  # New York repeats this wall time
+    datetime(2015, 3, 8, 12, 0),
+    None,
+]
+
+
+def test_timestamps_of_naive_values_in_utc_match_pa_array():
+    _check(timestamps(NAIVE, "UTC"), NAIVE, pa.timestamp("us", tz="UTC"))
+
+
+def test_timestamps_read_a_naive_value_as_mapinpandas_reads_it():
+    """A naive wall time is localized in the session zone with pandas'
+    ``ambiguous=False`` (standard time), as pyspark converts a
+    ``mapInPandas`` output column."""
+    import pandas as pd
+
+    zone = "America/New_York"
+    got = timestamps(NAIVE, zone)
+    localized = pd.Series(NAIVE[:-1]).dt.tz_localize(zone, ambiguous=False)
+    want = [int(t.value // 1000) for t in localized] + [None]
+    assert got.cast(pa.int64()).to_pylist() == want
+    tz = ZoneInfo(zone)
+    aware = [v.replace(tzinfo=tz, fold=1).astimezone(timezone.utc) if v else None for v in NAIVE]
+    _check(got, aware, pa.timestamp("us", tz="UTC"))
+    # an aware value keeps its own zone
+    when = datetime(2020, 1, 1, tzinfo=timezone.utc)
+    assert timestamps([when], zone).equals(timestamps([datetime(2020, 1, 1)], "UTC"))
+
+
+class _Frame:
+    """The parts of a DataFrame that ``map_rows`` reads; ``mapInArrow``
+    hands back the worker function and the declared schema."""
+
+    def __init__(self, schema):
+        self.schema, self.columns = schema, schema.names
+
+    def mapInArrow(self, fn, schema):
+        return fn, schema
+
+
+def _batch(ids, texts):
+    return pa.RecordBatch.from_arrays(
+        [pa.array(ids, pa.int64()), pa.array(texts, pa.string())], names=["id", "text"]
+    )
+
+
+def test_map_rows_takes_pass_through_columns_at_each_output_row():
+    """Zero, one or several outputs per row; kept columns are a
+    ``take`` at the source row, cast to a ``StructField``'s type; the
+    row function is built once per task."""
+    frame = _Frame(T.StructType([T.StructField("id", T.LongType()), T.StructField("text", T.StringType())]))
+    built = []
+
+    def make_row():
+        built.append(1)
+        return lambda text: [(w, len(w)) for w in (text or "").split()]
+
+    fn, schema = map_rows(
+        frame,
+        make_row,
+        ["text"],
+        [T.StructField("word", T.StringType()), T.StructField("n", T.IntegerType())],
+        keep=[T.StructField("id", T.IntegerType()), "text"],
+    )
+    assert schema.names == ["id", "text", "word", "n"]
+    assert schema["id"].dataType == T.IntegerType()
+    batches = [_batch([7, 8, 9], ["a bb", None, "é"]), _batch([], []), _batch([1], [""])]
+    out = list(fn(iter(batches)))
+    assert built == [1]
+    assert [b.num_rows for b in out] == [3, 0, 0]
+    for b in out:
+        b.validate(full=True)
+        assert b.schema.types == [pa.int32(), pa.string(), pa.string(), pa.int32()]
+    assert out[0].to_pylist() == [
+        {"id": 7, "text": "a bb", "word": "a", "n": 1},
+        {"id": 7, "text": "a bb", "word": "bb", "n": 2},
+        {"id": 9, "text": "é", "word": "é", "n": 1},
+    ]
+
+
+def test_map_rows_passes_a_one_to_one_batch_through_untouched():
+    frame = _Frame(T.StructType([T.StructField("id", T.LongType()), T.StructField("text", T.StringType())]))
+    fn, _ = map_rows(frame, lambda: lambda text: [(text is None,)], ["text"],
+                     [T.StructField("null", T.IntegerType())])
+    rb = _batch([1, 2], ["x", None])
+    (out,) = fn(iter([rb]))
+    assert out.column(0) is not None and out.column(0).equals(rb.column(0))
+    assert out.column(0).buffers()[1].address == rb.column(0).buffers()[1].address
+    assert out.column("null").to_pylist() == [0, 1]
+
+
+def test_map_rows_refuses_a_type_it_cannot_build():
+    frame = _Frame(T.StructType([T.StructField("id", T.LongType())]))
+    with pytest.raises(TypeError, match="map<string,int>"):
+        map_rows(frame, lambda: None, ["id"],
+                 [T.StructField("m", T.MapType(T.StringType(), T.IntegerType()))])

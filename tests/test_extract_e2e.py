@@ -79,7 +79,8 @@ def test_no_math_and_null_text_turns_yield_nothing(spark):
 def test_resumable_extract_full_pass_job_budget(spark, tmp_path):
     """A full ``run_resumable_extract`` pass over a parquet input runs
     at most seven Spark jobs here, counted from the status store as the
-    benchmark's trace counts them (eight on the benchmark's input).  It
+    benchmark's trace counts them (seven on the benchmark's input too,
+    where the lineage join now broadcasts the per-unit metrics).  It
     ran eleven here (twelve there) while the pending units came from a
     ``distinct().collect()`` probe of the input and the lineage read
     inferred a schema; a new probe job on the pass shows up here."""

@@ -92,3 +92,27 @@ def test_stream_restarts_after_a_batch_without_math(spark, dirs):
     assert _spans_set(read_stream_output(spark, out)) == _spans_set(
         extract_spans(rest.select("conv_id", "turn_idx", "text"))
     )
+
+
+def test_backlog_drains_in_batches_of_the_shared_file_bound(spark, dirs, monkeypatch):
+    """The extraction stream reads at most
+    ``streaming.MAX_FILES_PER_TRIGGER`` files per micro-batch: with the
+    bound patched to 1, three landed files drain in three batches in one
+    ``availableNow`` run, and the spans equal ``extract_spans`` over the
+    three chunks."""
+    import os
+
+    from latex_ocr_spark import streaming
+
+    inp, out, ckpt = f"{dirs}/in", f"{dirs}/out", f"{dirs}/ckpt"
+    all_t = synth_transcripts(spark, 30)
+    for lo, hi in (("conv-000000", "conv-000010"), ("conv-000010", "conv-000020"),
+                   ("conv-000020", "conv-000030")):
+        chunk = all_t.filter((F.col("conv_id") >= lo) & (F.col("conv_id") < hi))
+        chunk.coalesce(1).write.mode("append").parquet(inp)
+    monkeypatch.setattr(streaming, "MAX_FILES_PER_TRIGGER", 1)
+    start_extraction_stream(spark, inp, out, ckpt).awaitTermination(120)
+    assert sum(b.startswith("batch_id=") for b in os.listdir(out)) == 3
+    assert _spans_set(read_stream_output(spark, out)) == _spans_set(
+        extract_spans(all_t.select("conv_id", "turn_idx", "text"))
+    )
